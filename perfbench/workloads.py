@@ -17,6 +17,7 @@ import uuid
 from dataclasses import dataclass, field
 
 import gen
+from clock import Timer
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -65,8 +66,9 @@ def noop_write(df) -> None:
 
 @dataclass
 class OpResult:
-    seconds: float
+    seconds: float  # wall time
     rows: int  # input rows the operation validated
+    steal_share: float = 0.0  # see clock.py
     written_bytes: int = 0
     input_bytes: int = 0
     ok: bool = True
@@ -156,13 +158,14 @@ class BulkCatalog(Sinks):
         t_ns = time.time_ns()
         files_before = commit_files(self.ckpt)
         if tracer is None:
-            t0 = time.perf_counter()
+            timer = Timer()
             out = self._pipeline(run_id)
             dups = self._uniqueness()
-            seconds = time.perf_counter() - t0
+            timing = timer.stop()
         else:
-            seconds, out, dups = self._traced(tracer, run_id)
-        res = OpResult(seconds=seconds, rows=self.rows, input_bytes=self.input_bytes)
+            timing, out, dups = self._traced(tracer, run_id)
+        res = OpResult(seconds=timing.wall_s, rows=self.rows, steal_share=timing.steal_share,
+                       input_bytes=self.input_bytes)
         self.account(res, t_ns, files_before)
         self._check(out, dups, res)
         return res
@@ -199,12 +202,12 @@ class BulkCatalog(Sinks):
             store.completed_partitions(run_id, "")
         with tr.span("plans.checkpoint.file_count", run_id) as s:
             s.notes["files"] = store.file_count()
-        t0 = time.perf_counter()
+        timer = Timer()
         with tr.span("plans.pipeline.run", run_id):
             out = self._pipeline(run_id)
         with tr.span("operators.uniqueness", run_id):
             dups = self._uniqueness()
-        return time.perf_counter() - t0, out, dups
+        return timer.stop(), out, dups
 
     def _check(self, out, dups: int, res: OpResult) -> None:
         a = self.answers
@@ -297,14 +300,14 @@ class FileBatches(Sinks):
         t_ns = time.time_ns()
         files_before = commit_files(self.ckpt)
         if tracer is None:
-            t0 = time.perf_counter()
+            timer = Timer()
             df = load_table(self.spark, "csv:" + self.landing, name, schema=CSV_SCHEMA)
             out = self._pipeline(df, run_id)
-            seconds = time.perf_counter() - t0
+            timing = timer.stop()
         else:
-            seconds, out = self._traced(tracer, name, run_id)
-        res = OpResult(seconds=seconds, rows=self.files * self.rows_per_file,
-                       input_bytes=size)
+            timing, out = self._traced(tracer, name, run_id)
+        res = OpResult(seconds=timing.wall_s, rows=self.files * self.rows_per_file,
+                       steal_share=timing.steal_share, input_bytes=size)
         self.account(res, t_ns, files_before)
         self._check(out, batch, res, count_violations=tracer is not None)
         return res
@@ -331,11 +334,11 @@ class FileBatches(Sinks):
             store.completed_partitions(run_id, "")
         with tr.span("plans.checkpoint.file_count", run_id) as s:
             s.notes["files"] = store.file_count()
-        t0 = time.perf_counter()
+        timer = Timer()
         with tr.span("plans.pipeline.run", run_id):
             df = load_table(spark, "csv:" + self.landing, name, schema=CSV_SCHEMA)
             out = self._pipeline(df, run_id)
-        return time.perf_counter() - t0, out
+        return timer.stop(), out
 
     def _check(self, out, batch, res: OpResult, count_violations: bool) -> None:
         """Per-file verdicts, conversion errors and reasons against the
