@@ -528,9 +528,9 @@ def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram (already on the driver from the shared reduction) becomes
     the baseline snapshot for operators/drift.drift_report_partitioned
     over the >1997 half keyed by o_orderpriority — the checkpointed-run
-    drift operator (baseline grid as struct literals, one
-    groupBy((partition, bin)) shuffle, window cumsum over ≤ n_bins+2 rows
-    per partition, no driver collect) as long-form scope='<priority>'
+    drift operator (one per-partition histogram aggregate on the
+    baseline grid, then a literal-baseline fold over ≤ n_bins+2 bins per
+    partition, no driver collect) as long-form scope='<priority>'
     rows next to the scope='dataset' row."""
     from ndap_data_validator_spark.operators.drift import (
         categorical_drift,
@@ -3878,7 +3878,7 @@ def oracle_sql() -> dict[str, str]:
 
     # per-partition leg: the SAME baseline-fraction/CDF fold as drift_sql,
     # but the current side grouped by o_orderpriority — one cdf window per
-    # partition, mirroring drift_report_partitioned's per-partition cumsum
+    # partition, the same running-CDF fold drift_report_partitioned runs
     drift_part_sql = f"""
       WITH bins AS (SELECT UNNEST(range(0, {_DRIFT_BINS + 2})) AS bin_id),
       b AS (SELECT LEAST(GREATEST(CAST(FLOOR((o_totalprice - {_DRIFT_LO}) / {w}) AS INT) + 1, 0), {_DRIFT_BINS + 1}) AS bin_id,

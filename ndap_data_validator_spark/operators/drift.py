@@ -3,8 +3,8 @@
 single files in isolation).
 
 Design: drift is computed from FIXED-BIN HISTOGRAMS, not raw values. The
-histogram is one aggregate over the scan (``width_bucket`` → groupBy(bin)),
-producing ≤ n_bins rows per column — so the KS/PSI math runs on frames of a
+histogram is one aggregate over the scan (``width_bucket`` → one count per
+bin), ≤ n_bins+2 numbers per column — so the KS/PSI math runs on frames of a
 few dozen rows regardless of table size. KS over binned data is exact at bin
 resolution: KS = max |CDF_p − CDF_q| evaluated at bin edges; PSI is defined
 on bins natively. This keeps 10^12-row drift checks to one shared scan plus
@@ -65,20 +65,11 @@ def snapshot(
             hi = (lo or 0.0) + 1.0
             lo = lo or 0.0
         grids[c] = (float(lo), float(hi))
-    hist_exprs = []
-    for c in columns:
-        lo, hi = grids[c]
-        b = F.width_bucket(
-            F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_bins)
-        )
-        hist_exprs.append(
-            F.array(
-                *[
-                    F.count(F.when(b == i, F.lit(1)))
-                    for i in range(n_bins + 2)
-                ]
-            ).alias(c)
-        )
+    hist_exprs = [
+        _hist_agg({"lo": grids[c][0], "hi": grids[c][1], "n_bins": n_bins}, c)
+        .alias(c)
+        for c in columns
+    ]
     hists = df.agg(*hist_exprs).first()
     out: dict[str, dict] = {}
     for c in columns:
@@ -551,13 +542,14 @@ def drift_report_partitioned(
     for 10^5-partition tables where collecting per-partition histograms to
     the driver (as the interactive path does for ONE frame) would not fly.
 
-    Per snapshot column: ONE groupBy((partition, bin)) count of the
-    current rows bucketed on the BASELINE grid (map-side combine; the only
-    big-data op), then the baseline's per-bin fraction / CDF / gap enter
-    as 22 struct LITERALS exploded onto each partition's row set, so the
-    KS / PSI / JS / W1 folds run as window-cumsum + aggregate over
-    ≤ n_bins+2 rows per partition — no driver collect, no join against a
-    Python-RDD frame, every post-scan frame is (#partitions × bins)-sized.
+    ONE ``groupBy(partition).agg`` computes every baseline column's
+    histogram as an ``array(count_if(bucket = i))`` on the BASELINE grid
+    (:func:`_drift_aggs`, map-side partial counts); the KS / PSI / JS / W1
+    fold is then a projection of that row with the baseline as literals
+    (:func:`_drift_rows` over :func:`_drift_fold_exprs`) — the same
+    aggregate-then-fold pair :func:`drift_windowed` runs per event-time
+    window, and the one ``plans.pipeline.run_validation`` folds into the
+    validator's shared aggregate. No join, no window, no driver collect.
 
     Output: one row per (partition_id, column) —
     (ks, psi, js, w1, baseline_total, current_total, drifted) with the
@@ -570,117 +562,108 @@ def drift_report_partitioned(
     ``weight`` occurrences of its value instead of 1 — the share-the-scan
     path when a per-value (or per-histogram-table) rollup already exists,
     identical results to feeding the raw rows."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-
     key = key if not isinstance(key, str) else F.col(key)
-    eps = 1e-6
-    pieces = []
-    for col in sorted(baseline):
-        base = baseline[col]
-        n_bins = base["n_bins"]
-        p = _vectorize(base["counts"], n_bins)
-        tp = sum(p)
-        if tp == 0:
-            continue
-        w = (base["hi"] - base["lo"]) / n_bins
-        gaps = [w / 2.0] + [w] * (n_bins - 1) + [w / 2.0] + [0.0]
-        cp = 0.0
-        metas = []
-        for i, pi in enumerate(p):
-            fp = pi / tp
-            cp += fp
-            metas.append(
-                F.struct(
-                    F.lit(i).alias("bin_id"),
-                    F.lit(fp).alias("fp"),
-                    F.lit(cp).alias("cp"),
-                    F.lit(gaps[i]).alias("gap"),
-                )
-            )
-        cur = (
-            df.where(F.col(col).isNotNull())
-            .groupBy(
-                key.alias("partition_id"),
-                F.width_bucket(
-                    F.col(col).cast("double"),
-                    F.lit(float(base["lo"])),
-                    F.lit(float(base["hi"])),
-                    F.lit(n_bins),
-                ).alias("bin_id"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("cnt")
-                if weight is None
-                else F.sum(F.col(weight)).alias("cnt")
-            )
-        )
-        # a partition whose (weighted) total is 0 has no distribution to
-        # compare — skip it like the all-NULL case rather than divide by 0
-        parts = (
-            cur.groupBy("partition_id")
-            .agg(F.sum("cnt").alias("tq"))
-            .where(F.col("tq") > 0)
-        )
-        dense = parts.select(
-            "partition_id", "tq", F.explode(F.array(*metas)).alias("b")
-        ).select(
-            "partition_id",
-            "tq",
-            F.col("b.bin_id").alias("bin_id"),
-            F.col("b.fp").alias("fp"),
-            F.col("b.cp").alias("cp"),
-            F.col("b.gap").alias("gap"),
-        )
-        j = dense.join(cur, ["partition_id", "bin_id"], "left").select(
-            "partition_id",
-            "bin_id",
-            "fp",
-            "cp",
-            "gap",
-            "tq",
-            (F.coalesce(F.col("cnt"), F.lit(0)) / F.col("tq")).alias("fq"),
-        )
-        win = (
-            Window.partitionBy("partition_id")
-            .orderBy("bin_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        j = j.withColumn("cq", F.sum("fq").over(win))
-        fp, fq = F.col("fp"), F.col("fq")
-        m = (fp + fq) / F.lit(2.0)
-        sp = F.greatest(fp, F.lit(eps))
-        sq = F.greatest(fq, F.lit(eps))
-        agg = j.groupBy("partition_id").agg(
-            F.max(F.abs(F.col("cp") - F.col("cq"))).alias("ks"),
-            F.sum((sq - sp) * F.log(sq / sp)).alias("psi"),
-            F.sum(
-                F.when(fp > 0, F.lit(0.5) * fp * F.log(fp / m)).otherwise(0.0)
-                + F.when(fq > 0, F.lit(0.5) * fq * F.log(fq / m)).otherwise(0.0)
-            ).alias("js"),
-            F.sum(F.abs(F.col("cp") - F.col("cq")) * F.col("gap")).alias("w1"),
-            F.first("tq").alias("current_total"),
-        )
-        pieces.append(
-            agg.select(
-                "partition_id",
-                F.lit(col).alias("column"),
-                "ks",
-                "psi",
-                "js",
-                "w1",
-                F.lit(tp).cast("long").alias("baseline_total"),
-                F.col("current_total").cast("long"),
-                (
-                    (F.col("ks") > F.lit(float(ks_threshold)))
-                    | (F.col("psi") > F.lit(float(psi_threshold)))
-                ).alias("drifted"),
-            )
-        )
-    if not pieces:
+    hist = df.groupBy(key.alias("partition_id")).agg(
+        *_drift_aggs(baseline, weight)
+    )
+    return hist.select(
+        "partition_id",
+        F.inline(_drift_rows(baseline, ks_threshold, psi_threshold)),
+    )
+
+
+def _usable_columns(baseline: dict[str, dict]) -> list[str]:
+    """Baseline columns with a non-empty histogram, in report order."""
+    return [
+        c
+        for c in sorted(baseline)
+        if sum(_vectorize(baseline[c]["counts"], baseline[c]["n_bins"])) > 0
+    ]
+
+
+def _sql_double(x: float) -> str:
+    # repr round-trips the exact double; the D suffix keeps it DOUBLE
+    return f"{float(x)!r}D"
+
+
+def _sql_name(column: str) -> str:
+    # the identifier F.col(column) resolves: dots separate nested fields
+    # unless the caller already quoted the name
+    if "`" in column:
+        return column
+    return ".".join(f"`{part}`" for part in column.split("."))
+
+
+def _hist_agg(base: dict, column: str, weight: str | None = None):
+    """One column's histogram on the baseline grid as ONE aggregate:
+    element i is the (``weight``-summed) count of rows in bin i, NULL
+    values counted nowhere. Built as one SQL expression — a single parse
+    instead of a py4j call per bin and operator."""
+    b = (
+        f"width_bucket(CAST({_sql_name(column)} AS DOUBLE), "
+        f"{_sql_double(base['lo'])}, {_sql_double(base['hi'])}, "
+        f"{int(base['n_bins'])})"
+    )
+    ids = range(base["n_bins"] + 2)
+    if weight is None:
+        bins = [f"count(CASE WHEN {b} = {i} THEN 1 END)" for i in ids]
+    else:
+        w = _sql_name(weight)
+        bins = [
+            f"CAST(coalesce(sum(CASE WHEN {b} = {i} THEN {w} END), 0) AS BIGINT)"
+            for i in ids
+        ]
+    return F.expr(f"array({', '.join(bins)})")
+
+
+def _drift_aggs(baseline: dict[str, dict], weight: str | None = None) -> list:
+    """Every usable baseline column's histogram aggregate, aliased
+    ``__h{j}`` — the drift share of a per-partition aggregate, read back
+    by :func:`_drift_rows`."""
+    cols = _usable_columns(baseline)
+    if not cols:
         raise ValueError("baseline snapshot has no usable columns")
-    return reduce(DataFrame.unionByName, pieces)
+    return [
+        _hist_agg(baseline[c], c, weight).alias(f"__h{j}")
+        for j, c in enumerate(cols)
+    ]
+
+
+def _drift_rows(
+    baseline: dict[str, dict], ks_threshold: float, psi_threshold: float
+):
+    """The drift report rows of ONE aggregate row carrying the
+    :func:`_drift_aggs` histograms: an array of (column, ks, psi, js, w1,
+    baseline_total, current_total, drifted) structs, one per column with a
+    non-empty current histogram."""
+    rows = [
+        F.struct(
+            F.lit(c).alias("column"),
+            *_verdict_fields(
+                _drift_fold_exprs(baseline[c], f"__h{j}"),
+                ks_threshold,
+                psi_threshold,
+            ),
+        )
+        for j, c in enumerate(_usable_columns(baseline))
+    ]
+    return F.filter(F.array(*rows), lambda r: r["current_total"] > 0)
+
+
+def _verdict_fields(m: dict, ks_threshold: float, psi_threshold: float) -> list:
+    """The report columns after ``column``, from :func:`_drift_fold_exprs`."""
+    return [
+        m["ks"].alias("ks"),
+        m["psi"].alias("psi"),
+        m["js"].alias("js"),
+        m["w1"].alias("w1"),
+        m["baseline_total"].alias("baseline_total"),
+        m["current_total"].alias("current_total"),
+        (
+            (m["ks"] > F.lit(float(ks_threshold)))
+            | (m["psi"] > F.lit(float(psi_threshold)))
+        ).alias("drifted"),
+    ]
 
 
 @dataclass(frozen=True)
@@ -712,12 +695,7 @@ class DriftRule:
         # empty/all-NULL frame yields counts={} for every column, which
         # drift_report_partitioned skips — construction is the right place
         # to fail, before the rule enters a run digest.
-        usable = [
-            c
-            for c, b in self.baseline.items()
-            if sum(_vectorize(b["counts"], b["n_bins"])) > 0
-        ]
-        if not usable:
+        if not _usable_columns(self.baseline):
             raise ValueError(
                 "DriftRule baseline has no usable columns (every histogram "
                 "is empty) — re-snapshot over a non-empty frame"
@@ -736,18 +714,21 @@ class DriftRule:
         }
 
 
-def _drift_fold_exprs(base: dict, h) -> dict:
-    """KS / PSI / JS / W1 Columns over a histogram ARRAY column ``h``
-    (length n_bins+2, element i = bin i's count, bin 0 underflow), the
-    baseline's per-bin fraction / CDF / gap entering as LITERALS — a pure
-    projection with the identical math as :func:`compare` /
-    :func:`drift_report_partitioned`. Because it is stateless, it can run
-    directly on the output row of a (streaming) aggregation — no second
-    aggregation, which Structured Streaming's append mode would reject."""
-    import functools
-    import operator as op
-
-    eps = 1e-6
+def _drift_fold_exprs(base: dict, h: str) -> dict:
+    """KS / PSI / JS / W1 Columns over the histogram ARRAY column named
+    ``h`` (length n_bins+2, element i = bin i's count, bin 0 underflow),
+    the baseline's per-bin fraction / CDF / gap entering as ONE literal
+    array — a pure projection with the identical math (and summation
+    order) as :func:`compare`: a single ``aggregate`` walks the bins
+    carrying the running current CDF and the four sums, so the expression
+    stays the same size for any bin count, and it is built as one SQL
+    expression (one parse, not a py4j call per operator). Because it is
+    stateless, it can run directly on the output row of a (streaming)
+    aggregation — no second aggregation, which Structured Streaming's
+    append mode would reject. An all-zero histogram yields
+    ``current_total`` 0 (the divisor is guarded: ANSI division by zero
+    raises); callers drop such rows."""
+    eps = _sql_double(1e-6)
     n_bins = base["n_bins"]
     p = _vectorize(base["counts"], n_bins)
     tp = sum(p)
@@ -755,39 +736,46 @@ def _drift_fold_exprs(base: dict, h) -> dict:
         raise ValueError("baseline histogram is empty")
     w = (base["hi"] - base["lo"]) / n_bins
     gaps = [w / 2.0] + [w] * (n_bins - 1) + [w / 2.0] + [0.0]
-    tq = F.aggregate(
-        h, F.lit(0).cast("long"), lambda a, x: a + x
-    ).cast("double")
-    ks_terms, psi_terms, js_terms, w1_terms = [], [], [], []
+    bins = []
     cp = 0.0
-    cq = None
     for i, pi in enumerate(p):
         fp = pi / tp
         cp += fp
-        fq = F.element_at(h, i + 1).cast("double") / tq
-        cq = fq if cq is None else (cq + fq)
-        sp = max(fp, eps)  # baseline side of the smoothing is a constant
-        sq = F.greatest(fq, F.lit(eps))
-        gap = F.abs(F.lit(cp) - cq)
-        ks_terms.append(gap)
-        psi_terms.append((sq - F.lit(sp)) * F.log(sq / F.lit(sp)))
-        m = (F.lit(fp) + fq) / F.lit(2.0)
-        t1 = (
-            F.lit(0.5) * F.lit(fp) * F.log(F.lit(fp) / m)
-            if fp > 0  # baseline-side guard is compile-time
-            else F.lit(0.0)
+        bins.append(
+            f"named_struct('i', {i + 1}, 'fp', {_sql_double(fp)}, "
+            f"'sp', {_sql_double(max(fp, 1e-6))}, 'cp', {_sql_double(cp)}, "
+            f"'gap', {_sql_double(gaps[i])})"
         )
-        t2 = F.when(fq > 0, F.lit(0.5) * fq * F.log(fq / m)).otherwise(0.0)
-        js_terms.append(t1 + t2)
-        w1_terms.append(gap * F.lit(gaps[i]))
-    total = lambda terms: functools.reduce(op.add, terms)  # noqa: E731
+    h = _sql_name(h)
+    total = f"aggregate({h}, 0L, (a, x) -> a + x)"
+    fq = f"element_at({h}, b.i) / CASE WHEN {total} > 0 THEN CAST({total} AS DOUBLE) END"
+    # one row per bin: the baseline literals plus the current fraction fq
+    rows = (
+        f"transform(array({', '.join(bins)}), b -> named_struct("
+        f"'fp', b.fp, 'sp', b.sp, 'cp', b.cp, 'gap', b.gap, 'fq', {fq}))"
+    )
+    cq = "(acc.cq + b.fq)"
+    sq = f"greatest(b.fq, {eps})"
+    m = "((b.fp + b.fq) / 2.0D)"
+    fold = F.expr(
+        f"aggregate({rows}, "
+        "named_struct('cq', 0D, 'ks', 0D, 'psi', 0D, 'js', 0D, 'w1', 0D), "
+        "(acc, b) -> named_struct("
+        f"'cq', {cq}, "
+        f"'ks', greatest(acc.ks, abs(b.cp - {cq})), "
+        f"'psi', acc.psi + ({sq} - b.sp) * ln({sq} / b.sp), "
+        "'js', acc.js + ("
+        f"CASE WHEN b.fp > 0 THEN 0.5D * b.fp * ln(b.fp / {m}) ELSE 0D END + "
+        f"CASE WHEN b.fq > 0 THEN 0.5D * b.fq * ln(b.fq / {m}) ELSE 0D END), "
+        f"'w1', acc.w1 + abs(b.cp - {cq}) * b.gap))"
+    )
     return {
-        "ks": F.greatest(*ks_terms),
-        "psi": total(psi_terms),
-        "js": total(js_terms),
-        "w1": total(w1_terms),
+        "ks": fold["ks"],
+        "psi": fold["psi"],
+        "js": fold["js"],
+        "w1": fold["w1"],
         "baseline_total": F.lit(int(tp)).cast("long"),
-        "current_total": tq.cast("long"),
+        "current_total": F.expr(total),
     }
 
 
@@ -817,42 +805,18 @@ def drift_windowed(
     Works identically on a BATCH frame (the watermark only applies to
     streams): same windows, same metrics — the stream≡batch fold is
     tested in tests/test_streaming.py."""
-    base = baseline[column]
-    n_bins = base["n_bins"]
-    b = F.width_bucket(
-        F.col(column).cast("double"),
-        F.lit(float(base["lo"])),
-        F.lit(float(base["hi"])),
-        F.lit(n_bins),
-    )
     src = df
     if df.isStreaming and watermark_delay:
         src = df.withWatermark(ts_col, watermark_delay)
     hist = (
         src.where(F.col(column).isNotNull())
         .groupBy(F.window(F.col(ts_col), window_duration).alias("w"))
-        .agg(
-            F.array(
-                *[
-                    F.count(F.when(b == i, F.lit(1)))
-                    for i in range(n_bins + 2)
-                ]
-            ).alias("h")
-        )
+        .agg(_hist_agg(baseline[column], column).alias("h"))
     )
-    m = _drift_fold_exprs(base, F.col("h"))
+    m = _drift_fold_exprs(baseline[column], "h")
     return hist.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         F.lit(column).alias("column"),
-        m["ks"].alias("ks"),
-        m["psi"].alias("psi"),
-        m["js"].alias("js"),
-        m["w1"].alias("w1"),
-        m["baseline_total"].alias("baseline_total"),
-        m["current_total"].alias("current_total"),
-        (
-            (m["ks"] > F.lit(float(ks_threshold)))
-            | (m["psi"] > F.lit(float(psi_threshold)))
-        ).alias("drifted"),
+        *_verdict_fields(m, ks_threshold, psi_threshold),
     )

@@ -231,65 +231,90 @@ def metric_expectations(
     """Evaluate every rule in ONE shared aggregate. Returns the long-form
     report ``(partition_id, rule, metric, column, value, min_bound,
     max_bound, passed, severity)`` — one row per (partition, rule), value
-    rounded nowhere (callers round for display)."""
-    if not rules:
-        raise ValueError("no rules given")
-    names = [r.name for r in rules]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate rule names: {names}")
+    rounded nowhere (callers round for display).
 
+    The aggregate (:func:`_metric_aggs`) and the report rows assembled
+    from its output row (:func:`_metric_rows`) are the pair
+    ``plans.pipeline.run_validation`` folds into the validator's own
+    per-partition aggregate, so both paths share one definition."""
+    aggs = _metric_aggs(rules, approx_distinct, quantile_accuracy, now)
     part_expr = (
         F.lit(GLOBAL_PARTITION)
         if partition_by is None
         else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
     ).cast("string").alias("partition_id")
+    return df.groupBy(part_expr).agg(*aggs).select(
+        "partition_id", F.inline(_metric_rows(rules))
+    )
 
-    aggs = [
-        _value_expr(r, approx_distinct, quantile_accuracy, now).alias(
-            f"r{i}__v"
-        )
+
+def _metric_aggs(
+    rules: list[MetricRule],
+    approx_distinct: bool = True,
+    quantile_accuracy: int = 10_000,
+    now: str | None = None,
+) -> list[Column]:
+    """Every rule's metric as one aggregate, aliased ``__m{i}``."""
+    if not rules:
+        raise ValueError("no rules given")
+    names = [r.name for r in rules]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate rule names: {names}")
+    return [
+        _value_expr(r, approx_distinct, quantile_accuracy, now).alias(f"__m{i}")
         for i, r in enumerate(rules)
     ]
-    agg = df.groupBy(part_expr).agg(*aggs)
 
-    def _passed(r: MetricRule, v: Column) -> Column:
-        # NaN must FAIL regardless of bound direction: Spark orders NaN
-        # above every double, so without this guard a NaN metric (e.g.
-        # avg over a NaN-poisoned column) passes any min_bound-only rule
-        # while failing the same rule written as a max_bound.
-        ok = v.isNotNull() & ~F.isnan(v)
-        if r.min_bound is not None:
-            ok = ok & (v >= F.lit(float(r.min_bound)))
-        if r.max_bound is not None:
-            ok = ok & (v <= F.lit(float(r.max_bound)))
-        return ok
 
-    structs = F.array(
+def _passed(r: MetricRule, v: Column) -> Column:
+    # NaN must FAIL regardless of bound direction: Spark orders NaN above
+    # every double, so without this guard a NaN metric (e.g. avg over a
+    # NaN-poisoned column) passes any min_bound-only rule while failing
+    # the same rule written as a max_bound.
+    ok = v.isNotNull() & ~F.isnan(v)
+    if r.min_bound is not None:
+        ok = ok & (v >= F.lit(float(r.min_bound)))
+    if r.max_bound is not None:
+        ok = ok & (v <= F.lit(float(r.max_bound)))
+    return ok
+
+
+def _metric_rows(rules: list[MetricRule]) -> Column:
+    """The report rows of ONE aggregate row carrying the
+    :func:`_metric_aggs` values: an array of (rule, metric, column, value,
+    min_bound, max_bound, passed, severity) structs in rule order."""
+    return F.array(
         *[
             F.struct(
                 F.lit(r.name).alias("rule"),
                 F.lit(r.metric).alias("metric"),
                 F.lit(r.column).cast("string").alias("column"),
-                F.col(f"r{i}__v").alias("value"),
+                F.col(f"__m{i}").alias("value"),
                 F.lit(r.min_bound).cast("double").alias("min_bound"),
                 F.lit(r.max_bound).cast("double").alias("max_bound"),
-                _passed(r, F.col(f"r{i}__v")).alias("passed"),
+                _passed(r, F.col(f"__m{i}")).alias("passed"),
                 F.lit(r.severity).alias("severity"),
             )
             for i, r in enumerate(rules)
         ]
     )
-    return agg.select("partition_id", F.explode(structs).alias("e")).select(
-        "partition_id",
-        "e.rule",
-        "e.metric",
-        "e.column",
-        "e.value",
-        "e.min_bound",
-        "e.max_bound",
-        "e.passed",
-        "e.severity",
-    )
+
+
+def _rule_lists(rows: Column) -> tuple[Column, Column]:
+    """(failed_rules, warned_rules) of an array of report-row structs:
+    sorted names of the failing error- and warn-severity rules."""
+
+    def names(severity: str) -> Column:
+        return F.array_sort(
+            F.transform(
+                F.filter(
+                    rows, lambda e: ~e["passed"] & (e["severity"] == severity)
+                ),
+                lambda e: e["rule"],
+            )
+        )
+
+    return names("error"), names("warn")
 
 
 def expectations_summary(report: DataFrame) -> DataFrame:
@@ -297,18 +322,11 @@ def expectations_summary(report: DataFrame) -> DataFrame:
     ``(partition_id, failed_rules, failed_count, warned_rules, passed)``.
     Warn-severity rules land in ``warned_rules`` and never fail the
     partition — same contract as the column-rule verdict."""
-    fail = (~F.col("passed")) & (F.col("severity") == "error")
-    warn = (~F.col("passed")) & (F.col("severity") == "warn")
+    failed, warned = _rule_lists(F.col("rows"))
     return (
         report.groupBy("partition_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.when(fail, F.col("rule")))
-            ).alias("failed_rules"),
-            F.array_sort(
-                F.collect_list(F.when(warn, F.col("rule")))
-            ).alias("warned_rules"),
-        )
+        .agg(F.collect_list(F.struct("rule", "passed", "severity")).alias("rows"))
+        .select("partition_id", failed.alias("failed_rules"), warned.alias("warned_rules"))
         .select(
             "partition_id",
             "failed_rules",

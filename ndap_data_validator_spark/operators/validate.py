@@ -82,11 +82,13 @@ class ValidationResult:
     coerced: DataFrame  # source frame with role-coerced values
     missing_roles: list[str] = field(default_factory=list)
     # the persisted per-partition aggregate that per_column_report and
-    # summary share (None when cache_aggregates=False). Callers that loop
-    # validate() in a long-lived driver must release() it once the report
-    # frames have fed their last action, or each batch strands one cached
-    # plan in executor storage memory. Actions taken after release()
-    # simply recompute the (tiny) aggregate.
+    # summary share (None when cache_aggregates=False): partition_id, rows,
+    # __cols (the per-column report structs), the summary columns, and any
+    # columns other rule families folded in (ValidationEngine._validate).
+    # Callers that loop validate() in a long-lived driver must release() it
+    # once the report frames have fed their last action, or each batch
+    # strands one cached plan in executor storage memory. Actions taken
+    # after release() simply recompute the (tiny) aggregate.
     cached_aggregate: DataFrame | None = None
 
     def release(self) -> None:
@@ -355,6 +357,28 @@ class ValidationEngine:
         billions of example rows; the full violation COUNTS are unaffected
         — they come from the aggregate, not from these rows.
         """
+        return self._validate(
+            df, assignments, partition_by, order_by, cache_aggregates,
+            max_violations_per_rule,
+        )
+
+    def _validate(
+        self,
+        df: DataFrame,
+        assignments: list[ColumnAssignment],
+        partition_by: str | Column | None,
+        order_by: list[str] | None,
+        cache_aggregates: bool,
+        max_violations_per_rule: int | None,
+        extra_aggs: list[Column] = (),
+        extra_cols: list[Column] = (),
+    ) -> ValidationResult:
+        """:meth:`validate`, with other rule families folded into the same
+        per-partition aggregate: ``extra_aggs`` join the slot aggregates in
+        the ONE ``groupBy(partition).agg``, and ``extra_cols`` (expressions
+        over that aggregate row) ride in ``cached_aggregate`` next to
+        ``__cols`` and the summary columns, so their verdicts are
+        projections of the one cached row (plans/pipeline.py)."""
         slots = self._slots(df, assignments)
         missing_roles = self._missing_roles(assignments)
 
@@ -364,13 +388,29 @@ class ValidationEngine:
             else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
         ).cast("string").alias("partition_id")
 
-        agg = df.groupBy(part_expr).agg(*self._agg_exprs(slots))
+        agg = df.groupBy(part_expr).agg(*self._agg_exprs(slots), *extra_aggs)
 
         col_structs = F.array(*[self._column_struct(s) for s in slots])
+        missing_lit = F.array(*[F.lit(r) for r in missing_roles]).cast("array<string>")
+        failed_cols = F.transform(
+            F.filter(F.col("__cols"), lambda c: ~c["passed"]),
+            lambda c: c["column"],
+        )
         wide = agg.select(
             F.col("partition_id"),
             F.col("__rows").alias("rows"),
             col_structs.alias("__cols"),
+            *extra_cols,
+        ).select(
+            "*",
+            failed_cols.alias("failed_columns"),
+            F.size(failed_cols).alias("failed_count"),
+            missing_lit.alias("missing_roles"),
+            # overall pass (validation.py:350): no failed columns AND no
+            # missing mandatory roles.
+            ((F.size(failed_cols) == 0) & F.lit(len(missing_roles) == 0)).alias(
+                "passed"
+            ),
         )
         if cache_aggregates:
             # The aggregate is one row per partition — tiny. Persisting it
@@ -389,23 +429,13 @@ class ValidationEngine:
             "c.passed",
             "c.reasons",
         )
-
-        missing_lit = F.array(*[F.lit(r) for r in missing_roles]).cast("array<string>")
-        failed_cols = F.transform(
-            F.filter(F.col("__cols"), lambda c: ~c["passed"]),
-            lambda c: c["column"],
-        )
         summary = wide.select(
             "partition_id",
             "rows",
-            failed_cols.alias("failed_columns"),
-            F.size(failed_cols).alias("failed_count"),
-            missing_lit.alias("missing_roles"),
-            # overall pass (validation.py:350): no failed columns AND no
-            # missing mandatory roles.
-            ((F.size(failed_cols) == 0) & F.lit(len(missing_roles) == 0)).alias(
-                "passed"
-            ),
+            "failed_columns",
+            "failed_count",
+            "missing_roles",
+            "passed",
         )
 
         violations = self._violations(

@@ -313,13 +313,21 @@ class CheckpointStore:
         return int(kept)
 
     def file_count(self) -> int:
-        """Number of physical files behind the store (metadata health
-        signal; drives maybe_compact). Distributed listing via
-        input_file_name so it works on any Hadoop-compatible FS."""
-        df = self._read()
-        if df.isEmpty():
+        """Number of data files behind the store (metadata health signal;
+        drives maybe_compact): one Hadoop ``listStatus`` of the store
+        directory, no Spark job, so it works on any Hadoop-compatible FS.
+        Names starting with ``_`` or ``.`` (``_SUCCESS``, checksums) are
+        not data files."""
+        self._recover_compaction()
+        fs, HPath = self._hadoop_fs()
+        path = HPath(self.path)
+        if not fs.exists(path):
             return 0
-        return df.select(F.input_file_name()).distinct().count()
+        return sum(
+            1
+            for st in fs.listStatus(path)
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        )
 
     def maybe_compact(self, max_files: int = 64) -> int | None:
         """Compact when the commit-file count exceeds ``max_files``; no-op

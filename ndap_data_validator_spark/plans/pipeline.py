@@ -151,9 +151,11 @@ def run_validation(
 
     ``metric_rules`` (optional list of
     ``operators.expectations.MetricRule``) evaluates dataset-level metric
-    expectations per partition (ONE extra shared aggregate over the same
-    resume slice) and folds them into the run contract end to end: the
-    report lands at ``{report_path}/metric_expectations``; a partition
+    expectations per partition — each rule's metric is one more aggregate
+    in the validator's own ``groupBy(partition).agg`` over the resume
+    slice, so the family adds no pass over the input — and folds them
+    into the run contract end to end: the report lands at
+    ``{report_path}/metric_expectations``; a partition
     whose error-severity expectation fails is withheld from the publish
     gate and freezes the delta watermark (warn-severity rules report
     only); the failed rule names ride ``metrics_json`` for the cross-run
@@ -176,10 +178,12 @@ def run_validation(
 
     ``drift_rule`` (optional ``operators.drift.DriftRule``) runs the
     KS/PSI distribution-drift check against the rule's baseline snapshot
-    PER PARTITION over the same resume slice — one groupBy((partition,
-    bin)) per baseline column, the baseline entering as broadcast-grade
-    literals (operators/drift.drift_report_partitioned; no driver
-    collect). The per-(partition, column) report lands at
+    PER PARTITION over the same resume slice: each baseline column's
+    histogram on the baseline grid is one ``array(count_if(bucket = i))``
+    aggregate in the validator's shared ``groupBy(partition).agg``, and
+    KS/PSI/JS/W1 are a projection of that row with the baseline as
+    literals (the operators/drift.drift_report_partitioned fold; no join,
+    no driver collect). The per-(partition, column) report lands at
     ``{report_path}/drift_report``; with ``severity="error"`` a drifted
     partition is withheld from publish and freezes the delta watermark
     (``"warn"`` reports only); the drifted column names ride
@@ -290,47 +294,98 @@ def run_validation(
             str(last_wm).encode("utf-8")
         ).hexdigest()[:12]
 
+    # This run's earlier 'done' records under the same digest, read ONCE:
+    # they are the resume set, and their verdicts open the passed_all fold
+    # at the end (full_reload re-validates everything, but its run verdict
+    # still folds over every record of the run, main.py:926-936).
+    prior = (
+        store.run_log(run_id)
+        .where((F.col("rule_digest") == digest) & (F.col("status") == "done"))
+        .select(
+            "partition_id",
+            (
+                F.get_json_object("metrics_json", "$.passed") == F.lit("true")
+            ).alias("passed"),
+        )
+        .collect()
+    )
     if load_mode in ("full_reload", "structure_change"):
         done: set[str] = set()
     else:
-        done = store.completed_partitions(run_id, digest)
+        done = {r["partition_id"] for r in prior}
 
     remaining = df.where(~key.isin(sorted(done))) if done else df
 
-    result = engine.validate(
+    # ONE per-partition aggregate over the resume slice carries every
+    # dataset-granular verdict: the validator's column slots, each
+    # MetricRule's value, and one histogram per DriftRule baseline column.
+    # It is persisted once (ValidationResult.cached_aggregate); the report
+    # rows, the checkpoint metrics, the publish gate and the watermark fold
+    # are all projections of that cached row.
+    shared_aggs: list[Column] = []
+    shared_cols: list[Column] = []
+    if metric_rules:
+        from ndap_data_validator_spark.operators.expectations import (
+            _metric_aggs,
+            _metric_rows,
+            _rule_lists,
+        )
+
+        shared_aggs += _metric_aggs(metric_rules, now=metric_now)
+        shared_cols.append(_metric_rows(metric_rules).alias("__exp"))
+    if drift_rule is not None:
+        from ndap_data_validator_spark.operators.drift import (
+            _drift_aggs,
+            _drift_rows,
+        )
+
+        shared_aggs += _drift_aggs(drift_rule.baseline)
+        shared_cols.append(
+            _drift_rows(
+                drift_rule.baseline,
+                drift_rule.ks_threshold,
+                drift_rule.psi_threshold,
+            ).alias("__drift")
+        )
+    result = engine._validate(
         remaining,
         assignments,
         partition_by=key,
         order_by=order_by,
+        cache_aggregates=True,
         max_violations_per_rule=max_violations_per_rule,
+        extra_aggs=shared_aggs,
+        extra_cols=shared_cols,
     )
+    shared = result.cached_aggregate
 
-    # Dataset-level expectations over the SAME resume slice: one extra
-    # shared aggregate (operators/expectations.py). The tiny per-partition
-    # summary is persisted because it feeds up to three actions below
-    # (metrics_json, publish gate, watermark fold) — without the persist
-    # each action would rescan the source for the expectations agg.
-    exp_report = None
-    exp_summary = None
+    # Per-partition verdicts of the folded-in families. An error-severity
+    # expectation failure or error-severity drift is a DATA failure: it
+    # withholds the partition from publish and freezes the delta watermark.
+    exp_report = drift_rep = None
+    exp_ok = drift_ok = F.lit(True)
+    extra_fields: list[Column] = []
     if metric_rules:
-        from ndap_data_validator_spark.operators.expectations import (
-            expectations_summary,
-            metric_expectations,
+        exp_report = shared.select("partition_id", F.inline("__exp"))
+        failed_rules, warned_rules = _rule_lists(F.col("__exp"))
+        exp_ok = F.size(failed_rules) == 0
+        # the rule names ride metrics_json for the cross-run anomaly
+        # history (plans/anomaly.py reads these paths)
+        extra_fields += [
+            failed_rules.alias("expectation_failed_rules"),
+            warned_rules.alias("expectation_warned_rules"),
+        ]
+    if drift_rule is not None:
+        drift_rep = shared.select("partition_id", F.inline("__drift"))
+        # sorted: __drift lists columns in sorted baseline order. A
+        # partition where every baseline column is NULL has no rows and
+        # an empty list, so it passes.
+        drifted = F.transform(
+            F.filter("__drift", lambda d: d["drifted"]), lambda d: d["column"]
         )
-
-        exp_report = metric_expectations(
-            remaining, metric_rules, partition_by=key, now=metric_now
-        )
-        exp_summary = (
-            expectations_summary(exp_report)
-            .select(
-                "partition_id",
-                F.col("failed_rules").alias("exp_failed_rules"),
-                F.col("warned_rules").alias("exp_warned_rules"),
-                F.col("passed").alias("exp_passed"),
-            )
-            .persist()
-        )
+        if drift_rule.severity == "error":
+            drift_ok = F.size(drifted) == 0
+        extra_fields.append(drifted.alias("drifted_columns"))
 
     # Expected-partition completeness census (operators/completeness.py)
     # over the FULL batch slice, NOT the resume remainder — whether a
@@ -353,35 +408,6 @@ def run_validation(
                 min_rows=expected_min_rows,
             )
             .withColumnRenamed("key", "partition_id")
-            .persist()
-        )
-
-    # Per-partition drift vs the rule's baseline snapshot, over the SAME
-    # resume slice. The tiny (partitions × columns) summary is persisted
-    # because, like exp_summary, it can feed three actions (metrics_json,
-    # publish gate, watermark fold).
-    drift_rep = None
-    drift_summary = None
-    if drift_rule is not None:
-        from ndap_data_validator_spark.operators.drift import (
-            drift_report_partitioned,
-        )
-
-        drift_rep = drift_report_partitioned(
-            remaining,
-            key,
-            drift_rule.baseline,
-            ks_threshold=drift_rule.ks_threshold,
-            psi_threshold=drift_rule.psi_threshold,
-        )
-        drift_summary = (
-            drift_rep.groupBy("partition_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.when(F.col("drifted"), F.col("column")))
-                ).alias("drifted_columns")
-            )
-            .withColumn("drift_passed", F.size("drifted_columns") == 0)
             .persist()
         )
 
@@ -487,70 +513,70 @@ def run_validation(
             # same overwrite contract
             _write_partitioned(drift_rep, f"{report_path}/drift_report")
 
-    # Checkpoint metrics are assembled DISTRIBUTED: per-column stats fold to
-    # a map per partition, join the summary, and to_json builds the record —
-    # no per-column collect() in the run path (the old driver fold was a
-    # bottleneck at 10^5 partitions × wide schemas). The only collect is the
-    # partition-id list for the outcome (one short string per partition).
-    processed = sorted(
-        r["partition_id"] for r in result.summary.select("partition_id").collect()
-    )
-    if processed:
-        per_col_map = result.per_column_report.groupBy("partition_id").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("column"),
-                        F.struct("nulls", "conversion_errors", "passed"),
-                    )
-                )
-            ).alias("columns")
+    # Partitions failing an AGGREGATE-granular column verdict — today only
+    # the time-format-consistency rule, whose minority-format rows no
+    # row-local predicate can identify (the majority format is an aggregate
+    # property) — cannot be row-routed; under the quarantine policy they
+    # stay withheld wholesale, exactly like the default policy. Warn
+    # severity keeps its contract: a warn column's reasons never withhold.
+    routed = row_policy == "quarantine" and not result.missing_roles
+    if routed:
+        err_cols = [a.column for a in assignments if a.severity != "warn"]
+        agg_only_fail = F.exists(
+            "__cols",
+            lambda c: c["column"].isin(err_cols)
+            & F.array_contains(c["reasons"], REASON_INCONSISTENT_TIME),
         )
-        summary_for_metrics = result.summary.join(per_col_map, "partition_id", "left")
-        passed_expr = F.col("passed")
-        extra_fields = []
-        if exp_summary is not None:
-            # a partition's recorded verdict folds in its error-severity
-            # expectation failures; the rule names ride along for the
-            # cross-run anomaly history (plans/anomaly.py reads these paths)
-            summary_for_metrics = summary_for_metrics.join(
-                exp_summary, "partition_id", "left"
+
+    # The only collect of the run's results: the partition ids (one short
+    # string per partition), each partition's recorded verdict for the
+    # passed_all fold, and whether its DATA failed, which the delta
+    # watermark fold below needs. The gate is failed_count (per-column data
+    # failures), NOT summary.passed: a missing mandatory ROLE is a
+    # catalog-configuration condition identical on every retry — freezing
+    # the watermark on it would wedge delta mode forever while the publish
+    # gate already withholds those rows. Under the quarantine policy,
+    # row-attributable failures were ROUTED (published clean +
+    # dead-lettered bad) — freezing on them would re-pick rows already
+    # safely landed, growing the batch slice forever on one persistently
+    # bad row — so only the non-routable aggregate-granular failures
+    # (withheld wholesale, genuinely re-pickable) freeze it.
+    data_failed = agg_only_fail if routed else F.col("failed_count") > 0
+    passed = F.col("passed") & exp_ok & drift_ok
+    verdicts = shared.select(
+        "partition_id",
+        passed.alias("passed"),
+        (data_failed | ~exp_ok | ~drift_ok).alias("frozen"),
+    ).collect()
+    processed = sorted(r["partition_id"] for r in verdicts)
+
+    # Checkpoint metrics are assembled DISTRIBUTED from the cached row:
+    # per-column stats fold to a map, and to_json builds the record — no
+    # per-column collect() in the run path. A partition's recorded verdict
+    # folds in its error-severity expectation and drift failures.
+    if processed:
+        columns = F.map_from_entries(
+            F.transform(
+                "__cols",
+                lambda c: F.struct(
+                    c["column"],
+                    F.struct(
+                        c["nulls"].alias("nulls"),
+                        c["conversion_errors"].alias("conversion_errors"),
+                        c["passed"].alias("passed"),
+                    ),
+                ),
             )
-            passed_expr = passed_expr & F.coalesce(
-                F.col("exp_passed"), F.lit(True)
-            )
-            extra_fields += [
-                F.coalesce(
-                    F.col("exp_failed_rules"), F.array().cast("array<string>")
-                ).alias("expectation_failed_rules"),
-                F.coalesce(
-                    F.col("exp_warned_rules"), F.array().cast("array<string>")
-                ).alias("expectation_warned_rules"),
-            ]
-        if drift_summary is not None:
-            # drifted column names ride along for the anomaly history; only
-            # error severity folds into the recorded verdict
-            summary_for_metrics = summary_for_metrics.join(
-                drift_summary, "partition_id", "left"
-            )
-            if drift_rule.severity == "error":
-                passed_expr = passed_expr & F.coalesce(
-                    F.col("drift_passed"), F.lit(True)
-                )
-            extra_fields.append(
-                F.coalesce(
-                    F.col("drifted_columns"), F.array().cast("array<string>")
-                ).alias("drifted_columns")
-            )
+        )
         json_fields = [
             F.col("rows"),
             F.col("failed_count"),
             F.col("failed_columns"),
-            passed_expr.alias("passed"),
+            passed.alias("passed"),
             *extra_fields,
-            F.col("columns"),
+            columns.alias("columns"),
         ]
-        metrics_frame = summary_for_metrics.select(
+        metrics_frame = shared.select(
             F.lit(run_id).alias("run_id"),
             F.col("partition_id"),
             F.lit(digest).alias("rule_digest"),
@@ -559,68 +585,23 @@ def run_validation(
         )
         store.mark_done_frame(metrics_frame)
 
-    # Partitions failing an AGGREGATE-granular column verdict — today only
-    # the time-format-consistency rule, whose minority-format rows no
-    # row-local predicate can identify (the majority format is an aggregate
-    # property) — cannot be row-routed; under the quarantine policy they
-    # stay withheld wholesale, exactly like the default policy. Warn
-    # severity keeps its contract: a warn column's reasons never withhold.
-    agg_only_parts = None
-    if row_policy == "quarantine" and not result.missing_roles:
-        err_cols = [a.column for a in assignments if a.severity != "warn"]
-        agg_only_parts = (
-            result.per_column_report.where(F.col("column").isin(err_cols))
-            .where(F.array_contains("reasons", REASON_INCONSISTENT_TIME))
-            .select("partition_id")
-            .distinct()
-        )
-
     if publish_path is not None and processed:
         # "validation gates publishing; the published object is the ORIGINAL
         # bytes, not the coerced frame" (main.py:1206-1249, 1396, 1414-1415):
         # passed partitions' source rows are appended unmodified, keyed by
         # partition_id (dynamic overwrite → idempotent on resume). The gate
-        # is a semi-join against the (tiny, AQE-broadcast) passed-summary
-        # frame — no driver-side partition list.
-        if row_policy == "quarantine":
-            # row-granular routing. missing_roles is a run-level CONFIG
-            # verdict (the rule set never compiled for those columns, so
-            # row verdicts would be vacuous) and a driver-side constant —
-            # skip both sinks outright rather than launching two write
-            # jobs guaranteed empty. Aggregate-granular failures withhold
-            # their partition (see agg_only_parts above); everything else
-            # routes row by row below.
-            publish_gated = not result.missing_roles
-            passed_parts = result.summary.select("partition_id")
-            if agg_only_parts is not None:
-                passed_parts = passed_parts.join(
-                    agg_only_parts, "partition_id", "left_anti"
-                )
-        else:
-            publish_gated = True
-            passed_parts = result.summary.where(F.col("passed")).select(
-                "partition_id"
-            )
-        if exp_summary is not None:
-            # error-severity expectation failures withhold the partition
-            # from publish exactly like column-rule failures do
-            passed_parts = passed_parts.join(
-                exp_summary.where(F.col("exp_passed")).select("partition_id"),
-                "partition_id",
-                "left_semi",
-            )
-        if drift_summary is not None and drift_rule.severity == "error":
-            # anti-join against FAILURES (not semi against passes): a
-            # partition where every baseline column is null carries no
-            # drift rows at all and must still publish
-            passed_parts = passed_parts.join(
-                drift_summary.where(~F.col("drift_passed")).select(
-                    "partition_id"
-                ),
-                "partition_id",
-                "left_anti",
-            )
-        if row_policy == "quarantine" and publish_gated:
+        # is a semi-join against the (tiny, AQE-broadcast) cached verdict
+        # row — no driver-side partition list. Under row-granular routing
+        # only aggregate-granular column failures withhold their partition
+        # (see agg_only_fail above); everything else routes row by row.
+        column_ok = ~agg_only_fail if routed else F.col("passed")
+        passed_parts = shared.where(column_ok & exp_ok & drift_ok).select(
+            "partition_id"
+        )
+        # Quarantine with missing mandatory roles (a run-level CONFIG
+        # verdict: the rule set never compiled, so row verdicts would be
+        # vacuous) writes neither sink rather than two guaranteed empty.
+        if routed:
             # one scan-level projection computes every row's verdict; the
             # dataset-granular gate (passed_parts) then bounds BOTH sinks.
             # Two filtered writes of the same flagged plan — each a clean
@@ -640,7 +621,7 @@ def run_validation(
                 quarantine_path
                 or (publish_path.rstrip("/") + "_quarantine"),
             )
-        elif row_policy != "quarantine":
+        elif row_policy == "partition":
             _write_partitioned(
                 remaining.withColumn("partition_id", key).join(
                     passed_parts, "partition_id", "left_semi"
@@ -654,97 +635,27 @@ def run_validation(
         # skipped failed-and-unpublished rows). A failed batch keeps the old
         # watermark: the next delta run re-picks the same rows under the
         # SAME batch key, so the retry replaces this batch's partial output
-        # instead of duplicating it. The gate is failed_count (per-column
-        # data failures), NOT summary.passed: a missing mandatory ROLE is a
-        # catalog-configuration condition that is identical on every retry —
-        # freezing the watermark on it would wedge delta mode forever while
-        # the publish gate already withholds those rows. The max is computed
-        # over the full batch slice (`df` after the watermark filter), not
-        # the resume remainder.
-        if row_policy == "quarantine" and agg_only_parts is not None:
-            # Under the quarantine policy, row-attributable failures were
-            # ROUTED (published clean + dead-lettered bad) — freezing on
-            # them would re-pick rows already safely landed, growing the
-            # batch slice forever on one persistently-bad row. Only the
-            # non-routable aggregate-granular failures (withheld wholesale,
-            # genuinely re-pickable) freeze the watermark. With missing
-            # mandatory roles (agg_only_parts is None) routing was skipped
-            # entirely, so the conservative summary gate below applies.
-            fail_fold = agg_only_parts.agg(
-                F.count(F.lit(1)).alias("n_failed")
-            )
-        else:
-            fail_fold = result.summary.agg(
-                F.coalesce(
-                    F.sum((F.col("failed_count") > 0).cast("int")),
-                    F.lit(0),
-                ).alias("n_failed")
-            )
-        wm_fold = df.agg(
-            F.max(F.col(watermark_col)).cast("string").alias("wm")
-        ).crossJoin(fail_fold)
-        if exp_summary is not None:
-            # expectation failures are DATA failures for watermark purposes:
-            # a retry re-picks the same rows (plus arrivals) and may pass
-            wm_fold = wm_fold.crossJoin(
-                exp_summary.agg(
-                    F.coalesce(
-                        F.sum((~F.col("exp_passed")).cast("int")), F.lit(0)
-                    ).alias("n_exp_failed")
-                )
-            )
-        drift_gates_wm = (
-            drift_summary is not None and drift_rule.severity == "error"
-        )
-        if drift_gates_wm:
-            # so is error-severity drift: the batch stays re-pickable until
-            # a later batch (or re-baseline) clears it
-            wm_fold = wm_fold.crossJoin(
-                drift_summary.agg(
-                    F.coalesce(
-                        F.sum((~F.col("drift_passed")).cast("int")), F.lit(0)
-                    ).alias("n_drift_failed")
-                )
-            )
-        fold = wm_fold.first()
-        n_exp_failed = fold["n_exp_failed"] if exp_summary is not None else 0
-        n_drift_failed = fold["n_drift_failed"] if drift_gates_wm else 0
-        if (
-            fold["n_failed"] == 0
-            and n_exp_failed == 0
-            and n_drift_failed == 0
-            and fold["wm"] is not None
-        ):
-            store.record_watermark(watermark_col, fold["wm"])
+        # instead of duplicating it. The max is computed over the full
+        # batch slice (`df` after the watermark filter), not the resume
+        # remainder.
+        if not any(r["frozen"] for r in verdicts):
+            wm = df.agg(F.max(F.col(watermark_col)).cast("string")).first()[0]
+            if wm is not None:
+                store.record_watermark(watermark_col, wm)
 
-    # Both tiny persisted summaries have fed their last action by here —
-    # release the cached blocks so a long-lived driver looping
-    # run_validation once per batch doesn't accumulate dead per-run caches
-    # in executor storage memory.
-    if exp_summary is not None:
-        exp_summary.unpersist()
-    if drift_summary is not None:
-        drift_summary.unpersist()
-    # ... and the validator's shared per-partition aggregate, which the
-    # report writes / metrics collect / verdict fold above materialized.
-    # RunOutcome.result stays usable — later actions recompute the tiny
-    # aggregate instead of reading a stranded cache.
+    # The shared aggregate has fed its last action by here — release the
+    # cached blocks so a long-lived driver looping run_validation once per
+    # batch doesn't accumulate dead per-run caches in executor storage
+    # memory. RunOutcome.result / .expectations / .drift stay usable —
+    # later actions recompute the tiny aggregate instead of reading a
+    # stranded cache.
     result.release()
 
-    # passed_all folds over every partition recorded for this run — the
-    # resumed half plus previously-done ones (main.py:926-936 semantics).
-    log = (
-        store.run_log(run_id)
-        .where(F.col("rule_digest") == digest)
-        .where(F.col("status") == "done")
-    )
-    fold = log.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(
-            F.get_json_object("metrics_json", "$.passed") == F.lit("true")
-        ).alias("all_passed"),
-    ).first()
-    passed_all = bool(fold["n"] > 0 and fold["all_passed"])
+    # passed_all folds over every record of this run — the previously-done
+    # partitions plus the ones just committed; a record without a verdict
+    # is skipped, as SQL min() skips NULL.
+    flags = [r["passed"] for r in prior + verdicts if r["passed"] is not None]
+    passed_all = bool(prior or verdicts) and bool(flags) and all(flags)
 
     if comp_report is not None:
         # a partition that never arrived (or arrived under-sized) fails the

@@ -44,6 +44,15 @@ def get_spark(
         # Dynamic partition overwrite → idempotent per-partition report
         # rewrites on resume (plans/checkpoint.py).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # run_validation persists ONE per-partition aggregate and reads it
+        # for every report write, collect and checkpoint commit. Without
+        # this, AQE may not coalesce a cached plan, so each of those reads
+        # runs spark.sql.shuffle.partitions tasks for a handful of rows.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # A run_validation call with every rule family compiles ~160 query
+        # classes; the default cache of 100 generated classes made every
+        # call compile them all again. Static: it only takes effect here.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

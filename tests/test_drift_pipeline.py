@@ -120,12 +120,13 @@ def test_partitioned_report_matches_interactive_path(spark):
 
 def test_partitioned_report_plan_shape(spark):
     """No CartesianProduct / Python-RDD scan anywhere in the plan: the
-    baseline enters as literals, so the only joins are the per-column
-    (partition, bin) left joins between two tiny aggregates."""
+    baseline enters as literals and the fold is a projection of the one
+    per-partition aggregate, so the plan has no join at all."""
     snap = _baseline(spark)
     rep = drift_report_partitioned(spark.createDataFrame(_pdf()), "part", snap)
     plan = rep._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+    assert "Join" not in plan
     assert "ExistingRDD" not in plan.replace("LogicalRDD", "")
 
 
@@ -356,9 +357,9 @@ def test_drift_rule_rejects_all_empty_baseline(spark):
 
 
 def test_run_validation_releases_summary_caches(spark, tmp_path):
-    """The tiny expectation/drift summaries AND the validator's shared
-    per-partition aggregate are persisted for the multi-action fold;
-    run_validation must unpersist all of them before returning, or a
+    """The validator's shared per-partition aggregate, which also carries
+    the expectation and drift verdicts, is persisted for the multi-action
+    fold; run_validation must unpersist it before returning, or a
     long-lived driver looping one run per batch accumulates dead per-run
     caches in executor storage memory."""
     from ndap_data_validator_spark.operators.expectations import MetricRule
@@ -391,3 +392,135 @@ def test_run_validation_releases_summary_caches(spark, tmp_path):
         drift_rule=DriftRule(_baseline(spark), severity="warn"),
     )
     assert cache_manager.isEmpty()
+
+
+def _assert_same_drift(got, want):
+    """Drift report rows equal: exact on totals and verdicts, 1e-9 on the
+    statistics."""
+    got = {(r["partition_id"], r["column"]): r for r in got}
+    want = {(r["partition_id"], r["column"]): r for r in want}
+    assert set(got) == set(want)
+    for k, w in want.items():
+        g = got[k]
+        for f in ("baseline_total", "current_total", "drifted"):
+            assert g[f] == w[f], (k, f)
+        for f in ("ks", "psi", "js", "w1"):
+            assert math.isclose(g[f], w[f], abs_tol=1e-9), (k, f)
+
+
+def _assert_same_expectations(got, want):
+    got = {(r["partition_id"], r["rule"]): r for r in got}
+    want = {(r["partition_id"], r["rule"]): r for r in want}
+    assert set(got) == set(want)
+    for k, w in want.items():
+        g = got[k]
+        for f in ("metric", "column", "min_bound", "max_bound", "passed", "severity"):
+            assert g[f] == w[f], (k, f)
+        if w["metric"] == "row_count" or w["value"] is None:
+            assert g["value"] == w["value"], k
+        else:
+            assert math.isclose(g["value"], w["value"], abs_tol=1e-9), k
+
+
+@pytest.mark.parametrize("scenario", ["clean", "resumed", "delta_frozen"])
+def test_fused_sinks_equal_standalone_operators(spark, tmp_path, scenario):
+    """run_validation folds the metric expectations and the drift
+    histograms into the validator's one per-partition aggregate; the
+    reports it writes must equal the standalone operators on the same
+    slice. The fixture carries an all-NULL drift column (p2: no amount
+    row) and NULL partition keys (the <null> partition); the scenarios add
+    a resume over an already-done partition and a delta batch whose
+    error-severity expectation fails, which must keep the watermark."""
+    import pyspark.sql.functions as F
+
+    from ndap_data_validator_spark.operators.expectations import (
+        MetricRule,
+        metric_expectations,
+    )
+    from ndap_data_validator_spark.plans.checkpoint import CheckpointStore
+    from ndap_data_validator_spark.plans.pipeline import (
+        partition_key,
+        run_validation,
+    )
+    from ndap_data_validator_spark.rules.model import ColumnAssignment
+
+    snap = _baseline(spark)
+    pdf = _pdf()
+    nulls = pdf[pdf["part"] == "p0"].head(60).copy()
+    nulls["part"] = None
+    nulls["conv_id"] = "n-" + nulls["conv_id"]
+    pdf = pd.concat([pdf, nulls], ignore_index=True)
+    pdf["wm"] = range(len(pdf))
+    sdf = spark.createDataFrame(pdf)
+    key = partition_key("part")
+    rules = [
+        MetricRule("rows", "row_count", min_bound=1),
+        # p1's amounts sit at 200-209: this error rule fails p1 only
+        MetricRule("amount_mean", "mean", column="amount", max_bound=100),
+        MetricRule("latency_sd", "stddev", column="latency", max_bound=1, severity="warn"),
+    ]
+    drift_rule = DriftRule(snap, severity="warn")
+    ck, rep = str(tmp_path / "ckpt"), str(tmp_path / "rep")
+    kw = dict(
+        assignments=[
+            ColumnAssignment("conv_id", "Location"),
+            ColumnAssignment("fy", "Time"),
+            ColumnAssignment("latency", "Measures", "float"),
+        ],
+        partition_by="part",
+        checkpoint_path=ck,
+        order_by=["conv_id"],
+        report_path=rep,
+        metric_rules=rules,
+        drift_rule=drift_rule,
+    )
+
+    if scenario == "resumed":
+        run_validation(spark, sdf.where(key == "p0"), run_id="RUN-R", **kw)
+        out = run_validation(spark, sdf, run_id="RUN-R", **kw)
+        assert out.skipped_partitions == ["p0"]
+        assert out.processed_partitions == ["<null>", "p1", "p2"]
+        # the outcome's frames cover the resumed slice only
+        rest = sdf.where(key != "p0")
+        _assert_same_drift(
+            out.drift.collect(),
+            drift_report_partitioned(rest, key, snap).collect(),
+        )
+        _assert_same_expectations(
+            out.expectations.collect(),
+            metric_expectations(rest, rules, partition_by=key).collect(),
+        )
+    elif scenario == "delta_frozen":
+        out = run_validation(
+            spark, sdf, load_mode="delta", watermark_col="wm", **kw
+        )
+        assert out.passed_all is False
+        assert CheckpointStore(spark, ck).last_watermark("wm") is None
+    else:
+        out = run_validation(spark, sdf, **kw)
+        assert out.passed_all is False
+
+    def sink(name):
+        return spark.read.parquet(f"{rep}/{name}").drop("delta_batch").collect()
+
+    drift_want = drift_report_partitioned(sdf, key, snap).collect()
+    assert ("p2", "amount") not in {
+        (r["partition_id"], r["column"]) for r in drift_want
+    }
+    assert ("<null>", "amount") in {
+        (r["partition_id"], r["column"]) for r in drift_want
+    }
+    _assert_same_drift(sink("drift_report"), drift_want)
+    exp_want = metric_expectations(sdf, rules, partition_by=key).collect()
+    assert {r["partition_id"] for r in exp_want if not r["passed"]} >= {"p1"}
+    _assert_same_expectations(sink("metric_expectations"), exp_want)
+
+    if scenario == "clean":
+        # weight= over a pre-aggregated slice reproduces the same report
+        pre = sdf.groupBy(
+            key.alias("k"), "amount", "latency"
+        ).agg(F.count(F.lit(1)).alias("n"))
+        _assert_same_drift(
+            drift_report_partitioned(pre, "k", snap, weight="n").collect(),
+            drift_want,
+        )

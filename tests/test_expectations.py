@@ -243,7 +243,9 @@ def test_run_validation_integration(spark, tmp_path):
 
 def test_run_validation_expectations_freeze_delta_watermark(spark, tmp_path):
     """A failing error-severity expectation must keep the delta watermark
-    where it was, so the next delta run re-picks the same rows."""
+    where it was, so the next delta run re-picks the same rows — and the
+    report run_validation writes from its shared aggregate equals the
+    standalone operator on the same slice."""
     from ndap_data_validator_spark.plans.checkpoint import CheckpointStore
     from ndap_data_validator_spark.plans.pipeline import run_validation
     from ndap_data_validator_spark.rules.model import ColumnAssignment
@@ -253,12 +255,31 @@ def test_run_validation_expectations_freeze_delta_watermark(spark, tmp_path):
     assigns = [ColumnAssignment("conv_id", "Location")]
     ck = str(tmp_path / "ckpt")
 
-    bad = [MetricRule("impossible", "row_count", max_bound=1)]
+    bad = RULES + [MetricRule("impossible", "row_count", max_bound=1)]
     run_validation(
         spark, sdf, assigns, partition_by="part", checkpoint_path=ck,
         load_mode="delta", watermark_col="wm", metric_rules=bad,
+        report_path=str(tmp_path / "rep"),
     )
     assert CheckpointStore(spark, ck).last_watermark("wm") is None
+    got = {
+        r["rule"]: r
+        for r in spark.read.parquet(str(tmp_path / "rep" / "metric_expectations"))
+        .drop("delta_batch")
+        .collect()
+    }
+    want = {
+        r["rule"]: r
+        for r in metric_expectations(sdf, bad, partition_by="part").collect()
+    }
+    assert set(got) == set(want)
+    for name, w in want.items():
+        g = got[name]
+        assert (g["partition_id"], g["passed"], g["severity"]) == (
+            w["partition_id"], w["passed"], w["severity"],
+        ), name
+        assert g["value"] == pytest.approx(w["value"], abs=1e-9), name
+    assert got["impossible"]["passed"] is False
 
     ok = [MetricRule("rows", "row_count", min_bound=1)]
     run_validation(

@@ -1,0 +1,93 @@
+"""Pass-count guard for ``run_validation``: every dataset-granular rule
+family shares the validator's one per-partition aggregate, so a call with
+column, CHECK, sequence, metric and drift rules plus report and publish
+sinks reads its input at most five times — the shared aggregate, the column
+violations, the CHECK violations, the sequence window and the publish
+write. A rule family that brings its own scan fails this test."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from ndap_data_validator_spark.operators.drift import DriftRule, snapshot
+from ndap_data_validator_spark.operators.expectations import MetricRule
+from ndap_data_validator_spark.plans.pipeline import run_validation
+from ndap_data_validator_spark.rules.model import (
+    CheckRule,
+    ColumnAssignment,
+    SequenceRule,
+)
+from ndap_data_validator_spark.sources.datagen import transcripts
+
+ASSIGNS = [
+    ColumnAssignment("conv_id", "Location", regex=r"^conv-\d{6}$"),
+    ColumnAssignment("turn_idx", "Measures", "integer", min_value=0),
+    ColumnAssignment("role", "Others", allowed_values=("user", "assistant", "tool")),
+    ColumnAssignment("period", "Time"),
+]
+
+
+def _rows_read(spark, group: str) -> int:
+    """inputRecords summed over the executed stages of one job group, read
+    from the driver's status store (works with the UI disabled)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = store.jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+    total = 0
+    for i in range(jobs.length()):
+        job = jobs.apply(i)
+        g = job.jobGroup()
+        if g.isEmpty() or g.get() != group:
+            continue
+        ids = job.stageIds()
+        for k in range(ids.length()):
+            try:
+                st = store.lastStageAttempt(ids.apply(k))
+            except Exception:  # stage skipped, never attempted
+                continue
+            if str(st.status()) != "SKIPPED":
+                total += int(st.inputRecords())
+    return total
+
+
+def test_run_validation_reads_input_at_most_five_times(spark, tmp_path):
+    src = str(tmp_path / "src")
+    transcripts(spark, 4_000, 40, seed=7, inject_violations=False).withColumn(
+        "period", F.lit("2024")
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    n_rows = df.count()
+    baseline = snapshot(df, ["turn_idx"], n_bins=8)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("shared-scan-guard", "run_validation pass count")
+    try:
+        out = run_validation(
+            spark, df, ASSIGNS, F.substring("conv_id", 1, 10),
+            checkpoint_path=str(tmp_path / "ckpt"),
+            order_by=["conv_id", "turn_idx"],
+            report_path=str(tmp_path / "rep"),
+            publish_path=str(tmp_path / "pub"),
+            sequence_rule=SequenceRule("conv_id", "turn_idx", ts_column="ts"),
+            check_rules=[CheckRule("turn_cap", "turn_idx < 100000")],
+            metric_rules=[
+                # fails the partition holding the skewed conversation only,
+                # so the publish write scans and writes the other three
+                MetricRule("rows", "row_count", max_bound=1_000),
+                MetricRule("text_nulls", "null_fraction", column="text", max_bound=0.05),
+            ],
+            drift_rule=DriftRule(baseline, severity="warn"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(out.processed_partitions) == 4
+    assert len(spark.read.parquet(str(tmp_path / "pub")).select(
+        "partition_id").distinct().collect()) == 3
+
+    # Spark also counts each read of the cached per-partition aggregate as
+    # input: one record per cached columnar batch, a handful per call. The
+    # guard counts whole passes over the input.
+    passes, cache_reads = divmod(_rows_read(spark, "shared-scan-guard"), n_rows)
+    assert passes <= 5, passes
+    assert cache_reads < 20, cache_reads
