@@ -93,28 +93,38 @@ def _literal_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 # Spark build (below) and the DuckDB CTE (DERIVED_SQL), so the validation
 # engine's counts are oracle-checkable.
 
-_SPARK_DERIVED_EXPRS = [
-    "concat('conv-', CAST(user_id % 20 AS STRING)) AS conv_id",
-    "CAST(event_id % 100 AS INT) AS turn_idx",
-    "event_type AS role",
-    """CASE CAST(event_id % 6 AS INT)
+# alias -> SQL, in output column order
+_SPARK_DERIVED_EXPRS = {
+    "conv_id": "concat('conv-', CAST(user_id % 20 AS STRING))",
+    "turn_idx": "CAST(event_id % 100 AS INT)",
+    "role": "event_type",
+    "year_str": """CASE CAST(event_id % 6 AS INT)
          WHEN 0 THEN CAST(year(ts) AS STRING)
          WHEN 1 THEN concat('Mar-', CAST(year(ts) AS STRING))
          WHEN 2 THEN concat(CAST(year(ts) AS STRING), '-12')
          WHEN 3 THEN concat('Q1 ', CAST(year(ts) AS STRING))
          WHEN 4 THEN ''
-         ELSE NULL END AS year_str""",
-    """CASE CAST(event_id % 8 AS INT)
+         ELSE NULL END""",
+    "int_m": """CASE CAST(event_id % 8 AS INT)
          WHEN 5 THEN CAST(value AS STRING)
          WHEN 6 THEN 'N/A'
          WHEN 7 THEN NULL
-         ELSE CAST(CAST(value * 100 AS BIGINT) AS STRING) END AS int_m""",
-    """CASE CAST(event_id % 5 AS INT)
+         ELSE CAST(CAST(value * 100 AS BIGINT) AS STRING) END""",
+    "float_m": """CASE CAST(event_id % 5 AS INT)
          WHEN 3 THEN 'junk'
          WHEN 4 THEN NULL
-         ELSE CAST(value AS STRING) END AS float_m""",
-    "props AS tag",
-]
+         ELSE CAST(value AS STRING) END""",
+    "tag": "props",
+}
+
+
+def _derived_exprs(*aliases: str) -> list[str]:
+    """``sql AS alias`` for the named derived columns (all when none)."""
+    return [
+        f"{_SPARK_DERIVED_EXPRS[a]} AS {a}"
+        for a in (aliases or _SPARK_DERIVED_EXPRS)
+    ]
+
 
 DERIVED_SQL = """
   SELECT
@@ -180,7 +190,7 @@ def _derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Entries whose per-row work IS heavy (the try_cast/try_to_timestamp
     # chains) spread a PROJECTED frame instead — see q_coercion_report /
     # q_dtype_coercion_report / q_scalar_coercion.
-    return _t(spark, sf_dir, "events").selectExpr(*_SPARK_DERIVED_EXPRS)
+    return _t(spark, sf_dir, "events").selectExpr(*_derived_exprs())
 
 
 # ------------------------------------------------------------------ queries
@@ -217,13 +227,7 @@ def q_coercion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per row instead of the full 6-column events rows)
     d = _spread(
         _t(spark, sf_dir, "events").select("event_id", "value")
-    ).selectExpr(
-        *[
-            x
-            for x in _SPARK_DERIVED_EXPRS
-            if x.split()[-1] in ("int_m", "float_m")
-        ]
-    )
+    ).selectExpr(*_derived_exprs("int_m", "float_m"))
     cols = [("int_m", "integer"), ("float_m", "float")]
     aggs = []
     for name, mtype in cols:
@@ -245,7 +249,7 @@ def q_time_format_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6/A4: label census over the 6-pattern chain; invalid non-nulls
     bucketed as '<invalid>'."""
     d = _derived(spark, sf_dir)
-    lbl = time_format_label(F.col("year_str"))
+    lbl = F.expr(time_format_label("year_str"))
     return (
         d.where(F.col("year_str").isNotNull())
         .groupBy(F.coalesce(lbl, F.lit("<invalid>")).alias("label"))
@@ -969,13 +973,7 @@ def q_dtype_coercion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splits, so the regex-heavy coercion aggregate otherwise runs nearly
     # single-threaded (guide §2.5 input skew; same remedy as bpe_encode).
     e = _spread(_t(spark, sf_dir, "events").select("event_id", "ts", "value"))
-    d = e.selectExpr(
-        *[
-            x
-            for x in _SPARK_DERIVED_EXPRS
-            if x.split()[-1] in ("year_str", "int_m", "float_m")
-        ]
-    )
+    d = e.selectExpr(*_derived_exprs("year_str", "int_m", "float_m"))
     _, report = coerce_by_dtypes(
         d, {"year_str": "integer", "int_m": "integer", "float_m": "float"}
     )
@@ -1051,8 +1049,8 @@ def q_scalar_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(
         _t(spark, sf_dir, "events").select("event_id", "ts")
     ).selectExpr(*_SPARK_BOOL_TS_EXPRS)
-    bval, berr = coerce_to_boolean(F.col("bool_m"))
-    tval, terr = coerce_to_datetime(F.col("ts_str"))
+    bval, berr = map(F.expr, coerce_to_boolean("bool_m"))
+    tval, terr = map(F.expr, coerce_to_datetime("ts_str"))
     agg = d.agg(
         F.sum((bval == True).cast("long")).alias("__n_true"),  # noqa: E712
         F.sum((bval == False).cast("long")).alias("__n_false"),  # noqa: E712

@@ -1,13 +1,18 @@
-"""Role/dtype coercion compiled to Catalyst expressions.
+"""Role/dtype coercion compiled to Spark SQL text.
 
 The reference coerces column-at-a-time in pandas and counts
 ``conversion_errors = max(#nulls_after - #nulls_before, 0)``
 (``/root/reference/utils/validation.py:34-123``, ``200-231``). Coercion
 never un-nulls a value, so that count is exactly the per-row predicate
 ``source IS NOT NULL AND coerced IS NULL`` summed — which is how this module
-expresses it: each coercion compiles to a ``(value_expr, error_pred)`` pair
-that the engine folds into ONE shared-scan ``agg`` (and reuses as a filter
-to emit violation rows). No per-row Python anywhere.
+expresses it: each coercion compiles to a ``(value, error)`` pair of SQL
+expressions that the engine folds into ONE shared-scan ``agg`` (and reuses
+as a filter to emit violation rows). No per-row Python anywhere.
+
+The pairs are SQL text, not Column trees: the engine splices them into its
+report, aggregate and violation expressions and Catalyst parses each output
+column once, where the Column API costs Py4J round trips per operator —
+once the largest fixed cost of a validation call.
 
 Semantics parity notes (pandas quirk → Spark expression):
   * integer (validation.py:40-50): ``to_numeric`` then fractional values
@@ -30,9 +35,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ndap_data_validator_spark.functions.sqltext import sql_ident, sql_str
 from ndap_data_validator_spark.functions.timeformat import (
     time_format_label,
     time_invalid_pred,
@@ -54,128 +59,141 @@ _TS_FORMATS = [
 
 @dataclass(frozen=True)
 class CompiledCoercion:
-    """A coercion compiled for one column.
+    """A coercion compiled for one column, as SQL text.
 
-    value_expr  — the coerced value (same name contract as the source col)
-    error_pred  — per-row boolean: this row is a conversion error
-    label_expr  — Time role only: the matched format label (else None)
+    value_sql  — the coerced value (same name contract as the source col)
+    error_sql  — per-row boolean: this row is a conversion error
+    label_sql  — Time role only: the matched format label (else None)
+
+    ``value_expr`` / ``error_pred`` / ``label_expr``: the same as Columns.
     """
 
     source: str
-    value_expr: Column
-    error_pred: Column
-    label_expr: Column | None = None
+    value_sql: str
+    error_sql: str
+    label_sql: str | None = None
+
+    value_expr = property(lambda self: F.expr(self.value_sql))
+    error_pred = property(lambda self: F.expr(self.error_sql))
+    label_expr = property(lambda self: self.label_sql and F.expr(self.label_sql))
 
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _FLOAT_TYPES = {"float", "double"}
 
 
-def _nan_to_null(d: Column) -> Column:
+def _nan_to_null(d: str) -> str:
     """Normalize double NaN → NULL. pandas ``isna()`` treats NaN as missing
     (so the reference's null/error counts fold NaN into nulls); Spark treats
     NaN as an ordinary non-null double — without this, a float-typed source
     containing NaN would diverge from the reference (ADVICE r01)."""
-    return F.when(F.isnan(d), F.lit(None).cast("double")).otherwise(d)
+    return f"CASE WHEN isnan({d}) THEN CAST(NULL AS DOUBLE) ELSE {d} END"
 
 
-def _src_null(col: Column, src_type: str | None) -> Column:
+def _src_null(src: str, src_type: str | None) -> str:
     """'Missing in the pandas sense': NULL, or NaN for float-typed sources.
     Used by error predicates so a source NaN counts as a pre-existing null
     (never a conversion error), matching ``max(after - before, 0)``."""
     if src_type is not None and src_type in _FLOAT_TYPES:
-        return col.isNull() | F.isnan(col)
-    return col.isNull()
+        return f"({src} IS NULL OR isnan({src}))"
+    return f"({src} IS NULL)"
 
 
-def _parse_double(col: Column, src_type: str | None) -> Column:
+def _parse_double(src: str, src_type: str | None) -> str:
     """Numeric view of the column, NaN-normalized to NULL. Already-numeric
     sources skip the string→try_cast roundtrip (semantics-preserving:
     Spark's double→string is round-trippable, so parse(cast_to_string(x))
     ≡ x — but the direct cast stays in fast codegen instead of string
     formatting + parsing)."""
-    if src_type is not None and src_type in _INT_TYPES:
-        return col.cast("double")
+    if src_type is not None and (src_type in _INT_TYPES or src_type.startswith("decimal")):
+        return f"CAST({src} AS DOUBLE)"
     if src_type is not None and src_type in _FLOAT_TYPES:
-        return _nan_to_null(col.cast("double"))
-    if src_type is not None and src_type.startswith("decimal"):
-        return col.cast("double")
+        return _nan_to_null(f"CAST({src} AS DOUBLE)")
     # string path: try_cast('NaN') yields NaN in Spark; pandas to_numeric
     # yields NaN too and then counts it as BOTH a conversion error and a
     # null — normalizing to NULL here makes the error predicate fire.
-    return _nan_to_null(col.cast("string").try_cast("double"))
+    return _nan_to_null(f"try_cast(CAST({src} AS STRING) AS DOUBLE)")
 
 
-def coerce_to_string(col: Column) -> tuple[Column, Column]:
-    return col.cast("string"), F.lit(False)
+# Each coerce_to_* takes the source value as SQL text (a quoted identifier,
+# or any SQL expression) and returns the (value, error) SQL pair.
 
 
-def coerce_to_integer(col: Column, src_type: str | None = None) -> tuple[Column, Column]:
+def coerce_to_string(src: str) -> tuple[str, str]:
+    return f"CAST({src} AS STRING)", "false"
+
+
+def coerce_to_integer(src: str, src_type: str | None = None) -> tuple[str, str]:
     if src_type in _INT_TYPES:
         # integral source: no fractional values, no parse failures
-        return col.cast("long"), F.lit(False)
-    d = _parse_double(col, src_type)
-    fractional = d.isNotNull() & (d % F.lit(1) != F.lit(0))
-    value = F.when(fractional, F.lit(None).cast("double")).otherwise(d).cast("long")
-    error = ~_src_null(col, src_type) & value.isNull()
-    return value, error
+        return f"CAST({src} AS BIGINT)", "false"
+    d = _parse_double(src, src_type)
+    value = (
+        f"CAST(CASE WHEN ({d}) IS NOT NULL AND ({d}) % 1 != 0 "
+        f"THEN CAST(NULL AS DOUBLE) ELSE {d} END AS BIGINT)"
+    )
+    return value, f"(NOT {_src_null(src, src_type)} AND ({value}) IS NULL)"
 
 
-def coerce_to_float(col: Column, src_type: str | None = None) -> tuple[Column, Column]:
+def coerce_to_float(src: str, src_type: str | None = None) -> tuple[str, str]:
     if src_type in _INT_TYPES:
-        return col.cast("double"), F.lit(False)
+        return f"CAST({src} AS DOUBLE)", "false"
     if src_type in _FLOAT_TYPES:
         # NaN folds into nulls (pandas isna parity); never an error.
-        return _nan_to_null(col.cast("double")), F.lit(False)
-    d = _parse_double(col, src_type)
-    return d, ~_src_null(col, src_type) & d.isNull()
+        return _nan_to_null(f"CAST({src} AS DOUBLE)"), "false"
+    d = _parse_double(src, src_type)
+    return d, f"(NOT {_src_null(src, src_type)} AND ({d}) IS NULL)"
 
 
-def coerce_to_boolean(col: Column) -> tuple[Column, Column]:
-    norm = F.lower(F.trim(col.cast("string")))
+def coerce_to_boolean(src: str) -> tuple[str, str]:
+    norm = f"lower(trim(CAST({src} AS STRING)))"
+
+    def tokens(ts: list[str]) -> str:
+        return ", ".join(sql_str(t) for t in ts)
+
     value = (
-        F.when(norm.isin(TRUE_TOKENS), F.lit(True))
-        .when(norm.isin(FALSE_TOKENS), F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
+        f"CASE WHEN {norm} IN ({tokens(TRUE_TOKENS)}) THEN true "
+        f"WHEN {norm} IN ({tokens(FALSE_TOKENS)}) THEN false "
+        "ELSE CAST(NULL AS BOOLEAN) END"
     )
-    return value, col.isNotNull() & value.isNull()
+    return value, f"({src} IS NOT NULL AND ({value}) IS NULL)"
 
 
-def coerce_to_datetime(col: Column, date_only: bool = False) -> tuple[Column, Column]:
-    s = col.cast("string")
-    ts = F.coalesce(
-        F.try_to_timestamp(s),
-        *[F.try_to_timestamp(s, F.lit(fmt)) for fmt in _TS_FORMATS],
-    )
+def coerce_to_datetime(src: str, date_only: bool = False) -> tuple[str, str]:
+    s = f"CAST({src} AS STRING)"
+    parses = [f"try_to_timestamp({s})"] + [
+        f"try_to_timestamp({s}, {sql_str(fmt)})" for fmt in _TS_FORMATS
+    ]
+    ts = f"coalesce({', '.join(parses)})"
     if date_only:
-        ts = F.date_trunc("day", ts)
-    return ts, col.isNotNull() & ts.isNull()
+        ts = f"date_trunc('day', {ts})"
+    return ts, f"({src} IS NOT NULL AND ({ts}) IS NULL)"
 
 
-def coerce_to_category(col: Column) -> tuple[Column, Column]:
-    return col.cast("string"), F.lit(False)
+def coerce_to_category(src: str) -> tuple[str, str]:
+    return f"CAST({src} AS STRING)", "false"
 
 
 def compile_dtype_coercion(column: str, dtype: str) -> CompiledCoercion:
     """Dtype-selection variant (coerce_dataframe_to_selected_types,
     validation.py:93-123). Unknown dtypes fall back to string, as the
     reference does (validation.py:116-117)."""
-    col = F.col(column)
+    src = sql_ident(column)
     if dtype == "integer":
-        value, err = coerce_to_integer(col)
+        value, err = coerce_to_integer(src)
     elif dtype == "float":
-        value, err = coerce_to_float(col)
+        value, err = coerce_to_float(src)
     elif dtype == "boolean":
-        value, err = coerce_to_boolean(col)
+        value, err = coerce_to_boolean(src)
     elif dtype == "date":
-        value, err = coerce_to_datetime(col, date_only=True)
+        value, err = coerce_to_datetime(src, date_only=True)
     elif dtype == "datetime":
-        value, err = coerce_to_datetime(col, date_only=False)
+        value, err = coerce_to_datetime(src, date_only=False)
     elif dtype == "category":
-        value, err = coerce_to_category(col)
+        value, err = coerce_to_category(src)
     else:  # string + fallback
-        value, err = coerce_to_string(col)
-    return CompiledCoercion(source=column, value_expr=value, error_pred=err)
+        value, err = coerce_to_string(src)
+    return CompiledCoercion(source=column, value_sql=value, error_sql=err)
 
 
 def compile_role_coercion(
@@ -189,22 +207,22 @@ def compile_role_coercion(
     Location→string, Time→string + format-error labeling, Measures→int/float,
     Others→category(string). Unassigned columns default to Others
     (validation.py:210)."""
-    col = F.col(column)
-    label: Column | None = None
+    src = sql_ident(column)
+    label: str | None = None
     if role == "Location":
-        value, err = coerce_to_string(col)
+        value, err = coerce_to_string(src)
     elif role == "Time":
         # Kept as string; errors are per-row invalid formats — the
         # majority-format extra errors are aggregate-level and added by the
         # engine from the label counts (validation.py:180-188).
-        value, _ = coerce_to_string(col)
-        label = time_format_label(col)
-        err = time_invalid_pred(col, label)
+        value, _ = coerce_to_string(src)
+        label = time_format_label(src)
+        err = time_invalid_pred(src, label)
     elif role == "Measures":
         if (measure_type or "float") == "integer":
-            value, err = coerce_to_integer(col, src_type)
+            value, err = coerce_to_integer(src, src_type)
         else:
-            value, err = coerce_to_float(col, src_type)
+            value, err = coerce_to_float(src, src_type)
     else:  # Others
-        value, err = coerce_to_category(col)
-    return CompiledCoercion(source=column, value_expr=value, error_pred=err, label_expr=label)
+        value, err = coerce_to_category(src)
+    return CompiledCoercion(source=column, value_sql=value, error_sql=err, label_sql=label)

@@ -1,11 +1,13 @@
-"""Time-format labeling as a pure Catalyst ``when``/``rlike`` chain.
+"""Time-format labeling as one SQL ``CASE WHEN … RLIKE …`` chain.
 
 Reference semantics: 6 anchored regex patterns tried in order, first match
 wins; empty/whitespace-only strings and unmatched values are invalid
 (``/root/reference/utils/validation.py:147-188`` and the duplicated compile
 at ``255-269``). The reference loops per row in Python — here the label is
 one JVM-side expression that whole-stage-codegen compiles, so at 10^12 rows
-it runs inside the scan with zero Python.
+it runs inside the scan with zero Python. The label is emitted as SQL text
+(the caller's ``F.expr`` parses it once): built through the Column API the
+chain costs several Py4J round trips per operator, per Time column.
 
 Label domain is CLOSED (6 labels), which is what lets the majority-format
 rule (validation.py:180-188) run in a single shared scan: we emit one
@@ -16,8 +18,7 @@ groupBy-per-column, no second pass.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ndap_data_validator_spark.functions.sqltext import sql_str
 
 _MONTH = "Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec"
 
@@ -36,21 +37,27 @@ TIME_PATTERNS: list[tuple[str, str]] = [
 TIME_LABELS: list[str] = [label for label, _ in TIME_PATTERNS]
 
 
-def time_format_label(col: Column) -> Column:
-    """Label expression: the matched format name, or NULL when the (trimmed)
-    value is empty or matches no pattern. Mirrors the reference's per-value
+def time_format_label(src: str) -> str:
+    """Label SQL over the source value ``src`` (SQL text, e.g. a quoted
+    identifier): the matched format name, or NULL when the (trimmed) value
+    is empty or matches no pattern. Mirrors the reference's per-value
     strip + first-match loop (validation.py:166-179) declaratively."""
-    trimmed = F.trim(col.cast("string"))
-    expr = F.when(trimmed == F.lit(""), F.lit(None).cast("string"))
-    for label, pattern in TIME_PATTERNS:
-        expr = expr.when(trimmed.rlike(pattern), F.lit(label))
-    return expr.otherwise(F.lit(None).cast("string"))
+    trimmed = f"trim(CAST({src} AS STRING))"
+    arms = "".join(
+        f" WHEN {trimmed} RLIKE {sql_str(pattern)} THEN {sql_str(label)}"
+        for label, pattern in TIME_PATTERNS
+    )
+    return (
+        f"CASE WHEN {trimmed} = '' THEN CAST(NULL AS STRING){arms} "
+        "ELSE CAST(NULL AS STRING) END"
+    )
 
 
-def time_invalid_pred(col: Column, label: Column | None = None) -> Column:
-    """True where a non-null value fails the format check — empty-after-trim
-    or unmatched (validation.py:167-177, 303-313). NULL source values are
-    NOT invalid (the reference filters them out before checking)."""
+def time_invalid_pred(src: str, label: str | None = None) -> str:
+    """SQL predicate, TRUE where a non-null value fails the format check —
+    empty-after-trim or unmatched (validation.py:167-177, 303-313). NULL
+    source values are NOT invalid (the reference filters them out before
+    checking)."""
     if label is None:
-        label = time_format_label(col)
-    return col.isNotNull() & label.isNull()
+        label = time_format_label(src)
+    return f"({src} IS NOT NULL AND ({label}) IS NULL)"

@@ -5,7 +5,8 @@ The per-column rules (null / numeric / range / regex / domain,
 columns — the standard-SQL `CHECK (expr)` class: "a tool turn must name a
 tool", "value is non-negative unless the row is a reversal", "end >=
 start". `rules.model.CheckRule` carries one such expression; this module
-compiles a list of them into Catalyst in ONE projection.
+compiles a list of them into ONE projection, built as SQL text that
+Catalyst parses once (the rule expressions are SQL already).
 
 Semantics are standard SQL CHECK: a row VIOLATES a rule only when the
 expression evaluates to FALSE — NULL (unknown) passes, exactly as a SQL
@@ -26,21 +27,23 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ndap_data_validator_spark.functions.sqltext import sql_name, sql_str
 from ndap_data_validator_spark.rules.model import CheckRule
 
-__all__ = ["check_violation_pred", "check_violations", "check_summary"]
+__all__ = ["check_violation_sql", "check_violations", "check_summary"]
 
 
-def check_violation_pred(rule: CheckRule) -> Column:
-    """The single source of CHECK-violation truth: TRUE exactly when the
-    rule's expression is definitively FALSE (NULL = unknown = passes).
-    Shared by the violations report, the summary, and row routing
+def check_violation_sql(rule: CheckRule) -> str:
+    """The single source of CHECK-violation truth, as SQL: TRUE exactly
+    when the rule's expression is definitively FALSE (NULL = unknown =
+    passes). Shared by the violations report, the summary, and row routing
     (``ValidationEngine.flag_rows``) so the three can never disagree on
-    which rows violate."""
-    return F.expr(rule.expression).eqNullSafe(F.lit(False))
+    which rows violate. The newline ends a trailing ``--`` comment in the
+    rule text before the enclosing expression continues."""
+    return f"(({rule.expression}\n) <=> false)"
 
 
 def check_violations(
@@ -57,17 +60,15 @@ def check_violations(
     (array_compact + explode), zero shuffles."""
     if not rules:
         raise ValueError("no check rules given")
-    hits = F.array_compact(
-        F.array(
-            *[F.when(check_violation_pred(r), F.lit(r.name)) for r in rules]
-        )
+    hits = ", ".join(
+        f"CASE WHEN {check_violation_sql(r)} THEN {sql_str(r.name)} END"
+        for r in rules
     )
-    keys = list(key_cols)
-    carry = list(carry_cols)
+    cols = [sql_name(c) for c in (*carry_cols, *key_cols)]
     return (
-        df.select(*carry, *keys, hits.alias("__checks"))
-        .where(F.size("__checks") > 0)
-        .select(*carry, *keys, F.explode("__checks").alias("check"))
+        df.selectExpr(*cols, f"array_compact(array({hits})) AS __checks")
+        .where("size(__checks) > 0")
+        .selectExpr(*cols, "explode(__checks) AS `check`")
     )
 
 
@@ -78,25 +79,17 @@ def check_summary(df: DataFrame, rules: Sequence[CheckRule]) -> DataFrame:
     expression is TRUE or NULL (SQL CHECK admits unknown)."""
     if not rules:
         raise ValueError("no check rules given")
-    aggs = []
-    for r in rules:
-        v = check_violation_pred(r).cast("long")
-        aggs.append(F.sum(v).alias(f"__v_{r.name}"))
-        aggs.append(F.count(F.lit(1)).alias(f"__n_{r.name}"))
-    agg = df.agg(*aggs)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(r.name).alias("check"),
-                F.col(f"__v_{r.name}").alias("n_violations"),
-                (F.col(f"__n_{r.name}") - F.col(f"__v_{r.name}")).alias(
-                    "n_passed"
-                ),
-                (F.col(f"__v_{r.name}") == 0).alias("passed"),
-            )
-            for r in rules
-        ]
+    aggs = ["count(1) AS __n"] + [
+        f"sum(CAST({check_violation_sql(r)} AS BIGINT)) AS __v{i}"
+        for i, r in enumerate(rules)
+    ]
+    structs = ", ".join(
+        f"named_struct('check', {sql_str(r.name)}, 'n_violations', __v{i}, "
+        f"'n_passed', __n - __v{i}, 'passed', __v{i} = 0)"
+        for i, r in enumerate(rules)
     )
-    return agg.select(F.explode(structs).alias("s")).select(
-        "s.check", "s.n_violations", "s.n_passed", "s.passed"
+    return (
+        df.agg(*[F.expr(a) for a in aggs])
+        .selectExpr(f"explode(array({structs})) AS s")
+        .selectExpr("s.check", "s.n_violations", "s.n_passed", "s.passed")
     )

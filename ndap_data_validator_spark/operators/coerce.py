@@ -17,6 +17,7 @@ from ndap_data_validator_spark.functions.coercion import (
     compile_dtype_coercion,
     compile_role_coercion,
 )
+from ndap_data_validator_spark.functions.sqltext import sql_ident, sql_str
 from ndap_data_validator_spark.functions.timeformat import TIME_LABELS
 
 
@@ -27,35 +28,30 @@ def _report(df: DataFrame, compiled) -> DataFrame:
     _count_time_format_errors into the coercion report
     (validation.py:214-217) — the closed 6-label domain lets both terms come
     from the SAME aggregate row (greatest over 6 count_ifs, no second pass)."""
-    aggs = []
+    aggs, entries = [], []
     for i, c in enumerate(compiled):
-        aggs.append(F.sum(c.error_pred.cast("long")).alias(f"e{i}"))
-        if c.label_expr is not None:
+        aggs.append(f"sum(CAST({c.error_sql} AS BIGINT)) AS e{i}")
+        errs = f"coalesce(e{i}, 0)"
+        if c.label_sql is not None:
+            counts = []
             for j, lbl in enumerate(TIME_LABELS):
                 aggs.append(
-                    F.sum((c.label_expr == F.lit(lbl)).cast("long")).alias(f"l{i}_{j}")
+                    f"sum(CAST(({c.label_sql}) = {sql_str(lbl)} AS BIGINT)) AS l{i}_{j}"
                 )
-    agg = df.agg(*aggs)
-    entries = []
-    for i, c in enumerate(compiled):
-        errs = F.coalesce(F.col(f"e{i}"), F.lit(0))
-        if c.label_expr is not None:
-            counts = [
-                F.coalesce(F.col(f"l{i}_{j}"), F.lit(0))
-                for j in range(len(TIME_LABELS))
-            ]
-            valid_total = counts[0]
-            for lc in counts[1:]:
-                valid_total = valid_total + lc
-            errs = errs + (valid_total - F.greatest(*counts))
+                counts.append(f"coalesce(l{i}_{j}, 0)")
+            errs += f" + ({' + '.join(counts)} - greatest({', '.join(counts)}))"
         entries.append(
-            F.struct(
-                F.lit(c.source).alias("column"), errs.alias("conversion_errors")
-            )
+            f"named_struct('column', {sql_str(c.source)}, 'conversion_errors', {errs})"
         )
-    return agg.select(F.explode(F.array(*entries)).alias("s")).select(
-        "s.column", "s.conversion_errors"
+    return (
+        df.agg(*[F.expr(a) for a in aggs])
+        .selectExpr(f"explode(array({', '.join(entries)})) AS s")
+        .selectExpr("s.column", "s.conversion_errors")
     )
+
+
+def _coerced(df: DataFrame, compiled) -> DataFrame:
+    return df.selectExpr(*[f"{c.value_sql} AS {sql_ident(c.source)}" for c in compiled])
 
 
 def coerce_by_dtypes(
@@ -67,8 +63,7 @@ def coerce_by_dtypes(
         compile_dtype_coercion(c, dtype_selection.get(c, "string"))
         for c in df.columns
     ]
-    coerced = df.select(*[c.value_expr.alias(c.source) for c in compiled])
-    return coerced, _report(df, compiled)
+    return _coerced(df, compiled), _report(df, compiled)
 
 
 def coerce_by_roles(
@@ -95,8 +90,7 @@ def coerce_by_roles(
         )
         for c in df.columns
     ]
-    coerced = df.select(*[c.value_expr.alias(c.source) for c in compiled])
-    return coerced, _report(df, compiled)
+    return _coerced(df, compiled), _report(df, compiled)
 
 
 def null_census(df: DataFrame) -> DataFrame:

@@ -21,7 +21,8 @@ conversation key, the same partitioning the uniqueness window and the
 stable-ordering contract already use, so at 10^12 turns this rides the
 existing conversation-partitioned exchange instead of adding one. All four
 checks are computed in the SAME projection from two ``lag`` values and
-unpivoted with array+filter+explode (no per-check pass, no Python). Skewed
+unpivoted with array+filter+explode (no per-check pass, no Python), built
+as one SQL expression that Catalyst parses once. Skewed
 conversations (one conv holding ~20% of rows) are bounded by the window
 being per-conversation: a hot key lands in one task, which is why the
 check column set is O(1) work per row; for pathological single-conv skew
@@ -30,8 +31,10 @@ the caller can pre-split on a salted sub-key as PLANS.md §skew documents.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ndap_data_validator_spark.functions.sqltext import sql_name, sql_str
 
 
 def sequence_checks(
@@ -71,69 +74,49 @@ def sequence_checks(
     membership UNKNOWN, which passes — same NULL-is-not-a-violation
     contract as every other check here and as SQL row-value ``IN``.
     """
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col).asc())
-    prev_order = F.lag(order_col).over(w)
-    checks: list[Column] = []
+    key, order = sql_name(key_col), sql_name(order_col)
+    w = f"OVER (PARTITION BY {key} ORDER BY {order} ASC)"
+    checks: list[tuple[str, str]] = []  # (SQL predicate, check name)
     if expected_step is not None:
         checks.append(
-            F.when(
-                F.col(order_col) != prev_order + F.lit(expected_step),
-                F.lit("order_gap"),
-            )
+            (f"{order} != lag({order}) {w} + {int(expected_step)}", "order_gap")
         )
     if ts_col is not None:
-        prev_ts = F.lag(ts_col).over(w)
-        checks.append(
-            F.when(F.col(ts_col) < prev_ts, F.lit("ts_regression"))
-        )
+        ts = sql_name(ts_col)
+        prev_ts = f"lag({ts}) {w}"
+        checks.append((f"{ts} < {prev_ts}", "ts_regression"))
         if max_gap_sec is not None:
             # pure timestamp+interval comparison: valid for TIMESTAMP and
             # TIMESTAMP_NTZ alike (neither casts to double in Spark 4),
             # timezone-free, and replayed verbatim by the SQL oracle
-            gap_interval = F.expr(
-                f"make_interval(0, 0, 0, 0, 0, 0, {float(max_gap_sec)})"
-            )
-            checks.append(
-                F.when(
-                    F.col(ts_col) > prev_ts + gap_interval, F.lit("long_gap")
-                )
-            )
+            gap = f"make_interval(0, 0, 0, 0, 0, 0, {float(max_gap_sec)})"
+            checks.append((f"{ts} > {prev_ts} + {gap}", "long_gap"))
     if role_col is not None:
-        prev_role = F.lag(role_col).over(w)
-        checks.append(
-            F.when(F.col(role_col) == prev_role, F.lit("role_repeat"))
-        )
+        role = sql_name(role_col)
+        prev_role = f"lag({role}) {w}"
+        checks.append((f"{role} = {prev_role}", "role_repeat"))
         if allowed_transitions is not None:
-            member = F.lit(False)
-            for a, b in sorted(allowed_transitions):
-                member = member | (
-                    (prev_role == F.lit(a)) & (F.col(role_col) == F.lit(b))
-                )
+            member = " OR ".join(
+                ["false"]
+                + [
+                    f"({prev_role} = {sql_str(a)} AND {role} = {sql_str(b)})"
+                    for a, b in sorted(allowed_transitions)
+                ]
+            )
             checks.append(
-                F.when(
-                    prev_role.isNotNull() & ~member, F.lit("bad_transition")
-                )
+                (f"{prev_role} IS NOT NULL AND NOT ({member})", "bad_transition")
             )
     elif allowed_transitions is not None:
         raise ValueError("allowed_transitions requires role_col")
     if not checks:
         raise ValueError("no sequence checks enabled")
 
-    hits = F.array_compact(F.array(*checks))
+    hits = ", ".join(f"CASE WHEN {p} THEN {sql_str(name)} END" for p, name in checks)
+    cols = [sql_name(c) for c in (*carry_cols, key_col, order_col)]
     return (
-        df.select(
-            *[F.col(c) for c in carry_cols],
-            F.col(key_col),
-            F.col(order_col),
-            hits.alias("__checks"),
-        )
-        .where(F.size("__checks") > 0)
-        .select(
-            *carry_cols,
-            key_col,
-            order_col,
-            F.explode("__checks").alias("check"),
-        )
+        df.selectExpr(*cols, f"array_compact(array({hits})) AS __checks")
+        .where("size(__checks) > 0")
+        .selectExpr(*cols, "explode(__checks) AS `check`")
     )
 
 

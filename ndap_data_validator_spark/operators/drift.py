@@ -23,6 +23,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ndap_data_validator_spark.functions.sqltext import (
+    sql_double,
+    sql_ident,
+    sql_name,
+    sql_str,
+)
+
 
 def histogram(
     df: DataFrame,
@@ -66,8 +73,10 @@ def snapshot(
             lo = lo or 0.0
         grids[c] = (float(lo), float(hi))
     hist_exprs = [
-        _hist_agg({"lo": grids[c][0], "hi": grids[c][1], "n_bins": n_bins}, c)
-        .alias(c)
+        F.expr(
+            _hist_agg({"lo": grids[c][0], "hi": grids[c][1], "n_bins": n_bins}, c)
+            + f" AS {sql_ident(c)}"
+        )
         for c in columns
     ]
     hists = df.agg(*hist_exprs).first()
@@ -564,11 +573,11 @@ def drift_report_partitioned(
     identical results to feeding the raw rows."""
     key = key if not isinstance(key, str) else F.col(key)
     hist = df.groupBy(key.alias("partition_id")).agg(
-        *_drift_aggs(baseline, weight)
+        *[F.expr(a) for a in _drift_aggs(baseline, weight)]
     )
-    return hist.select(
+    return hist.selectExpr(
         "partition_id",
-        F.inline(_drift_rows(baseline, ks_threshold, psi_threshold)),
+        f"inline({_drift_rows(baseline, ks_threshold, psi_threshold)})",
     )
 
 
@@ -581,88 +590,70 @@ def _usable_columns(baseline: dict[str, dict]) -> list[str]:
     ]
 
 
-def _sql_double(x: float) -> str:
-    # repr round-trips the exact double; the D suffix keeps it DOUBLE
-    return f"{float(x)!r}D"
-
-
-def _sql_name(column: str) -> str:
-    # the identifier F.col(column) resolves: dots separate nested fields
-    # unless the caller already quoted the name
-    if "`" in column:
-        return column
-    return ".".join(f"`{part}`" for part in column.split("."))
-
-
-def _hist_agg(base: dict, column: str, weight: str | None = None):
-    """One column's histogram on the baseline grid as ONE aggregate:
-    element i is the (``weight``-summed) count of rows in bin i, NULL
-    values counted nowhere. Built as one SQL expression — a single parse
-    instead of a py4j call per bin and operator."""
+def _hist_agg(base: dict, column: str, weight: str | None = None) -> str:
+    """One column's histogram on the baseline grid as ONE aggregate SQL
+    expression: element i is the (``weight``-summed) count of rows in bin
+    i, NULL values counted nowhere."""
     b = (
-        f"width_bucket(CAST({_sql_name(column)} AS DOUBLE), "
-        f"{_sql_double(base['lo'])}, {_sql_double(base['hi'])}, "
+        f"width_bucket(CAST({sql_name(column)} AS DOUBLE), "
+        f"{sql_double(base['lo'])}, {sql_double(base['hi'])}, "
         f"{int(base['n_bins'])})"
     )
     ids = range(base["n_bins"] + 2)
     if weight is None:
         bins = [f"count(CASE WHEN {b} = {i} THEN 1 END)" for i in ids]
     else:
-        w = _sql_name(weight)
+        w = sql_name(weight)
         bins = [
             f"CAST(coalesce(sum(CASE WHEN {b} = {i} THEN {w} END), 0) AS BIGINT)"
             for i in ids
         ]
-    return F.expr(f"array({', '.join(bins)})")
+    return f"array({', '.join(bins)})"
 
 
-def _drift_aggs(baseline: dict[str, dict], weight: str | None = None) -> list:
-    """Every usable baseline column's histogram aggregate, aliased
+def _drift_aggs(baseline: dict[str, dict], weight: str | None = None) -> list[str]:
+    """Every usable baseline column's histogram aggregate as SQL, aliased
     ``__h{j}`` — the drift share of a per-partition aggregate, read back
     by :func:`_drift_rows`."""
     cols = _usable_columns(baseline)
     if not cols:
         raise ValueError("baseline snapshot has no usable columns")
     return [
-        _hist_agg(baseline[c], c, weight).alias(f"__h{j}")
+        f"{_hist_agg(baseline[c], c, weight)} AS __h{j}"
         for j, c in enumerate(cols)
     ]
 
 
 def _drift_rows(
     baseline: dict[str, dict], ks_threshold: float, psi_threshold: float
-):
-    """The drift report rows of ONE aggregate row carrying the
+) -> str:
+    """SQL for the drift report rows of ONE aggregate row carrying the
     :func:`_drift_aggs` histograms: an array of (column, ks, psi, js, w1,
     baseline_total, current_total, drifted) structs, one per column with a
     non-empty current histogram."""
-    rows = [
-        F.struct(
-            F.lit(c).alias("column"),
-            *_verdict_fields(
-                _drift_fold_exprs(baseline[c], f"__h{j}"),
-                ks_threshold,
-                psi_threshold,
-            ),
+    rows = []
+    for j, c in enumerate(_usable_columns(baseline)):
+        fields = _verdict_fields(
+            _drift_fold_exprs(baseline[c], f"__h{j}"), ks_threshold, psi_threshold
         )
-        for j, c in enumerate(_usable_columns(baseline))
-    ]
-    return F.filter(F.array(*rows), lambda r: r["current_total"] > 0)
+        rows.append(
+            f"named_struct('column', {sql_str(c)}, "
+            + ", ".join(f"{sql_str(name)}, {e}" for name, e in fields)
+            + ")"
+        )
+    return f"filter(array({', '.join(rows)}), r -> r.current_total > 0)"
 
 
 def _verdict_fields(m: dict, ks_threshold: float, psi_threshold: float) -> list:
-    """The report columns after ``column``, from :func:`_drift_fold_exprs`."""
+    """The report columns after ``column`` as (name, SQL) pairs, from
+    :func:`_drift_fold_exprs`."""
     return [
-        m["ks"].alias("ks"),
-        m["psi"].alias("psi"),
-        m["js"].alias("js"),
-        m["w1"].alias("w1"),
-        m["baseline_total"].alias("baseline_total"),
-        m["current_total"].alias("current_total"),
+        *[(k, m[k]) for k in ("ks", "psi", "js", "w1", "baseline_total", "current_total")],
         (
-            (m["ks"] > F.lit(float(ks_threshold)))
-            | (m["psi"] > F.lit(float(psi_threshold)))
-        ).alias("drifted"),
+            "drifted",
+            f"({m['ks']}) > {sql_double(ks_threshold)} "
+            f"OR ({m['psi']}) > {sql_double(psi_threshold)}",
+        ),
     ]
 
 
@@ -715,20 +706,19 @@ class DriftRule:
 
 
 def _drift_fold_exprs(base: dict, h: str) -> dict:
-    """KS / PSI / JS / W1 Columns over the histogram ARRAY column named
+    """KS / PSI / JS / W1 SQL over the histogram ARRAY column named
     ``h`` (length n_bins+2, element i = bin i's count, bin 0 underflow),
     the baseline's per-bin fraction / CDF / gap entering as ONE literal
     array — a pure projection with the identical math (and summation
     order) as :func:`compare`: a single ``aggregate`` walks the bins
     carrying the running current CDF and the four sums, so the expression
-    stays the same size for any bin count, and it is built as one SQL
-    expression (one parse, not a py4j call per operator). Because it is
+    stays the same size for any bin count. Because it is
     stateless, it can run directly on the output row of a (streaming)
     aggregation — no second aggregation, which Structured Streaming's
     append mode would reject. An all-zero histogram yields
     ``current_total`` 0 (the divisor is guarded: ANSI division by zero
     raises); callers drop such rows."""
-    eps = _sql_double(1e-6)
+    eps = sql_double(1e-6)
     n_bins = base["n_bins"]
     p = _vectorize(base["counts"], n_bins)
     tp = sum(p)
@@ -742,11 +732,11 @@ def _drift_fold_exprs(base: dict, h: str) -> dict:
         fp = pi / tp
         cp += fp
         bins.append(
-            f"named_struct('i', {i + 1}, 'fp', {_sql_double(fp)}, "
-            f"'sp', {_sql_double(max(fp, 1e-6))}, 'cp', {_sql_double(cp)}, "
-            f"'gap', {_sql_double(gaps[i])})"
+            f"named_struct('i', {i + 1}, 'fp', {sql_double(fp)}, "
+            f"'sp', {sql_double(max(fp, 1e-6))}, 'cp', {sql_double(cp)}, "
+            f"'gap', {sql_double(gaps[i])})"
         )
-    h = _sql_name(h)
+    h = sql_name(h)
     total = f"aggregate({h}, 0L, (a, x) -> a + x)"
     fq = f"element_at({h}, b.i) / CASE WHEN {total} > 0 THEN CAST({total} AS DOUBLE) END"
     # one row per bin: the baseline literals plus the current fraction fq
@@ -757,7 +747,7 @@ def _drift_fold_exprs(base: dict, h: str) -> dict:
     cq = "(acc.cq + b.fq)"
     sq = f"greatest(b.fq, {eps})"
     m = "((b.fp + b.fq) / 2.0D)"
-    fold = F.expr(
+    fold = (
         f"aggregate({rows}, "
         "named_struct('cq', 0D, 'ks', 0D, 'psi', 0D, 'js', 0D, 'w1', 0D), "
         "(acc, b) -> named_struct("
@@ -770,12 +760,9 @@ def _drift_fold_exprs(base: dict, h: str) -> dict:
         f"'w1', acc.w1 + abs(b.cp - {cq}) * b.gap))"
     )
     return {
-        "ks": fold["ks"],
-        "psi": fold["psi"],
-        "js": fold["js"],
-        "w1": fold["w1"],
-        "baseline_total": F.lit(int(tp)).cast("long"),
-        "current_total": F.expr(total),
+        **{k: f"({fold}).{k}" for k in ("ks", "psi", "js", "w1")},
+        "baseline_total": f"CAST({int(tp)} AS BIGINT)",
+        "current_total": total,
     }
 
 
@@ -811,12 +798,15 @@ def drift_windowed(
     hist = (
         src.where(F.col(column).isNotNull())
         .groupBy(F.window(F.col(ts_col), window_duration).alias("w"))
-        .agg(_hist_agg(baseline[column], column).alias("h"))
+        .agg(F.expr(f"{_hist_agg(baseline[column], column)} AS h"))
     )
     m = _drift_fold_exprs(baseline[column], "h")
-    return hist.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        F.lit(column).alias("column"),
-        *_verdict_fields(m, ks_threshold, psi_threshold),
+    return hist.selectExpr(
+        "w.start AS window_start",
+        "w.`end` AS window_end",
+        f"{sql_str(column)} AS `column`",
+        *[
+            f"{e} AS {name}"
+            for name, e in _verdict_fields(m, ks_threshold, psi_threshold)
+        ],
     )

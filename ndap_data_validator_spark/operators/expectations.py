@@ -11,8 +11,8 @@ north-star: the standard production gate BEFORE a 10^12-turn corpus ships
 is exactly these dataset assertions.
 
 Scale shape — identical to the validation shared scan
-(operators/validate.py): every rule compiles to aggregate Column
-expressions evaluated in ONE ``groupBy(partition).agg(...)`` — map-side
+(operators/validate.py): every rule compiles to an aggregate SQL
+expression evaluated in ONE ``groupBy(partition).agg(...)`` — map-side
 partial aggregation, one metadata-sized exchange, report assembly as
 expressions over the aggregate row (array-of-structs + explode, stays
 distributed). No per-row Python, no second pass, no driver collect.
@@ -56,6 +56,12 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ndap_data_validator_spark.functions.sqltext import (
+    sql_double,
+    sql_name,
+    sql_str,
+)
 
 __all__ = [
     "MetricRule",
@@ -161,8 +167,8 @@ def _value_expr(
     approx_distinct: bool,
     quantile_accuracy: int,
     now: str | None = None,
-) -> Column:
-    """The aggregate expression producing this rule's metric value
+) -> str:
+    """The aggregate SQL expression producing this rule's metric value
     (double)."""
     m = rule.metric
     if m == "freshness":
@@ -175,47 +181,40 @@ def _value_expr(
         # timestamp → double keeps sub-second precision (ntz casts via
         # timestamp under the engine's pinned UTC session zone), matching
         # DuckDB's epoch() for the oracle.
-        return F.lit(_now_epoch(now)) - F.max(
-            F.col(rule.column).cast("timestamp").cast("double")
+        return (
+            f"{sql_double(_now_epoch(now))} - "
+            f"max(CAST(CAST({sql_name(rule.column)} AS TIMESTAMP) AS DOUBLE))"
         )
     if m == "row_count":
-        return F.count(F.lit(1)).cast("double")
+        return "CAST(count(1) AS DOUBLE)"
     if m == "compliance":
         # NULL (unknown) is NOT compliant — bool_expr may be NULL on null
-        # inputs; Deequ counts those rows against the fraction.
-        return F.avg(
-            F.coalesce(F.expr(rule.expression), F.lit(False)).cast("double")
-        )
-    col = F.col(rule.column)
-    if m == "null_fraction":
-        return F.avg(col.isNull().cast("double"))
-    if m == "mean":
-        return F.avg(col.cast("double"))
-    if m == "stddev":
-        return F.stddev_samp(col.cast("double"))
-    if m == "min":
-        return F.min(col.cast("double"))
-    if m == "max":
-        return F.max(col.cast("double"))
-    if m == "sum":
-        return F.sum(col.cast("double"))
+        # inputs; Deequ counts those rows against the fraction. The newline
+        # ends a trailing ``--`` comment in the rule text.
+        return f"avg(CAST(coalesce(({rule.expression}\n), false) AS DOUBLE))"
+    col = sql_name(rule.column)
+    simple = {
+        "null_fraction": f"avg(CAST({col} IS NULL AS DOUBLE))",
+        "mean": f"avg(CAST({col} AS DOUBLE))",
+        "stddev": f"stddev_samp(CAST({col} AS DOUBLE))",
+        "min": f"min(CAST({col} AS DOUBLE))",
+        "max": f"max(CAST({col} AS DOUBLE))",
+        "sum": f"sum(CAST({col} AS DOUBLE))",
+    }
+    if m in simple:
+        return simple[m]
+    distinct = (
+        f"approx_count_distinct({col})" if approx_distinct
+        else f"count(DISTINCT {col})"
+    )
     if m == "distinct":
-        d = (
-            F.approx_count_distinct(col)
-            if approx_distinct
-            else F.count_distinct(col)
-        )
-        return d.cast("double")
+        return f"CAST({distinct} AS DOUBLE)"
     if m == "distinct_ratio":
-        d = (
-            F.approx_count_distinct(col)
-            if approx_distinct
-            else F.count_distinct(col)
-        )
-        return d.cast("double") / F.count(F.lit(1)).cast("double")
+        return f"CAST({distinct} AS DOUBLE) / CAST(count(1) AS DOUBLE)"
     if m == "quantile":
-        return F.percentile_approx(
-            col.cast("double"), F.lit(float(rule.q)), F.lit(quantile_accuracy)
+        return (
+            f"percentile_approx(CAST({col} AS DOUBLE), {sql_double(rule.q)}, "
+            f"{int(quantile_accuracy)})"
         )
     raise AssertionError(m)  # unreachable: __post_init__ validated
 
@@ -243,8 +242,8 @@ def metric_expectations(
         if partition_by is None
         else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
     ).cast("string").alias("partition_id")
-    return df.groupBy(part_expr).agg(*aggs).select(
-        "partition_id", F.inline(_metric_rows(rules))
+    return df.groupBy(part_expr).agg(*[F.expr(a) for a in aggs]).selectExpr(
+        "partition_id", f"inline({_metric_rows(rules)})"
     )
 
 
@@ -253,65 +252,62 @@ def _metric_aggs(
     approx_distinct: bool = True,
     quantile_accuracy: int = 10_000,
     now: str | None = None,
-) -> list[Column]:
-    """Every rule's metric as one aggregate, aliased ``__m{i}``."""
+) -> list[str]:
+    """Every rule's metric as one aggregate SQL expression, aliased
+    ``__m{i}``."""
     if not rules:
         raise ValueError("no rules given")
     names = [r.name for r in rules]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate rule names: {names}")
     return [
-        _value_expr(r, approx_distinct, quantile_accuracy, now).alias(f"__m{i}")
+        f"{_value_expr(r, approx_distinct, quantile_accuracy, now)} AS __m{i}"
         for i, r in enumerate(rules)
     ]
 
 
-def _passed(r: MetricRule, v: Column) -> Column:
+def _bound(x: float | None) -> str:
+    return "CAST(NULL AS DOUBLE)" if x is None else f"CAST({sql_double(x)} AS DOUBLE)"
+
+
+def _passed(r: MetricRule, v: str) -> str:
     # NaN must FAIL regardless of bound direction: Spark orders NaN above
     # every double, so without this guard a NaN metric (e.g. avg over a
     # NaN-poisoned column) passes any min_bound-only rule while failing
     # the same rule written as a max_bound.
-    ok = v.isNotNull() & ~F.isnan(v)
+    ok = [f"{v} IS NOT NULL", f"NOT isnan({v})"]
     if r.min_bound is not None:
-        ok = ok & (v >= F.lit(float(r.min_bound)))
+        ok.append(f"{v} >= {sql_double(r.min_bound)}")
     if r.max_bound is not None:
-        ok = ok & (v <= F.lit(float(r.max_bound)))
-    return ok
+        ok.append(f"{v} <= {sql_double(r.max_bound)}")
+    return " AND ".join(ok)
 
 
-def _metric_rows(rules: list[MetricRule]) -> Column:
-    """The report rows of ONE aggregate row carrying the
+def _metric_rows(rules: list[MetricRule]) -> str:
+    """SQL for the report rows of ONE aggregate row carrying the
     :func:`_metric_aggs` values: an array of (rule, metric, column, value,
     min_bound, max_bound, passed, severity) structs in rule order."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(r.name).alias("rule"),
-                F.lit(r.metric).alias("metric"),
-                F.lit(r.column).cast("string").alias("column"),
-                F.col(f"__m{i}").alias("value"),
-                F.lit(r.min_bound).cast("double").alias("min_bound"),
-                F.lit(r.max_bound).cast("double").alias("max_bound"),
-                _passed(r, F.col(f"__m{i}")).alias("passed"),
-                F.lit(r.severity).alias("severity"),
-            )
-            for i, r in enumerate(rules)
-        ]
+    rows = ", ".join(
+        f"named_struct('rule', {sql_str(r.name)}, 'metric', {sql_str(r.metric)}, "
+        "'column', "
+        + ("CAST(NULL AS STRING)" if r.column is None else sql_str(r.column))
+        + f", 'value', __m{i}, 'min_bound', {_bound(r.min_bound)}, "
+        f"'max_bound', {_bound(r.max_bound)}, 'passed', {_passed(r, f'__m{i}')}, "
+        f"'severity', {sql_str(r.severity)})"
+        for i, r in enumerate(rules)
     )
+    return f"array({rows})"
 
 
-def _rule_lists(rows: Column) -> tuple[Column, Column]:
-    """(failed_rules, warned_rules) of an array of report-row structs:
+def _rule_lists(rows: str) -> tuple[str, str]:
+    """SQL (failed_rules, warned_rules) of an array of report-row structs:
     sorted names of the failing error- and warn-severity rules."""
 
-    def names(severity: str) -> Column:
-        return F.array_sort(
-            F.transform(
-                F.filter(
-                    rows, lambda e: ~e["passed"] & (e["severity"] == severity)
-                ),
-                lambda e: e["rule"],
-            )
+    def names(severity: str) -> str:
+        return (
+            f"array_sort(transform(filter({rows}, "
+            f"e -> NOT e.passed AND e.severity = {sql_str(severity)}), "
+            "e -> e.rule))"
         )
 
     return names("error"), names("warn")
@@ -322,16 +318,18 @@ def expectations_summary(report: DataFrame) -> DataFrame:
     ``(partition_id, failed_rules, failed_count, warned_rules, passed)``.
     Warn-severity rules land in ``warned_rules`` and never fail the
     partition — same contract as the column-rule verdict."""
-    failed, warned = _rule_lists(F.col("rows"))
+    failed, warned = _rule_lists("rows")
     return (
         report.groupBy("partition_id")
-        .agg(F.collect_list(F.struct("rule", "passed", "severity")).alias("rows"))
-        .select("partition_id", failed.alias("failed_rules"), warned.alias("warned_rules"))
-        .select(
+        .agg(F.expr("collect_list(struct(rule, passed, severity)) AS rows"))
+        .selectExpr(
+            "partition_id", f"{failed} AS failed_rules", f"{warned} AS warned_rules"
+        )
+        .selectExpr(
             "partition_id",
             "failed_rules",
-            F.size("failed_rules").alias("failed_count"),
+            "size(failed_rules) AS failed_count",
             "warned_rules",
-            (F.size("failed_rules") == 0).alias("passed"),
+            "size(failed_rules) = 0 AS passed",
         )
     )

@@ -1,5 +1,5 @@
-"""The validation engine core: rule catalog → Catalyst expressions → ONE
-shared scan → per-column report, per-partition summary, violation rows.
+"""The validation engine core: rule catalog → Spark SQL text → ONE shared
+scan → per-column report, per-partition summary, violation rows.
 
 Reference lifecycle being re-expressed (``/root/reference/main.py:835-1130``
 + ``utils/validation.py:200-357``): the reference loops file-by-file and
@@ -17,6 +17,14 @@ into a single ``groupBy(partition).agg(...)``:
     with no second pass;
   * violation rows reuse the very same compiled predicates as filters,
     exploded long-form and ordered by a stable key.
+
+Every rule compiles to SQL text, and each output column — an aggregate, the
+``__cols`` report-struct array, the violation array — becomes a Catalyst
+expression with ONE ``F.expr``. The same trees built through the PySpark
+Column API cost a Py4J round trip or more per operator (method call plus
+call-site capture): thousands per call, which made building the plan slower
+than running its jobs. Identifiers and literals are quoted by
+``functions/sqltext.py``.
 
 Per-partition report ≙ the reference's per-file report (main.py:880-936):
 one S3 CSV file maps to one partition value here.
@@ -51,7 +59,15 @@ from ndap_data_validator_spark.functions.coercion import (
     CompiledCoercion,
     compile_role_coercion,
 )
+from ndap_data_validator_spark.functions.sqltext import (
+    sql_double,
+    sql_ident,
+    sql_in,
+    sql_name,
+    sql_str,
+)
 from ndap_data_validator_spark.functions.timeformat import TIME_LABELS
+from ndap_data_validator_spark.operators.checks import check_violation_sql
 from ndap_data_validator_spark.rules.model import (
     ColumnAssignment,
     REASON_INCONSISTENT_TIME,
@@ -110,8 +126,20 @@ class _Slot:
     def col(self) -> str:
         return self.assignment.column
 
+    @property
+    def src(self) -> str:
+        return sql_ident(self.col)
+
     def a(self, suffix: str) -> str:
         return f"c{self.idx}__{suffix}"
+
+
+def _compact(entries: list[str], empty_type: str) -> str:
+    """SQL for the non-NULL ``entries`` as an array (``CASE WHEN`` arms
+    without ELSE drop out); a typed empty array when there are none."""
+    if not entries:
+        return f"CAST(array() AS ARRAY<{empty_type}>)"
+    return f"filter(array({', '.join(entries)}), x -> x IS NOT NULL)"
 
 
 class ValidationEngine:
@@ -149,75 +177,67 @@ class ValidationEngine:
         return slots
 
     @staticmethod
-    def _range_pred(slot: _Slot) -> Column | None:
+    def _range_pred(slot: _Slot) -> str | None:
         a = slot.assignment
         if a.min_value is None and a.max_value is None:
             return None
-        v = slot.coercion.value_expr.cast("double")
+        v = f"CAST({slot.coercion.value_sql} AS DOUBLE)"
         conds = []
         if a.min_value is not None:
-            conds.append(v < F.lit(float(a.min_value)))
+            conds.append(f"{v} < {sql_double(a.min_value)}")
         if a.max_value is not None:
-            conds.append(v > F.lit(float(a.max_value)))
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred | c
-        return v.isNotNull() & pred
+            conds.append(f"{v} > {sql_double(a.max_value)}")
+        return f"({v} IS NOT NULL AND ({' OR '.join(conds)}))"
 
     @staticmethod
-    def _regex_pred(slot: _Slot) -> Column | None:
+    def _regex_pred(slot: _Slot) -> str | None:
         a = slot.assignment
         if a.regex is None:
             return None
-        s = F.col(slot.col).cast("string")
-        return s.isNotNull() & ~s.rlike(a.regex)
+        s = f"CAST({slot.src} AS STRING)"
+        return f"({s} IS NOT NULL AND NOT ({s} RLIKE {sql_str(a.regex)}))"
 
     @staticmethod
-    def _domain_pred(slot: _Slot) -> Column | None:
+    def _domain_pred(slot: _Slot) -> str | None:
         a = slot.assignment
         if a.allowed_values is None:
             return None
-        s = F.col(slot.col).cast("string")
-        return s.isNotNull() & ~s.isin(list(a.allowed_values))
+        s = f"CAST({slot.src} AS STRING)"
+        return f"({s} IS NOT NULL AND NOT ({sql_in(s, list(a.allowed_values))}))"
 
-    def _agg_exprs(self, slots: list[_Slot]) -> list[Column]:
+    def _agg_exprs(self, slots: list[_Slot]) -> list[str]:
         """Every aggregate for the single shared scan, aliased by slot."""
-        exprs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
+
+        def count(pred: str, alias: str) -> str:
+            return f"sum(CAST({pred} AS BIGINT)) AS {alias}"
+
+        exprs = ["count(1) AS __rows"]
         for s in slots:
-            exprs.append(
-                F.sum(s.coercion.value_expr.isNull().cast("long")).alias(s.a("nulls"))
-            )
-            exprs.append(F.sum(s.coercion.error_pred.cast("long")).alias(s.a("errs")))
-            if s.coercion.label_expr is not None:
+            c = s.coercion
+            exprs.append(count(f"({c.value_sql}) IS NULL", s.a("nulls")))
+            exprs.append(count(c.error_sql, s.a("errs")))
+            if c.label_sql is not None:
                 for j, lbl in enumerate(TIME_LABELS):
                     exprs.append(
-                        F.sum(
-                            (s.coercion.label_expr == F.lit(lbl)).cast("long")
-                        ).alias(s.a(f"lbl{j}"))
+                        count(f"({c.label_sql}) = {sql_str(lbl)}", s.a(f"lbl{j}"))
                     )
-            rp = self._range_pred(s)
-            if rp is not None:
-                exprs.append(F.sum(rp.cast("long")).alias(s.a("range")))
-            xp = self._regex_pred(s)
-            if xp is not None:
-                exprs.append(F.sum(xp.cast("long")).alias(s.a("regex")))
-            dp = self._domain_pred(s)
-            if dp is not None:
-                exprs.append(F.sum(dp.cast("long")).alias(s.a("domain")))
+            for suffix, pred in (
+                ("range", self._range_pred(s)),
+                ("regex", self._regex_pred(s)),
+                ("domain", self._domain_pred(s)),
+            ):
+                if pred is not None:
+                    exprs.append(count(pred, s.a(suffix)))
         return exprs
 
     # ----------------------------------------------------- report expressions
 
-    @staticmethod
-    def _zero_if_null(c: Column) -> Column:
-        # sum() over an empty/all-null group is NULL; reports want 0.
-        return F.coalesce(c, F.lit(0))
-
-    def _column_struct(self, s: _Slot) -> Column:
-        """Expressions over ONE aggregate row → the per-column report struct.
+    def _column_struct(self, s: _Slot) -> str:
+        """SQL over ONE aggregate row → the per-column report struct.
 
         conversion_errors for Time = invalid + (valid_total − majority)
         (validation.py:180-188); for other roles it is the error-pred sum.
+        ``sum()`` over an empty/all-null group is NULL; reports want 0.
 
         Tolerance/severity (engine knobs, ColumnAssignment docstring): with
         ``tolerance`` set, every count-based trip condition becomes
@@ -227,101 +247,72 @@ class ValidationEngine:
         reported but ``passed`` is pinned True. Defaults reproduce the
         reference verdict bit-for-bit.
         """
-        nulls = self._zero_if_null(F.col(s.a("nulls")))
-        errs = self._zero_if_null(F.col(s.a("errs")))
-        rows = self._zero_if_null(F.col("__rows"))
 
+        def n(alias: str) -> str:
+            return f"coalesce({alias}, 0)"
+
+        nulls, errs, rows = n(s.a("nulls")), n(s.a("errs")), n("__rows")
         tol = s.assignment.tolerance
 
-        def _trip(count: Column) -> Column:
+        def _trip(count: str) -> str:
             if tol is None:
-                return count > 0
-            return count.cast("double") > F.lit(float(tol)) * rows.cast("double")
-
-        is_time = s.coercion.label_expr is not None
-        if is_time:
-            label_counts = [
-                self._zero_if_null(F.col(s.a(f"lbl{j}")))
-                for j in range(len(TIME_LABELS))
-            ]
-            valid_total = label_counts[0]
-            for lc in label_counts[1:]:
-                valid_total = valid_total + lc
-            majority = F.greatest(*label_counts)
-            distinct_formats = sum(
-                [(lc > 0).cast("int") for lc in label_counts], F.lit(0)
+                return f"({count}) > 0"
+            return (
+                f"CAST({count} AS DOUBLE) > {sql_double(tol)} * CAST({rows} AS DOUBLE)"
             )
+
+        # (trip condition, reason) in the reference's exact reason order
+        # (validation.py:287-327): numericOnly → notNull → time checks →
+        # engine extensions.
+        trips: list[tuple[str, str]] = []
+        conv_errs = errs
+        if s.coercion.label_sql is not None:
+            counts = [n(s.a(f"lbl{j}")) for j in range(len(TIME_LABELS))]
+            valid_total = f"({' + '.join(counts)})"
+            minority = f"({valid_total} - greatest({', '.join(counts)}))"
+            distinct_formats = " + ".join(f"CAST({lc} > 0 AS INT)" for lc in counts)
             invalid = errs
-            conv_errs = invalid + (valid_total - majority)
+            conv_errs = f"({invalid} + {minority})"
             time_invalid_fail = _trip(invalid)
             if tol is None:
                 # reference branch exactly (validation.py:317-327)
-                time_inconsistent_fail = (invalid == 0) & (distinct_formats > 1)
+                time_inconsistent_fail = f"{invalid} = 0 AND ({distinct_formats}) > 1"
             else:
                 # tolerant reading: the invalid branch didn't trip, more
                 # than one format seen, AND the minority formats exceed the
                 # allowed fraction.
                 time_inconsistent_fail = (
-                    ~time_invalid_fail
-                    & (distinct_formats > 1)
-                    & _trip(valid_total - majority)
+                    f"NOT ({time_invalid_fail}) AND ({distinct_formats}) > 1 "
+                    f"AND {_trip(minority)}"
                 )
-        else:
-            conv_errs = errs
-            time_invalid_fail = F.lit(False)
-            time_inconsistent_fail = F.lit(False)
-
-        reasons_raw: list[Column] = []
-        fail_conds: list[Column] = []
-        # Reason order matches the reference exactly (validation.py:287-327):
-        # numericOnly → notNull → time checks → engine extensions.
         if s.rule.numeric_only:
-            cond = _trip(conv_errs)
-            fail_conds.append(cond)
-            reasons_raw.append(F.when(cond, F.lit(REASON_NON_NUMERIC)))
+            trips.append((_trip(conv_errs), REASON_NON_NUMERIC))
         if s.rule.not_null:
-            cond = _trip(nulls)
-            fail_conds.append(cond)
-            reasons_raw.append(F.when(cond, F.lit(REASON_NO_NULLS)))
-        if is_time:
-            fail_conds.append(time_invalid_fail)
-            reasons_raw.append(F.when(time_invalid_fail, F.lit(REASON_INVALID_TIME)))
-            fail_conds.append(time_inconsistent_fail)
-            reasons_raw.append(
-                F.when(time_inconsistent_fail, F.lit(REASON_INCONSISTENT_TIME))
-            )
-        if self._range_pred(s) is not None:
-            cond = _trip(self._zero_if_null(F.col(s.a("range"))))
-            fail_conds.append(cond)
-            reasons_raw.append(F.when(cond, F.lit(REASON_OUT_OF_RANGE)))
-        if self._regex_pred(s) is not None:
-            cond = _trip(self._zero_if_null(F.col(s.a("regex"))))
-            fail_conds.append(cond)
-            reasons_raw.append(F.when(cond, F.lit(REASON_REGEX_MISMATCH)))
-        if self._domain_pred(s) is not None:
-            cond = _trip(self._zero_if_null(F.col(s.a("domain"))))
-            fail_conds.append(cond)
-            reasons_raw.append(F.when(cond, F.lit(REASON_NOT_IN_DOMAIN)))
+            trips.append((_trip(nulls), REASON_NO_NULLS))
+        if s.coercion.label_sql is not None:
+            trips.append((time_invalid_fail, REASON_INVALID_TIME))
+            trips.append((time_inconsistent_fail, REASON_INCONSISTENT_TIME))
+        for suffix, pred, reason in (
+            ("range", self._range_pred(s), REASON_OUT_OF_RANGE),
+            ("regex", self._regex_pred(s), REASON_REGEX_MISMATCH),
+            ("domain", self._domain_pred(s), REASON_NOT_IN_DOMAIN),
+        ):
+            if pred is not None:
+                trips.append((_trip(n(s.a(suffix))), reason))
 
-        failed = F.lit(False)
-        if s.assignment.severity != "warn":
-            for c in fail_conds:
-                failed = failed | c
-        reasons = (
-            F.filter(
-                F.array(*reasons_raw), lambda x: x.isNotNull()
-            )
-            if reasons_raw
-            else F.array().cast("array<string>")
+        failed = "false"
+        if s.assignment.severity != "warn" and trips:
+            failed = " OR ".join(f"({cond})" for cond, _ in trips)
+        reasons = _compact(
+            [f"CASE WHEN {cond} THEN {sql_str(r)} END" for cond, r in trips],
+            "STRING",
         )
-
-        return F.struct(
-            F.lit(s.col).alias("column"),
-            F.lit(s.assignment.role).alias("role"),
-            nulls.cast("long").alias("nulls"),
-            conv_errs.cast("long").alias("conversion_errors"),
-            (~failed).alias("passed"),
-            reasons.alias("reasons"),
+        return (
+            f"named_struct('column', {sql_str(s.col)}, "
+            f"'role', {sql_str(s.assignment.role)}, "
+            f"'nulls', CAST({nulls} AS BIGINT), "
+            f"'conversion_errors', CAST({conv_errs} AS BIGINT), "
+            f"'passed', NOT ({failed}), 'reasons', {reasons})"
         )
 
     def _missing_roles(self, assignments: list[ColumnAssignment]) -> list[str]:
@@ -370,15 +361,16 @@ class ValidationEngine:
         order_by: list[str] | None,
         cache_aggregates: bool,
         max_violations_per_rule: int | None,
-        extra_aggs: list[Column] = (),
-        extra_cols: list[Column] = (),
+        extra_aggs: list[str] = (),
+        extra_cols: list[str] = (),
     ) -> ValidationResult:
         """:meth:`validate`, with other rule families folded into the same
-        per-partition aggregate: ``extra_aggs`` join the slot aggregates in
-        the ONE ``groupBy(partition).agg``, and ``extra_cols`` (expressions
-        over that aggregate row) ride in ``cached_aggregate`` next to
-        ``__cols`` and the summary columns, so their verdicts are
-        projections of the one cached row (plans/pipeline.py)."""
+        per-partition aggregate: ``extra_aggs`` (aliased SQL aggregates)
+        join the slot aggregates in the ONE ``groupBy(partition).agg``, and
+        ``extra_cols`` (aliased SQL over that aggregate row) ride in
+        ``cached_aggregate`` next to ``__cols`` and the summary columns, so
+        their verdicts are projections of the one cached row
+        (plans/pipeline.py)."""
         slots = self._slots(df, assignments)
         missing_roles = self._missing_roles(assignments)
 
@@ -388,29 +380,29 @@ class ValidationEngine:
             else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
         ).cast("string").alias("partition_id")
 
-        agg = df.groupBy(part_expr).agg(*self._agg_exprs(slots), *extra_aggs)
-
-        col_structs = F.array(*[self._column_struct(s) for s in slots])
-        missing_lit = F.array(*[F.lit(r) for r in missing_roles]).cast("array<string>")
-        failed_cols = F.transform(
-            F.filter(F.col("__cols"), lambda c: ~c["passed"]),
-            lambda c: c["column"],
+        agg = df.groupBy(part_expr).agg(
+            *[F.expr(e) for e in [*self._agg_exprs(slots), *extra_aggs]]
         )
-        wide = agg.select(
-            F.col("partition_id"),
-            F.col("__rows").alias("rows"),
-            col_structs.alias("__cols"),
+
+        col_structs = ", ".join(self._column_struct(s) for s in slots)
+        missing_lit = (
+            f"CAST(array({', '.join(sql_str(r) for r in missing_roles)}) "
+            "AS ARRAY<STRING>)"
+        )
+        failed_cols = "transform(filter(__cols, c -> NOT c.passed), c -> c.column)"
+        wide = agg.selectExpr(
+            "partition_id",
+            "__rows AS rows",
+            f"array({col_structs}) AS __cols",
             *extra_cols,
-        ).select(
+        ).selectExpr(
             "*",
-            failed_cols.alias("failed_columns"),
-            F.size(failed_cols).alias("failed_count"),
-            missing_lit.alias("missing_roles"),
+            f"{failed_cols} AS failed_columns",
+            f"size({failed_cols}) AS failed_count",
+            f"{missing_lit} AS missing_roles",
             # overall pass (validation.py:350): no failed columns AND no
             # missing mandatory roles.
-            ((F.size(failed_cols) == 0) & F.lit(len(missing_roles) == 0)).alias(
-                "passed"
-            ),
+            f"size({failed_cols}) = 0 AND {str(not missing_roles).lower()} AS passed",
         )
         if cache_aggregates:
             # The aggregate is one row per partition — tiny. Persisting it
@@ -418,9 +410,9 @@ class ValidationEngine:
             # scan of the source instead of recomputing the aggregation.
             wide = wide.persist()
 
-        per_column = wide.select(
-            "partition_id", F.explode("__cols").alias("c")
-        ).select(
+        per_column = wide.selectExpr(
+            "partition_id", "explode(__cols) AS c"
+        ).selectExpr(
             "partition_id",
             "c.column",
             "c.role",
@@ -441,8 +433,8 @@ class ValidationEngine:
         violations = self._violations(
             df, slots, part_expr, order_by, max_violations_per_rule
         )
-        coerced = df.select(
-            *[s.coercion.value_expr.alias(s.col) for s in slots]
+        coerced = df.selectExpr(
+            *[f"{s.coercion.value_sql} AS {s.src}" for s in slots]
         )
         return ValidationResult(
             per_column_report=per_column,
@@ -453,26 +445,24 @@ class ValidationEngine:
             cached_aggregate=wide if cache_aggregates else None,
         )
 
-    def _row_checks(self, s: _Slot) -> list[tuple[Column, str]]:
-        """Every (fires-on-violation predicate, reason string) pair for one
-        column slot — the single source of row-level rule semantics, shared
-        by the violations report and :meth:`flag_rows`."""
-        checks: list[tuple[Column, str]] = []
+    def _row_checks(self, s: _Slot) -> list[tuple[str, str]]:
+        """Every (fires-on-violation SQL predicate, reason string) pair for
+        one column slot — the single source of row-level rule semantics,
+        shared by the violations report and :meth:`flag_rows`."""
+        checks: list[tuple[str, str]] = []
         if s.rule.not_null:
-            checks.append((s.coercion.value_expr.isNull(), REASON_NO_NULLS))
+            checks.append((f"({s.coercion.value_sql}) IS NULL", REASON_NO_NULLS))
         if s.rule.numeric_only:
-            checks.append((s.coercion.error_pred, REASON_NON_NUMERIC))
-        if s.coercion.label_expr is not None:
-            checks.append((s.coercion.error_pred, REASON_INVALID_TIME))
-        rp = self._range_pred(s)
-        if rp is not None:
-            checks.append((rp, REASON_OUT_OF_RANGE))
-        xp = self._regex_pred(s)
-        if xp is not None:
-            checks.append((xp, REASON_REGEX_MISMATCH))
-        dp = self._domain_pred(s)
-        if dp is not None:
-            checks.append((dp, REASON_NOT_IN_DOMAIN))
+            checks.append((s.coercion.error_sql, REASON_NON_NUMERIC))
+        if s.coercion.label_sql is not None:
+            checks.append((s.coercion.error_sql, REASON_INVALID_TIME))
+        for pred, reason in (
+            (self._range_pred(s), REASON_OUT_OF_RANGE),
+            (self._regex_pred(s), REASON_REGEX_MISMATCH),
+            (self._domain_pred(s), REASON_NOT_IN_DOMAIN),
+        ):
+            if pred is not None:
+                checks.append((pred, reason))
         return checks
 
     def flag_rows(
@@ -506,30 +496,19 @@ class ValidationEngine:
                 f"flag_rows appends columns {sorted(clash)} but the frame "
                 "already has them — rename the source columns first"
             )
-        slots = self._slots(df, assignments)
-        entries: list[Column] = []
-        for s in slots:
-            if s.assignment.severity == "warn":
-                continue
-            for pred, reason in self._row_checks(s):
-                entries.append(F.when(pred, F.lit(f"{s.col}: {reason}")))
-        for cr in check_rules or []:
-            from ndap_data_validator_spark.operators.checks import (
-                check_violation_pred,
-            )
-
-            entries.append(
-                F.when(check_violation_pred(cr), F.lit(f"check: {cr.name}"))
-            )
-        reasons = (
-            F.filter(F.array(*entries), lambda x: x.isNotNull())
-            if entries
-            else F.array().cast("array<string>")
+        fired = [
+            (pred, f"{s.col}: {reason}")
+            for s in self._slots(df, assignments)
+            if s.assignment.severity != "warn"
+            for pred, reason in self._row_checks(s)
+        ] + [(check_violation_sql(cr), f"check: {cr.name}") for cr in check_rules or []]
+        reasons = _compact(
+            [f"CASE WHEN {pred} THEN {sql_str(label)} END" for pred, label in fired],
+            "STRING",
         )
-        return df.select(
-            "*",
-            reasons.alias("row_reasons"),
-        ).withColumn("row_passed", F.size("row_reasons") == 0)
+        return df.selectExpr("*", f"{reasons} AS row_reasons").selectExpr(
+            "*", "size(row_reasons) = 0 AS row_passed"
+        )
 
     def _violations(
         self,
@@ -542,39 +521,22 @@ class ValidationEngine:
         """Per-row violation output: the same compiled predicates, reused as
         filters. Long-form (one row per offending cell), ordered by the
         stable key so runs are byte-comparable."""
-        entries: list[Column] = []
-        for s in slots:
-            for pred, reason in self._row_checks(s):
-                entries.append(
-                    F.when(
-                        pred,
-                        F.struct(
-                            F.lit(s.col).alias("column"),
-                            F.lit(reason).alias("reason"),
-                            F.col(s.col).cast("string").alias("value"),
-                        ),
-                    )
-                )
+        entries = [
+            f"CASE WHEN {pred} THEN named_struct('column', {sql_str(s.col)}, "
+            f"'reason', {sql_str(reason)}, 'value', CAST({s.src} AS STRING)) END"
+            for s in slots
+            for pred, reason in self._row_checks(s)
+        ]
         order_cols = list(order_by or [])
-        base = df.select(
-            part_expr,
-            *[F.col(c) for c in order_cols],
-            (
-                F.filter(F.array(*entries), lambda x: x.isNotNull())
-                if entries
-                else F.array().cast(
-                    "array<struct<column:string,reason:string,value:string>>"
-                )
-            ).alias("__viol"),
+        keys = [sql_name(c) for c in order_cols]
+        viol = _compact(
+            entries, "STRUCT<column: STRING, reason: STRING, value: STRING>"
         )
         out = (
-            base.where(F.size("__viol") > 0)
-            .select(
-                "partition_id",
-                *order_cols,
-                F.explode("__viol").alias("v"),
-            )
-            .select("partition_id", *order_cols, "v.column", "v.reason", "v.value")
+            df.select(part_expr, *order_cols, F.expr(f"{viol} AS __viol"))
+            .where("size(__viol) > 0")
+            .selectExpr("partition_id", *keys, "explode(__viol) AS v")
+            .selectExpr("partition_id", *keys, "v.column", "v.reason", "v.value")
         )
         if max_violations_per_rule is not None:
             if not order_cols:

@@ -21,6 +21,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ndap_data_validator_spark.functions.sqltext import sql_in, sql_str
 from ndap_data_validator_spark.operators.validate import ValidationEngine, ValidationResult
 from ndap_data_validator_spark.plans.checkpoint import NULL_PARTITION, CheckpointStore
 from ndap_data_validator_spark.rules.model import (
@@ -300,12 +301,10 @@ def run_validation(
     # still folds over every record of the run, main.py:926-936).
     prior = (
         store.run_log(run_id)
-        .where((F.col("rule_digest") == digest) & (F.col("status") == "done"))
-        .select(
+        .where(f"rule_digest = {sql_str(digest)} AND status = 'done'")
+        .selectExpr(
             "partition_id",
-            (
-                F.get_json_object("metrics_json", "$.passed") == F.lit("true")
-            ).alias("passed"),
+            "get_json_object(metrics_json, '$.passed') = 'true' AS passed",
         )
         .collect()
     )
@@ -321,9 +320,10 @@ def run_validation(
     # MetricRule's value, and one histogram per DriftRule baseline column.
     # It is persisted once (ValidationResult.cached_aggregate); the report
     # rows, the checkpoint metrics, the publish gate and the watermark fold
-    # are all projections of that cached row.
-    shared_aggs: list[Column] = []
-    shared_cols: list[Column] = []
+    # are all projections of that cached row. Every expression below is
+    # SQL text (one parse per output column; see operators/validate.py).
+    shared_aggs: list[str] = []
+    shared_cols: list[str] = []
     if metric_rules:
         from ndap_data_validator_spark.operators.expectations import (
             _metric_aggs,
@@ -332,7 +332,7 @@ def run_validation(
         )
 
         shared_aggs += _metric_aggs(metric_rules, now=metric_now)
-        shared_cols.append(_metric_rows(metric_rules).alias("__exp"))
+        shared_cols.append(f"{_metric_rows(metric_rules)} AS __exp")
     if drift_rule is not None:
         from ndap_data_validator_spark.operators.drift import (
             _drift_aggs,
@@ -345,7 +345,8 @@ def run_validation(
                 drift_rule.baseline,
                 drift_rule.ks_threshold,
                 drift_rule.psi_threshold,
-            ).alias("__drift")
+            )
+            + " AS __drift"
         )
     result = engine._validate(
         remaining,
@@ -363,29 +364,27 @@ def run_validation(
     # expectation failure or error-severity drift is a DATA failure: it
     # withholds the partition from publish and freezes the delta watermark.
     exp_report = drift_rep = None
-    exp_ok = drift_ok = F.lit(True)
-    extra_fields: list[Column] = []
+    exp_ok = drift_ok = "true"
+    extra_fields: list[tuple[str, str]] = []  # (metrics_json key, SQL)
     if metric_rules:
-        exp_report = shared.select("partition_id", F.inline("__exp"))
-        failed_rules, warned_rules = _rule_lists(F.col("__exp"))
-        exp_ok = F.size(failed_rules) == 0
+        exp_report = shared.selectExpr("partition_id", "inline(__exp)")
+        failed_rules, warned_rules = _rule_lists("__exp")
+        exp_ok = f"size({failed_rules}) = 0"
         # the rule names ride metrics_json for the cross-run anomaly
         # history (plans/anomaly.py reads these paths)
         extra_fields += [
-            failed_rules.alias("expectation_failed_rules"),
-            warned_rules.alias("expectation_warned_rules"),
+            ("expectation_failed_rules", failed_rules),
+            ("expectation_warned_rules", warned_rules),
         ]
     if drift_rule is not None:
-        drift_rep = shared.select("partition_id", F.inline("__drift"))
+        drift_rep = shared.selectExpr("partition_id", "inline(__drift)")
         # sorted: __drift lists columns in sorted baseline order. A
         # partition where every baseline column is NULL has no rows and
         # an empty list, so it passes.
-        drifted = F.transform(
-            F.filter("__drift", lambda d: d["drifted"]), lambda d: d["column"]
-        )
+        drifted = "transform(filter(__drift, d -> d.drifted), d -> d.column)"
         if drift_rule.severity == "error":
-            drift_ok = F.size(drifted) == 0
-        extra_fields.append(drifted.alias("drifted_columns"))
+            drift_ok = f"size({drifted}) = 0"
+        extra_fields.append(("drifted_columns", drifted))
 
     # Expected-partition completeness census (operators/completeness.py)
     # over the FULL batch slice, NOT the resume remainder — whether a
@@ -522,10 +521,9 @@ def run_validation(
     routed = row_policy == "quarantine" and not result.missing_roles
     if routed:
         err_cols = [a.column for a in assignments if a.severity != "warn"]
-        agg_only_fail = F.exists(
-            "__cols",
-            lambda c: c["column"].isin(err_cols)
-            & F.array_contains(c["reasons"], REASON_INCONSISTENT_TIME),
+        agg_only_fail = (
+            f"exists(__cols, c -> {sql_in('c.column', err_cols)} AND "
+            f"array_contains(c.reasons, {sql_str(REASON_INCONSISTENT_TIME)}))"
         )
 
     # The only collect of the run's results: the partition ids (one short
@@ -541,12 +539,12 @@ def run_validation(
     # safely landed, growing the batch slice forever on one persistently
     # bad row — so only the non-routable aggregate-granular failures
     # (withheld wholesale, genuinely re-pickable) freeze it.
-    data_failed = agg_only_fail if routed else F.col("failed_count") > 0
-    passed = F.col("passed") & exp_ok & drift_ok
-    verdicts = shared.select(
+    data_failed = agg_only_fail if routed else "failed_count > 0"
+    passed = f"passed AND ({exp_ok}) AND ({drift_ok})"
+    verdicts = shared.selectExpr(
         "partition_id",
-        passed.alias("passed"),
-        (data_failed | ~exp_ok | ~drift_ok).alias("frozen"),
+        f"{passed} AS passed",
+        f"({data_failed}) OR NOT ({exp_ok}) OR NOT ({drift_ok}) AS frozen",
     ).collect()
     processed = sorted(r["partition_id"] for r in verdicts)
 
@@ -555,33 +553,26 @@ def run_validation(
     # per-column collect() in the run path. A partition's recorded verdict
     # folds in its error-severity expectation and drift failures.
     if processed:
-        columns = F.map_from_entries(
-            F.transform(
-                "__cols",
-                lambda c: F.struct(
-                    c["column"],
-                    F.struct(
-                        c["nulls"].alias("nulls"),
-                        c["conversion_errors"].alias("conversion_errors"),
-                        c["passed"].alias("passed"),
-                    ),
-                ),
-            )
+        columns = (
+            "map_from_entries(transform(__cols, c -> named_struct("
+            "'column', c.column, 'stats', named_struct('nulls', c.nulls, "
+            "'conversion_errors', c.conversion_errors, 'passed', c.passed))))"
         )
         json_fields = [
-            F.col("rows"),
-            F.col("failed_count"),
-            F.col("failed_columns"),
-            passed.alias("passed"),
+            ("rows", "rows"),
+            ("failed_count", "failed_count"),
+            ("failed_columns", "failed_columns"),
+            ("passed", passed),
             *extra_fields,
-            columns.alias("columns"),
+            ("columns", columns),
         ]
-        metrics_frame = shared.select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id"),
-            F.lit(digest).alias("rule_digest"),
-            F.lit("done").alias("status"),
-            F.to_json(F.struct(*json_fields)).alias("metrics_json"),
+        record = ", ".join(f"{sql_str(k)}, {e}" for k, e in json_fields)
+        metrics_frame = shared.selectExpr(
+            f"{sql_str(run_id)} AS run_id",
+            "partition_id",
+            f"{sql_str(digest)} AS rule_digest",
+            "'done' AS status",
+            f"to_json(named_struct({record})) AS metrics_json",
         )
         store.mark_done_frame(metrics_frame)
 
@@ -594,10 +585,10 @@ def run_validation(
         # row — no driver-side partition list. Under row-granular routing
         # only aggregate-granular column failures withhold their partition
         # (see agg_only_fail above); everything else routes row by row.
-        column_ok = ~agg_only_fail if routed else F.col("passed")
-        passed_parts = shared.where(column_ok & exp_ok & drift_ok).select(
-            "partition_id"
-        )
+        column_ok = f"NOT ({agg_only_fail})" if routed else "passed"
+        passed_parts = shared.where(
+            f"({column_ok}) AND ({exp_ok}) AND ({drift_ok})"
+        ).select("partition_id")
         # Quarantine with missing mandatory roles (a run-level CONFIG
         # verdict: the rule set never compiled, so row verdicts would be
         # vacuous) writes neither sink rather than two guaranteed empty.
@@ -611,13 +602,11 @@ def run_validation(
             ).withColumn("partition_id", key)
             gated = flagged.join(passed_parts, "partition_id", "left_semi")
             _write_partitioned(
-                gated.where(F.col("row_passed")).drop(
-                    "row_reasons", "row_passed"
-                ),
+                gated.where("row_passed").drop("row_reasons", "row_passed"),
                 publish_path,
             )
             _write_partitioned(
-                gated.where(~F.col("row_passed")).drop("row_passed"),
+                gated.where("NOT row_passed").drop("row_passed"),
                 quarantine_path
                 or (publish_path.rstrip("/") + "_quarantine"),
             )

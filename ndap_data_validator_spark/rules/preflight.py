@@ -112,10 +112,10 @@ def preflight_rules(
 
     for cr in check_rules or []:
         from ndap_data_validator_spark.operators.checks import (
-            check_violation_pred,
+            check_violation_sql,
         )
 
-        err = _analyze(lambda cr=cr: empty.select(check_violation_pred(cr)))
+        err = _analyze(lambda cr=cr: empty.selectExpr(check_violation_sql(cr)))
         if err is not None:
             errors.append(PreflightError("check", cr.name, err))
 

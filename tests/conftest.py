@@ -18,3 +18,37 @@ def spark():
     )
     yield s
     s.stop()
+
+
+class Py4JCommandCounter:
+    """Counts the Py4J commands the Python driver sends to the JVM while
+    active, leaving out Py4J's memory (object-delete) commands: those
+    follow Python garbage collection, not the code under test."""
+
+    def __init__(self) -> None:
+        self.commands = 0
+
+    def __enter__(self) -> "Py4JCommandCounter":
+        from py4j.clientserver import ClientServerConnection
+        from py4j.protocol import MEMORY_COMMAND_NAME
+
+        send = ClientServerConnection.send_command
+
+        def counting_send(conn, command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                self.commands += 1
+            return send(conn, command, *args, **kwargs)
+
+        self._restore = lambda: setattr(ClientServerConnection, "send_command", send)
+        ClientServerConnection.send_command = counting_send
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._restore()
+
+
+@pytest.fixture
+def py4j_commands():
+    """``with py4j_commands() as n: ...; n.commands`` — see
+    :class:`Py4JCommandCounter`."""
+    return Py4JCommandCounter

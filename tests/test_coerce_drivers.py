@@ -99,8 +99,8 @@ def test_nan_counts_as_null_not_error_for_float_source(spark):
     df = spark.createDataFrame(
         [(1.0,), (float("nan"),), (2.5,), (None,)], "m double"
     )
-    fv, fe = coerce_to_float(F.col("m"), src_type="double")
-    iv, ie = coerce_to_integer(F.col("m"), src_type="double")
+    fv, fe = map(F.expr, coerce_to_float("m", src_type="double"))
+    iv, ie = map(F.expr, coerce_to_integer("m", src_type="double"))
     row = df.agg(
         F.sum(fv.isNull().cast("long")).alias("f_nulls"),
         F.sum(fe.cast("long")).alias("f_errs"),
@@ -117,7 +117,7 @@ def test_nan_string_counts_as_error_and_null(spark):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([("1.5",), ("NaN",), (None,)], "m string")
-    v, e = coerce_to_float(F.col("m"))
+    v, e = map(F.expr, coerce_to_float("m"))
     row = df.agg(
         F.sum(v.isNull().cast("long")).alias("nulls"),
         F.sum(e.cast("long")).alias("errs"),

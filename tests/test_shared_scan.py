@@ -3,7 +3,13 @@ family shares the validator's one per-partition aggregate, so a call with
 column, CHECK, sequence, metric and drift rules plus report and publish
 sinks reads its input at most five times — the shared aggregate, the column
 violations, the CHECK violations, the sequence window and the publish
-write. A rule family that brings its own scan fails this test."""
+write. A rule family that brings its own scan fails this test.
+
+The same call is also held to a Py4J command budget (Py4J's memory
+commands left out, tests/conftest.py): rule families compile to SQL text,
+so the call sends 826 commands where building every expression through the
+Column API sent 8,068. The bound leaves under 2x headroom over 826; a rule
+family that goes back to operator-by-operator Column building fails it."""
 
 from __future__ import annotations
 
@@ -51,7 +57,9 @@ def _rows_read(spark, group: str) -> int:
     return total
 
 
-def test_run_validation_reads_input_at_most_five_times(spark, tmp_path):
+def test_run_validation_reads_input_at_most_five_times(
+    spark, tmp_path, py4j_commands
+):
     src = str(tmp_path / "src")
     transcripts(spark, 4_000, 40, seed=7, inject_violations=False).withColumn(
         "period", F.lit("2024")
@@ -63,22 +71,23 @@ def test_run_validation_reads_input_at_most_five_times(spark, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("shared-scan-guard", "run_validation pass count")
     try:
-        out = run_validation(
-            spark, df, ASSIGNS, F.substring("conv_id", 1, 10),
-            checkpoint_path=str(tmp_path / "ckpt"),
-            order_by=["conv_id", "turn_idx"],
-            report_path=str(tmp_path / "rep"),
-            publish_path=str(tmp_path / "pub"),
-            sequence_rule=SequenceRule("conv_id", "turn_idx", ts_column="ts"),
-            check_rules=[CheckRule("turn_cap", "turn_idx < 100000")],
-            metric_rules=[
-                # fails the partition holding the skewed conversation only,
-                # so the publish write scans and writes the other three
-                MetricRule("rows", "row_count", max_bound=1_000),
-                MetricRule("text_nulls", "null_fraction", column="text", max_bound=0.05),
-            ],
-            drift_rule=DriftRule(baseline, severity="warn"),
-        )
+        with py4j_commands() as rt:
+            out = run_validation(
+                spark, df, ASSIGNS, F.substring("conv_id", 1, 10),
+                checkpoint_path=str(tmp_path / "ckpt"),
+                order_by=["conv_id", "turn_idx"],
+                report_path=str(tmp_path / "rep"),
+                publish_path=str(tmp_path / "pub"),
+                sequence_rule=SequenceRule("conv_id", "turn_idx", ts_column="ts"),
+                check_rules=[CheckRule("turn_cap", "turn_idx < 100000")],
+                metric_rules=[
+                    # fails the partition holding the skewed conversation only,
+                    # so the publish write scans and writes the other three
+                    MetricRule("rows", "row_count", max_bound=1_000),
+                    MetricRule("text_nulls", "null_fraction", column="text", max_bound=0.05),
+                ],
+                drift_rule=DriftRule(baseline, severity="warn"),
+            )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(out.processed_partitions) == 4
@@ -91,3 +100,4 @@ def test_run_validation_reads_input_at_most_five_times(spark, tmp_path):
     passes, cache_reads = divmod(_rows_read(spark, "shared-scan-guard"), n_rows)
     assert passes <= 5, passes
     assert cache_reads < 20, cache_reads
+    assert rt.commands <= 1_500, rt.commands

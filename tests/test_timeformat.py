@@ -40,7 +40,7 @@ CASES = [
 @pytest.mark.parametrize("value,expected", CASES)
 def test_label(spark, value, expected):
     df = spark.createDataFrame([(value,)], "v string")
-    got = df.select(time_format_label(F.col("v")).alias("l")).first()["l"]
+    got = df.select(F.expr(time_format_label("v")).alias("l")).first()["l"]
     assert got == expected
 
 
