@@ -20,7 +20,7 @@ add-alpha smoothing over the bucket vocabulary,
 so the whole train step is ONE token shuffle (explode → groupBy(bucket))
 plus a scalar agg — no gradient loop — and every term is a ln(a)−ln(b)
 difference, the exact formulation an external engine reproduces
-bit-for-bit (the lm.py parity trick).
+bit-for-bit.
 
 Plan shape at 100 TB: the weight table is exactly ``n_buckets`` rows —
 always broadcast for scoring; the corpus never shuffles to be scored.

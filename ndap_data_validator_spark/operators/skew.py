@@ -14,7 +14,7 @@ Scale shape (100 TB):
   * per-key counts — ONE shuffle with map-side partial aggregation; the
     frame shrinks to |distinct keys| and is localCheckpoint'ed because two
     downstream consumers (top-N, global stats) would otherwise each re-run
-    the corpus shuffle (same reasoning as `dsir.fit_importance_weights`).
+    the corpus shuffle.
   * top-N heavy hitters — `orderBy(...).limit(n)` plans as
     TakeOrderedAndProject: each task keeps an n-row heap, the driver merges
     |tasks|·n rows. Never a global sort.

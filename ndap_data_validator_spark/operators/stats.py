@@ -172,59 +172,15 @@ def exact_percentiles_distributed(
         counts.unpersist()
 
 
-def exact_percentiles_plan(
-    df: DataFrame,
-    column: str,
-    ps: tuple[float, ...] = (0.5, 0.95, 0.99),
-    num_range_partitions: int = 32,
-) -> DataFrame:
-    """LAZY twin of :func:`exact_percentiles_distributed` (r06): the same
-    order-statistic machinery, but returned as an UNEXECUTED 1-row plan
-    ``(column, p50, …)`` with the linear interpolation done in-plan — so a
-    caller that needs the percentile as a *scalar inside another query*
-    (split medians, keep-fraction thresholds, bucket cuts) can
-    ``crossJoin(broadcast(...))`` it and pay ZERO extra driver actions:
-    the whole pipeline collapses into the consumer's single job. The
-    per-value counts subtree is shared across the plan's broadcast chains
-    via a lazy ``localCheckpoint`` (first use materializes, later uses
-    reuse; the block is released by the ContextCleaner when the plan is
-    garbage-collected). Arithmetic matches the eager twin op-for-op
-    (same doubles, same order), so both produce bit-identical values."""
-    names = [("p%g" % (p * 100)).replace(".", "_") for p in ps]
-    vals = df.where(F.col(column).isNotNull()).select(
-        F.col(column).cast("double").alias("v")
-    )
-    counts = (
-        vals.groupBy("v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    row_df = _percentile_stat_plan(counts, ps, names, num_range_partitions)
-    sel = [F.lit(column).alias("column")]
-    for p, name in zip(ps, names):
-        r = (F.col("n").cast("double") - F.lit(1.0)) * F.lit(float(p))
-        frac = r - F.floor(r)
-        val = F.col(f"__lo_{name}") + frac * (
-            F.col(f"__hi_{name}") - F.col(f"__lo_{name}")
-        )
-        sel.append(
-            F.when(F.col("n").isNull(), F.lit(None).cast("double"))
-            .otherwise(val)
-            .alias(name)
-        )
-    return row_df.select(*sel)
-
-
 def _percentile_stat_plan(
     counts: DataFrame,
     ps: tuple[float, ...],
     names: list[str],
     num_range_partitions: int,
 ) -> DataFrame:
-    """The shared LAZY 1-row order-statistic aggregate over a per-value
+    """The LAZY 1-row order-statistic aggregate over a per-value
     counts frame: ``(n, __lo_<p>, __hi_<p>, …)`` where __lo/__hi are the
-    floor/ceil((n−1)p) order statistics. Callers interpolate (driver-side
-    or in-plan)."""
+    floor/ceil((n−1)p) order statistics; the caller interpolates."""
     from pyspark.sql import Window
 
     # the [lo, hi] range grid stays IN the plan as a broadcast 1-row

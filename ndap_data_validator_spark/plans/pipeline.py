@@ -417,6 +417,11 @@ def run_validation(
         ["partition_id"] if delta_batch is None else ["partition_id", "delta_batch"]
     )
 
+    # resolved once per call, not per sink write: each JVM lookup is a
+    # Py4J round trip
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    hconf = spark._jsc.hadoopConfiguration()
+
     def _assert_layout_depth(path: str) -> None:
         # Delta mode writes an extra delta_batch partition level; Spark
         # rejects a directory holding BOTH depths as conflicting partition
@@ -425,12 +430,9 @@ def run_validation(
         # directory's depth doesn't match this run's mode, so a pipeline
         # that flips modes on the same report/publish path gets an
         # actionable error instead of an unreadable directory.
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        fs = HPath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(HPath(path)):
-            return
-        for st in fs.globStatus(HPath(path.rstrip("/") + "/partition_id=*/*")):
+        pattern = HPath(path.rstrip("/") + "/partition_id=*/*")
+        # globStatus returns null (None) when the directory does not exist
+        for st in pattern.getFileSystem(hconf).globStatus(pattern) or []:
             name = st.getPath().getName()
             if name.startswith(".") or name.startswith("_"):
                 continue  # checksum/_SUCCESS metadata, not layout evidence

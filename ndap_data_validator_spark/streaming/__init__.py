@@ -1,8 +1,13 @@
-"""Streaming is intentionally out of scope for v1: the reference has no
-streaming operators (SURVEY.md §2.10 — ingestion is request-driven batch;
-its "delta" load mode is an orchestration flag, not an incremental compute
-path). Incremental validation of new data maps to Iceberg incremental
-snapshot reads on the batch engine. This package is the reserved home for a
-Structured Streaming front-end (readStream → same compiled rule aggregates
-via watermarked windows) if a later round needs it.
+"""Structured Streaming front-ends. The reference has no streaming operators
+(SURVEY.md §2.10 — its "delta" load mode is an orchestration flag); these
+are engine extensions that run the batch rule families over arriving data:
+
+  * ``validate_stream`` — the compiled rule catalog per micro-batch via
+    ``foreachBatch``;
+  * ``stateful`` — bounded-state at-ingest operators: windowed counts,
+    (conv_id, turn_idx) dedup and the conversation-order checks.
+
+``operators.validate.ValidationEngine.flag_rows`` and
+``operators.drift.drift_windowed`` also run unchanged on ``readStream``
+frames.
 """

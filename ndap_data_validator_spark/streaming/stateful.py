@@ -1,23 +1,22 @@
 """Stateful streaming operators (engine extensions; SURVEY §2.10 — the
 reference has no streaming surface).
 
-Two shapes a transcript/event stream needs beyond per-batch validation:
+Three shapes a transcript/event stream needs beyond per-batch validation:
 
   * ``windowed_event_counts`` — watermark + tumbling-window counts: the
     built-in late-data-tolerant aggregate. State is managed by Spark's
     streaming aggregation operator; the watermark bounds it.
-  * ``sessionize_stream`` — custom stateful operator via Arrow-batched
+  * ``dedup_stream`` — at-ingest (conv_id, turn_idx) uniqueness via
+    ``dropDuplicatesWithinWatermark``.
+  * ``sequence_check_stream`` — custom stateful operator via Arrow-batched
     ``applyInPandasWithState`` (the sanctioned escape hatch for semantics
-    the built-ins can't express): per-key inactivity-gap sessions whose
-    state is (session_start, last_ts, n_events). Closed sessions emit on
-    the batch that closes them — either a later same-key event past the gap,
-    or the EVENT-TIME TIMEOUT once the watermark passes last_ts + gap (which
-    also evicts the key's state); open sessions emit their current snapshot
-    (marked ``closed = false``) so downstream consumers can fold.
+    the built-ins can't express): the conversation-order rules against one
+    previous-turn snapshot per conversation, evicted by an event-time
+    timeout.
 
-Both are per-key bounded-state: memory is O(keys active within one gap
-window), not O(events) and not O(all keys ever seen) — the property that
-matters on an unbounded 100 TB/day stream with key churn.
+All are per-key bounded-state: memory is O(keys active within one
+watermark window), not O(events) and not O(all keys ever seen) — the
+property that matters on an unbounded 100 TB/day stream with key churn.
 """
 
 from __future__ import annotations
@@ -30,12 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_OUTPUT_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, "
-    "n_events bigint, closed boolean"
-)
-_STATE_SCHEMA = "start_sec bigint, last_sec bigint, n_events bigint"
 
 
 def windowed_event_counts(
@@ -61,110 +54,6 @@ def windowed_event_counts(
     )
 
 
-def _sessionize_fn(timeout_sec: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            # the watermark passed last_event + gap with no new events:
-            # close the session AND EVICT the key — without this, state is
-            # O(all keys ever seen) and the final session of a quiet key
-            # never emits closed=true (ADVICE r02)
-            start_sec, last_sec, n_events = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": pd.to_datetime([start_sec], unit="s"),
-                    "session_end": pd.to_datetime([last_sec], unit="s"),
-                    "n_events": [n_events],
-                    "closed": [True],
-                }
-            )
-            return
-        if state.exists:
-            start_sec, last_sec, n_events = state.get
-        else:
-            start_sec = last_sec = None
-            n_events = 0
-
-        out_rows = []
-        secs: list[int] = []
-        for pdf in pdfs:
-            secs.extend(
-                int(v.timestamp()) for v in pd.to_datetime(pdf["ts"]) if pd.notna(v)
-            )
-        for sec in sorted(secs):
-            if last_sec is not None and sec - last_sec > timeout_sec:
-                out_rows.append((user_id, start_sec, last_sec, n_events, True))
-                start_sec, n_events = sec, 0
-            if start_sec is None:
-                start_sec = sec
-            last_sec = sec
-            n_events += 1
-
-        if last_sec is not None:
-            state.update((start_sec, last_sec, n_events))
-            # event-time timeout: fire once the watermark passes the
-            # inactivity gap. Spark requires the timeout timestamp to be
-            # beyond the current watermark, so clamp (late keys time out on
-            # the next watermark advance).
-            state.setTimeoutTimestamp(
-                max(
-                    (last_sec + timeout_sec) * 1000,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-            out_rows.append((user_id, start_sec, last_sec, n_events, False))
-
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out_rows],
-                "session_start": pd.to_datetime(
-                    [r[1] for r in out_rows], unit="s"
-                ),
-                "session_end": pd.to_datetime([r[2] for r in out_rows], unit="s"),
-                "n_events": [r[3] for r in out_rows],
-                "closed": [r[4] for r in out_rows],
-            }
-        )
-
-    return fn
-
-
-def sessionize_stream(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    timeout_sec: int = 1800,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Custom stateful operator: per-key inactivity-gap sessions over a
-    stream. State per key is three longs — independent of event volume —
-    and BOUNDED IN KEY COUNT: an event-time timeout fires once the watermark
-    passes last_event + timeout_sec, emitting the final session as
-    ``closed = true`` and evicting the key (``state.remove()``), so state is
-    O(keys active within one gap window), not O(all keys ever seen)."""
-    events = (
-        stream_df.select(
-            F.col(key_col).cast("long").alias("user_id"),
-            F.col(ts_col).cast("timestamp").alias("ts"),
-        )
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark_delay)
-    )
-    return events.groupBy("user_id").applyInPandasWithState(
-        _sessionize_fn(timeout_sec),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 def dedup_stream(
     stream_df: DataFrame,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
@@ -177,10 +66,10 @@ def dedup_stream(
     evicted once the watermark passes — unlike plain ``dropDuplicates`` on
     a stream, whose state grows with every key ever seen).
 
-    This is the streaming twin of the batch ``dedup_exact`` /
-    ``duplicate_keys`` operators: the same (conv_id, turn_idx) uniqueness
-    contract (north_rule), enforced at ingest time with O(keys-per-window)
-    memory — the property that matters on an unbounded transcript stream.
+    This is the streaming twin of the batch ``duplicate_keys`` operator:
+    the same (conv_id, turn_idx) uniqueness contract (north_rule), enforced
+    at ingest time with O(keys-per-window) memory — the property that
+    matters on an unbounded transcript stream.
     Late duplicates beyond the watermark are the documented residual risk
     (identical to every watermarked-state trade-off); a periodic batch
     ``duplicate_keys`` sweep closes the gap."""

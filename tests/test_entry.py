@@ -35,10 +35,10 @@ def test_entry_runs_and_has_rows(spark):
 
 
 def test_entry_count_is_driver_cap():
-    # the driver checks exactly the first 50 queries() entries; every entry
-    # must be inside the cap and every entry must carry an oracle
+    # only the first 50 queries() entries get a correctness check; every
+    # entry must be inside the cap and every entry must carry an oracle
     qs = entry.queries()
-    assert len(qs) == 50
+    assert len(qs) <= 50
     assert set(entry.oracle_sql()) == set(qs)
 
 

@@ -7,59 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ndap_data_validator_spark.operators.stats import (
-    exact_percentiles_distributed,
-    exact_percentiles_plan,
-)
-
 
 @pytest.fixture(scope="module")
 def spark():
     from ndap_data_validator_spark.session import get_spark
 
     return get_spark(app_name="r06-opt-tests", master="local[4]")
-
-
-def test_percentiles_plan_matches_eager(spark):
-    """The lazy in-plan interpolation twin must be BIT-identical to the
-    eager driver-side interpolation (same doubles, same op order)."""
-    df = spark.range(0, 1000).select(
-        (F.col("id") * 37 % 541).cast("double").alias("v")
-    )
-    eager = exact_percentiles_distributed(df, "v", ps=(0.25, 0.5, 0.9)).first()
-    lazy = exact_percentiles_plan(df, "v", ps=(0.25, 0.5, 0.9)).first()
-    assert eager["column"] == lazy["column"] == "v"
-    for name in ("p25", "p50", "p90"):
-        assert eager[name] == lazy[name]  # exact, not approx
-
-
-def test_percentiles_plan_empty_input(spark):
-    """Empty / all-null input → NULL percentiles in both twins."""
-    df = spark.range(0, 5).select(F.lit(None).cast("double").alias("v"))
-    eager = exact_percentiles_distributed(df, "v", ps=(0.5,)).first()
-    lazy = exact_percentiles_plan(df, "v", ps=(0.5,)).first()
-    assert eager["p50"] is None and lazy["p50"] is None
-
-
-def test_score_threshold_plan_matches_eager(spark):
-    from ndap_data_validator_spark.operators.curate import (
-        _score_threshold,
-        _score_threshold_plan,
-    )
-
-    df = spark.range(0, 200).select(
-        (F.col("id") % 17).cast("double").alias("score")
-    )
-    t_eager = _score_threshold(df, "score", 0.25)
-    t_lazy = _score_threshold_plan(df, "score", 0.25).first()["__thr"]
-    assert t_eager == t_lazy
-    # empty input → -inf fallback (keep everything) in both
-    empty = df.where(F.lit(False))
-    assert _score_threshold(empty, "score", 0.25) == float("-inf")
-    assert (
-        _score_threshold_plan(empty, "score", 0.25).first()["__thr"]
-        == float("-inf")
-    )
 
 
 def test_embedding_neardup_broadcast_equivalent(spark):

@@ -1,38 +1,11 @@
-"""Sessionization + deterministic hash-gate sampling."""
+"""Deterministic hash-gate sampling, connected components and benchmark
+decontamination."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ndap_data_validator_spark.operators.sample import deterministic_sample
-from ndap_data_validator_spark.operators.sessions import (
-    session_rollup,
-    sessionize,
-)
-
-
-def test_sessionize_gap_splits(spark):
-    rows = [
-        (1, 0, "2026-01-01 00:00:00"),
-        (1, 1, "2026-01-01 00:10:00"),   # same session (gap 600 < 1800)
-        (1, 2, "2026-01-01 01:00:00"),   # new session (gap 3000)
-        (2, 3, "2026-01-01 00:00:00"),   # other key: own numbering
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_id long, ts string").select(
-        "user_id", "event_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    s = sessionize(df, timeout_sec=1800, order_tiebreak="event_id")
-    got = {r["event_id"]: r["session_id"] for r in s.collect()}
-    assert got == {0: 0, 1: 0, 2: 1, 3: 0}
-
-
-def test_session_rollup_durations(spark):
-    rows = [(1, i, f"2026-01-01 00:0{i}:00") for i in range(3)]
-    df = spark.createDataFrame(rows, "user_id long, event_id long, ts string").select(
-        "user_id", "event_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    r = session_rollup(df, timeout_sec=1800, order_tiebreak="event_id").first()
-    assert r["n_events"] == 3 and r["duration_sec"] == 120
 
 
 def test_deterministic_sample_stable_and_partition_independent(spark):
@@ -60,44 +33,6 @@ def test_sample_consistent_across_tables(spark):
 
 
 # ----------------------------------------------- property vs python oracles
-
-
-def test_sessionize_matches_python_oracle(spark):
-    """Seeded random events: Spark sessionization == a straightforward
-    per-key fold in Python."""
-    import random
-
-    rng = random.Random(42)
-    rows = []
-    t = 1_700_000_000
-    for eid in range(800):
-        user = rng.randrange(6)
-        t += rng.choice([5, 60, 900, 2000, 4000])
-        rows.append((user, eid, t))
-    df = spark.createDataFrame(rows, "user_id long, event_id long, sec long").select(
-        "user_id", "event_id", F.timestamp_seconds("sec").alias("ts")
-    )
-    got = {
-        (r["user_id"], r["session_id"]): r["n_events"]
-        for r in session_rollup(
-            df, timeout_sec=1800, order_tiebreak="event_id"
-        ).collect()
-    }
-
-    # python oracle: same fold
-    byuser: dict[int, list[tuple[int, int]]] = {}
-    for user, eid, sec in rows:
-        byuser.setdefault(user, []).append((sec, eid))
-    expected: dict[tuple[int, int], int] = {}
-    for user, evs in byuser.items():
-        evs.sort()
-        sid, last = -1, None
-        for sec, _ in evs:
-            if last is None or sec - last > 1800:
-                sid += 1
-            expected[(user, sid)] = expected.get((user, sid), 0) + 1
-            last = sec
-    assert got == expected
 
 
 def test_connected_components_matches_union_find(spark):

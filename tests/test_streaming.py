@@ -120,154 +120,6 @@ def test_windowed_event_counts_matches_batch(spark, tmp_path):
     assert got and all(expected[k] == v for k, v in got.items())
 
 
-def test_sessionize_stream_state_spans_batches(spark, tmp_path):
-    """applyInPandasWithState sessions: state carries across micro-batches —
-    events of one session split over two files still fold into ONE session."""
-    from ndap_data_validator_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "ssrc")
-    # user 1: one session split across files (gap 60s < timeout)
-    # user 2: two sessions (gap 7200s > timeout), split across files
-    f1 = [(1, "2026-01-01 00:00:00"), (1, "2026-01-01 00:01:00"),
-          (2, "2026-01-01 00:00:00")]
-    f2 = [(1, "2026-01-01 00:02:00"), (2, "2026-01-01 02:00:00")]
-    for i, rows in enumerate([f1, f2]):
-        spark.createDataFrame(rows, "user_id long, ts string").select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = sessionize_stream(stream, timeout_sec=1800)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = spark.sql(
-        "SELECT * FROM sessions ORDER BY user_id, session_start, closed"
-    ).collect()
-    # user 1: the last open-session snapshot must span all 3 events
-    u1 = [r for r in rows if r["user_id"] == 1 and not r["closed"]]
-    assert u1[-1]["n_events"] == 3
-    # user 2: first session closed with 1 event, second open with 1 event
-    u2_closed = [r for r in rows if r["user_id"] == 2 and r["closed"]]
-    assert len(u2_closed) == 1 and u2_closed[0]["n_events"] == 1
-    u2_open = [r for r in rows if r["user_id"] == 2 and not r["closed"]]
-    assert u2_open[-1]["n_events"] == 1
-
-
-def test_sessionize_stream_timeout_closes_and_evicts(spark, tmp_path):
-    """ADVICE r02: a key that goes quiet must emit closed=true via the
-    event-time timeout (watermark passes last_event + gap) and its state row
-    must be evicted — no later event is needed to close the final session."""
-    from ndap_data_validator_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "tosrc")
-    # file 1: user 5 at t0; user 6 far enough ahead that the watermark
-    # (max_ts - delay) passes user 5's last_event + timeout
-    f1 = [(5, "2026-01-01 00:00:00"), (5, "2026-01-01 00:05:00"),
-          (6, "2026-01-01 02:00:00")]
-    # file 2: only user 6 — the batch where user 5's timeout fires
-    f2 = [(6, "2026-01-01 02:01:00")]
-    for rows in (f1, f2):
-        spark.createDataFrame(rows, "user_id long, ts string").select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = sessionize_stream(stream, timeout_sec=1800, watermark_delay="5 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("to_sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tockpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = spark.sql("SELECT * FROM to_sessions").collect()
-    u5_closed = [r for r in rows if r["user_id"] == 5 and r["closed"]]
-    assert len(u5_closed) == 1
-    assert u5_closed[0]["n_events"] == 2
-    assert str(u5_closed[0]["session_end"]) == "2026-01-01 00:05:00"
-
-
-def test_sessionize_stream_equals_batch_rollup(spark, tmp_path):
-    """VERDICT r02 #6: folding the stream's session snapshots (closed +
-    latest open per session) equals the oracle-checked batch session_rollup
-    on the same events — the streaming operator inherits the batch oracle."""
-    from ndap_data_validator_spark.operators.sessions import session_rollup
-    from ndap_data_validator_spark.streaming.stateful import sessionize_stream
-
-    # deterministic fixture: 12 users, bursty gaps, whole-second timestamps,
-    # globally time-ordered so micro-batch order == event-time order
-    base = 1_767_225_600  # 2026-01-01 00:00:00 UTC
-    events = []
-    for i in range(240):
-        user = i % 12
-        step = i // 12
-        burst = (i * 7919) % 5
-        # every 5th step jumps by >timeout ⇒ ~4 sessions per user
-        ts = base + step * 400 + (step // 5) * 5000 + burst * 17 + user * 3
-        events.append((user, ts))
-    events.sort(key=lambda e: e[1])
-
-    src = str(tmp_path / "eqsrc")
-    chunk = len(events) // 3
-    for k in range(3):
-        part = events[k * chunk : (k + 1) * chunk if k < 2 else len(events)]
-        spark.createDataFrame(part, "user_id long, sec long").select(
-            "user_id", F.col("sec").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    df = spark.read.parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = sessionize_stream(stream, timeout_sec=900, watermark_delay="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("eq_sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "eqckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    folded = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n"])
-        for r in spark.sql(
-            """SELECT user_id, session_start,
-                      max(session_end) AS session_end, max(n_events) AS n
-               FROM eq_sessions GROUP BY user_id, session_start"""
-        ).collect()
-    }
-    expected = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]),
-         r["n_events"])
-        for r in session_rollup(df, timeout_sec=900).collect()
-    }
-    assert folded == expected and len(expected) > 12
-
-
 def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):
     """dropDuplicatesWithinWatermark twin of batch dedup_exact: duplicates
     split across micro-batches (within the watermark) emit exactly once."""

@@ -66,40 +66,6 @@ def _decontam(spark, df):
     return decontaminate(docs, benchmark_ngram_hashes(bench, n=5), n=5)
 
 
-def _curation_funnel(spark, df):
-    from ndap_data_validator_spark.operators.curate import curate_corpus
-
-    docs = df.where(F.col("text").isNotNull()).select(
-        F.col("conv_id").alias("doc_id"), F.col("text")
-    )
-    _, funnel = curate_corpus(docs, None)
-    return funnel
-
-
-def _lm_score(spark, df):
-    from ndap_data_validator_spark.functions.lm import doc_cross_entropy, unigram_lm
-
-    docs = df.where(F.col("text").isNotNull()).select(
-        F.col("conv_id").alias("doc_id"), F.col("text")
-    )
-    lm, consts = unigram_lm(docs)
-    return doc_cross_entropy(docs, lm, consts)
-
-
-def _dsir(spark, df):
-    from ndap_data_validator_spark.operators.dsir import (
-        fit_importance_weights,
-        score_importance,
-    )
-
-    docs = df.where(F.col("text").isNotNull()).select(
-        F.col("conv_id").alias("doc_id"), F.col("text")
-    )
-    target = docs.where(F.col("doc_id").endswith("0")).select("text")
-    weights, consts = fit_importance_weights(target, docs, n_buckets=4096)
-    return score_importance(docs, weights, consts, n_buckets=4096)
-
-
 def _jaccard(spark, df):
     from ndap_data_validator_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -107,20 +73,6 @@ def _jaccard(spark, df):
         F.col("conv_id").alias("doc_id"), "text"
     )
     return ngram_jaccard_pairs(docs, id_col="doc_id", n=3, threshold=0.5)
-
-
-def _training_order(spark, df):
-    from ndap_data_validator_spark.operators.order import training_order
-
-    docs = df.where(F.col("turn_idx") == 0).select(
-        F.col("conv_id").alias("doc_id"),
-        F.when(F.col("tool").isNotNull(), "tooled").otherwise("plain").alias(
-            "source"
-        ),
-    )
-    return training_order(
-        docs, {"tooled": 2.5, "plain": 1.0}, order_partitions=8
-    )
 
 
 def _json_report(spark, df):
@@ -209,24 +161,11 @@ def main() -> None:
         (
             "Hashed uniqueness (two-phase)",
             duplicate_keys_hashed(df, ["conv_id", "turn_idx"]),
-            "Phase 1 shuffles 8-byte xxhash64 keys only; the suspicious set "
-            "joins back semi-style with AQE choosing broadcast vs shuffle "
-            "from its runtime size; phase 2 exact-verifies on real keys.",
-        ),
-        (
-            "Sessionization (lag → run-sum → rollup)",
-            __import__(
-                "ndap_data_validator_spark.operators.sessions", fromlist=["s"]
-            ).session_rollup(
-                df.where(F.col("ts").isNotNull()),
-                key_col="conv_id", ts_col="ts", timeout_sec=600,
-                order_tiebreak="turn_idx",
-            ),
-            "ONE Exchange on the key; one Sort feeds BOTH windows (lag and "
-            "running sum share the ordering); the (key, session_id) rollup "
-            "aggregates with NO second exchange — HashPartitioning(key) "
-            "already satisfies the clustered distribution of the superset "
-            "group keys.",
+            "Phase 1 shuffles 8-byte xxhash64 keys only and collects the "
+            "capped suspicious hash set at call time; it re-enters as a "
+            "literal frame under a BroadcastHashJoin LeftSemi, so the big "
+            "side never shuffles to be matched; phase 2 exact-verifies on "
+            "real keys.",
         ),
         (
             "Sequence checks (one window, five rules)",
@@ -317,16 +256,6 @@ def main() -> None:
             "sampling state, pushdown applies.",
         ),
         (
-            "Curation funnel (single-scan survivor report)",
-            _curation_funnel(spark, df),
-            "All per-stage gate FLAGS (quality, language, dedup-keeper) are "
-            "computed in one projection over one scan; the only exchange is "
-            "the fingerprint window for the exact-dedup keeper bit; the "
-            "5-stage survivor table is ONE aggregate over the flags "
-            "(map-side partial), exploded to rows — counting survivors per "
-            "stage costs no extra passes over the corpus.",
-        ),
-        (
             "Merge-table BPE encode (pure-Catalyst replace chain)",
             df.select(
                 "conv_id",
@@ -396,38 +325,6 @@ def main() -> None:
             "contract), so the corpus is never shuffled to be matched; "
             "the verify joins shingle sets for candidates only and the "
             "rollup is one groupBy(doc).",
-        ),
-        (
-            "Unigram-LM cross-entropy (train + score)",
-            _lm_score(spark, df),
-            "Training is explode → groupBy(token) with map-side partial "
-            "aggregation (the shuffle carries one row per distinct token "
-            "per map partition). Scoring joins the vocabulary-sized LM "
-            "table — AQE picks broadcast when it fits — and the per-doc "
-            "mean is one groupBy(doc). The smoothed UNK floor rides a "
-            "1-row broadcast; no second pass, no Python.",
-        ),
-        (
-            "DSIR importance scoring (fit + score)",
-            _dsir(spark, df),
-            "Each distribution fit is explode → groupBy(bucket), "
-            "collapsing map-side to ≤ n_buckets rows per map partition. "
-            "The bucket→weight table (≤ n_buckets rows) and the 1-row "
-            "unseen-floor consts are explicit broadcasts, so the raw "
-            "corpus is never shuffled to be scored — its only exchange "
-            "is the per-doc partial-aggregated sum. Gumbel priority is a "
-            "scan-level expression on the result.",
-        ),
-        (
-            "Training-order manifest (epoch explode + range-ordered stream)",
-            _training_order(spark, df),
-            "The epoch plan rides a broadcast join (plan table is "
-            "source-count-sized); the copy expansion is a scan-level "
-            "Generate over sequence(0, n_copies-1) with the fractional "
-            "epoch a pure hash-gate predicate — no shuffle to expand. The "
-            "only exchange is the final repartitionByRange on the hash "
-            "order key (Spark samples range bounds), so the global "
-            "training order never funnels through one reducer.",
         ),
         (
             "Exact n-gram Jaccard verify (inline Generate, sizes post-agg)",
