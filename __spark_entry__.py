@@ -5,7 +5,7 @@
 uniqueness, referential integrity, sequence and CHECK rules, statistics
 and metric expectations, drift, reconciliation, key skew, percentiles)
 plus the text-corpus ops that remain in the package (dedup, similarity,
-text analysis, tokenization and packing); ``oracle_sql()`` gives the
+text analysis, decontamination and sampling); ``oracle_sql()`` gives the
 DuckDB-equivalent SQL for every one of them.
 
 Parity notes baked into every query pair:
@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ndap_data_validator_spark.operators import drift as drift_mod
@@ -58,7 +58,8 @@ def _spread(df: DataFrame) -> DataFrame:
     the scan plans ONE input split no matter what
     ``files.maxPartitionBytes``/``minPartitionNum`` say (parquet splits
     round down to row-group boundaries) and a heavy projection runs
-    single-threaded — bpe_encode measured 4.0s in 1 task vs 0.4s spread.
+    single-threaded — a per-document token encoder measured 4.0s in 1
+    task vs 0.4s spread.
     This is the standard remedy for any low-parallelism source feeding
     expensive narrow work (few large gzip files, giant row groups); the
     extra exchange carries the raw text once and is linear at any scale.
@@ -746,10 +747,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-quality signal block — one codegen'd projection; carries the
-    regex-pretokenizer token count (consolidated r04, cap — the real
-    merge-table BPE count has its own bpe_encode entry) and the n-gram
-    language guess (lang_id folded in r05, cap: same per-doc row shape,
-    one more scan-level column — the slot funds bpe_train)."""
+    regex-pretokenizer token count and the n-gram language guess (same
+    per-doc row shape, one more scan-level column)."""
     d = _spread(_t(spark, sf_dir, "documents"))
     c = F.col("text")
     return d.select(
@@ -761,31 +760,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(T.repetition_ratio(c, n=3), 4).alias("repetition_ratio"),
         T.fingerprint(c).alias("fingerprint"),
         T.lang_id(c).alias("lang_guess"),
-    )
-
-
-_BPE_TRAIN_DOCS = 160  # doc_id bound: fixed-cost training slice at any SF
-_BPE_TRAIN_MERGES = 10
-
-
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTRIBUTED BPE vocabulary training (VERDICT r04 #3): learn the
-    merge table from the corpus itself — per round ONE explode+groupBy
-    pair-count shuffle (output is vocabulary-sized), a top-1 TakeOrdered,
-    one literal replace, lineage cut per round via localCheckpoint. The
-    DuckDB oracle replays the full greedy loop as unrolled CTE steps with
-    the identical state/tie-break expressions, so the learned sequence is
-    checked rank-for-rank, counts included."""
-    from ndap_data_validator_spark.functions.bpe import bpe_train_merges
-
-    docs = _t(spark, sf_dir, "documents").where(
-        F.col("doc_id") < _BPE_TRAIN_DOCS
-    )
-    merges = bpe_train_merges(docs, "text", num_merges=_BPE_TRAIN_MERGES)
-    return _literal_df(
-        spark,
-        [(k, a, b, a + b, cnt) for k, (a, b, cnt) in enumerate(merges)],
-        "rank int, lhs string, rhs string, merged string, pair_count long",
     )
 
 
@@ -984,7 +958,7 @@ def q_dtype_coercion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r06: project events to the 3 source columns the derived exprs need,
     # then spread — the single-row-group bench parquet plans 1-2 scan
     # splits, so the regex-heavy coercion aggregate otherwise runs nearly
-    # single-threaded (guide §2.5 input skew; same remedy as bpe_encode).
+    # single-threaded (guide §2.5 input skew; see _spread).
     e = _spread(_t(spark, sf_dir, "events").select("event_id", "ts", "value"))
     d = e.selectExpr(*_derived_exprs("year_str", "int_m", "float_m"))
     _, report = coerce_by_dtypes(
@@ -1336,18 +1310,6 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "contaminated",
     )
     return exact.unionByName(fuzzy).unionByName(bloom)
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed TF-IDF top-3 terms per document (postings groupBy →
-    vocabulary-df join → broadcast N → per-doc window). Rank on the rounded
-    score + term tie-break = cross-engine-stable ordering. r05: the same
-    rows also carry the Lucene-form Okapi BM25 score (saturated tf,
-    length-normalized against avgdl) — zero extra corpus shuffles."""
-    from ndap_data_validator_spark.operators.tfidf import tfidf_top_terms
-
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    return tfidf_top_terms(d, k=3, min_df=2, bm25=True)
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1812,180 +1774,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packing manifests, BOTH flavors in one method-tagged entry
-    (consolidated r05, cap — funds the render_transcripts slot):
-
-    * 'chunk' — sliding-window context chunking (max 32, overlap 8) over
-      documents < 200: shuffle-free projection+generate, DuckDB replays
-      the stride arithmetic and slices (operators/pack.py chunk_documents);
-    * 'pack' — GPT-style concat-and-cut over the no-overlap 32-token
-      chunking: md5-portable shard routing (4 shards), 64-token bins,
-      per-shard running-sum window (pack_manifest).
-
-    Columns aligned as (method, doc_id, chunk_idx, n_tokens, shard,
-    bin_id, offset, split, chunk_text); chunk rows carry the text and
-    NULL shard/bin/offset/split, pack rows the reverse."""
-    from ndap_data_validator_spark.operators.pack import (
-        chunk_documents,
-        pack_manifest,
-    )
-
-    def nl(t: str) -> Column:
-        return F.lit(None).cast(t)
-
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    chunks = chunk_documents(d, max_tokens=32, overlap=8).select(
-        F.lit("chunk").alias("method"),
-        "doc_id",
-        "chunk_idx",
-        "n_tokens",
-        nl("bigint").alias("shard"),
-        nl("bigint").alias("bin_id"),
-        nl("bigint").alias("offset"),
-        nl("boolean").alias("split"),
-        "chunk_text",
-    )
-    packed = pack_manifest(
-        chunk_documents(d, max_tokens=32).drop("chunk_text"),
-        budget=64,
-        n_shards=4,
-        hash_fn="md5",
-    ).select(
-        F.lit("pack").alias("method"),
-        "doc_id",
-        "chunk_idx",
-        "n_tokens",
-        "shard",
-        "bin_id",
-        "offset",
-        "split",
-        nl("string").alias("chunk_text"),
-    )
-    return chunks.unionByName(packed)
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL merge-table BPE (functions/bpe.py — ordered-merge apply over a
-    planted vocabulary, sentinel-string replace chain, pure Catalyst):
-    per-document token count plus the md5 of the canonical encoded token
-    stream, so the oracle hash-checks the ENTIRE token sequence, not just
-    its length. This is the token budget chunk/pack actually use
-    (VERDICT r03 #2; the regex count in text_quality is the cheap proxy).
-    r05: also the md5 of the INTEGER TOKEN-ID sequence under the corpus
-    vocabulary (bpe.bpe_vocab — base alphabet in byte order, then merge
-    products in rank order), i.e. the tensor a trainer actually consumes;
-    the vocab is metadata-sized and lives on the driver, so id lookup is a
-    literal-map projection — zero joins, zero shuffles (r06: the former
-    posexplode → broadcast-join → groupBy reassembly shuffled the full
-    encoded stream once per token; guide §2.3/§2.4)."""
-    from ndap_data_validator_spark.functions.bpe import (
-        bpe_stream,
-        bpe_token_count_from_stream,
-        bpe_tokens_from_stream,
-        bpe_vocab_list,
-    )
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    # vocab build parallelized over the SAME spread frame (the single-split
-    # scan otherwise runs the char-wrap chain in one task at bench SFs)
-    vocab, _n_base = bpe_vocab_list(d, "text")
-    id_map = F.create_map(
-        *[x for tid, tok in vocab for x in (F.lit(tok), F.lit(tid))]
-    )
-    # spread the one-split scan, then compute the replace chain ONCE behind
-    # an alias barrier — count, stream md5 and the token ids all derive
-    # from the aliased stream. Position order is the array order, OOV
-    # (never-merged chars absent from the vocab corpus) drop out exactly
-    # like the old collect_list-of-non-null path.
-    base = d.select("doc_id", bpe_stream(F.col("text")).alias("__enc"))
-    ids = F.filter(
-        F.transform(
-            bpe_tokens_from_stream(F.col("__enc")), lambda t: id_map[t]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    withids = base.select(
-        "doc_id",
-        "__enc",
-        F.array_join(
-            F.transform(ids, lambda i: i.cast("string")), ","
-        ).alias("__idstr"),
-    )
-    return withids.select(
-        "doc_id",
-        bpe_token_count_from_stream(F.col("__enc")).alias("n_tokens_bpe_real"),
-        F.md5(F.col("__enc")).alias("stream_md5"),
-        F.when(F.col("__enc").isNull(), F.lit(None).cast("string"))
-        .otherwise(F.md5(F.col("__idstr")))
-        .alias("ids_md5"),
-    )
-
-
-def q_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-boundary-respecting packing (pack.py pack_nosplit) budgeted
-    in REAL BPE tokens: md5-portable shard routing, per-shard next-fit-
-    decreasing greedy sweep — DuckDB replays the whole greedy rule with a
-    recursive CTE over the per-shard rank order, so bin assignments and
-    offsets hash-match."""
-    from ndap_data_validator_spark.functions.bpe import (
-        bpe_stream,
-        bpe_token_count_from_stream,
-    )
-    from ndap_data_validator_spark.operators.pack import pack_nosplit
-
-    d = _spread(_t(spark, sf_dir, "documents").where(F.col("doc_id") < 400))
-    sized = d.select(
-        "doc_id", bpe_stream(F.col("text")).alias("__enc")
-    ).select(
-        "doc_id", bpe_token_count_from_stream(F.col("__enc")).alias("n_tokens")
-    ).where(F.col("n_tokens") > 0)
-    return pack_nosplit(sized, budget=256, n_shards=4, hash_fn="md5", seed=42)
-
-
-def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick linear quality classifier (functions/quality_clf.py):
-    NB log-odds weights over 256 md5-hashed token buckets, trained on a
-    planted fixture — documents < 400 as positives vs their vowel-mangled
-    derivatives (regexp vowels→'q': deterministic gibberish both engines
-    construct identically) as negatives — then scores documents < 300 plus
-    three mangled probes. DuckDB replays tokenize → bucket → counts →
-    ln(a)−ln(b) weights → per-doc sum; predicted compares the 6dp-rounded
-    score to 0 so the boolean is engine-stable."""
-    from ndap_data_validator_spark.functions.quality_clf import (
-        score_quality,
-        train_quality_classifier,
-    )
-
-    # r06: spread the ≤400-doc slice — the vowel-mangle regex + hashed
-    # tokenization otherwise run in the single-row-group scan's ONE task
-    d = _spread(
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 400)
-        .select("doc_id", "text")
-    )
-    mangle = F.regexp_replace(F.col("text"), "[aeiou]", "q")
-    pos = d.select("doc_id", "text", F.lit(True).alias("label"))
-    neg = d.select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        mangle.alias("text"),
-        F.lit(False).alias("label"),
-    )
-    weights, consts = train_quality_classifier(
-        pos.unionByName(neg), "label", n_buckets=256, alpha=0.5, seed=7,
-        hash_fn="md5",
-    )
-    probes = d.where(F.col("doc_id") < 3).select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        mangle.alias("text"),
-    )
-    score_set = d.where(F.col("doc_id") < 300).select("doc_id", "text").unionByName(probes)
-    return score_quality(
-        score_set, weights, consts, n_buckets=256, seed=7, hash_fn="md5",
-        round_digits=6,
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # At most 50 entries: only the first 50 get a correctness check. Every
     # entry carries a DuckDB oracle in oracle_sql(). Near-duplicates ride
@@ -2011,7 +1799,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "ngram_jaccard": q_ngram_jaccard,
         "text_quality": q_text_quality,
-        "bpe_train": q_bpe_train,
         "ann_lsh_buckets": q_ann_lsh_buckets,
         "ann_ivf": q_ann_ivf,
         "hll_distinct": q_hll_distinct,
@@ -2026,12 +1813,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "key_skew": q_key_skew,
         "sampling": q_sampling,
         "decontamination": q_decontamination,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "quality_classifier": q_quality_classifier,
         "semantic_dedup": q_semantic_dedup,
-        "bpe_encode": q_bpe_encode,
-        "packing": q_packing,
-        "pack_nosplit": q_pack_nosplit,
         "exact_percentiles": q_exact_percentiles,
         "embedding_neardup": q_embedding_neardup,
         "minhash_candidates": q_minhash_candidates,
@@ -2402,84 +2184,6 @@ def _semantic_dedup_oracle_sql(
     """
 
 
-def _chunk_cte_sql(max_tokens: int, overlap: int, max_doc_id: int = 200) -> str:
-    """Shared DuckDB CTE replaying chunk_documents' stride arithmetic:
-    yields (doc_id, chunk_idx, piece) with piece = the chunk's token list.
-    DuckDB list slices are 1-based inclusive and truncate past the end —
-    matching Spark's slice(toks, start+1, max_tokens)."""
-    stride = max_tokens - overlap
-    return rf"""
-      t AS (SELECT doc_id,
-              CASE WHEN trim(text) IS NULL OR trim(text) = '' THEN []::VARCHAR[]
-                   ELSE regexp_split_to_array(trim(text), '\s+') END AS toks
-            FROM documents WHERE doc_id < {max_doc_id}),
-      nc AS (SELECT doc_id, toks, len(toks) AS n,
-                    CASE WHEN len(toks) > 0
-                         THEN CAST(FLOOR((GREATEST(len(toks) - {overlap}, 1) - 1)
-                                         / {stride}.0) AS BIGINT) + 1
-                         ELSE 0 END AS n_chunks
-             FROM t),
-      ch AS (SELECT doc_id,
-                    CAST(ci AS INT) AS chunk_idx,
-                    toks[ci * {stride} + 1 : ci * {stride} + {max_tokens}] AS piece
-             FROM nc, unnest(generate_series(0, CAST(n_chunks AS INT) - 1)) AS u(ci)
-             WHERE n_chunks > 0)"""
-
-
-def _doc_chunks_oracle_sql() -> str:
-    return f"""
-      WITH {_chunk_cte_sql(32, 8)}
-      SELECT doc_id, chunk_idx,
-             CAST(len(piece) AS INT) AS n_tokens,
-             array_to_string(piece, ' ') AS chunk_text
-      FROM ch
-    """
-
-
-def _pack_manifest_oracle_sql(
-    budget: int = 64, n_shards: int = 4, seed: int = 42
-) -> str:
-    """DuckDB replay of pack_manifest over the 32-token chunking: portable
-    md5 shard routing, per-shard running sum ordered by (doc_id,
-    chunk_idx), floor/mod bin arithmetic, straddle flag."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    return f"""
-      WITH {_chunk_cte_sql(32, 0)},
-      sh AS (SELECT doc_id, chunk_idx, CAST(len(piece) AS INT) AS n_tokens,
-                    {P('CAST(doc_id AS VARCHAR)', seed)} % {n_shards} AS shard
-             FROM ch),
-      c AS (SELECT shard, doc_id, chunk_idx, n_tokens,
-                   SUM(n_tokens) OVER (PARTITION BY shard
-                                       ORDER BY doc_id, chunk_idx
-                                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW) - n_tokens AS prefix
-            FROM sh)
-      SELECT shard,
-             CAST(FLOOR(prefix / {budget}.0) AS BIGINT) AS bin_id,
-             doc_id, chunk_idx, n_tokens,
-             CAST(prefix % {budget} AS BIGINT) AS "offset",
-             (prefix % {budget} + n_tokens) > {budget} AS split
-      FROM c
-    """
-
-
-def _packing_oracle_sql() -> str:
-    """Method-tagged union of both packing manifests with aligned columns —
-    mirrors q_packing's consolidation (r05)."""
-    return f"""
-      SELECT 'chunk' AS method, doc_id, chunk_idx, n_tokens,
-             CAST(NULL AS BIGINT) AS shard, CAST(NULL AS BIGINT) AS bin_id,
-             CAST(NULL AS BIGINT) AS "offset", CAST(NULL AS BOOLEAN) AS split,
-             chunk_text
-      FROM ({_doc_chunks_oracle_sql()})
-      UNION ALL
-      SELECT 'pack', doc_id, chunk_idx, n_tokens, shard, bin_id, "offset",
-             split, CAST(NULL AS VARCHAR)
-      FROM ({_pack_manifest_oracle_sql()})
-    """
-
-
 def _decontamination_oracle_sql() -> str:
     """Method-tagged union of both decontamination flavors with aligned
     columns — mirrors q_decontamination's consolidation (r05)."""
@@ -2731,168 +2435,6 @@ def _repeated_ngrams_oracle_sql(seed: int = 42, min_docs: int = 2) -> str:
       SELECT 'substring' AS method, r.doc_id, r.n_positions, r.n_repeated,
              r.repeated_frac, r.max_repeated_run, md5(c.t) AS cleaned_md5
       FROM sroll r JOIN sclean c USING (doc_id)
-    """
-
-
-def _bpe_encode_oracle_sql() -> str:
-    """DuckDB replay of the merge-table BPE: identical pretokenizer regex
-    and identical sentinel-replace chain (functions/bpe.py renders both),
-    so the full token stream hash matches byte-for-byte — and (r05) the
-    identical vocabulary build (byte-ordered base alphabet + rank-ordered
-    merge products, bpe_vocab_sql) plus position-ordered id join, so the
-    INTEGER ID sequence hash matches too."""
-    from ndap_data_validator_spark.functions.bpe import (
-        bpe_stream_sql,
-        bpe_tokens_sql_from_stream,
-        bpe_vocab_sql,
-    )
-
-    vocab = bpe_vocab_sql("SELECT text FROM documents", "text")
-    toks = bpe_tokens_sql_from_stream("stream")
-    return f"""
-      WITH enc AS (
-        SELECT doc_id, {bpe_stream_sql('text')} AS stream FROM documents
-      ),
-      vocab AS ({vocab}),
-      tk AS (
-        SELECT doc_id, toks[i] AS tok, i FROM (
-          SELECT doc_id, toks,
-                 unnest(generate_series(1, len(toks))) AS i
-          FROM (SELECT doc_id, {toks} AS toks FROM enc) a
-        ) b
-      ),
-      ids AS (
-        SELECT doc_id,
-               string_agg(CAST(v.token_id AS VARCHAR), ',' ORDER BY i)
-                 AS idstr
-        FROM tk JOIN vocab v ON v.token = tk.tok
-        GROUP BY doc_id
-      )
-      SELECT e.doc_id,
-             CAST((length(e.stream)
-                   - length(replace(e.stream, chr(31), ''))) / 2 AS INT)
-               AS n_tokens_bpe_real,
-             md5(e.stream) AS stream_md5,
-             CASE WHEN e.stream IS NULL THEN NULL
-                  ELSE md5(COALESCE(i.idstr, '')) END AS ids_md5
-      FROM enc e LEFT JOIN ids i USING (doc_id)
-    """
-
-
-def _bpe_train_oracle_sql() -> str:
-    """DuckDB replay of the distributed BPE trainer: the greedy loop
-    unrolled into K CTE steps with the exact state / pair-extraction /
-    tie-break expressions the Spark loop runs (functions/bpe.py
-    bpe_train_sql), so the learned merge sequence matches rank-for-rank
-    with counts."""
-    from ndap_data_validator_spark.functions.bpe import bpe_train_sql
-
-    return bpe_train_sql(
-        f"SELECT text FROM documents WHERE doc_id < {_BPE_TRAIN_DOCS}",
-        "text",
-        _BPE_TRAIN_MERGES,
-    )
-
-
-def _pack_nosplit_oracle_sql(
-    budget: int = 256, n_shards: int = 4, seed: int = 42
-) -> str:
-    """DuckDB replay of pack_nosplit's greedy rule: md5 shard routing, per
-    shard rank by (n_tokens DESC, doc_id), then a RECURSIVE CTE walks the
-    rank order carrying (bin_id, fill) — the sequential next-fit fold the
-    engine runs in applyInPandas."""
-    from ndap_data_validator_spark.functions.bpe import bpe_token_count_sql
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    nt = bpe_token_count_sql("text")
-    return f"""
-      WITH RECURSIVE
-      src AS (SELECT doc_id, {nt} AS n_tokens
-              FROM documents WHERE doc_id < 400),
-      sz AS (SELECT doc_id, n_tokens,
-                    {P('CAST(doc_id AS VARCHAR)', seed)} % {n_shards} AS shard
-             FROM src WHERE n_tokens > 0),
-      r AS (SELECT shard, doc_id, n_tokens,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY shard
-                        ORDER BY n_tokens DESC, doc_id) AS BIGINT) AS rn
-            FROM sz),
-      rec(shard, rn, doc_id, n_tokens, bin_id, fill) AS (
-        SELECT shard, rn, doc_id, n_tokens, CAST(0 AS BIGINT),
-               CAST(n_tokens AS BIGINT)
-        FROM r WHERE rn = 1
-        UNION ALL
-        SELECT r.shard, r.rn, r.doc_id, r.n_tokens,
-               CASE WHEN rec.fill + r.n_tokens <= {budget}
-                    THEN rec.bin_id ELSE rec.bin_id + 1 END,
-               CASE WHEN rec.fill + r.n_tokens <= {budget}
-                    THEN rec.fill + r.n_tokens
-                    ELSE CAST(r.n_tokens AS BIGINT) END
-        FROM r JOIN rec ON r.shard = rec.shard AND r.rn = rec.rn + 1)
-      SELECT shard, bin_id, doc_id, n_tokens,
-             CAST(fill - n_tokens AS BIGINT) AS "offset"
-      FROM rec
-    """
-
-
-def _quality_classifier_oracle_sql(
-    n_buckets: int = 256, alpha: float = 0.5, seed: int = 7
-) -> str:
-    """DuckDB replay of the NB log-odds hashing classifier: same
-    tokenization, same md5 bucketing, the SAME ln(a)-ln(b) term order (not
-    ln(a/b)), 6dp-rounded score, predicted from the rounded value."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    b = float(n_buckets) * alpha
-    toks = (
-        r"CASE WHEN trim(text) IS NULL OR trim(text) = '' THEN []::VARCHAR[] "
-        r"ELSE list_transform(regexp_split_to_array(trim(text), '\s+'), "
-        r"x -> lower(x)) END"
-    )
-    return f"""
-      WITH train AS (
-        SELECT doc_id, text, TRUE AS label
-        FROM documents WHERE doc_id < 400
-        UNION ALL
-        SELECT doc_id + 1000000, regexp_replace(text, '[aeiou]', 'q', 'g'),
-               FALSE
-        FROM documents WHERE doc_id < 400),
-      tb AS (SELECT label, {P('token', seed)} % {n_buckets} AS bucket
-             FROM (SELECT label, unnest({toks}) AS token FROM train)),
-      counts AS (SELECT bucket,
-                   CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS cpos,
-                   CAST(SUM(CASE WHEN label THEN 0 ELSE 1 END) AS BIGINT) AS cneg
-                 FROM tb GROUP BY bucket),
-      tot AS (SELECT CAST(SUM(cpos) AS BIGINT) AS tpos,
-                     CAST(SUM(cneg) AS BIGINT) AS tneg FROM counts),
-      nd AS (SELECT CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS npos,
-                    CAST(SUM(CASE WHEN label THEN 0 ELSE 1 END) AS BIGINT) AS nneg
-             FROM train),
-      consts AS (SELECT ln(npos::DOUBLE) - ln(nneg::DOUBLE) AS prior,
-                        ln({alpha}) - ln(tpos + {b}) - ln({alpha}) + ln(tneg + {b})
-                          AS w_unseen
-                 FROM tot, nd),
-      w AS (SELECT bucket,
-                   ln(cpos + {alpha}) - ln(tpos + {b})
-                   - ln(cneg + {alpha}) + ln(tneg + {b}) AS w
-            FROM counts, tot),
-      score_set AS (
-        SELECT doc_id, text FROM documents WHERE doc_id < 300
-        UNION ALL
-        SELECT doc_id + 1000000, regexp_replace(text, '[aeiou]', 'q', 'g')
-        FROM documents WHERE doc_id < 3),
-      sb AS (SELECT doc_id, {P('token', seed)} % {n_buckets} AS bucket
-             FROM (SELECT doc_id, unnest({toks}) AS token FROM score_set)),
-      sw AS (SELECT sb.doc_id, COALESCE(w.w, consts.w_unseen) AS wv
-             FROM sb LEFT JOIN w USING (bucket), consts),
-      per AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                     SUM(wv) AS s
-              FROM sw GROUP BY doc_id)
-      SELECT d.doc_id,
-             CAST(COALESCE(per.n_tokens, 0) AS BIGINT) AS n_tokens,
-             ROUND(consts.prior + COALESCE(per.s, 0.0), 6) AS score,
-             ROUND(consts.prior + COALESCE(per.s, 0.0), 6) > 0 AS predicted
-      FROM (SELECT DISTINCT doc_id FROM score_set) d
-      LEFT JOIN per USING (doc_id), consts
     """
 
 
@@ -3416,8 +2958,7 @@ def oracle_sql() -> dict[str, str]:
         hits.append(
             f"len(list_filter(ltoks, x -> list_contains({lst}, x))) AS {lang}"
         )
-    # lang_guess folded into the text_quality projection (r05 consolidation
-    # — same per-doc scan, frees the 50-entry slot bpe_train occupies)
+    # lang_guess rides the text_quality projection (same per-doc scan)
     text_quality = rf"""
       WITH t AS (SELECT doc_id, text,
             CASE WHEN trim(text) IS NULL OR trim(text) = '' THEN []::VARCHAR[]
@@ -3554,7 +3095,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_exact": dedup_exact,
         "ngram_jaccard": ngram_jaccard,
         "text_quality": text_quality,
-        "bpe_train": _bpe_train_oracle_sql(),
         "hll_distinct": hll_distinct,
         "ann_lsh_buckets": ann_lsh,
         "knn_topk": knn_topk,
@@ -3562,45 +3102,9 @@ def oracle_sql() -> dict[str, str]:
         "simhash_fingerprints": _simhash_oracle_sql(),
         "dedup_clusters": dedup_clusters,
         "sampling": sampling,
-        "quality_classifier": _quality_classifier_oracle_sql(),
         "semantic_dedup": _semantic_dedup_oracle_sql(),
-        "bpe_encode": _bpe_encode_oracle_sql(),
-        "packing": _packing_oracle_sql(),
-        "pack_nosplit": _pack_nosplit_oracle_sql(),
         "decontamination": _decontamination_oracle_sql(),
         "repeated_ngrams": _repeated_ngrams_oracle_sql(),
-        "tfidf_top_terms": r"""
-          WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
-          toks AS (SELECT doc_id,
-                     unnest(regexp_split_to_array(
-                       regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                       ' ')) AS term
-                   FROM docs),
-          p AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-                FROM toks WHERE term <> '' GROUP BY doc_id, term),
-          d AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-                FROM p GROUP BY term HAVING COUNT(*) >= 2),
-          n AS (SELECT COUNT(*) AS n_docs FROM docs),
-          tot AS (SELECT SUM(tf) AS tot_tf FROM p),
-          dlen AS (SELECT doc_id, SUM(tf) AS dl FROM p GROUP BY doc_id),
-          s AS (SELECT p.doc_id, p.term, p.tf, d.df,
-                  ROUND(p.tf * (ln((1.0 + n.n_docs) / (1.0 + d.df)) + 1.0), 6)
-                    AS tfidf,
-                  ROUND(
-                    ln(1.0 + (n.n_docs - d.df + 0.5) / (d.df + 0.5))
-                    * ((p.tf * 2.2)
-                       / (p.tf + 1.2 * (0.25 + 0.75 * dlen.dl
-                                        / (tot.tot_tf / n.n_docs)))), 6)
-                    AS bm25
-                FROM p JOIN d USING (term) JOIN dlen USING (doc_id)
-                     CROSS JOIN n CROSS JOIN tot),
-          r AS (SELECT *, CAST(ROW_NUMBER() OVER (
-                  PARTITION BY doc_id ORDER BY tfidf DESC, term) AS INT)
-                  AS "rank"
-                FROM s)
-          SELECT doc_id, term, tf, df, tfidf, bm25, "rank"
-          FROM r WHERE "rank" <= 3
-        """,
         "text_gates": _text_gates_oracle_sql(),
         "key_skew": f"""
           WITH d AS ({DERIVED_SQL}),

@@ -69,11 +69,3 @@ def load_table(
         return reader.json(os.path.join(base, f"{name}.jsonl"))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

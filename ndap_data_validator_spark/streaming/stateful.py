@@ -1,11 +1,8 @@
 """Stateful streaming operators (engine extensions; SURVEY §2.10 — the
 reference has no streaming surface).
 
-Three shapes a transcript/event stream needs beyond per-batch validation:
+Two shapes a transcript/event stream needs beyond per-batch validation:
 
-  * ``windowed_event_counts`` — watermark + tumbling-window counts: the
-    built-in late-data-tolerant aggregate. State is managed by Spark's
-    streaming aggregation operator; the watermark bounds it.
   * ``dedup_stream`` — at-ingest (conv_id, turn_idx) uniqueness via
     ``dropDuplicatesWithinWatermark``.
   * ``sequence_check_stream`` — custom stateful operator via Arrow-batched
@@ -14,7 +11,7 @@ Three shapes a transcript/event stream needs beyond per-batch validation:
     previous-turn snapshot per conversation, evicted by an event-time
     timeout.
 
-All are per-key bounded-state: memory is O(keys active within one
+Both are per-key bounded-state: memory is O(keys active within one
 watermark window), not O(events) and not O(all keys ever seen) — the
 property that matters on an unbounded 100 TB/day stream with key churn.
 """
@@ -29,29 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def windowed_event_counts(
-    stream_df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_duration: str = "5 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling-window counts with late-data tolerance: rows later than the
-    watermark are dropped, windows finalize (and their state is evicted)
-    once the watermark passes — bounded state by construction."""
-    return (
-        stream_df.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n_events",
-        )
-    )
 
 
 def dedup_stream(

@@ -8,13 +8,17 @@ implementation.
 
 Design: ``foreachBatch``. Each micro-batch is a plain DataFrame, so the
 batch engine's single-shared-scan aggregate runs unchanged per batch and the
-per-batch report rows append to a report sink keyed by (batch_id,
-partition_id). Checkpointing comes from Structured Streaming itself
-(exactly-once foreachBatch under the stream checkpoint), composing with the
-engine's own rule-digest lineage. Continuous stateful operators (watermarked
-windows, applyInPandasWithState) are intentionally NOT used: validation
-reports are per-batch aggregates, not cross-batch sessions, so the stateless
-foreachBatch shape is both simpler and cheaper at scale.
+per-batch report rows land in sinks partitioned by ``batch_id``.
+``foreachBatch`` is at-least-once: a crash between a sink write and the
+stream's commit log replays that batch on restart, with the same
+``batch_id`` and the same input. Each sink write is therefore a dynamic
+partition overwrite of its own ``batch_id=N`` directory, so a replay
+replaces the batch's rows instead of appending a second copy, and the
+sinks read back exactly one row set per batch. Continuous stateful
+operators (watermarked windows, applyInPandasWithState) are intentionally
+NOT used: validation reports are per-batch aggregates, not cross-batch
+sessions, so the stateless foreachBatch shape is both simpler and cheaper
+at scale.
 """
 
 from __future__ import annotations
@@ -39,9 +43,10 @@ def validate_stream(
     trigger_available_now: bool = True,
     on_batch: Callable[[int, DataFrame], None] | None = None,
 ) -> StreamingQuery:
-    """Start the validation stream; per-batch per-column reports append to
+    """Start the validation stream; per-batch per-column reports go to
     ``{report_path}/per_column`` and summaries to ``{report_path}/summary``,
-    each row stamped with ``batch_id``.
+    both partitioned by ``batch_id`` (a replayed batch overwrites its own
+    partition).
 
     ``trigger_available_now=True`` processes everything currently available
     then stops — the incremental-batch shape (≙ validating each new Iceberg
@@ -52,23 +57,24 @@ def validate_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # cache_aggregates=False: each batch's report is written exactly once
-        # per sink, and a long-running stream must not accumulate one persisted
+        # cache_aggregates=False: each batch's report is written once per
+        # sink, and a long-running stream must not accumulate one persisted
         # aggregate frame per micro-batch.
         res = eng.validate(
             batch_df, assignments, partition_by=partition_by,
             cache_aggregates=False,
         )
-        (
-            res.per_column_report.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(f"{report_path}/per_column")
-        )
-        (
-            res.summary.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(f"{report_path}/summary")
-        )
+        for name, frame in (
+            ("per_column", res.per_column_report),
+            ("summary", res.summary),
+        ):
+            (
+                frame.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(f"{report_path}/{name}")
+            )
         if on_batch is not None:
             on_batch(batch_id, batch_df)
 

@@ -77,58 +77,3 @@ def test_duplicate_keys_hashed_no_duplicates(spark):
 
     df = spark.range(0, 100).select(F.col("id").alias("k"))
     assert duplicate_keys_hashed(df, ["k"]).count() == 0
-
-
-def test_bpe_train_minby_argmax_matches_sorted_top1(spark):
-    """The min_by struct-ordered argmax must reproduce the old
-    orderBy(desc count, asc lhs, asc rhs).limit(1) winner each round —
-    checked by replaying training against a brute-force driver-side
-    implementation of the same tie-break."""
-    from ndap_data_validator_spark.functions.bpe import bpe_train_merges
-
-    rows = [
-        (0, "the cat and the hat and the bat",),
-        (1, "the cat and the mat",),
-        (2, "a hat and a bat and a cat",),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id int, text string")
-    merges = bpe_train_merges(docs, "text", num_merges=4)
-    assert len(merges) == 4
-    # re-derive round 1's argmax by brute force over the corpus state
-    import collections
-
-    def pairs_of(texts, applied):
-        cnt = collections.Counter()
-        for t in texts:
-            import re
-
-            # fixture is lowercase ASCII words + single spaces, where the
-            # GPT-2-ish pretokenizer reduces to ' ?[a-z]+' (\p{L} classes
-            # are not Python-re syntax)
-            for pt in re.findall(r" ?[a-z]+", t):
-                syms = list(pt)
-                for a, b in applied:
-                    out, i = [], 0
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and syms[i] == a
-                            and syms[i + 1] == b
-                        ):
-                            out.append(a + b)
-                            i += 2
-                        else:
-                            out.append(syms[i])
-                            i += 1
-                    syms = out
-                for x, y in zip(syms, syms[1:]):
-                    cnt[(x, y)] += 1
-        return cnt
-
-    applied = []
-    texts = [t for _, t in rows]
-    for lhs, rhs, c in merges:
-        cnt = pairs_of(texts, applied)
-        best = min(cnt.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
-        assert (lhs, rhs) == best[0] and c == best[1]
-        applied.append((lhs, rhs))

@@ -75,49 +75,45 @@ def test_stream_matches_batch(spark, tmp_path):
     assert all(not r["passed"] for r in summary.collect())
 
 
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    """Watermarked tumbling windows over a file stream == batch windowing
-    (no late data in the fixture, so nothing is dropped)."""
-    from ndap_data_validator_spark.streaming.stateful import windowed_event_counts
+def test_replayed_batch_replaces_its_report_rows(spark, tmp_path):
+    """foreachBatch is at-least-once: a crash between the sink write and
+    the commit log replays the batch on restart. The replay must replace
+    that batch's report rows, not append a second copy."""
+    import os
 
-    src = str(tmp_path / "wsrc")
-    rows = [
-        (i, ["click", "view"][i % 2], f"2026-01-01 00:{i:02d}:30")
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, ts string").select(
-        "event_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(src)
+    src = str(tmp_path / "src")
+    for i in range(2):
+        pdf = _batch(i)
+        spark.createDataFrame(
+            pdf.astype(object).where(pd.notna(pdf), None)
+        ).coalesce(1).write.mode("append").parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    rep = str(tmp_path / "rep")
 
-    stream = spark.readStream.schema("event_id long, event_type string, ts timestamp").parquet(src)
-    out = windowed_event_counts(stream, window_duration="5 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    expected = {
-        (str(r["ws"]), r["event_type"]): r["n"]
-        for r in df.groupBy(
-            F.window("ts", "5 minutes").alias("w"), "event_type"
+    def drain():
+        stream = (
+            spark.readStream.schema("loc string, t string, m string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-        .collect()
-    }
-    # append mode only finalizes windows below the final watermark; every
-    # emitted window must match the batch result exactly
-    assert got and all(expected[k] == v for k, v in got.items())
+        validate_stream(
+            stream, ASSIGNS, report_path=rep, checkpoint_path=ckpt
+        ).awaitTermination(120)
+
+    drain()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    drain()
+
+    summary = spark.read.parquet(os.path.join(rep, "summary"))
+    keys = summary.groupBy("batch_id", "partition_id").count().collect()
+    assert len(keys) == 2 and all(r["count"] == 1 for r in keys), keys
+    per_col = spark.read.parquet(os.path.join(rep, "per_column"))
+    assert per_col.count() == 2 * len(ASSIGNS)
+    assert summary.agg(F.sum("rows")).first()[0] == 20
 
 
 def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):

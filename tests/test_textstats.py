@@ -167,68 +167,6 @@ def test_phone_pattern_precision(spark):
     assert rows[4]["red"].count("<PHONE>") == 1 and "67890 tail" in rows[4]["red"]
 
 
-def test_tfidf_top_terms_ranks_discriminative_words(spark):
-    from ndap_data_validator_spark.operators.tfidf import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [
-            (0, "spark spark spark shuffle common common"),
-            (1, "duckdb duckdb vector common common"),
-            (2, "parquet column column column common"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_top_terms(docs, k=2, min_df=1).collect()
-    top1 = {r["doc_id"]: r["term"] for r in out if r["rank"] == 1}
-    # the doc-specific repeated term beats the corpus-wide 'common'
-    assert top1 == {0: "spark", 1: "duckdb", 2: "column"}
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert all(len(v) == 2 for v in by_doc.values())
-    # df is corpus-wide: 'common' appears in all 3 docs
-    common = [r for r in out if r["term"] == "common"]
-    assert all(r["df"] == 3 for r in common)
-
-
-def test_bm25_matches_hand_computation(spark):
-    import math
-
-    from ndap_data_validator_spark.operators.tfidf import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [
-            (0, "x x y rare"),
-            (1, "x y y y common common"),
-            (2, "x z z z z z z z z z"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_top_terms(docs, k=10, min_df=1, bm25=True).collect()
-    got = {(r["doc_id"], r["term"]): r["bm25"] for r in out}
-
-    def bm25(tf, df, dl, n=3, avgdl=20 / 3, k1=1.2, b=0.75):
-        idf = math.log(1 + (n - df + 0.5) / (df + 0.5))
-        return round(
-            idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl)), 6
-        )
-
-    # dl counts ALL tokens of the doc (hapax included), avgdl = 20/3
-    assert got[(0, "x")] == bm25(2, 3, 4)
-    assert got[(0, "rare")] == bm25(1, 1, 4)
-    assert got[(1, "y")] == bm25(3, 2, 6)
-    assert got[(2, "z")] == bm25(9, 1, 10)
-    # saturation: z appears 9x but idf is the hapax idf; the longer doc is
-    # length-penalized relative to a short doc with the same tf
-    assert got[(2, "x")] < got[(0, "x")]
-    # min_df filter must NOT change dl: drop hapax terms, x's score is
-    # computed over the same document lengths
-    out2 = tfidf_top_terms(docs, k=10, min_df=2, bm25=True).collect()
-    got2 = {(r["doc_id"], r["term"]): r["bm25"] for r in out2}
-    assert got2[(0, "x")] == got[(0, "x")]
-    assert set(r["term"] for r in out2) == {"x", "y"}
-
-
 def test_url_extraction_and_blocklist_filter(spark):
     from ndap_data_validator_spark.functions.urls import (
         domain_blocklist_filter,

@@ -191,21 +191,6 @@ s1, s2 = samp.count(), deterministic_sample(df.repartition(17), "conv_id", 0.25,
 assert s1 == s2
 print("deterministic sample rows:", s1)
 
-# stateful streaming: watermarked windowed counts
-from ndap_data_validator_spark.streaming.stateful import windowed_event_counts
-wbase = tempfile.mkdtemp(prefix="verify_stream_")
-ev2 = spark.createDataFrame(
-    [(i % 5, ["a","b"][i % 2], f"2026-01-01 00:{i % 60:02d}:00") for i in range(120)],
-    "user_id long, event_type string, ts string"
-).select("user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"))
-ev2.coalesce(2).write.mode("overwrite").parquet(f"{wbase}/src")
-stream = spark.readStream.schema("user_id long, event_type string, ts timestamp").parquet(f"{wbase}/src")
-q1 = (windowed_event_counts(stream).writeStream.format("memory").queryName("vw")
-      .outputMode("append").option("checkpointLocation", f"{wbase}/c1")
-      .trigger(availableNow=True).start())
-q1.awaitTermination(120)
-print("windowed rows:", spark.sql("SELECT count(*) FROM vw").first()[0])
-
 # jsonl: source scheme
 jbase = tempfile.mkdtemp(prefix="verify_jsonl_")
 d1.coalesce(1).write.mode("overwrite").json(f"{jbase}/t.jsonl")
@@ -234,13 +219,12 @@ rr = df.where(F.col("text").isNotNull()).limit(1000).agg(
 assert rr["avg_rr"] is not None and 0.0 <= rr["avg_rr"] <= 1.0
 print("repetition ratio avg/max:", round(rr["avg_rr"], 4), round(rr["max_rr"], 4))
 
-# r03 ops: decontamination, stratified sample, tf-idf, URL filter,
+# r03 ops: decontamination, stratified sample, URL filter,
 # distributed exact percentiles, checkpoint compaction
 from ndap_data_validator_spark.operators.decontaminate import (
     benchmark_ngram_hashes, decontaminate,
 )
 from ndap_data_validator_spark.operators.sample import stratified_sample
-from ndap_data_validator_spark.operators.tfidf import tfidf_top_terms
 from ndap_data_validator_spark.functions.urls import domain_blocklist_filter
 from ndap_data_validator_spark.operators.stats import (
     exact_percentiles_distributed,
@@ -264,14 +248,6 @@ strat = stratified_sample(df, "role", {"user": 0.5, "assistant": 0.05}, "conv_id
 counts = {r["role"]: r["n"] for r in strat.groupBy("role").agg(F.count(F.lit(1)).alias("n")).collect()}
 assert set(counts) <= {"user", "assistant"} and counts.get("user", 0) > counts.get("assistant", 0)
 print("stratified sample counts:", counts)
-
-tt = tfidf_top_terms(docs, k=2, min_df=2, bm25=True)
-mx = tt.groupBy("doc_id").count().agg(F.max("count")).first()[0]
-assert mx is not None and mx <= 2, mx
-bstats = tt.agg(F.min("bm25"), F.max("bm25")).first()
-assert bstats[0] is not None and bstats[0] >= 0, bstats
-print("tfidf top-term rows:", tt.count(), "bm25 range",
-      round(bstats[0], 3), "-", round(bstats[1], 3))
 
 urls_df = docs.select(
     "doc_id",
@@ -333,18 +309,6 @@ n_keep = sd.where("is_keeper").count()
 assert n_all == n_vecs + 1 and n_keep < n_all, (n_all, n_vecs, n_keep)
 print("semantic dedup:", n_all, "vectors ->", n_keep, "keepers")
 
-from ndap_data_validator_spark.operators.pack import chunk_documents, pack_manifest
-
-chunks = chunk_documents(docs.where(F.col("doc_id").isNotNull()), max_tokens=16)
-man = pack_manifest(chunks.drop("chunk_text"), budget=64, n_shards=8)
-tot_in = chunks.agg(F.sum("n_tokens")).first()[0]
-tot_out = man.agg(F.sum("n_tokens")).first()[0]
-assert tot_in == tot_out and tot_in > 0, (tot_in, tot_out)
-bad = man.where((F.col("offset") < 0) | (F.col("offset") >= 64)).count()
-assert bad == 0
-print("chunk+pack:", chunks.count(), "chunks,", tot_in, "tokens,",
-      man.select("shard", "bin_id").distinct().count(), "bins")
-
 import tempfile as _tf
 
 from ndap_data_validator_spark.streaming.stateful import dedup_stream
@@ -372,105 +336,6 @@ with _tf.TemporaryDirectory() as _sd:
     ).first()[0]
     assert n_out == n_keys <= n_in, (n_in, n_out, n_keys)
     print("stream dedup:", 2 * n_in, "arrivals ->", n_out, "unique emissions")
-
-# --- round-4 additions: real BPE, no-split packing, quality classifier ---
-
-from ndap_data_validator_spark.functions.bpe import bpe_token_count, bpe_tokens
-from ndap_data_validator_spark.operators.pack import pack_nosplit
-
-bpe_docs = docs.where(F.col("doc_id").isNotNull())
-counts = bpe_docs.select(
-    "doc_id",
-    bpe_token_count(F.col("text")).alias("n_bpe"),
-    F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_ws"),
-)
-agg = counts.agg(F.sum("n_bpe").alias("b"), F.sum("n_ws").alias("w")).first()
-assert agg["b"] > agg["w"] > 0, agg  # BPE budget is finer than ws proxy
-recon = bpe_docs.select(
-    (F.array_join(bpe_tokens(F.col("text")), "")
-     == F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")).alias("ok")
-).agg(F.sum(F.col("ok").cast("int")).alias("n"), F.count("*").alias("t")).first()
-assert recon["n"] == recon["t"], recon  # lossless reconstruction
-print("bpe: ", agg["b"], "bpe tokens vs", agg["w"], "ws tokens, reconstruction ok")
-
-# --- round-5 addition: integer token ids (vocab → encode_ids → decode) ---
-
-from ndap_data_validator_spark.functions.bpe import (
-    bpe_decode,
-    bpe_encode_ids,
-    bpe_vocab,
-)
-
-vocab_df, n_base = bpe_vocab(bpe_docs, "text")
-n_vocab = vocab_df.count()
-assert n_vocab > n_base > 0, (n_vocab, n_base)
-ids = bpe_encode_ids(bpe_docs, "doc_id", "text", vocab_df)
-idchk = ids.agg(
-    F.sum("n_oov").alias("oov"),
-    F.sum(
-        F.when(
-            F.col("token_ids").isNull()
-            | (F.size("token_ids") + F.col("n_oov") == F.col("n_tokens")),
-            0,
-        ).otherwise(1)
-    ).alias("bad"),
-).first()
-assert idchk["oov"] == 0 and idchk["bad"] == 0, idchk  # in-vocab, length-true
-rt = (
-    bpe_decode(ids, "doc_id", "token_ids", vocab_df)
-    .withColumnRenamed("text", "decoded")
-    .join(bpe_docs.select("doc_id", "text"), "doc_id")
-    .agg(
-        F.sum(
-            (F.col("decoded")
-             == F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
-            .cast("int")
-        ).alias("n"),
-        F.count("*").alias("t"),
-    )
-    .first()
-)
-assert rt["n"] == rt["t"], rt  # decode(encode(x)) == pretokenized x
-print("bpe ids:", n_vocab, "vocab tokens (", n_base, "base ), id round-trip ok")
-
-sized = counts.where(F.col("n_bpe") > 0).select("doc_id", F.col("n_bpe").alias("n_tokens"))
-ns = pack_nosplit(sized, budget=256, n_shards=8)
-n_docs_in = sized.count()
-n_docs_out = ns.count()
-tot_ns = ns.agg(F.sum("n_tokens")).first()[0]
-tot_sized = sized.agg(F.sum("n_tokens")).first()[0]
-assert n_docs_in == n_docs_out and tot_ns == tot_sized
-over = (
-    ns.groupBy("shard", "bin_id")
-    .agg(F.sum("n_tokens").alias("s"), F.count("*").alias("c"))
-    .where((F.col("s") > 256) & (F.col("c") > 1)).count()
-)
-assert over == 0  # a bin over budget may only hold one oversized doc
-print("pack_nosplit:", n_docs_out, "docs ->", ns.select("shard", "bin_id").distinct().count(), "bins, no doc split")
-
-from ndap_data_validator_spark.functions.quality_clf import (
-    score_quality,
-    train_quality_classifier,
-)
-
-mangle = F.regexp_replace(F.col("text"), "[aeiou]", "q")
-pos = bpe_docs.select("doc_id", "text", F.lit(True).alias("label"))
-neg = bpe_docs.select(
-    F.concat(F.lit("neg-"), F.col("doc_id")).alias("doc_id"),
-    mangle.alias("text"),
-    F.lit(False).alias("label"),
-)
-wts, consts = train_quality_classifier(pos.unionByName(neg), "label", n_buckets=512, seed=7)
-scored = score_quality(
-    pos.select("doc_id", "text").unionByName(neg.select("doc_id", "text")),
-    wts, consts, n_buckets=512, seed=7, round_digits=6,
-)
-acc = scored.select(
-    (F.col("predicted") == ~F.col("doc_id").startswith("neg-"))
-    .cast("int").alias("ok")
-).agg(F.avg("ok")).first()[0]
-assert acc > 0.95, acc  # planted classes are trivially separable
-print(f"quality classifier: holdout-free accuracy {acc:.3f} on planted classes")
 
 from ndap_data_validator_spark.operators.decontaminate import decontaminate_fuzzy
 
