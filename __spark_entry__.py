@@ -4,8 +4,8 @@
 (null census, coercion, time formats, column rules, partition summary,
 uniqueness, referential integrity, sequence and CHECK rules, statistics
 and metric expectations, drift, reconciliation, key skew, percentiles)
-plus the text-corpus ops that remain in the package (dedup, similarity,
-text analysis, decontamination and sampling); ``oracle_sql()`` gives the
+plus the text-corpus ops that remain in the package (dedup, text
+analysis, decontamination and sampling); ``oracle_sql()`` gives the
 DuckDB-equivalent SQL for every one of them.
 
 Parity notes baked into every query pair:
@@ -13,8 +13,6 @@ Parity notes baked into every query pair:
   * DuckDB SUM(int) returns HUGEINT → always CAST(... AS BIGINT);
   * double reductions that feed ROUND go through exact DECIMAL sums or are
     rounded far from representable boundaries;
-  * float embeddings are cast to array<double>/DOUBLE[] BEFORE any math so
-    both engines do the same IEEE ops in the same order;
   * the shared "derived transcripts" frame is built from ``events`` with the
     same integer-keyed CASE logic in both dialects.
 """
@@ -30,14 +28,12 @@ from pyspark.sql import functions as F
 from ndap_data_validator_spark.operators import drift as drift_mod
 from ndap_data_validator_spark.operators.dedup import (
     dedup_incremental_batch,
-    exact_duplicate_groups,
     minhash_index,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash,
 )
 from ndap_data_validator_spark.operators.referential import ri_violation_counts
-from ndap_data_validator_spark.operators.similarity import cosine, hyperplanes, lsh_signature
 from ndap_data_validator_spark.operators.stats import column_stats, merge_hll_to_global
 from ndap_data_validator_spark.operators.uniqueness import duplicate_keys
 from ndap_data_validator_spark.operators.validate import ValidationEngine
@@ -763,24 +759,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_PLANES = 8
-_ANN_DIM = 64
-
-
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: random-hyperplane LSH bucket assignment (the
-    precomputable index column)."""
-    planes = hyperplanes(_ANN_DIM, _ANN_PLANES, seed=42)
-    # r06: spread — the 8×64-dim dot products per row otherwise run in the
-    # single-row-group scan's ONE task at bench SFs (guide §2.5)
-    emb = _spread(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    return emb.select("vec_id", lsh_signature(F.col("v"), planes).alias("bucket"))
-
-
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-family sorts/limits (SURVEY §2.7): top-k with a deterministic
     tie-break so the result SET is stable across engines."""
@@ -1244,8 +1222,8 @@ _STRATA_RATES = {"F": 0.1, "O": 0.02, "P": 1.0}
 
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH benchmark-decontamination flavors, method-tagged (consolidated
-    r05 to fund the repeated_ngrams slot; columns aligned as
-    (method, doc_id, n_matches, score, contaminated)):
+    r05; columns aligned as (method, doc_id, n_matches, score,
+    contaminated)):
 
     * 'exact' — GPT-3/Dolma-style n-gram collision: every 7th document
       plays the 'evaluation suite'; its distinct 8-gram hash set is
@@ -1310,40 +1288,6 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "contaminated",
     )
     return exact.unionByName(fuzzy).unionByName(bloom)
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicates via LSH self-buckets + a planted
-    clone — oracle-checked: DuckDB replays the hyperplane signatures
-    (seeded literals), the bucket self-join, and the cosine threshold."""
-    from ndap_data_validator_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    # r06: spread — signature dot products and bucket pairing otherwise
-    # hang off the single-row-group scan's ONE task at bench SFs
-    emb = _spread(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    )
-    clone = emb.where(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.lit(100_000).cast("long")
-    )
-    # r06: the operator references its input 3× (bucket signatures + both
-    # vector-attach sides) and each reference replicated the scan+spread
-    # subtree — 16 scans / 27 exchanges in the initial plan. One lazy
-    # localCheckpoint materializes the (vector-sized) input once; every
-    # branch reads the cached blocks.
-    data = emb.unionByName(clone).localCheckpoint(eager=False)
-    pairs = embedding_near_duplicates(
-        data, dim=_ANN_DIM, threshold=0.95,
-        n_planes=_ANN_PLANES, n_tables=1, seed=42,
-        # verified-small fixture: the ~1M candidate pairs would otherwise
-        # shuffle with their attached 512-byte vector payloads (guide §8)
-        broadcast_vectors=True,
-    )
-    return pairs.select("id_a", "id_b", F.round("cos", 4).alias("cos"))
 
 
 def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1518,96 +1462,6 @@ def q_except_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only category is empty as of r04 — even hll_distinct is bound-checked)
 
 
-_RPT_SLOGAN = " standard boilerplate footer text all rights reserved worldwide"
-_RPT_N = 6
-_LINE_BOILER = "cookie consent accept all essential functional and analytics"
-
-
-def q_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated-text removal, all three granularities in
-    one method-tagged union (operators/repeated.py):
-
-    * ``ngram`` — repeated n-gram spans (the n-gram-granularity
-      approximation of suffix-array substring dedup, Lee et al. 2022):
-      every 10th document gets an appended boilerplate slogan, so those
-      docs share a run of consecutive repeated 6-gram positions; each doc
-      reports its repeated fraction and longest run (cleaned_md5 NULL —
-      this op flags, it does not rewrite);
-    * ``line`` — RefinedWeb/C4-style line dedup: documents are recast as
-      3-line pages (first 12 words / every 5th doc a planted cookie-banner
-      line / the rest), lines shared by ≥2 docs are removed, and each doc
-      reports the same rollup plus ``cleaned_md5`` — the md5 of the
-      reassembled cleaned text, so the oracle verifies the REWRITE, not
-      just the counts;
-    * ``substring`` (r05) — the actual Lee et al. CUT: repeated 6-gram
-      windows are removed from every doc except each gram's canonical
-      (min-id) owner, overlapping windows union, and the doc survives as
-      its kept tokens re-joined — so the planted slogan survives ONLY in
-      doc 0 and ``cleaned_md5`` receipts every rewrite.
-
-    md5-portable hashing lets DuckDB replay positions, the repeated-hash
-    sets, canonical owners, window coverage, the run-length grouping, and
-    both reassemblies exactly."""
-    from ndap_data_validator_spark.operators.repeated import (
-        line_dedup,
-        repeated_ngram_report,
-        substring_dedup,
-    )
-
-    docs = _spread(_t(spark, sf_dir, "documents").where(F.col("doc_id") < 400))
-    planted = docs.select(
-        "doc_id",
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(10)) == 0,
-            F.concat(F.col("text"), F.lit(_RPT_SLOGAN)),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    ngram = repeated_ngram_report(
-        planted, n=_RPT_N, min_docs=2, seed=42, hash_fn="md5"
-    ).select(
-        F.lit("ngram").alias("method"),
-        "doc_id",
-        "n_positions",
-        "n_repeated",
-        "repeated_frac",
-        "max_repeated_run",
-        F.lit(None).cast("string").alias("cleaned_md5"),
-    )
-    w = F.split(F.col("text"), " ")
-    head = F.concat_ws(" ", F.slice(w, 1, 12))
-    tail = F.concat_ws(" ", F.slice(w, 13, F.size(w)))
-    pages = docs.select(
-        "doc_id",
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-            F.concat_ws("\n", head, F.lit(_LINE_BOILER), tail),
-        ).otherwise(F.concat_ws("\n", head, tail)).alias("text"),
-    )
-    _, line_report = line_dedup(pages, min_docs=2, seed=42, hash_fn="md5")
-    line = line_report.select(
-        F.lit("line").alias("method"),
-        "doc_id",
-        F.col("n_lines").alias("n_positions"),
-        "n_repeated",
-        "repeated_frac",
-        "max_repeated_run",
-        "cleaned_md5",
-    )
-    _, sub_report = substring_dedup(
-        planted, n=_RPT_N, min_docs=2, seed=42, hash_fn="md5"
-    )
-    sub = sub_report.select(
-        F.lit("substring").alias("method"),
-        "doc_id",
-        F.col("n_tokens").alias("n_positions"),
-        F.col("n_removed").alias("n_repeated"),
-        F.col("removed_frac").alias("repeated_frac"),
-        F.col("max_removed_run").alias("max_repeated_run"),
-        "cleaned_md5",
-    )
-    return ngram.unionByName(line).unionByName(sub)
-
-
 def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup, both deployment shapes in one method-tagged
     union (both oracle-checked end to end via the md5 portable hash):
@@ -1708,72 +1562,6 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN, oracle-checked in its verification configuration: md5
-    portable-hash seed centroids with lloyd_iterations=0 make the quantizer
-    a pure function DuckDB replays (seed selection → nearest-cell
-    assignment → probe → rounded rank). Production uses xxhash64 seeding +
-    Lloyd refinement — same plan shape, verified by the pytest recall and
-    planted-clone fixtures."""
-    from ndap_data_validator_spark.operators.similarity import ivf_topk
-
-    # r06: spread — cell assignment is 8 cosines × 64 dims per row, all in
-    # the single-row-group scan's ONE task at bench SFs otherwise
-    emb = _spread(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    )
-    return ivf_topk(
-        emb, emb.where(F.col("vec_id") < 5), k=5, n_centroids=8, n_probe=4,
-        lloyd_iterations=0, hash_fn="md5", round_digits=4,
-    )
-
-
-def q_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force top-k, oracle-checked: ranking on the 4-dp ROUNDED
-    cosine (ties broken by id) makes the order well-defined across engines —
-    raw-double rank ties are FP-noise-sensitive. Carries the threshold form
-    too (consolidated r04, cap): meets_threshold flags cos ≥ 0.25, the
-    similarity-cutoff predicate the former knn_threshold entry verified."""
-    from ndap_data_validator_spark.operators.similarity import brute_force_topk
-
-    # r06: spread — 5 exact cosines × 64 dims per corpus row otherwise run
-    # in the single-row-group scan's ONE task at bench SFs
-    emb = _spread(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    )
-    return brute_force_topk(
-        emb, emb.where(F.col("vec_id") < 5), k=5, round_digits=4
-    ).withColumn("meets_threshold", F.col("cos") >= 0.25)
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dedup in its verification configuration (md5
-    seed centroids, 0 Lloyd rounds, rounded cosine — the ann_ivf contract):
-    three planted clones must lose to their originals; everything else
-    keeps. DuckDB replays quantizer → cells → within-cell prune rule."""
-    from ndap_data_validator_spark.operators.similarity import semantic_dedup
-
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < 300)
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    )
-    clones = emb.where(F.col("vec_id") < 3).withColumn(
-        "vec_id", (F.col("vec_id") + F.lit(1_000_000)).cast("long")
-    )
-    data = emb.unionByName(clones)
-    return semantic_dedup(
-        data, threshold=0.999, n_centroids=8, max_cell_size=100_000,
-        lloyd_iterations=0, hash_fn="md5", round_digits=4,
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # At most 50 entries: only the first 50 get a correctness check. Every
     # entry carries a DuckDB oracle in oracle_sql(). Near-duplicates ride
@@ -1799,42 +1587,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "ngram_jaccard": q_ngram_jaccard,
         "text_quality": q_text_quality,
-        "ann_lsh_buckets": q_ann_lsh_buckets,
-        "ann_ivf": q_ann_ivf,
         "hll_distinct": q_hll_distinct,
         "topk_orders": q_topk_orders,
         "dtype_coercion_report": q_dtype_coercion_report,
         "three_way_join": q_three_way_join,
         "except_diff": q_except_diff,
-        "repeated_ngrams": q_repeated_ngrams,
         "csv_events_rollup": q_csv_events_rollup,
         "dedup_clusters": q_dedup_clusters,
         "text_gates": q_text_gates,
         "key_skew": q_key_skew,
         "sampling": q_sampling,
         "decontamination": q_decontamination,
-        "semantic_dedup": q_semantic_dedup,
         "exact_percentiles": q_exact_percentiles,
-        "embedding_neardup": q_embedding_neardup,
         "minhash_candidates": q_minhash_candidates,
         "simhash_fingerprints": q_simhash_fingerprints,
-        "knn_topk": q_knn_topk,
     }
 
 
 # --------------------------------------------------------------- oracle SQL
-
-def _planes_sql(vec_expr: str = "embedding::DOUBLE[]") -> str:
-    planes = hyperplanes(_ANN_DIM, _ANN_PLANES, seed=42)
-    terms = []
-    for i, p in enumerate(planes):
-        arr = "[" + ",".join(repr(x) for x in p) + "]::DOUBLE[]"
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}, {arr}) >= 0 "
-            f"THEN CAST({1 << i} AS BIGINT) ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
 
 def _minhash_oracle_sql(num_hashes: int = 16, bands: int = 8, seed: int = 42,
                         threshold: float = 0.8, shingle_n: int = 3,
@@ -2052,52 +1822,6 @@ def _text_gates_oracle_sql() -> str:
     """
 
 
-def _ann_ivf_oracle_sql(
-    n_centroids: int = 8, n_probe: int = 4, k: int = 5, seed: int = 42
-) -> str:
-    """DuckDB replay of ivf_topk(lloyd_iterations=0, hash_fn='md5'):
-    seed-centroid selection, nearest-cell assignment (ties → smaller cell),
-    per-query cell probing, rounded-cosine rank within probed cells."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-            f" * sqrt(list_dot_product({b}, {b})))"
-        )
-
-    return f"""
-      WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      seeds AS (SELECT vec_id, v FROM e
-                ORDER BY {P('CAST(vec_id AS VARCHAR)', seed)} LIMIT {n_centroids}),
-      cents AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell_id,
-                       v AS centroid FROM seeds),
-      scored AS (SELECT e.vec_id, e.v, c.cell_id,
-                        {cos('e.v', 'c.centroid')} AS cc FROM e, cents c),
-      cells AS (SELECT vec_id, v, cell_id FROM (
-                  SELECT vec_id, v, cell_id,
-                         ROW_NUMBER() OVER (PARTITION BY vec_id
-                                            ORDER BY cc DESC, cell_id ASC) AS rn
-                  FROM scored) WHERE rn = 1),
-      q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-      qs AS (SELECT q.query_id, q.qv, c.cell_id,
-                    {cos('q.qv', 'c.centroid')} AS qc FROM q, cents c),
-      probes AS (SELECT query_id, qv, cell_id FROM (
-                   SELECT query_id, qv, cell_id,
-                          ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY qc DESC, cell_id ASC) AS rn
-                   FROM qs) WHERE rn <= {n_probe}),
-      cand AS (SELECT p.query_id, cells.vec_id,
-                      ROUND({cos('p.qv', 'cells.v')}, 4) AS cos
-               FROM probes p JOIN cells USING (cell_id)),
-      r AS (SELECT query_id, vec_id, cos,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
-            FROM cand)
-      SELECT query_id, vec_id, cos, rank FROM r WHERE rank <= {k}
-    """
-
-
 def _url_gate_oracle_sql() -> str:
     from ndap_data_validator_spark.functions.urls import URL_PATTERN
 
@@ -2139,48 +1863,6 @@ def _url_gate_oracle_sql() -> str:
                AS detail  -- DuckDB: array_to_string([]) is NULL
       FROM x
       WHERE len(list_filter(domains, h -> {hit})) = 0
-    """
-
-
-def _semantic_dedup_oracle_sql(
-    n_centroids: int = 8, seed: int = 42, threshold: float = 0.999
-) -> str:
-    """DuckDB replay of semantic_dedup(lloyd_iterations=0, hash_fn='md5'):
-    md5 seed-centroid selection, nearest-cell assignment (ties → smaller
-    cell, as assign_cells' max_by struct), within-cell lower-id prune rule
-    on the 4dp-rounded cosine. max_cell_size is above the input size, so
-    full within-cell pairs — no star branch to replay."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    def cos(a: str, b: str) -> str:
-        return (
-            f"list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-            f" * sqrt(list_dot_product({b}, {b})))"
-        )
-
-    return f"""
-      WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings WHERE vec_id < 300),
-      e AS (SELECT vec_id, v FROM base
-            UNION ALL
-            SELECT vec_id + 1000000, v FROM base WHERE vec_id < 3),
-      seeds AS (SELECT vec_id, v FROM e
-                ORDER BY {P('CAST(vec_id AS VARCHAR)', seed)} LIMIT {n_centroids}),
-      cents AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cell_id,
-                       v AS centroid FROM seeds),
-      scored AS (SELECT e.vec_id, e.v, c.cell_id,
-                        {cos('e.v', 'c.centroid')} AS cc FROM e, cents c),
-      cells AS (SELECT vec_id, v, cell_id FROM (
-                  SELECT vec_id, v, cell_id,
-                         ROW_NUMBER() OVER (PARTITION BY vec_id
-                                            ORDER BY cc DESC, cell_id ASC) AS rn
-                  FROM scored) WHERE rn = 1),
-      pruned AS (SELECT DISTINCT b.vec_id
-                 FROM cells a JOIN cells b
-                   ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-                 WHERE ROUND({cos('a.v', 'b.v')}, 4) >= {threshold})
-      SELECT c.vec_id, c.cell_id, (p.vec_id IS NULL) AS is_keeper
-      FROM cells c LEFT JOIN pruned p ON c.vec_id = p.vec_id
     """
 
 
@@ -2288,153 +1970,6 @@ def _decontamination_bloom_oracle_sql(
              ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS hit_ratio,
              (SUM(hit)::DOUBLE / COUNT(*)) > 0.0 AS contaminated
       FROM gh GROUP BY doc_id
-    """
-
-
-def _repeated_ngrams_oracle_sql(seed: int = 42, min_docs: int = 2) -> str:
-    """DuckDB replay of repeated_ngram_report (operators/repeated.py) in
-    its md5 configuration: positional n-grams (short-doc whole-text rule),
-    repeated-hash set by distinct-doc count, pos − cumulative-count run
-    grouping — identical state to the Spark plan, including the planted
-    every-10th-doc slogan."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    k = _RPT_N - 1
-    ng = (
-        f"CASE WHEN len(w) - {k} <= 0 THEN array_to_string(w, ' ') "
-        f"ELSE array_to_string(w[pos:pos+{k}], ' ') END"
-    )
-    return rf"""
-      WITH docs AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 10 = 0 THEN text || '{_RPT_SLOGAN}'
-                    ELSE text END AS text
-        FROM documents WHERE doc_id < 400),
-      w AS (SELECT doc_id,
-              regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-            FROM docs),
-      px AS (SELECT doc_id, w,
-               unnest(CASE WHEN len(w) - {k} <= 0 THEN [1]
-                           ELSE generate_series(1, len(w) - {k}) END) AS pos
-             FROM w),
-      hx AS (SELECT doc_id, pos, {P(ng, seed)} AS hh FROM px),
-      rep AS (SELECT hh FROM (
-                SELECT hh, COUNT(DISTINCT doc_id) AS nd FROM hx GROUP BY hh)
-              WHERE nd >= {min_docs}),
-      m AS (SELECT hx.doc_id, hx.pos,
-                   CASE WHEN rep.hh IS NOT NULL THEN 1 ELSE 0 END AS r
-            FROM hx LEFT JOIN rep USING (hh)),
-      c AS (SELECT doc_id, pos, r,
-                   SUM(r) OVER (PARTITION BY doc_id ORDER BY pos) AS cum
-            FROM m),
-      g AS (SELECT doc_id,
-                   CASE WHEN r = 1 THEN pos - cum ELSE NULL END AS grp,
-                   COUNT(*) AS cnt
-            FROM c GROUP BY doc_id, grp),
-      snt AS (SELECT doc_id, len(w) AS nt FROM w),
-      srep AS (SELECT hh, MIN(doc_id) AS canon
-               FROM (SELECT DISTINCT doc_id, hh FROM hx) sd
-               GROUP BY hh HAVING COUNT(*) >= {min_docs}),
-      scov AS (SELECT DISTINCT doc_id, tpos FROM (
-                 SELECT h.doc_id AS doc_id,
-                        unnest(generate_series(
-                          h.pos, least(h.pos + {k}, s.nt))) AS tpos
-                 FROM hx h JOIN srep r USING (hh)
-                 JOIN snt s ON s.doc_id = h.doc_id
-                 WHERE h.doc_id IS DISTINCT FROM r.canon) sq),
-      stok AS (SELECT doc_id, i AS tpos, w[i] AS tok FROM (
-                 SELECT doc_id, w,
-                        unnest(generate_series(1, len(w))) AS i
-                 FROM w) tq),
-      smk AS (SELECT t.doc_id, t.tpos, t.tok,
-                     CASE WHEN c.tpos IS NOT NULL THEN 1 ELSE 0 END AS r,
-                     SUM(CASE WHEN c.tpos IS NOT NULL THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY t.doc_id ORDER BY t.tpos) AS cum
-              FROM stok t LEFT JOIN scov c ON c.doc_id = t.doc_id
-                                          AND c.tpos = t.tpos),
-      sclean AS (SELECT doc_id,
-                   COALESCE(array_to_string(
-                     list(tok ORDER BY tpos) FILTER (WHERE r = 0),
-                     ' '), '') AS t
-                 FROM smk GROUP BY doc_id),
-      sg AS (SELECT doc_id,
-                    CASE WHEN r = 1 THEN tpos - cum ELSE NULL END AS grp,
-                    COUNT(*) AS cnt
-             FROM smk GROUP BY doc_id, grp),
-      sroll AS (SELECT doc_id,
-             CAST(SUM(cnt) AS BIGINT) AS n_positions,
-             CAST(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END) AS BIGINT)
-               AS n_repeated,
-             ROUND(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END)::DOUBLE
-                   / SUM(cnt), 4) AS repeated_frac,
-             CAST(COALESCE(MAX(CASE WHEN grp IS NOT NULL THEN cnt END), 0)
-               AS BIGINT) AS max_repeated_run
-      FROM sg GROUP BY doc_id),
-      ldocs AS (SELECT doc_id,
-               array_to_string(w[1:12], ' ')
-               || CASE WHEN doc_id % 5 = 0
-                       THEN chr(10) || '{_LINE_BOILER}' ELSE '' END
-               || chr(10)
-               || COALESCE(array_to_string(w[13:len(w)], ' '), '')
-                 AS text
-            FROM (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents WHERE doc_id < 400)),
-      ll AS (SELECT doc_id, string_split(text, chr(10)) AS L FROM ldocs),
-      lpx AS (SELECT doc_id, L,
-                unnest(generate_series(1, len(L))) AS pos
-              FROM ll),
-      lrow AS (SELECT doc_id, pos, L[pos] AS line,
-                      lower(trim(L[pos])) AS norm
-               FROM lpx),
-      lelig AS (SELECT doc_id, pos, {P('norm', seed)} AS hh
-                FROM lrow WHERE norm <> ''),
-      lrep AS (SELECT hh FROM (
-                 SELECT hh, COUNT(DISTINCT doc_id) AS nd
-                 FROM lelig GROUP BY hh)
-               WHERE nd >= {min_docs}),
-      lflag AS (SELECT e.doc_id, e.pos, 1 AS r
-                FROM lelig e JOIN lrep USING (hh)),
-      lc AS (SELECT l.doc_id, l.pos, l.line, COALESCE(f.r, 0) AS r,
-                    SUM(COALESCE(f.r, 0)) OVER (
-                      PARTITION BY l.doc_id ORDER BY l.pos) AS cum
-             FROM lrow l LEFT JOIN lflag f ON l.doc_id = f.doc_id
-                                          AND l.pos = f.pos),
-      lclean AS (SELECT doc_id,
-                   COALESCE(array_to_string(
-                     list(line ORDER BY pos) FILTER (WHERE r = 0),
-                     chr(10)), '') AS t
-                 FROM lc GROUP BY doc_id),
-      lg AS (SELECT doc_id,
-                    CASE WHEN r = 1 THEN pos - cum ELSE NULL END AS grp,
-                    COUNT(*) AS cnt
-             FROM lc GROUP BY doc_id, grp),
-      lroll AS (SELECT doc_id,
-             CAST(SUM(cnt) AS BIGINT) AS n_positions,
-             CAST(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END) AS BIGINT)
-               AS n_repeated,
-             ROUND(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END)::DOUBLE
-                   / SUM(cnt), 4) AS repeated_frac,
-             CAST(COALESCE(MAX(CASE WHEN grp IS NOT NULL THEN cnt END), 0)
-               AS BIGINT) AS max_repeated_run
-      FROM lg GROUP BY doc_id)
-      SELECT 'ngram' AS method, doc_id,
-             CAST(SUM(cnt) AS BIGINT) AS n_positions,
-             CAST(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END) AS BIGINT)
-               AS n_repeated,
-             ROUND(SUM(CASE WHEN grp IS NOT NULL THEN cnt ELSE 0 END)::DOUBLE
-                   / SUM(cnt), 4) AS repeated_frac,
-             CAST(COALESCE(MAX(CASE WHEN grp IS NOT NULL THEN cnt END), 0)
-               AS BIGINT) AS max_repeated_run,
-             CAST(NULL AS VARCHAR) AS cleaned_md5
-      FROM g GROUP BY doc_id
-      UNION ALL
-      SELECT 'line' AS method, r.doc_id, r.n_positions, r.n_repeated,
-             r.repeated_frac, r.max_repeated_run, md5(c.t) AS cleaned_md5
-      FROM lroll r JOIN lclean c USING (doc_id)
-      UNION ALL
-      SELECT 'substring' AS method, r.doc_id, r.n_positions, r.n_repeated,
-             r.repeated_frac, r.max_repeated_run, md5(c.t) AS cleaned_md5
-      FROM sroll r JOIN sclean c USING (doc_id)
     """
 
 
@@ -2989,24 +2524,6 @@ def oracle_sql() -> dict[str, str]:
       FROM s
     """
 
-    ann_lsh = f"""
-      SELECT vec_id, CAST({_planes_sql()} AS BIGINT) AS bucket FROM embeddings
-    """
-
-    knn_topk = """
-      WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-      s AS (SELECT q.query_id, e.vec_id,
-              ROUND(list_dot_product(q.qv, e.v)
-                / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(e.v, e.v))), 4) AS cos
-            FROM q, e),
-      r AS (SELECT query_id, vec_id, cos,
-              CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS INT) AS rank
-            FROM s)
-      SELECT query_id, vec_id, cos, rank, cos >= 0.25 AS meets_threshold
-      FROM r WHERE rank <= 5
-    """
-
     topk_orders = """
       SELECT o_orderkey, o_custkey, o_totalprice
       FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
@@ -3096,15 +2613,11 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard": ngram_jaccard,
         "text_quality": text_quality,
         "hll_distinct": hll_distinct,
-        "ann_lsh_buckets": ann_lsh,
-        "knn_topk": knn_topk,
         "minhash_candidates": _minhash_oracle_sql(),
         "simhash_fingerprints": _simhash_oracle_sql(),
         "dedup_clusters": dedup_clusters,
         "sampling": sampling,
-        "semantic_dedup": _semantic_dedup_oracle_sql(),
         "decontamination": _decontamination_oracle_sql(),
-        "repeated_ngrams": _repeated_ngrams_oracle_sql(),
         "text_gates": _text_gates_oracle_sql(),
         "key_skew": f"""
           WITH d AS ({DERIVED_SQL}),
@@ -3122,21 +2635,6 @@ def oracle_sql() -> dict[str, str]:
                  ROUND(CAST(s.mx AS DOUBLE) * s.n_keys / s.total, 6)
                    AS skew_factor
           FROM t, s
-        """,
-        "ann_ivf": _ann_ivf_oracle_sql(),
-        "embedding_neardup": f"""
-          WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            UNION ALL
-            SELECT CAST(100000 AS BIGINT), embedding::DOUBLE[]
-            FROM embeddings WHERE vec_id = 0),
-          sig AS (SELECT vec_id, v, CAST({_planes_sql('v')} AS BIGINT) AS b FROM e),
-          p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                       list_dot_product(a.v, b.v)
-                       / (sqrt(list_dot_product(a.v, a.v))
-                          * sqrt(list_dot_product(b.v, b.v))) AS cos
-                FROM sig a JOIN sig b ON a.b = b.b AND a.vec_id < b.vec_id)
-          SELECT id_a, id_b, ROUND(cos, 4) AS cos FROM p WHERE cos >= 0.95
         """,
         "exact_percentiles": """
           SELECT 'l_extendedprice' AS "column",

@@ -22,7 +22,6 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ndap_data_validator_spark.session import literal_frame
 

@@ -15,38 +15,11 @@ def spark():
     return get_spark(app_name="r06-opt-tests", master="local[4]")
 
 
-def test_embedding_neardup_broadcast_equivalent(spark):
-    """broadcast_vectors=True is a join-STRATEGY opt-in: identical pairs
-    and cosines to the default shuffle-attach path."""
-    from ndap_data_validator_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    dim = 8
-    base = spark.range(0, 60).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: (F.pmod(F.xxhash64(F.col("id") % 10, i), F.lit(100))
-                       .cast("double") / 50.0 - 1.0),
-        ).alias("embedding"),
-    )
-    kw = dict(dim=dim, threshold=0.99, n_planes=4, n_tables=2, seed=7)
-    a = sorted(
-        tuple(r) for r in embedding_near_duplicates(base, **kw).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in embedding_near_duplicates(
-            base, broadcast_vectors=True, **kw
-        ).collect()
-    )
-    assert a == b and len(a) > 0
-
-
 def test_duplicate_keys_hashed_isin_and_join_paths_agree(spark):
-    """The r06 bounded-isin phase 2 ≡ the join fallback ≡ the exact
-    groupBy census (max_exact_hashes=0 forces the fallback)."""
+    """The r06 bounded-isin phase 2 (below and exactly at the cap) ≡ the
+    over-cap fallback ≡ the exact groupBy census (max_exact_hashes=0 forces
+    the fallback). NULL key parts are key values: a NULL k, a NULL sub and
+    both, each duplicated, come back as duplicate keys on every path."""
     from ndap_data_validator_spark.operators.uniqueness import (
         duplicate_keys,
         duplicate_keys_hashed,
@@ -56,17 +29,20 @@ def test_duplicate_keys_hashed_isin_and_join_paths_agree(spark):
         F.concat(F.lit("k-"), (F.col("id") % 50).cast("string")).alias("k"),
         (F.col("id") % 7).alias("sub"),
     )
-    exact = sorted(tuple(r) for r in duplicate_keys(df, ["k", "sub"]).collect())
-    via_isin = sorted(
-        tuple(r) for r in duplicate_keys_hashed(df, ["k", "sub"]).collect()
+    nulls = [(None, 3), ("k-null-sub", None), (None, None)]
+    df = df.unionByName(spark.createDataFrame(nulls * 2, "k string, sub long"))
+
+    def rows(frame):
+        return sorted((tuple(r) for r in frame.collect()), key=repr)
+
+    exact = rows(duplicate_keys(df, ["k", "sub"]))
+    assert {(k, sub, 2) for k, sub in nulls} <= set(exact)
+    via_isin = rows(duplicate_keys_hashed(df, ["k", "sub"]))
+    at_cap = rows(
+        duplicate_keys_hashed(df, ["k", "sub"], max_exact_hashes=len(exact))
     )
-    via_join = sorted(
-        tuple(r)
-        for r in duplicate_keys_hashed(
-            df, ["k", "sub"], max_exact_hashes=0
-        ).collect()
-    )
-    assert exact == via_isin == via_join and len(exact) > 0
+    over_cap = rows(duplicate_keys_hashed(df, ["k", "sub"], max_exact_hashes=0))
+    assert exact == via_isin == at_cap == over_cap
 
 
 def test_duplicate_keys_hashed_no_duplicates(spark):

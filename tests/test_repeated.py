@@ -1,264 +1,57 @@
-"""Cross-document repeated n-gram detection (operators/repeated.py)."""
+"""Text repeated across documents, as the dedup operators see it: the
+word n-gram rule, md5/xxhash64 parity on identical documents, and NULL or
+self-repeating text never forming a cross-document pair."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from ndap_data_validator_spark.operators.repeated import (
-    positional_ngrams,
-    repeated_ngram_report,
+from ndap_data_validator_spark.operators.dedup import (
+    minhash_near_duplicates,
+    shingles,
+    simhash_buckets,
 )
 
 
-def _report(spark, rows, **kw):
+def _pairs(spark, rows, **kw):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = repeated_ngram_report(df, n=kw.pop("n", 3), **kw)
-    return {r["doc_id"]: r.asDict() for r in out.collect()}
+    return sorted(tuple(r) for r in minhash_near_duplicates(df, **kw).collect())
 
 
 def test_positional_ngrams_positions_and_short_doc(spark):
     df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b")], "doc_id long, text string"
+        [(1, "a b c d"), (2, "a b"), (3, "  A   b  C d "), (4, None)],
+        "doc_id long, text string",
     )
     got = {
-        r["doc_id"]: r["png"]
+        r["doc_id"]: r["ng"]
         for r in df.select(
-            "doc_id", positional_ngrams(F.col("text"), 3).alias("png")
+            "doc_id", shingles(F.col("text"), 3).alias("ng")
         ).collect()
     }
-    assert [(p["pos"], p["ng"]) for p in got[1]] == [
-        (1, "a b c"),
-        (2, "b c d"),
-    ]
-    # shorter than n: whole text as one 'n-gram' at pos 1 (shingles rule)
-    assert [(p["pos"], p["ng"]) for p in got[2]] == [(1, "a b")]
-
-
-def test_repeated_report_runs_and_fractions(spark):
-    # docs 1/2 share the 5-token boilerplate span "v w x y z": with n=3
-    # that is 3 consecutive repeated positions; the rest of each doc is
-    # unique filler.
-    rows = [
-        (1, "q1 q2 v w x y z q3 q4"),
-        (2, "r1 v w x y z r2 r3 r4"),
-        (3, "s1 s2 s3 s4 s5 s6 s7"),
-    ]
-    got = _report(spark, rows)
-    # doc 1: 7 positions (9 tokens, n=3); repeated = ngrams inside the span
-    assert got[1]["n_positions"] == 7
-    assert got[1]["n_repeated"] == 3
-    assert got[1]["max_repeated_run"] == 3
-    assert got[1]["repeated_frac"] == round(3 / 7, 4)
-    # shared span at a different offset in doc 2 still matches
-    assert got[2]["n_repeated"] == 3
-    assert got[2]["max_repeated_run"] == 3
-    # doc 3 shares nothing
-    assert got[3]["n_repeated"] == 0
-    assert got[3]["max_repeated_run"] == 0
-    assert got[3]["repeated_frac"] == 0.0
-
-
-def test_repeated_two_separate_runs(spark):
-    # doc 1 shares two DISJOINT spans with docs 2 and 3 → two runs, max is
-    # the longer one, n_repeated counts both.
-    rows = [
-        (1, "a b c u1 u2 u3 d e f g u4"),
-        (2, "z1 a b c z2 z3 z4 z5 z6 z7 z8"),
-        (3, "d e f g y1 y2 y3 y4 y5 y6 y7"),
-    ]
-    got = _report(spark, rows)
-    assert got[1]["n_repeated"] == 3  # "a b c" (1 pos) + "d e f","e f g"
-    assert got[1]["max_repeated_run"] == 2
-    assert got[2]["n_repeated"] == 1
-    assert got[3]["n_repeated"] == 2
-
-
-def test_min_docs_threshold(spark):
-    rows = [
-        (1, "p q r t1 t2"),
-        (2, "p q r t3 t4"),
-        (3, "p q r t5 t6"),
-        (4, "w1 w2 w3 w4 w5"),
-    ]
-    # min_docs=3: the "p q r" ngram occurs in 3 docs → still repeated
-    got = _report(spark, rows, min_docs=3)
-    assert got[1]["n_repeated"] == 1 and got[3]["n_repeated"] == 1
-    # min_docs=4: nothing reaches 4 docs
-    got4 = _report(spark, rows, min_docs=4)
-    assert all(v["n_repeated"] == 0 for v in got4.values())
+    # n-grams in token order, one per start position
+    assert got[1] == ["a b c", "b c d"]
+    # shorter than n: whole text as one 'n-gram'
+    assert got[2] == ["a b"]
+    # casefolded and whitespace-normalised before splitting
+    assert got[3] == got[1]
+    assert got[4] is None
 
 
 def test_identical_docs_fully_repeated_and_md5_parity(spark):
     rows = [(1, "m n o p q"), (2, "m n o p q"), (3, "k1 k2 k3 k4 k5")]
-    got = _report(spark, rows, hash_fn="md5")
-    assert got[1]["repeated_frac"] == 1.0
-    assert got[1]["max_repeated_run"] == got[1]["n_positions"] == 3
-    # xxhash64 production path agrees on every count
-    gx = _report(spark, rows, hash_fn="xxhash64")
-    assert got == gx
+    got = _pairs(spark, rows, threshold=0.5, hash_fn="md5")
+    assert got == [(1, 2, 1.0)]
+    # xxhash64 production path agrees on every pair
+    assert _pairs(spark, rows, threshold=0.5, hash_fn="xxhash64") == got
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    buckets = {
+        fn: sorted(tuple(r) for r in simhash_buckets(df, hash_fn=fn).collect())
+        for fn in ("md5", "xxhash64")
+    }
+    assert buckets["md5"] == buckets["xxhash64"] == [(1, 2)]
 
 
 def test_null_text_drops_and_within_doc_repeat_not_flagged(spark):
-    rows = [(1, None), (2, "e f e f e f e f"), (3, "g1 g2 g3 g4")]
-    got = _report(spark, rows)
-    assert 1 not in got  # NULL text yields no positions
-    # doc 2 repeats WITHIN itself only: distinct-docs count is 1 → not
-    # cross-doc repeated (that signal is textstats.repetition_ratio)
-    assert got[2]["n_repeated"] == 0
-
-
-# -------------------------------------------------- substring-level dedup
-
-
-def _subdedup(spark, rows, **kw):
-    from ndap_data_validator_spark.operators.repeated import substring_dedup
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cleaned, report = substring_dedup(df, n=kw.pop("n", 4), **kw)
-    return (
-        {r["doc_id"]: r["text"] for r in cleaned.collect()},
-        {r["doc_id"]: r.asDict() for r in report.collect()},
-    )
-
-
-def test_substring_dedup_cuts_all_but_canonical(spark):
-    texts, rep = _subdedup(
-        spark,
-        [
-            (1, "a b c d e f"),
-            (2, "x y a b c d z w"),
-            (3, "a b c d"),
-            (6, None),
-        ],
-    )
-    # doc 1 is the canonical (min id) owner of every shared gram: intact
-    assert texts[1] == "a b c d e f"
-    # doc 2 cuts its pos-3 gram -> tokens 3..6 removed
-    assert texts[2] == "x y z w"
-    assert rep[2]["n_tokens"] == 8 and rep[2]["n_removed"] == 4
-    assert rep[2]["removed_frac"] == 0.5 and rep[2]["max_removed_run"] == 4
-    # doc 3 IS the shared gram: empties entirely
-    assert texts[3] == "" and rep[3]["n_removed"] == 4
-    # NULL text drops out
-    assert 6 not in texts and 6 not in rep
-    # canonical doc reports zero removals
-    assert rep[1]["n_removed"] == 0 and rep[1]["removed_frac"] == 0.0
-
-
-def test_substring_dedup_overlapping_windows_union(spark):
-    # docs 1 and 7 are identical: every gram position repeats; doc 7's
-    # overlapping cut windows union to the whole doc
-    texts, rep = _subdedup(
-        spark, [(1, "a b c d e f"), (7, "a b c d e f")]
-    )
-    assert texts[1] == "a b c d e f"
-    assert texts[7] == ""
-    assert rep[7]["n_removed"] == 6 and rep[7]["max_removed_run"] == 6
-
-
-def test_substring_dedup_short_doc_whole_text_rule(spark):
-    # 2-token docs (< n): the whole text is one 'gram' at pos 1; the
-    # non-canonical copy empties, the canonical stays; casefold matches
-    texts, rep = _subdedup(
-        spark, [(4, "hello there"), (5, "Hello  THERE"), (8, "unique words")]
-    )
-    assert texts[4] == "hello there"
-    assert texts[5] == ""
-    assert rep[5]["n_tokens"] == 2 and rep[5]["n_removed"] == 2
-    assert texts[8] == "unique words" and rep[8]["n_removed"] == 0
-
-
-def test_substring_dedup_within_doc_repeat_not_cut(spark):
-    # the same gram twice in ONE doc is not cross-document: nothing cut
-    texts, rep = _subdedup(spark, [(9, "p q r s p q r s")])
-    assert texts[9] == "p q r s p q r s"
-    assert rep[9]["n_removed"] == 0
-
-
-def test_substring_dedup_md5_receipt_and_hash_parity(spark):
-    import hashlib
-
-    for fn in ("xxhash64", "md5"):
-        texts, rep = _subdedup(
-            spark,
-            [(1, "a b c d e f"), (2, "x y a b c d z w")],
-            hash_fn=fn,
-        )
-        assert texts[2] == "x y z w"
-        assert (
-            rep[2]["cleaned_md5"]
-            == hashlib.md5(b"x y z w").hexdigest()
-        )
-
-
-def _py_substring_dedup(docs, n, min_docs=2):
-    """Independent pure-Python reference for substring_dedup (raw gram
-    strings instead of 64-bit hashes — equivalent modulo collisions)."""
-    import re
-
-    toks = {}
-    for i, t in docs:
-        if t is None:
-            continue
-        toks[i] = re.sub(r"\s+", " ", t.strip().lower()).split(" ")
-    grams = {}  # doc -> [(pos, gram)]
-    gram_docs = {}
-    for i, w in toks.items():
-        k = len(w) - (n - 1)
-        if k <= 0:
-            g = [(1, " ".join(w))]
-        else:
-            g = [(p, " ".join(w[p - 1 : p - 1 + n])) for p in range(1, k + 1)]
-        grams[i] = g
-        for _, s in g:
-            gram_docs.setdefault(s, set()).add(i)
-    repeated = {s for s, d in gram_docs.items() if len(d) >= min_docs}
-    canon = {s: min(d) for s, d in gram_docs.items() if s in repeated}
-    out = {}
-    for i, w in toks.items():
-        T = len(w)
-        covered = set()
-        for p, s in grams[i]:
-            if s in repeated and i != canon[s]:
-                covered.update(range(p, min(p + n - 1, T) + 1))
-        kept = [w[j - 1] for j in range(1, T + 1) if j not in covered]
-        runs, cur = [], 0
-        for j in range(1, T + 1):
-            cur = cur + 1 if j in covered else 0
-            runs.append(cur)
-        out[i] = {
-            "n_tokens": T,
-            "n_removed": len(covered),
-            "max_removed_run": max(runs) if runs else 0,
-            "text": " ".join(kept),
-        }
-    return out
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
-def test_substring_dedup_fuzz_matches_python_oracle(spark, seed):
-    import random
-
-    from ndap_data_validator_spark.operators.repeated import substring_dedup
-
-    rng = random.Random(seed)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps"]
-    rows = []
-    for i in range(10):
-        if i == 7:
-            rows.append((i, None))
-            continue
-        w = [rng.choice(vocab) for _ in range(rng.randint(1, 25))]
-        rows.append((i, " ".join(w)))
-    rows.append((10, rows[2][1]))  # a verbatim clone of doc 2
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cleaned, report = substring_dedup(df, n=3, min_docs=2)
-    exp = _py_substring_dedup(rows, n=3, min_docs=2)
-    got_text = {r["doc_id"]: r["text"] for r in cleaned.collect()}
-    got_rep = {r["doc_id"]: r.asDict() for r in report.collect()}
-    assert set(got_text) == set(exp)
-    for i, e in exp.items():
-        assert got_text[i] == e["text"], (seed, i)
-        g = got_rep[i]
-        assert (g["n_tokens"], g["n_removed"], g["max_removed_run"]) == (
-            e["n_tokens"], e["n_removed"], e["max_removed_run"]
-        ), (seed, i)
+    rows = [(1, None), (2, None), (3, "e f e f e f e f"), (4, "g1 g2 g3 g4")]
+    # NULL text yields no shingles, so two NULL docs do not pair; doc 3
+    # repeats WITHIN itself only, which is not a cross-document duplicate
+    assert _pairs(spark, rows, threshold=0.5) == []

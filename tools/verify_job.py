@@ -1,5 +1,4 @@
 """User-style end-to-end job driving the engine via its public API only."""
-import sys
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -16,7 +15,6 @@ from ndap_data_validator_spark.plans.pipeline import (
     salt_repartition,
     new_run_id,
 )
-from ndap_data_validator_spark.plans.checkpoint import CheckpointStore
 from ndap_data_validator_spark.rules.model import ColumnAssignment
 from ndap_data_validator_spark.sources.datagen import transcripts
 
@@ -107,17 +105,6 @@ print("minhash near-dups found:", nd.count())
 nj = ngram_jaccard_pairs(docs.limit(150), n=1, threshold=0.95, max_token_df=100)
 print("ngram near-dup pairs:", nj.count())
 
-# IVF ANN with the new deterministic seed-centroid path + md5-portable minhash
-from ndap_data_validator_spark.operators.similarity import ivf_topk
-emb = spark.range(500).select(
-    F.col("id").alias("vec_id"),
-    F.transform(F.sequence(F.lit(0), F.lit(15)),
-                lambda i: (F.pmod(F.xxhash64(F.col("id"), i), F.lit(1000)) / 500.0 - 1.0)
-               ).alias("embedding"))
-ivf = ivf_topk(emb, emb.where(F.col("vec_id") < 3), k=4, n_centroids=6, n_probe=6)
-print("ivf rows:", ivf.count())
-assert ivf.count() == 12
-
 md5_dups = minhash_near_duplicates(docs.limit(200), threshold=0.9, hash_fn="md5")
 print("md5-portable minhash near-dups:", md5_dups.count())
 
@@ -181,7 +168,7 @@ print("structure_change partitions:", sorted(oevo.processed_partitions))
 assert sorted(oevo.processed_partitions) == ["p0", "p1"]
 
 # clusters / deterministic sampling
-from ndap_data_validator_spark.operators.dedup import connected_components, dedup_keepers
+from ndap_data_validator_spark.operators.dedup import connected_components
 from ndap_data_validator_spark.operators.sample import deterministic_sample
 pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
 cc = {r["node"]: r["comp"] for r in connected_components(pairs).collect()}
@@ -284,31 +271,6 @@ assert anom["p1"]["anomalous"] and abs(anom["p1"]["z"]) > 3
 assert not anom["p2"]["anomalous"]
 print(f"metrics anomalies: p1 z={anom['p1']['z']} flagged, p2 stable")
 
-from ndap_data_validator_spark.operators.similarity import semantic_dedup
-
-# deterministic subset (limit() re-evaluates differently per branch of the
-# multi-reference dedup plan)
-vecs = docs.where(
-    F.col("doc_id").isNotNull()  # xxhash64(NULL) hashes the seed, not NULL
-    & (F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-).dropDuplicates(["doc_id"]).select(
-    F.col("doc_id").alias("vec_id"),
-    F.array(
-        F.xxhash64("text").cast("double") % 1000,
-        F.xxhash64("text", F.lit(1)).cast("double") % 1000,
-        F.xxhash64("text", F.lit(2)).cast("double") % 1000,
-    ).alias("embedding"),
-)
-n_vecs = vecs.count()
-sclone = vecs.orderBy("vec_id").limit(1).select(
-    F.concat(F.lit("zz-"), F.col("vec_id")).alias("vec_id"), "embedding"
-)
-sd = semantic_dedup(vecs.unionByName(sclone), threshold=0.999, n_centroids=4)
-n_all = sd.count()
-n_keep = sd.where("is_keeper").count()
-assert n_all == n_vecs + 1 and n_keep < n_all, (n_all, n_vecs, n_keep)
-print("semantic dedup:", n_all, "vectors ->", n_keep, "keepers")
-
 import tempfile as _tf
 
 from ndap_data_validator_spark.streaming.stateful import dedup_stream
@@ -349,27 +311,6 @@ n_flagged = fz.where(F.col("contaminated")).count()
 n_bench2 = fz_bench.count()
 assert n_flagged >= n_bench2 > 0, (n_flagged, n_bench2)
 print("fuzzy decontamination:", n_flagged, "flagged of", fz.count(), "docs,", n_bench2, "bench items")
-
-from ndap_data_validator_spark.operators.repeated import repeated_ngram_report
-
-# plant a shared boilerplate tail on docs whose id ends in '7' — those
-# docs must show a repeated run covering the slogan's n-grams
-slogan = " standard boilerplate footer all rights reserved"
-rdocs = docs.select(
-    "doc_id",
-    F.when(
-        F.col("doc_id").endswith("7"), F.concat(F.col("text"), F.lit(slogan))
-    ).otherwise(F.col("text")).alias("text"),
-)
-rng = repeated_ngram_report(rdocs, n=4, min_docs=2)
-planted = rng.join(
-    rdocs.where(F.col("doc_id").endswith("7")).select("doc_id"), "doc_id"
-)
-n_planted = planted.count()
-n_with_run = planted.where(F.col("max_repeated_run") >= 3).count()
-assert n_planted > 0 and n_with_run == n_planted, (n_planted, n_with_run)
-frac = rng.agg(F.round(F.avg("repeated_frac"), 4)).first()[0]
-print("repeated ngrams:", n_planted, "planted docs all show runs >= 3; avg repeated_frac", frac)
 
 from ndap_data_validator_spark.operators.decontaminate import (
     benchmark_ngram_hashes as _bnh,
@@ -439,54 +380,6 @@ appended = {r[0] for r in inc_new.select("doc_id").distinct().collect()}
 assert not any(d.startswith("re-") for d in appended)
 print(f"incremental dedup: {n_clone}/{n_clones_total} cross-batch clones "
       f"matched history; {len(appended)} unique docs appended to index")
-
-from ndap_data_validator_spark.operators.repeated import line_dedup
-
-# line-level dedup: every doc gets the same appended banner line — it is
-# boilerplate by construction and must vanish from every cleaned doc
-ld_in = docs.dropDuplicates(["doc_id"]).limit(120).select(
-    "doc_id",
-    F.concat(F.col("text"), F.lit("\nStandard Cookie Banner Accept")).alias(
-        "text"
-    ),
-)
-ld_clean, ld_rep = line_dedup(ld_in, min_docs=2)
-assert ld_rep.count() == 120
-assert ld_rep.where(F.col("n_repeated") < 1).count() == 0
-assert ld_clean.where(F.col("text").contains("Cookie Banner")).count() == 0
-n_removed = ld_rep.agg(F.sum("n_repeated")).first()[0]
-print(f"line dedup: banner removed from all 120 docs; "
-      f"{n_removed} repeated lines total")
-
-from ndap_data_validator_spark.operators.repeated import substring_dedup
-
-# substring-level CUT (Lee et al.): the same appended slogan must survive
-# in EXACTLY ONE doc (the min-id canonical owner) and be cut everywhere
-# else, with every cleaned doc reassembling losslessly around the cut
-# deterministic doc set (limit() picks different rows per ACTION, and the
-# canonical-owner assertion below compares across actions)
-sd_in = docs.dropDuplicates(["doc_id"]).where(
-    F.col("doc_id") < "conv-000120"
-).select(
-    "doc_id",
-    F.concat(
-        F.col("text"),
-        F.lit(" all rights reserved standard footer boilerplate text"),
-    ).alias("text"),
-)
-sd_n = sd_in.count()
-sd_clean, sd_rep = substring_dedup(sd_in, n=5, min_docs=2)
-assert sd_rep.count() == sd_n > 1
-n_keep = sd_clean.where(F.col("text").contains("rights reserved")).count()
-assert n_keep == 1, n_keep
-canon = sd_in.agg(F.min("doc_id")).first()[0]
-keeper = sd_clean.where(F.col("text").contains("rights reserved")).first()
-assert keeper["doc_id"] == canon, (keeper["doc_id"], canon)
-assert sd_rep.where(
-    (F.col("doc_id") != canon) & (F.col("n_removed") < 1)
-).count() == 0
-print(f"substring dedup: slogan kept only in canonical {canon}; "
-      f"{sd_rep.agg(F.sum('n_removed')).first()[0]} tokens cut corpus-wide")
 
 from ndap_data_validator_spark.operators.convchecks import (
     sequence_checks,
