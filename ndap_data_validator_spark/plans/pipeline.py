@@ -2,9 +2,11 @@
 
 The reference's EP2 lifecycle (``/root/reference/main.py:835-1130``) loops
 files sequentially, validating each and logging per-file results. Here the
-"files" are table partitions and the whole remaining set is validated in ONE
-Spark job (partition parallelism replaces the loop); completion is recorded
-per partition so a killed run resumes by skipping 'done' partitions —
+"files" are table partitions and the whole remaining set is validated by one
+shared per-partition aggregate (partition parallelism replaces the loop).
+The run's report, publish and quarantine sinks are then written
+concurrently, and completion is recorded per partition only after they all
+landed, so a killed run resumes by skipping 'done' partitions —
 SURVEY.md §7.7.
 
 Resume filter: ``partition_key NOT IN (done)`` — expressed with
@@ -16,8 +18,10 @@ partition pruning, so skipped partitions are never even read.
 from __future__ import annotations
 
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,6 +96,13 @@ def run_validation(
     preflight: bool = False,
 ) -> RunOutcome:
     """Checkpointed validation run.
+
+    Every sink is a lazy frame until the end of the call. Then every sink
+    path's partition layout is checked, the one verdict collect
+    materializes the shared aggregate, the sinks are written concurrently
+    (one thread each, under the caller's job group), and only after the
+    last write the checkpoint records are committed. A failed or killed
+    call therefore leaves every partition it processed re-runnable.
 
     ``load_mode`` re-expresses the reference's four load modes
     (main.py:180-187, 539-549):
@@ -449,13 +460,17 @@ def run_validation(
                 )
             return  # one partition dir is representative; all share a depth
 
-    def _write_partitioned(frame: DataFrame, path: str) -> None:
+    def _write_partitioned(sink: str, frame: DataFrame, path: str) -> None:
+        # Runs on a sink-writer thread (see below); the label names this
+        # sink's jobs in the status store and leaves the job group alone.
+        spark.sparkContext.setLocalProperty(
+            "spark.job.description", f"run_validation {run_id}: {sink}"
+        )
         # Dynamic partition overwrite → re-validating a partition replaces
         # its rows; a re-run after crash is idempotent. The mode is pinned on
         # the WRITER (not session config) so the contract holds even with a
         # caller-supplied vanilla SparkSession — static overwrite would wipe
         # already-done partitions' reports on resume.
-        _assert_layout_depth(path)
         if delta_batch is not None:
             frame = frame.withColumn("delta_batch", F.lit(delta_batch))
         (
@@ -465,9 +480,16 @@ def run_validation(
             .parquet(path)
         )
 
+    # Every sink is built here as a lazy frame, (name, frame, path), and
+    # written below, after the verdict collect. Report sinks are written
+    # whether or not any partition was processed; publish (and quarantine)
+    # only when one was.
+    reports: list[tuple[str, DataFrame | None]] = []
     if report_path is not None:
-        _write_partitioned(result.per_column_report, f"{report_path}/per_column")
-        _write_partitioned(result.violations, f"{report_path}/violations")
+        reports += [
+            ("per_column", result.per_column_report),
+            ("violations", result.violations),
+        ]
         if sequence_rule is not None:
             # conversation-order rules (rules.model.SequenceRule): one
             # window shuffle on the conversation key over the SAME resume
@@ -483,7 +505,7 @@ def run_validation(
                 sequence_rule,
                 carry_cols=("__part_id",),
             ).withColumnRenamed("__part_id", "partition_id")
-            _write_partitioned(seq_v, f"{report_path}/sequence_violations")
+            reports.append(("sequence_violations", seq_v))
         if check_rules:
             # row-level CHECK constraints (rules.model.CheckRule): pure
             # scan-level projection over the SAME resume slice — no
@@ -500,19 +522,21 @@ def run_validation(
                 key_cols=key_cols,
                 carry_cols=("__part_id",),
             ).withColumnRenamed("__part_id", "partition_id")
-            _write_partitioned(chk_v, f"{report_path}/check_violations")
-        if exp_report is not None:
-            # dataset-level expectation verdicts: one row per (partition,
-            # rule) with value/bounds/passed, same overwrite contract
-            _write_partitioned(exp_report, f"{report_path}/metric_expectations")
-        if comp_report is not None:
-            # expected-partition census: one row per expected-or-observed
-            # key, same idempotent per-partition overwrite contract
-            _write_partitioned(comp_report, f"{report_path}/completeness")
-        if drift_rep is not None:
-            # per-(partition, column) KS/PSI/JS/W1 vs the baseline grid,
-            # same overwrite contract
-            _write_partitioned(drift_rep, f"{report_path}/drift_report")
+            reports.append(("check_violations", chk_v))
+        # dataset-level expectation verdicts (one row per (partition, rule)
+        # with value/bounds/passed), the expected-partition census (one row
+        # per expected-or-observed key) and the per-(partition, column)
+        # KS/PSI/JS/W1 drift rows — same overwrite contract
+        reports += [
+            ("metric_expectations", exp_report),
+            ("completeness", comp_report),
+            ("drift_report", drift_rep),
+        ]
+    sinks = [
+        (name, frame, f"{report_path}/{name}")
+        for name, frame in reports
+        if frame is not None
+    ]
 
     # Partitions failing an AGGREGATE-granular column verdict — today only
     # the time-format-consistency rule, whose minority-format rows no
@@ -528,57 +552,8 @@ def run_validation(
             f"array_contains(c.reasons, {sql_str(REASON_INCONSISTENT_TIME)}))"
         )
 
-    # The only collect of the run's results: the partition ids (one short
-    # string per partition), each partition's recorded verdict for the
-    # passed_all fold, and whether its DATA failed, which the delta
-    # watermark fold below needs. The gate is failed_count (per-column data
-    # failures), NOT summary.passed: a missing mandatory ROLE is a
-    # catalog-configuration condition identical on every retry — freezing
-    # the watermark on it would wedge delta mode forever while the publish
-    # gate already withholds those rows. Under the quarantine policy,
-    # row-attributable failures were ROUTED (published clean +
-    # dead-lettered bad) — freezing on them would re-pick rows already
-    # safely landed, growing the batch slice forever on one persistently
-    # bad row — so only the non-routable aggregate-granular failures
-    # (withheld wholesale, genuinely re-pickable) freeze it.
-    data_failed = agg_only_fail if routed else "failed_count > 0"
-    passed = f"passed AND ({exp_ok}) AND ({drift_ok})"
-    verdicts = shared.selectExpr(
-        "partition_id",
-        f"{passed} AS passed",
-        f"({data_failed}) OR NOT ({exp_ok}) OR NOT ({drift_ok}) AS frozen",
-    ).collect()
-    processed = sorted(r["partition_id"] for r in verdicts)
-
-    # Checkpoint metrics are assembled DISTRIBUTED from the cached row:
-    # per-column stats fold to a map, and to_json builds the record — no
-    # per-column collect() in the run path. A partition's recorded verdict
-    # folds in its error-severity expectation and drift failures.
-    if processed:
-        columns = (
-            "map_from_entries(transform(__cols, c -> named_struct("
-            "'column', c.column, 'stats', named_struct('nulls', c.nulls, "
-            "'conversion_errors', c.conversion_errors, 'passed', c.passed))))"
-        )
-        json_fields = [
-            ("rows", "rows"),
-            ("failed_count", "failed_count"),
-            ("failed_columns", "failed_columns"),
-            ("passed", passed),
-            *extra_fields,
-            ("columns", columns),
-        ]
-        record = ", ".join(f"{sql_str(k)}, {e}" for k, e in json_fields)
-        metrics_frame = shared.selectExpr(
-            f"{sql_str(run_id)} AS run_id",
-            "partition_id",
-            f"{sql_str(digest)} AS rule_digest",
-            "'done' AS status",
-            f"to_json(named_struct({record})) AS metrics_json",
-        )
-        store.mark_done_frame(metrics_frame)
-
-    if publish_path is not None and processed:
+    publish: list[tuple[str, DataFrame, str]] = []
+    if publish_path is not None:
         # "validation gates publishing; the published object is the ORIGINAL
         # bytes, not the coerced frame" (main.py:1206-1249, 1396, 1414-1415):
         # passed partitions' source rows are appended unmodified, keyed by
@@ -603,22 +578,107 @@ def run_validation(
                 remaining, assignments, check_rules=check_rules
             ).withColumn("partition_id", key)
             gated = flagged.join(passed_parts, "partition_id", "left_semi")
-            _write_partitioned(
-                gated.where("row_passed").drop("row_reasons", "row_passed"),
-                publish_path,
-            )
-            _write_partitioned(
-                gated.where("NOT row_passed").drop("row_passed"),
-                quarantine_path
-                or (publish_path.rstrip("/") + "_quarantine"),
-            )
-        elif row_policy == "partition":
-            _write_partitioned(
-                remaining.withColumn("partition_id", key).join(
-                    passed_parts, "partition_id", "left_semi"
+            publish = [
+                (
+                    "publish",
+                    gated.where("row_passed").drop("row_reasons", "row_passed"),
+                    publish_path,
                 ),
-                publish_path,
-            )
+                (
+                    "quarantine",
+                    gated.where("NOT row_passed").drop("row_passed"),
+                    quarantine_path
+                    or (publish_path.rstrip("/") + "_quarantine"),
+                ),
+            ]
+        elif row_policy == "partition":
+            publish = [
+                (
+                    "publish",
+                    remaining.withColumn("partition_id", key).join(
+                        passed_parts, "partition_id", "left_semi"
+                    ),
+                    publish_path,
+                )
+            ]
+
+    # Every sink's layout is checked before the first job of the run's
+    # outputs, so a mismatched path (publish included) leaves no report
+    # rows and no checkpoint records behind.
+    for _, _, path in sinks + publish:
+        _assert_layout_depth(path)
+
+    # The only collect of the run's results: the partition ids (one short
+    # string per partition), each partition's recorded verdict for the
+    # passed_all fold, and whether its DATA failed, which the delta
+    # watermark fold below needs. The gate is failed_count (per-column data
+    # failures), NOT summary.passed: a missing mandatory ROLE is a
+    # catalog-configuration condition identical on every retry — freezing
+    # the watermark on it would wedge delta mode forever while the publish
+    # gate already withholds those rows. Under the quarantine policy,
+    # row-attributable failures were ROUTED (published clean +
+    # dead-lettered bad) — freezing on them would re-pick rows already
+    # safely landed, growing the batch slice forever on one persistently
+    # bad row — so only the non-routable aggregate-granular failures
+    # (withheld wholesale, genuinely re-pickable) freeze it. It runs
+    # before any sink write, so it alone materializes the persisted
+    # aggregate: concurrent first reads of a persisted frame each compute
+    # it.
+    data_failed = agg_only_fail if routed else "failed_count > 0"
+    passed = f"passed AND ({exp_ok}) AND ({drift_ok})"
+    verdicts = shared.selectExpr(
+        "partition_id",
+        f"{passed} AS passed",
+        f"({data_failed}) OR NOT ({exp_ok}) OR NOT ({drift_ok}) AS frozen",
+    ).collect()
+    processed = sorted(r["partition_id"] for r in verdicts)
+    if processed:
+        sinks += publish
+
+    # The sinks are independent, so they are written concurrently: one
+    # thread per write, each carrying the caller's local properties (job
+    # group, scheduler pool) and tags. The driver time each write spends
+    # planning and committing its jobs overlaps with the other writes
+    # instead of adding up. Every write finishes before the first failure,
+    # in sink order, is re-raised.
+    with ThreadPoolExecutor(max_workers=max(len(sinks), 1)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(_write_partitioned), *s)
+            for s in sinks
+        ]
+    for fut in futures:
+        fut.result()
+
+    # Checkpoint metrics are assembled DISTRIBUTED from the cached row:
+    # per-column stats fold to a map, and to_json builds the record — no
+    # per-column collect() in the run path. A partition's recorded verdict
+    # folds in its error-severity expectation and drift failures. The
+    # records are committed only after every sink landed: a failed or
+    # killed call leaves each of its partitions re-runnable, never 'done'
+    # with a missing publish.
+    if processed:
+        columns = (
+            "map_from_entries(transform(__cols, c -> named_struct("
+            "'column', c.column, 'stats', named_struct('nulls', c.nulls, "
+            "'conversion_errors', c.conversion_errors, 'passed', c.passed))))"
+        )
+        json_fields = [
+            ("rows", "rows"),
+            ("failed_count", "failed_count"),
+            ("failed_columns", "failed_columns"),
+            ("passed", passed),
+            *extra_fields,
+            ("columns", columns),
+        ]
+        record = ", ".join(f"{sql_str(k)}, {e}" for k, e in json_fields)
+        metrics_frame = shared.selectExpr(
+            f"{sql_str(run_id)} AS run_id",
+            "partition_id",
+            f"{sql_str(digest)} AS rule_digest",
+            "'done' AS status",
+            f"to_json(named_struct({record})) AS metrics_json",
+        )
+        store.mark_done_frame(metrics_frame)
 
     if load_mode == "delta" and watermark_col is not None:
         # Advance the watermark ONLY when no partition of this batch had

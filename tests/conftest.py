@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import tempfile
+import threading
 
 import pytest
 
@@ -27,6 +28,9 @@ class Py4JCommandCounter:
 
     def __init__(self) -> None:
         self.commands = 0
+        # commands come from every thread that talks to the JVM, including
+        # run_validation's sink writers
+        self._lock = threading.Lock()
 
     def __enter__(self) -> "Py4JCommandCounter":
         from py4j.clientserver import ClientServerConnection
@@ -36,7 +40,8 @@ class Py4JCommandCounter:
 
         def counting_send(conn, command, *args, **kwargs):
             if not command.startswith(MEMORY_COMMAND_NAME):
-                self.commands += 1
+                with self._lock:
+                    self.commands += 1
             return send(conn, command, *args, **kwargs)
 
         self._restore = lambda: setattr(ClientServerConnection, "send_command", send)

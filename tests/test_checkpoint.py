@@ -474,6 +474,64 @@ def test_mixed_mode_partition_depth_fails_fast(spark, tmp_path):
             spark, df, assigns, "part",
             checkpoint_path=str(tmp_path / "c4"), report_path=report2,
         )
+    # …and a publish path as the only mismatch: every sink's layout is
+    # checked before the first write, so no report row and no checkpoint
+    # record lands before the refusal
+    timed = df.withColumn("t", F.lit("2021"))
+    timed_assigns = assigns + [ColumnAssignment("t", "Time")]
+    pub = str(tmp_path / "pub")
+    run_validation(
+        spark, timed, timed_assigns, "part",
+        checkpoint_path=str(tmp_path / "c5"), publish_path=pub,
+    )
+    report3 = tmp_path / "report3"
+    with pytest.raises(ValueError, match="partition layout mismatch"):
+        run_validation(
+            spark, timed, timed_assigns, "part",
+            checkpoint_path=str(tmp_path / "c6"), report_path=str(report3),
+            publish_path=pub, load_mode="delta", watermark_col="seq",
+        )
+    assert not report3.exists()
+    assert CheckpointStore(spark, str(tmp_path / "c6")).run_log_all().count() == 0
+
+
+def test_failed_publish_leaves_partitions_resumable(spark, tmp_path):
+    """The checkpoint is committed after every sink: a call whose publish
+    write fails records no partition as 'done', so a resume under the same
+    run_id validates and publishes every partition instead of skipping
+    them with passed_all=True and no published rows."""
+    df = spark.createDataFrame(
+        [(p, f"x{i}", "2021", str(i)) for p in ("p0", "p1") for i in range(5)],
+        "part string, loc string, t string, m string",
+    )
+    assigns = [
+        ColumnAssignment("part", "Others"),
+        ColumnAssignment("loc", "Location"),
+        ColumnAssignment("t", "Time"),
+        ColumnAssignment("m", "Measures", "integer"),
+    ]
+    ckpt = str(tmp_path / "ckpt")
+    run_id = new_run_id()
+    not_a_dir = tmp_path / "pub_file"
+    not_a_dir.write_text("a regular file where the publish directory goes")
+    with pytest.raises(Exception, match="ParentNotDirectory|[Nn]ot a directory"):
+        run_validation(
+            spark, df, assigns, "part", checkpoint_path=ckpt, run_id=run_id,
+            publish_path=str(not_a_dir),
+        )
+    assert CheckpointStore(spark, ckpt).run_log(run_id).count() == 0
+
+    pub = tmp_path / "pub"
+    out = run_validation(
+        spark, df, assigns, "part", checkpoint_path=ckpt, run_id=run_id,
+        publish_path=str(pub),
+    )
+    assert out.skipped_partitions == []
+    assert out.processed_partitions == ["p0", "p1"]
+    assert out.passed_all
+    assert sorted(
+        d.name for d in pub.iterdir() if d.name.startswith("partition_id=")
+    ) == ["partition_id=p0", "partition_id=p1"]
 
 
 def test_sequence_rule_violations_written_and_resume_safe(spark, tdf, tmp_path):

@@ -53,6 +53,8 @@ def test_no_cartesian_over_rdd_in_entry_plans(spark):
     BroadcastNestedLoopJoin over broadcast(1-row) frames is fine and is
     not flagged."""
     sf_dir = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"entry test data directory {sf_dir} is missing")
     offenders = {}
     for name, fn in entry.queries().items():
         df = fn(spark, sf_dir)
