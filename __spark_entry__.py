@@ -4,8 +4,8 @@
 (null census, coercion, time formats, column rules, partition summary,
 uniqueness, referential integrity, sequence and CHECK rules, statistics
 and metric expectations, drift, reconciliation, key skew, percentiles)
-plus the text-corpus ops that remain in the package (dedup, text
-analysis, decontamination and sampling); ``oracle_sql()`` gives the
+plus the text-corpus ops that remain in the package (exact dedup by
+fingerprint, text quality, PII and URL gates); ``oracle_sql()`` gives the
 DuckDB-equivalent SQL for every one of them.
 
 Parity notes baked into every query pair:
@@ -26,13 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ndap_data_validator_spark.operators import drift as drift_mod
-from ndap_data_validator_spark.operators.dedup import (
-    dedup_incremental_batch,
-    minhash_index,
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash,
-)
 from ndap_data_validator_spark.operators.referential import ri_violation_counts
 from ndap_data_validator_spark.operators.stats import column_stats, merge_hll_to_global
 from ndap_data_validator_spark.operators.uniqueness import duplicate_keys
@@ -730,17 +723,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-set Jaccard near-dup pairs on a bounded slice (the VERIFY
-    stage of the dedup pipeline). broadcast_tokens=True is the verified-small
-    opt-in: the 120-doc token side broadcasts instead of shuffle-joining on
-    the (hot) token key."""
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 120)
-    return ngram_jaccard_pairs(
-        d, n=1, threshold=0.9, broadcast_tokens=True
-    ).select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-quality signal block — one codegen'd projection; carries the
     regex-pretokenizer token count and the n-gram language guess (same
@@ -1051,29 +1033,6 @@ def q_scalar_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(F.explode(rows).alias("r")).select("r.*")
 
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS + KEEPERS in one entry (consolidated r04, cap):
-    exact-jaccard pairs → iterative min-label connected components, joined
-    back to every doc — (doc_id, comp, is_keeper) where comp is NULL for
-    unpaired docs and the keeper is the min-id member of each cluster (the
-    dedup pipeline's final select, dedup.py dedup_keepers semantics).
-    Oracle = recursive-CTE transitive closure + the same keeper rule."""
-    from ndap_data_validator_spark.operators.dedup import connected_components
-
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 120)
-    pairs = ngram_jaccard_pairs(d, n=1, threshold=0.9, broadcast_tokens=True)
-    comp = connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "comp"
-    )
-    return d.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id",
-        "comp",
-        (F.col("comp").isNull() | (F.col("doc_id") == F.col("comp"))).alias(
-            "is_keeper"
-        ),
-    )
-
-
 def q_text_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH scan-level text gates, long form (consolidated r05 #2 to fund
     the key_skew slot, cap; was ``pii_scrub`` + ``url_domain_filter``),
@@ -1183,111 +1142,6 @@ def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ndap_data_validator_spark.operators.skew import key_skew_report
 
     return key_skew_report(_derived(spark, sf_dir), "conv_id", top_n=10)
-
-
-def q_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both deterministic sampling shapes in one method-tagged entry,
-    columns aligned as (method, row_key, value, keep):
-
-    * 'uniform' — hash-gate sample (pure function of the key — stable
-      under any partitioning/engine, predicate pushdown applies, no
-      shuffle); value = o_totalprice, rows are the kept sample;
-    * 'stratified' — the training-mix variant (per-stratum
-      integer-threshold keep-rates: 10% F / 2% O / all P orders)."""
-    from ndap_data_validator_spark.operators.sample import (
-        deterministic_sample,
-        stratified_sample,
-    )
-
-    o = _t(spark, sf_dir, "orders")
-    uni = deterministic_sample(o, "o_orderkey", 0.1, seed=7).select(
-        F.lit("uniform").alias("method"),
-        F.col("o_orderkey").alias("row_key"),
-        F.col("o_totalprice").alias("value"),
-        F.lit(True).alias("keep"),
-    )
-    strat = stratified_sample(
-        o, "o_orderstatus", _STRATA_RATES, "o_orderkey", seed=11
-    ).select(
-        F.lit("stratified").alias("method"),
-        F.col("o_orderkey").alias("row_key"),
-        F.col("o_totalprice").alias("value"),
-        F.lit(True).alias("keep"),
-    )
-    return uni.unionByName(strat)
-
-
-_STRATA_RATES = {"F": 0.1, "O": 0.02, "P": 1.0}
-
-
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOTH benchmark-decontamination flavors, method-tagged (consolidated
-    r05; columns aligned as (method, doc_id, n_matches, score,
-    contaminated)):
-
-    * 'exact' — GPT-3/Dolma-style n-gram collision: every 7th document
-      plays the 'evaluation suite'; its distinct 8-gram hash set is
-      broadcast and each document reports its overlap (score =
-      hit_ratio; benchmark members flag themselves at 1.0);
-    * 'fuzzy' — benchmark items are corpus docs with an appended suffix
-      (the exact check's worst case, an easy fuzzy catch): cross-corpus
-      MinHash-LSH band join against the broadcast benchmark index, exact
-      Jaccard verify, per-doc rollup (score = max_jaccard, NULL when no
-      candidate survives). md5-portable end to end;
-    * 'bloom' (NEW r05) — the MEMORY-BOUNDED variant: the same benchmark
-      n-gram set packed into a fixed 2^20-bit Bloom bitset (32-bit words,
-      k=3 re-hashes), probed with 3 broadcast joins — the Dolma-scale
-      index whose size is constant in the benchmark suite. A 'hit' is
-      maybe-in (over-flag only, never miss); DuckDB replays the exact
-      bit arithmetic."""
-    from ndap_data_validator_spark.operators.decontaminate import (
-        benchmark_ngram_hashes,
-        bloom_bitset,
-        decontaminate,
-        decontaminate_bloom,
-        decontaminate_fuzzy,
-    )
-
-    docs = _spread(_t(spark, sf_dir, "documents").where(F.col("doc_id") < 400))
-    bench = docs.where(F.pmod(F.col("doc_id"), F.lit(7)) == 0)
-    bh = benchmark_ngram_hashes(bench, n=8, seed=42, hash_fn="md5")
-    exact = decontaminate(docs, bh, n=8, seed=42, hash_fn="md5").select(
-        F.lit("exact").alias("method"),
-        "doc_id",
-        F.col("n_hits").alias("n_matches"),
-        F.col("hit_ratio").alias("score"),
-        "contaminated",
-    )
-    bs = bloom_bitset(bh, m_bits=1 << 20, k=3, seed=101, hash_fn="md5")
-    bloom = decontaminate_bloom(
-        docs, bs, n=8, m_bits=1 << 20, k=3, seed=42, bloom_seed=101,
-        hash_fn="md5",
-    ).select(
-        F.lit("bloom").alias("method"),
-        "doc_id",
-        F.col("n_hits").alias("n_matches"),
-        F.col("hit_ratio").alias("score"),
-        "contaminated",
-    )
-
-    fdocs = _spread(
-        _t(spark, sf_dir, "documents").where(F.col("doc_id") < 250)
-    )
-    fbench = fdocs.where(F.pmod(F.col("doc_id"), F.lit(11)) == 0).select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(" eval suite suffix")).alias("text"),
-    )
-    fuzzy = decontaminate_fuzzy(
-        fdocs, fbench, threshold=0.5, num_hashes=16, bands=8, shingle_n=3,
-        seed=42, hash_fn="md5",
-    ).select(
-        F.lit("fuzzy").alias("method"),
-        "doc_id",
-        F.col("n_bench_matches").alias("n_matches"),
-        F.round("max_jaccard", 4).alias("score"),
-        "contaminated",
-    )
-    return exact.unionByName(fuzzy).unionByName(bloom)
 
 
 def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1462,63 +1316,6 @@ def q_except_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only category is empty as of r04 — even hll_distinct is bound-checked)
 
 
-def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup, both deployment shapes in one method-tagged
-    union (both oracle-checked end to end via the md5 portable hash):
-
-    * ``self``  — one-shot self-join mining over documents + a planted
-      clone: shingling → 16 minhashes → 8-band bucket join →
-      exact-Jaccard verify (score = true Jaccard, is_unique NULL);
-    * ``incremental`` — the delta-crawl shape: docs <200 become the
-      persisted :func:`minhash_index` (signatures only — no text), the
-      200+ batch plus the clone joins it and reports every new doc with
-      its lowest matching historical id and the signature-agreement
-      estimate (score = matching-minhash fraction, is_unique flag)."""
-    # r06: spread — shingling + 16 minhashes per shingle otherwise run in
-    # the single-row-group scan's ONE task at bench SFs
-    d = _spread(
-        _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    )
-    clone = d.where(F.col("doc_id") == 0).withColumn(
-        "doc_id", F.lit(1_000_000).cast("long")
-    )
-    out = minhash_near_duplicates(
-        d.unionByName(clone), num_hashes=16, bands=8, threshold=0.8,
-        hash_fn="md5",
-    )
-    self_part = out.select(
-        F.lit("self").alias("method"),
-        "id_a",
-        "id_b",
-        F.round("jaccard", 4).alias("score"),
-        F.lit(None).cast("boolean").alias("is_unique"),
-    )
-    hist = d.where(F.col("doc_id") < 200)
-    new_batch = d.where(F.col("doc_id") >= 200).unionByName(clone)
-    idx = minhash_index(hist, num_hashes=16, bands=8, hash_fn="md5")
-    report, _ = dedup_incremental_batch(
-        new_batch, idx, num_hashes=16, bands=8, threshold=0.5,
-        hash_fn="md5",
-    )
-    inc_part = report.select(
-        F.lit("incremental").alias("method"),
-        F.col("doc_id").alias("id_a"),
-        F.col("matched_hist_id").alias("id_b"),
-        F.col("est_jaccard").alias("score"),
-        "is_unique",
-    )
-    return self_part.unionByName(inc_part)
-
-
-def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash signatures, oracle-checked bit-for-bit via the md5
-    portable token hash (xxhash64 stays the production default)."""
-    d = _spread(_t(spark, sf_dir, "documents").where(F.col("doc_id") < 200))
-    return d.select(
-        "doc_id", simhash(F.col("text"), hash_fn="md5").alias("simhash64")
-    )
-
-
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch path: per-partition HLL sketches unioned to global
     distinct estimates without rescanning — made ORACLE-CHECKABLE (VERDICT
@@ -1567,8 +1364,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entry carries a DuckDB oracle in oracle_sql(). Near-duplicates ride
     # one method-tagged entry: bool+datetime → scalar_coercion,
     # duplicate_rows and duplicate_keys_hashed → uniqueness_violations,
-    # the two sampling shapes → sampling, the regex token count and the
-    # language guess → text_quality.
+    # the regex token count and the language guess → text_quality.
     return {
         "null_census": q_null_census,
         "coercion_report": q_coercion_report,
@@ -1585,7 +1381,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "column_stats": q_column_stats,
         "drift_report": q_drift_report,
         "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
         "text_quality": q_text_quality,
         "hll_distinct": q_hll_distinct,
         "topk_orders": q_topk_orders,
@@ -1593,192 +1388,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "three_way_join": q_three_way_join,
         "except_diff": q_except_diff,
         "csv_events_rollup": q_csv_events_rollup,
-        "dedup_clusters": q_dedup_clusters,
         "text_gates": q_text_gates,
         "key_skew": q_key_skew,
-        "sampling": q_sampling,
-        "decontamination": q_decontamination,
         "exact_percentiles": q_exact_percentiles,
-        "minhash_candidates": q_minhash_candidates,
-        "simhash_fingerprints": q_simhash_fingerprints,
     }
 
 
 # --------------------------------------------------------------- oracle SQL
-
-def _minhash_oracle_sql(num_hashes: int = 16, bands: int = 8, seed: int = 42,
-                        threshold: float = 0.8, shingle_n: int = 3,
-                        inc_threshold: float = 0.5,
-                        hist_below: int = 200) -> str:
-    """DuckDB replay of the full md5-portable MinHash+LSH pipeline, BOTH
-    deployment shapes (operators/dedup.py with hash_fn='md5'):
-    ``self`` = minhash_near_duplicates (band join → exact-Jaccard verify);
-    ``incremental`` = dedup_incremental_batch (docs < hist_below are the
-    persisted index, the rest + the clone match against it; score is the
-    matching-minhash fraction over the num_hashes signature positions)."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    mins = ", ".join(
-        f"MIN({P('sh', seed + i)}) AS h{i}" for i in range(num_hashes)
-    )
-    r = num_hashes // bands
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_idx, {h} AS band_hash FROM sig".format(
-            b=b,
-            h=P(
-                " || ',' || ".join(
-                    f"CAST(h{b * r + j} AS VARCHAR)" for j in range(r)
-                )
-            ),
-        )
-        for b in range(bands)
-    )
-    k = shingle_n - 1
-    jac = (
-        "len(list_intersect(x.shingles, y.shingles))::DOUBLE"
-        " / (len(x.shingles) + len(y.shingles)"
-        " - len(list_intersect(x.shingles, y.shingles)))"
-    )
-    est = "(" + " + ".join(
-        f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
-    ) + f")::DOUBLE / {num_hashes}"
-    return rf"""
-      WITH docs AS (
-        SELECT doc_id, text FROM documents WHERE doc_id < 300
-        UNION ALL
-        SELECT CAST(1000000 AS BIGINT), text FROM documents WHERE doc_id = 0),
-      w AS (SELECT doc_id,
-              regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-            FROM docs),
-      s AS (SELECT doc_id,
-              CASE WHEN len(w) - {k} <= 0 THEN [array_to_string(w, ' ')]
-                   ELSE list_distinct(list_transform(
-                          generate_series(1, len(w) - {k}),
-                          i -> array_to_string(w[i:i+{k}], ' ')))
-              END AS shingles
-            FROM w),
-      ex AS (SELECT doc_id, unnest(shingles) AS sh FROM s),
-      sig AS (SELECT doc_id, {mins} FROM ex GROUP BY doc_id),
-      banded AS ({band_selects}),
-      pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                FROM banded a JOIN banded b USING (band_idx, band_hash)
-                WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-      icand AS (SELECT DISTINCT n.doc_id AS new_id, h.doc_id AS hist_id
-                FROM banded n JOIN banded h USING (band_idx, band_hash)
-                WHERE n.doc_id >= {hist_below} AND h.doc_id < {hist_below}),
-      ihits AS (SELECT new_id, hist_id, ROUND({est}, 4) AS est
-                FROM icand
-                JOIN sig x ON icand.new_id = x.doc_id
-                JOIN sig y ON icand.hist_id = y.doc_id
-                WHERE ROUND({est}, 4) >= {inc_threshold}),
-      ibest AS (SELECT new_id, MIN(hist_id) AS matched_hist_id,
-                       MAX(est) AS est
-                FROM ihits GROUP BY new_id)
-      SELECT 'self' AS method, p.id_a, p.id_b, ROUND({jac}, 4) AS score,
-             CAST(NULL AS BOOLEAN) AS is_unique
-      FROM pairs p
-      JOIN s x ON p.id_a = x.doc_id
-      JOIN s y ON p.id_b = y.doc_id
-      WHERE {jac} >= {threshold}
-      UNION ALL
-      SELECT 'incremental' AS method, d.doc_id AS id_a,
-             b.matched_hist_id AS id_b, b.est AS score,
-             b.matched_hist_id IS NULL AS is_unique
-      FROM (SELECT doc_id FROM docs WHERE doc_id >= {hist_below}) d
-      LEFT JOIN ibest b ON d.doc_id = b.new_id
-    """
-
-
-def _simhash_oracle_sql(seed: int = 42) -> str:
-    """DuckDB replay of the md5-portable 64-bit SimHash: the portable hash
-    is 60-bit, so bits 60-63 vote −len(toks) (never set) on both engines."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    vote_terms = " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(h, v -> (v >> {bit}) & 1 = 1)) - len(h) > 0 "
-        f"THEN CAST({1 << bit} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for bit in range(60)
-    )
-    return rf"""
-      WITH t AS (SELECT doc_id,
-              regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-            FROM documents WHERE doc_id < 200),
-      hh AS (SELECT doc_id, list_transform(toks, x -> {P('x', seed)}) AS h FROM t)
-      SELECT doc_id, {vote_terms} AS simhash64 FROM hh
-    """
-
-
-def _decontamination_fuzzy_oracle_sql(
-    num_hashes: int = 16, bands: int = 8, seed: int = 42,
-    threshold: float = 0.5, shingle_n: int = 3,
-) -> str:
-    """DuckDB replay of decontaminate_fuzzy in its md5 verification
-    configuration: signatures and banding for BOTH corpora, cross-side
-    band join, exact shingle-Jaccard verify, per-doc rollup."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    mins = ", ".join(
-        f"MIN({P('sh', seed + i)}) AS h{i}" for i in range(num_hashes)
-    )
-    r = num_hashes // bands
-
-    def band_selects(sig: str, idc: str) -> str:
-        return " UNION ALL ".join(
-            "SELECT {idc}, {b} AS band_idx, {h} AS band_hash FROM {sig}".format(
-                idc=idc, sig=sig, b=b,
-                h=P(
-                    " || ',' || ".join(
-                        f"CAST(h{b * r + j} AS VARCHAR)" for j in range(r)
-                    )
-                ),
-            )
-            for b in range(bands)
-        )
-
-    k = shingle_n - 1
-    sh_cte = (
-        "SELECT {idc}, CASE WHEN len(w) - {k} <= 0 "
-        "THEN [array_to_string(w, ' ')] "
-        "ELSE list_distinct(list_transform(generate_series(1, len(w) - {k}), "
-        "i -> array_to_string(w[i:i+{k}], ' '))) END AS shingles "
-        "FROM (SELECT {idc}, regexp_split_to_array(regexp_replace("
-        r"lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w FROM {src})"
-    )
-    jac = (
-        "len(list_intersect(x.shingles, y.shingles))::DOUBLE"
-        " / (len(x.shingles) + len(y.shingles)"
-        " - len(list_intersect(x.shingles, y.shingles)))"
-    )
-    return f"""
-      WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-      bench AS (SELECT doc_id AS bench_id, text || ' eval suite suffix' AS text
-                FROM documents WHERE doc_id < 250 AND doc_id % 11 = 0),
-      cs AS ({sh_cte.format(idc='doc_id', k=k, src='corpus')}),
-      bs AS ({sh_cte.format(idc='bench_id', k=k, src='bench')}),
-      cex AS (SELECT doc_id, unnest(shingles) AS sh FROM cs),
-      bex AS (SELECT bench_id, unnest(shingles) AS sh FROM bs),
-      csig AS (SELECT doc_id, {mins} FROM cex GROUP BY doc_id),
-      bsig AS (SELECT bench_id, {mins} FROM bex GROUP BY bench_id),
-      cb AS ({band_selects('csig', 'doc_id')}),
-      bb AS ({band_selects('bsig', 'bench_id')}),
-      cands AS (SELECT DISTINCT cb.doc_id, bb.bench_id
-                FROM cb JOIN bb USING (band_idx, band_hash)),
-      ver AS (SELECT cands.doc_id, {jac} AS j
-              FROM cands JOIN cs x ON cands.doc_id = x.doc_id
-                         JOIN bs y ON cands.bench_id = y.bench_id
-              WHERE {jac} >= {threshold}),
-      per AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bench_matches,
-                     MAX(j) AS mj
-              FROM ver GROUP BY doc_id)
-      SELECT c.doc_id,
-             CAST(COALESCE(per.n_bench_matches, 0) AS BIGINT)
-               AS n_bench_matches,
-             ROUND(per.mj, 4) AS max_jaccard,
-             per.doc_id IS NOT NULL AS contaminated
-      FROM (SELECT doc_id FROM corpus) c LEFT JOIN per USING (doc_id)
-    """
-
 
 def _text_gates_oracle_sql() -> str:
     """DuckDB replay of q_text_gates: the pii leg unpivoted to one row per
@@ -1863,113 +1479,6 @@ def _url_gate_oracle_sql() -> str:
                AS detail  -- DuckDB: array_to_string([]) is NULL
       FROM x
       WHERE len(list_filter(domains, h -> {hit})) = 0
-    """
-
-
-def _decontamination_oracle_sql() -> str:
-    """Method-tagged union of both decontamination flavors with aligned
-    columns — mirrors q_decontamination's consolidation (r05)."""
-    return f"""
-      SELECT 'exact' AS method, doc_id, n_hits AS n_matches,
-             hit_ratio AS score, contaminated
-      FROM ({_decontamination_exact_oracle_sql()})
-      UNION ALL
-      SELECT 'fuzzy' AS method, doc_id, n_bench_matches AS n_matches,
-             max_jaccard AS score, contaminated
-      FROM ({_decontamination_fuzzy_oracle_sql()})
-      UNION ALL
-      SELECT 'bloom' AS method, doc_id, n_hits AS n_matches,
-             hit_ratio AS score, contaminated
-      FROM ({_decontamination_bloom_oracle_sql()})
-    """
-
-
-def _decontamination_exact_oracle_sql(n: int = 8, seed: int = 42) -> str:
-    """DuckDB replay of the md5-portable decontamination pipeline: same
-    tokenization/shingling as the minhash oracle, benchmark = doc_id % 7."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    k = n - 1
-    return rf"""
-      WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-      w AS (SELECT doc_id,
-              regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-            FROM docs),
-      s AS (SELECT doc_id,
-              CASE WHEN len(w) - {k} <= 0 THEN [array_to_string(w, ' ')]
-                   ELSE list_distinct(list_transform(
-                          generate_series(1, len(w) - {k}),
-                          i -> array_to_string(w[i:i+{k}], ' ')))
-              END AS ngrams
-            FROM w),
-      ex AS (SELECT doc_id, {P('ng', seed)} AS ng_hash
-             FROM (SELECT doc_id, unnest(ngrams) AS ng FROM s)),
-      bh AS (SELECT DISTINCT ng_hash FROM ex WHERE doc_id % 7 = 0),
-      m AS (SELECT e.doc_id,
-                   CASE WHEN b.ng_hash IS NOT NULL THEN 1 ELSE 0 END AS hit
-            FROM ex e LEFT JOIN bh b USING (ng_hash))
-      SELECT doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_ngrams,
-             CAST(SUM(hit) AS BIGINT) AS n_hits,
-             ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS hit_ratio,
-             (SUM(hit)::DOUBLE / COUNT(*)) > 0.0 AS contaminated
-      FROM m GROUP BY doc_id
-    """
-
-
-def _decontamination_bloom_oracle_sql(
-    n: int = 8,
-    seed: int = 42,
-    m_bits: int = 1 << 20,
-    k: int = 3,
-    bloom_seed: int = 101,
-) -> str:
-    """DuckDB replay of the Bloom-bitset decontamination
-    (operators/decontaminate.py bloom_bitset + decontaminate_bloom):
-    same shingling as the exact check, then each benchmark n-gram hash
-    sets k positions (md5 re-hash with a 'j#' prefix) in a 2^20-bit /
-    32-bit-word bitset built with bit_or, and each corpus n-gram is
-    maybe-in iff all k probed bits are set — the identical integer
-    arithmetic both engines can compute."""
-    from ndap_data_validator_spark.functions.porthash import portable_hash64_sql as P
-
-    kk = n - 1
-    probe = P(f"CAST(j AS VARCHAR) || '#' || CAST(ng_hash AS VARCHAR)", bloom_seed)
-    mask = "(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT))"
-    return rf"""
-      WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-      w AS (SELECT doc_id,
-              regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w
-            FROM docs),
-      s AS (SELECT doc_id,
-              CASE WHEN len(w) - {kk} <= 0 THEN [array_to_string(w, ' ')]
-                   ELSE list_distinct(list_transform(
-                          generate_series(1, len(w) - {kk}),
-                          i -> array_to_string(w[i:i+{kk}], ' ')))
-              END AS ngrams
-            FROM w),
-      ex AS (SELECT doc_id, ng, {P('ng', seed)} AS ng_hash
-             FROM (SELECT doc_id, unnest(ngrams) AS ng FROM s)),
-      bh AS (SELECT DISTINCT ng_hash FROM ex WHERE doc_id % 7 = 0),
-      js AS (SELECT unnest(generate_series(0, {k - 1})) AS j),
-      bpos AS (SELECT ({probe}) % {m_bits} AS pos FROM bh CROSS JOIN js),
-      bits AS (SELECT pos // 32 AS word, bit_or({mask}) AS bits
-               FROM bpos GROUP BY 1),
-      mp AS (SELECT doc_id, ng, ({probe}) % {m_bits} AS pos
-             FROM ex CROSS JOIN js),
-      mh AS (SELECT doc_id, ng,
-               CASE WHEN (COALESCE(bits.bits, 0) & {mask}) = {mask}
-                    THEN 1 ELSE 0 END AS hitj
-             FROM mp LEFT JOIN bits ON (mp.pos // 32) = bits.word),
-      gh AS (SELECT doc_id, ng,
-               CASE WHEN SUM(hitj) = {k} THEN 1 ELSE 0 END AS hit
-             FROM mh GROUP BY doc_id, ng)
-      SELECT doc_id,
-             CAST(COUNT(*) AS BIGINT) AS n_ngrams,
-             CAST(SUM(hit) AS BIGINT) AS n_hits,
-             ROUND(SUM(hit)::DOUBLE / COUNT(*), 4) AS hit_ratio,
-             (SUM(hit)::DOUBLE / COUNT(*)) > 0.0 AS contaminated
-      FROM gh GROUP BY doc_id
     """
 
 
@@ -2168,7 +1677,7 @@ def oracle_sql() -> dict[str, str]:
                LAG(turn_idx) OVER w AS pturn,
                LAG(ts) OVER w AS pts,
                LAG(role) OVER w AS prole
-        FROM t2 WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
+        FROM t2 WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx NULLS FIRST)),
       jsonp AS (
         SELECT conv_id, turn_idx,
                CASE WHEN event_id % 13 = 0 THEN '{"tool": broken'
@@ -2412,50 +1921,6 @@ def oracle_sql() -> dict[str, str]:
       SELECT * FROM ({drift_part_sql}) p
     """
 
-    ngram_pairs_cte = r"""
-      s AS (
-        SELECT doc_id,
-               list_distinct(regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS ws
-        FROM documents WHERE doc_id < 120),
-      p AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a, s b
-        WHERE a.doc_id < b.doc_id
-          AND len(list_intersect(a.ws, b.ws))::DOUBLE
-              / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) >= 0.9)
-    """
-    dedup_clusters = f"""
-      WITH RECURSIVE
-      {ngram_pairs_cte},
-      e AS (SELECT id_a AS src, id_b AS dst FROM p
-            UNION SELECT id_b, id_a FROM p),
-      n AS (SELECT DISTINCT src AS node FROM e),
-      reach(node, r) AS (
-        SELECT node, node FROM n
-        UNION
-        SELECT e.dst, reach.r FROM e JOIN reach ON e.src = reach.node),
-      comp AS (SELECT node, MIN(r) AS comp FROM reach GROUP BY node)
-      SELECT d.doc_id, comp.comp,
-             (comp.comp IS NULL OR d.doc_id = comp.comp) AS is_keeper
-      FROM (SELECT doc_id FROM documents WHERE doc_id < 120) d
-      LEFT JOIN comp ON d.doc_id = comp.node
-    """
-
-    from ndap_data_validator_spark.operators.sample import (
-        sample_gate_sql,
-        stratified_sample_sql,
-    )
-
-    sampling = f"""
-      SELECT 'uniform' AS method, o_orderkey AS row_key,
-             o_totalprice AS value, TRUE AS keep
-      FROM orders WHERE {sample_gate_sql('o_orderkey', 0.1, seed=7)}
-      UNION ALL
-      SELECT 'stratified', o_orderkey, o_totalprice, TRUE
-      FROM orders
-      WHERE {stratified_sample_sql('o_orderstatus', _STRATA_RATES, 'o_orderkey', seed=11)}
-    """
-
     fingerprint_sql = r"md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))"
 
     dedup_exact = f"""
@@ -2463,20 +1928,6 @@ def oracle_sql() -> dict[str, str]:
              MIN(doc_id) AS keeper_id,
              CAST(COUNT(*) AS BIGINT) AS dup_count
       FROM documents GROUP BY 1
-    """
-
-    ngram_jaccard = r"""
-      WITH s AS (
-        SELECT doc_id,
-               list_distinct(regexp_split_to_array(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS ws
-        FROM documents WHERE doc_id < 120)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             ROUND(len(list_intersect(a.ws, b.ws))::DOUBLE
-                   / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))), 4) AS jaccard
-      FROM s a, s b
-      WHERE a.doc_id < b.doc_id
-        AND len(list_intersect(a.ws, b.ws))::DOUBLE
-            / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) >= 0.9
     """
 
     sw = "['the','a','an','of','and','or','to','in','is','are','was','for','on','with','as','at','by','it','this','that']"
@@ -2610,14 +2061,8 @@ def oracle_sql() -> dict[str, str]:
         "column_stats": column_stats_sql,
         "drift_report": drift_report,
         "dedup_exact": dedup_exact,
-        "ngram_jaccard": ngram_jaccard,
         "text_quality": text_quality,
         "hll_distinct": hll_distinct,
-        "minhash_candidates": _minhash_oracle_sql(),
-        "simhash_fingerprints": _simhash_oracle_sql(),
-        "dedup_clusters": dedup_clusters,
-        "sampling": sampling,
-        "decontamination": _decontamination_oracle_sql(),
         "text_gates": _text_gates_oracle_sql(),
         "key_skew": f"""
           WITH d AS ({DERIVED_SQL}),

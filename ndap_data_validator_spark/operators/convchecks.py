@@ -59,7 +59,11 @@ def sequence_checks(
     ``lag``, which is NULL there — NULL comparisons are no-ops, matching
     SQL semantics so the DuckDB oracle replays bit-for-bit). NULL keys are
     kept as their own partition, consistent with ``duplicate_keys``:
-    a null conv_id is still a key value.
+    a null conv_id is still a key value. A NULL order value sorts first
+    (Spark's ASC default is NULLS FIRST), so that row opens its key's
+    window and the next turn is compared against it. DuckDB's ASC default
+    is NULLS LAST: an oracle that replays this window must write
+    ``NULLS FIRST``.
 
     Checks are enabled by passing their inputs: ``expected_step`` turns on
     ``order_gap``; ``ts_col`` turns on ``ts_regression``; ``role_col`` turns

@@ -163,53 +163,13 @@ def compare(
     return results
 
 
-def ks_exact(
-    baseline_df: DataFrame,
-    current_df: DataFrame,
-    column: str,
-) -> float:
-    """Exact two-sample KS statistic over RAW values via one Arrow-batched
-    ``applyInPandas`` — the optional exact path of SURVEY §7.6 when bin
-    resolution isn't enough. Both samples are tagged, co-grouped into a
-    single group, and the statistic computed vectorized in pandas.
-
-    Scale note: this pulls both columns of ONE grouping into a single task —
-    use for per-partition drift or sampled data; the binned ``drift_check``
-    is the full-table path.
-    """
-    import numpy as np
-    import pandas as pd
-
-    a = baseline_df.select(F.col(column).cast("double").alias("v")).where(
-        F.col(column).isNotNull()
-    ).withColumn("side", F.lit(0))
-    b = current_df.select(F.col(column).cast("double").alias("v")).where(
-        F.col(column).isNotNull()
-    ).withColumn("side", F.lit(1))
-    both = a.unionByName(b).withColumn("g", F.lit(1))
-
-    def ks(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = np.sort(pdf.loc[pdf["side"] == 0, "v"].to_numpy())
-        y = np.sort(pdf.loc[pdf["side"] == 1, "v"].to_numpy())
-        if len(x) == 0 or len(y) == 0:
-            return pd.DataFrame({"ks": [0.0]})
-        grid = np.concatenate([x, y])
-        cdf_x = np.searchsorted(x, grid, side="right") / len(x)
-        cdf_y = np.searchsorted(y, grid, side="right") / len(y)
-        return pd.DataFrame({"ks": [float(np.max(np.abs(cdf_x - cdf_y)))]})
-
-    out = both.groupBy("g").applyInPandas(ks, schema="ks double").first()
-    return float(out["ks"])
-
-
 def ks_exact_distributed(
     baseline_df: DataFrame,
     current_df: DataFrame,
     column: str,
     num_range_partitions: int = 32,
 ) -> DataFrame:
-    """Exact two-sample KS over RAW values, fully distributed — the scale
-    path that replaces the single-task ``ks_exact`` (VERDICT r01 #3).
+    """Exact two-sample KS over RAW values, fully distributed.
 
     The step CDFs attain their supremum at a jump point, so evaluating
     |F_a − F_b| at every DISTINCT pooled value is exact. Plan:
@@ -779,7 +739,7 @@ def drift_windowed(
     """Per event-time tumbling-window drift vs a baseline snapshot — the
     AT-INGEST twin of :func:`drift_report_partitioned` with partition =
     time window, and the streaming member of the engine's batch/stream
-    twin family (sessionization, dedup, sequence checks, CHECKs, Bloom).
+    twin family (uniqueness, sequence checks, CHECKs, row flags).
 
     The plan is ONE stateful aggregation: each window's full histogram is
     an ``array(count_if(bucket = i))`` over the baseline grid (state =

@@ -126,7 +126,7 @@ def exact_percentiles_distributed(
     the distributed replacement for single-group ``percentile()``, which
     accumulates every value in one buffer (VERDICT r02 "what's wrong" #3).
 
-    Plan (the ``ks_exact_distributed`` CDF machinery, drift.py:157-257):
+    Plan (the CDF machinery of ``drift.ks_exact_distributed``):
 
       1. ``groupBy(value)`` → per-value counts: ONE shuffle with map-side
          partial aggregation; the frame shrinks to |distinct values| and is

@@ -27,6 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ndap_data_validator_spark.rules.model import ColumnAssignment
 
+try:
+    from pyspark.logger import PySparkLogger
+except ImportError:  # PySpark < 4.0 logs no query context
+    PySparkLogger = None
+
 __all__ = ["PreflightError", "preflight_rules"]
 
 
@@ -46,14 +51,34 @@ def _first_line(exc: Exception) -> str:
     return str(exc).strip().splitlines()[0]
 
 
+_QUERY_CONTEXT_LOGGERS = ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+
+
 def _analyze(frame_fn) -> str | None:
     """Force plan analysis (schema resolution); no job runs. Returns the
-    analyzer's first error line, or None when the plan resolves."""
+    analyzer's first error line, or None when the plan resolves.
+
+    PySpark logs each captured analysis error that carries a query
+    context at ERROR level, Java stack included, as it builds the
+    exception. The error is returned as data here, so those loggers are
+    disabled for the probe: a handled error must not read as a failure in
+    the job log. The flag is process-wide; ``run_validation`` calls this
+    before any sink-writer thread starts."""
+    loggers = [
+        PySparkLogger.getLogger(n)
+        for n in (_QUERY_CONTEXT_LOGGERS if PySparkLogger else ())
+    ]
+    was_disabled = [lg.disabled for lg in loggers]
+    for lg in loggers:
+        lg.disabled = True
     try:
         frame_fn().schema
         return None
     except Exception as e:  # AnalysisException, ParseException, ValueError
         return _first_line(e)
+    finally:
+        for lg, d in zip(loggers, was_disabled):
+            lg.disabled = d
 
 
 def preflight_rules(

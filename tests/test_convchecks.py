@@ -35,6 +35,11 @@ def _conv(spark):
         # null conv_id is still a key (two rows, repeated role)
         (None, 0, "user", _ts(0)),
         (None, 1, "user", _ts(1)),
+        # NULL turn_idx sorts first (ASC is NULLS FIRST), so it opens conv D
+        # and turn 0 repeats its role; under NULLS LAST the NULL row would
+        # come last and regress in ts instead
+        ("D", None, "user", _ts(5)),
+        ("D", 0, "user", _ts(6)),
     ]
     return spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, ts timestamp"
@@ -58,6 +63,7 @@ def test_all_checks(spark):
         ("A", 5, "role_repeat"),
         ("B", 2, "long_gap"),
         (None, 1, "role_repeat"),
+        ("D", 0, "role_repeat"),
     }
 
 
@@ -84,7 +90,7 @@ def test_report_rollup(spark):
     }
     # n_keys counts DISTINCT conversations per check; the null conv_id key
     # is excluded by count_distinct (SQL semantics) but its row is counted
-    assert rep["role_repeat"] == (2, 1)
+    assert rep["role_repeat"] == (3, 2)
     assert rep["order_gap"] == (1, 1)
     assert rep["ts_regression"] == (1, 1)
     assert rep["long_gap"] == (1, 1)

@@ -65,6 +65,34 @@ def test_preflight_collects_every_failure(spark):
     assert all(e.error for e in errs)
 
 
+def test_preflight_does_not_log_the_errors_it_reports(spark, capfd):
+    """A typo'd rule comes back as data, and PySpark's query-context
+    logger writes no ERROR record of the handled error to stderr."""
+    import logging
+    import sys
+
+    from pyspark.logger import PySparkLogger
+
+    # PySpark's own handler keeps the stderr of the moment it was created,
+    # which under pytest can be an earlier test's capture: route the
+    # logger to this test's stderr as well.
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    handler = logging.StreamHandler(sys.stderr)
+    logger.addHandler(handler)
+    capfd.readouterr()
+    try:
+        errs = preflight_rules(
+            spark, _SCHEMA, check_rules=[CheckRule("typo", "turn_idxx > 0")]
+        )
+    finally:
+        logger.removeHandler(handler)
+    err = capfd.readouterr().err
+    assert "SQLQueryContextLogger" not in err
+    assert [(e.family, e.rule) for e in errs] == [("check", "typo")]
+    assert errs[0].error.startswith("[UNRESOLVED_COLUMN.WITH_SUGGESTION]")
+    assert "`turn_idxx`" in errs[0].error
+
+
 def test_preflight_accepts_dataframe_schema_source(spark):
     df = spark.createDataFrame([("c1", 0)], "conv_id string, turn_idx int")
     errs = preflight_rules(

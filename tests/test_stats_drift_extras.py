@@ -1,5 +1,5 @@
-"""Quantiles in the stats block; exact-KS applyInPandas variant; bucketed
-co-located join (shuffle-free sort-merge) — the scale craft checks."""
+"""Quantiles in the stats block; distributed exact KS; bucketed co-located
+join (shuffle-free sort-merge) — the scale craft checks."""
 
 from __future__ import annotations
 
@@ -28,8 +28,8 @@ def test_ks_exact_agrees_with_binned_direction(spark):
         spark, 4_000, 100, seed=42, inject_violations=False,
         turn_shift=300, shift_fraction=0.3,
     )
-    ks_same = drift.ks_exact(base, same, "turn_idx")
-    ks_shift = drift.ks_exact(base, shifted, "turn_idx")
+    ks_same = drift.ks_exact_distributed(base, same, "turn_idx").first()["ks"]
+    ks_shift = drift.ks_exact_distributed(base, shifted, "turn_idx").first()["ks"]
     assert 0.0 <= ks_same < 0.05
     assert ks_shift > ks_same + 0.05
 
@@ -62,14 +62,12 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 
 
 def test_ks_exact_distributed_matches_single_task_path(spark):
-    """The distributed per-value-counts KS must equal the applyInPandas
-    reference computation bit-for-bit on the same inputs."""
+    """The distributed per-value-counts KS must equal a NumPy two-sample KS
+    over the collected values on the same inputs."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from ndap_data_validator_spark.operators.drift import (
-        ks_exact,
-        ks_exact_distributed,
-    )
+    from ndap_data_validator_spark.operators.drift import ks_exact_distributed
 
     df = spark.range(5000).select(
         (F.col("id") % 97).cast("double").alias("v"),
@@ -79,7 +77,13 @@ def test_ks_exact_distributed_matches_single_task_path(spark):
         "v", F.col("v") * 1.5 + 3
     )
     b = df.where(F.col("side") == 1)
-    single = ks_exact(a, b, "v")
+    x = np.sort([r["v"] for r in a.collect()])
+    y = np.sort([r["v"] for r in b.collect()])
+    grid = np.concatenate([x, y])
+    single = float(np.max(np.abs(
+        np.searchsorted(x, grid, side="right") / len(x)
+        - np.searchsorted(y, grid, side="right") / len(y)
+    )))
     dist = ks_exact_distributed(a, b, "v", num_range_partitions=7).first()
     assert abs(dist["ks"] - single) < 1e-12
     assert dist["n_a"] == 2500 and dist["n_b"] == 2500

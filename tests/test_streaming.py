@@ -117,7 +117,7 @@ def test_replayed_batch_replaces_its_report_rows(spark, tmp_path):
 
 
 def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark twin of batch dedup_exact: duplicates
+    """dropDuplicatesWithinWatermark twin of batch duplicate_keys: duplicates
     split across micro-batches (within the watermark) emit exactly once."""
     from ndap_data_validator_spark.streaming.stateful import dedup_stream
 
@@ -203,77 +203,6 @@ def test_check_rules_stream_equals_batch(spark, tmp_path):
         ).collect()
     )
     assert got == expected == [(2, "end_ge_start"), (3, "tool_named")]
-
-
-def test_bloom_decontamination_stream_equals_batch(spark, tmp_path):
-    """The inline Bloom gate is a stateless projection (bitset rides the
-    plan as an array literal), so decontaminate_bloom_stream runs
-    unchanged on a streaming frame — per-micro-batch flags must equal
-    the batch run over the full input, and both must equal the
-    broadcast-join path."""
-    from ndap_data_validator_spark.operators.decontaminate import (
-        benchmark_ngram_hashes,
-        bloom_bitset,
-        bloom_words,
-        decontaminate_bloom,
-        decontaminate_bloom_stream,
-    )
-
-    bench = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog tonight")],
-        "doc_id long, text string",
-    )
-    m = 1 << 16
-    bh = benchmark_ngram_hashes(bench, n=8, seed=1)
-    bs = bloom_bitset(bh, m_bits=m, k=3)
-    words = bloom_words(bs, m_bits=m)
-    kw = dict(n=8, m_bits=m, k=3, seed=1)
-
-    src = str(tmp_path / "bsrc")
-    f1 = [
-        (1, "the quick brown fox jumps over the lazy dog tonight"),
-        (2, "completely unrelated content about spark query planning"),
-    ]
-    f2 = [
-        (3, "prefix words then the quick brown fox jumps over the lazy "
-            "dog tonight and more trailing text"),
-        (4, None),
-    ]
-    for rows in [f1, f2]:
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        decontaminate_bloom_stream(stream, words, **kw)
-        .writeStream.format("memory")
-        .queryName("bloom_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "bckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch = spark.read.parquet(src)
-    got = sorted(
-        tuple(r) for r in spark.sql("SELECT * FROM bloom_stream").collect()
-    )
-    inline_batch = sorted(
-        tuple(r)
-        for r in decontaminate_bloom_stream(batch, words, **kw).collect()
-    )
-    join_batch = sorted(
-        tuple(r) for r in decontaminate_bloom(batch, bs, **kw).collect()
-    )
-    assert got == inline_batch == join_batch
-    flags = {t[0]: t[4] for t in got}
-    assert flags == {1: True, 2: False, 3: True}
 
 
 def test_sequence_check_stream_equals_batch(spark, tmp_path):

@@ -19,7 +19,6 @@ import duckdb
 
 import __spark_entry__ as entry
 from ndap_data_validator_spark.session import get_spark
-from ndap_data_validator_spark.sources.tables import TESTDATA_TABLES
 
 
 def norm_cell(v):
@@ -52,8 +51,10 @@ def main():
     spark = get_spark(app_name="check-entry")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for f in sorted(os.listdir(sf_dir)):
+        if f.endswith(".parquet"):
+            t = f.removesuffix(".parquet")
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{f}'")
 
     qs = entry.queries()
     oracles = entry.oracle_sql()

@@ -58,26 +58,6 @@ def _ks_lazy_plan(df):
     return _ks_agg_plan(counts, 32)
 
 
-def _decontam(spark, df):
-    from ndap_data_validator_spark.operators.decontaminate import (
-        benchmark_ngram_hashes,
-        decontaminate,
-    )
-
-    docs = df.select(F.col("conv_id").alias("doc_id"), F.col("text"))
-    bench = docs.limit(50)
-    return decontaminate(docs, benchmark_ngram_hashes(bench, n=5), n=5)
-
-
-def _jaccard(spark, df):
-    from ndap_data_validator_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = df.where(F.col("turn_idx") == 0).select(
-        F.col("conv_id").alias("doc_id"), "text"
-    )
-    return ngram_jaccard_pairs(docs, id_col="doc_id", n=3, threshold=0.5)
-
-
 def _json_report(spark, df):
     from ndap_data_validator_spark.operators.jsonschema import (
         json_schema_report,
@@ -249,15 +229,6 @@ def main() -> None:
             "sketch-small string columns.",
         ),
         (
-            "Deterministic hash-gate sample (pure filter)",
-            __import__(
-                "ndap_data_validator_spark.operators.sample", fromlist=["s"]
-            ).deterministic_sample(df, "conv_id", 0.1, seed=7),
-            "The gate is a scan-level Filter — no shuffle, no sampling "
-            "operator state; partitioning/engine-independent by "
-            "construction.",
-        ),
-        (
             "Exact two-sample KS (distributed)",
             _ks_lazy_plan(df),
             "groupBy(value) partial counts → window partitioned by the "
@@ -272,58 +243,6 @@ def main() -> None:
             ri_violations(df, "tool", tool_catalog(spark), "tool_id"),
             "Dimension broadcast → BroadcastHashJoin LeftAnti; the fact side "
             "never shuffles.",
-        ),
-        (
-            "Benchmark decontamination (n-gram collision)",
-            _decontam(spark, df),
-            "The benchmark's distinct n-gram hash set is BROADCAST (eval "
-            "suites are MBs); the corpus side is one projection (tokenize → "
-            "n-gram → hash) + explode + a single groupBy(doc) with map-side "
-            "partial aggregation — the shuffle carries (doc_id, two longs), "
-            "never text. No corpus-sized join state anywhere.",
-        ),
-        (
-            "Stratified hash-gate sample (pure filter)",
-            __import__(
-                "ndap_data_validator_spark.operators.sample", fromlist=["s"]
-            ).stratified_sample(
-                df, "role", {"user": 0.5, "assistant": 0.1}, "conv_id", seed=3
-            ),
-            "Per-stratum integer thresholds fold into ONE scan-level Filter "
-            "(CASE over the rate map + the hash gate) — no shuffle, no "
-            "sampling state, pushdown applies.",
-        ),
-        (
-            "Fuzzy decontamination (cross-corpus LSH, broadcast benchmark)",
-            (lambda dc, d: dc.decontaminate_fuzzy(
-                d, d.where(F.col("doc_id").endswith("0")), shingle_n=2
-            ))(
-                __import__(
-                    "ndap_data_validator_spark.operators.decontaminate",
-                    fromlist=["d"],
-                ),
-                df.where(F.col("turn_idx") == 0).select(
-                    F.col("conv_id").alias("doc_id"), F.col("text")
-                ),
-            ),
-            "Both sides share the one-shuffle minhash signature plan; the "
-            "benchmark's banded index and shingle sets ride "
-            "BroadcastHashJoins (benchmark is eval-suite-sized by "
-            "contract), so the corpus is never shuffled to be matched; "
-            "the verify joins shingle sets for candidates only and the "
-            "rollup is one groupBy(doc).",
-        ),
-        (
-            "Exact n-gram Jaccard verify (inline Generate, sizes post-agg)",
-            _jaccard(spark, df),
-            "The shingle expression is exploded INLINE in the Generate — "
-            "never a pre-aliased array column, which would let "
-            "InferFiltersFromGenerate clone the whole (CodegenFallback) "
-            "shingle tree into a per-scan-row Filter (measured 15x). The "
-            "token self-join shuffle carries (id, tok) only; per-doc set "
-            "sizes (one row per doc) join onto the candidate-pair "
-            "aggregate, which is orders of magnitude smaller than the "
-            "token stream.",
         ),
         (
             "Key-skew heavy-hitter report (TakeOrdered, no global sort)",

@@ -93,21 +93,6 @@ ksd = ks_exact_distributed(
 print("distributed exact KS:", round(ksd["ks"], 4), ksd["n_a"], ksd["n_b"])
 assert 0.0 <= ksd["ks"] <= 1.0 and ksd["n_a"] > 0
 
-# dedup skew guards end-to-end
-from ndap_data_validator_spark.operators.dedup import (
-    minhash_near_duplicates, ngram_jaccard_pairs,
-)
-docs = df.where(F.col("text").isNotNull()).limit(2000).select(
-    F.monotonically_increasing_id().alias("doc_id"), "text")
-docs = docs.cache()
-nd = minhash_near_duplicates(docs, threshold=0.9, max_bucket_size=64)
-print("minhash near-dups found:", nd.count())
-nj = ngram_jaccard_pairs(docs.limit(150), n=1, threshold=0.95, max_token_df=100)
-print("ngram near-dup pairs:", nj.count())
-
-md5_dups = minhash_near_duplicates(docs.limit(200), threshold=0.9, hash_fn="md5")
-print("md5-portable minhash near-dups:", md5_dups.count())
-
 # delta load mode: append rows, delta run validates only the new ones, and
 # the folded report equals a full re-run's
 d1 = spark.createDataFrame([(f"p{i%3}", i, float(i)) for i in range(300)],
@@ -167,17 +152,6 @@ oevo = run_validation(spark, aligned, [ColumnAssignment("part", "Location")],
 print("structure_change partitions:", sorted(oevo.processed_partitions))
 assert sorted(oevo.processed_partitions) == ["p0", "p1"]
 
-# clusters / deterministic sampling
-from ndap_data_validator_spark.operators.dedup import connected_components
-from ndap_data_validator_spark.operators.sample import deterministic_sample
-pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-cc = {r["node"]: r["comp"] for r in connected_components(pairs).collect()}
-assert cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-samp = deterministic_sample(df, "conv_id", 0.25, seed=7)
-s1, s2 = samp.count(), deterministic_sample(df.repartition(17), "conv_id", 0.25, seed=7).count()
-assert s1 == s2
-print("deterministic sample rows:", s1)
-
 # jsonl: source scheme
 jbase = tempfile.mkdtemp(prefix="verify_jsonl_")
 d1.coalesce(1).write.mode("overwrite").json(f"{jbase}/t.jsonl")
@@ -206,36 +180,19 @@ rr = df.where(F.col("text").isNotNull()).limit(1000).agg(
 assert rr["avg_rr"] is not None and 0.0 <= rr["avg_rr"] <= 1.0
 print("repetition ratio avg/max:", round(rr["avg_rr"], 4), round(rr["max_rr"], 4))
 
-# r03 ops: decontamination, stratified sample, URL filter,
-# distributed exact percentiles, checkpoint compaction
-from ndap_data_validator_spark.operators.decontaminate import (
-    benchmark_ngram_hashes, decontaminate,
-)
-from ndap_data_validator_spark.operators.sample import stratified_sample
+# r03 ops: URL filter, distributed exact percentiles, checkpoint compaction
 from ndap_data_validator_spark.functions.urls import domain_blocklist_filter
 from ndap_data_validator_spark.operators.stats import (
     exact_percentiles_distributed,
 )
 
 # deterministic doc set (limit() picks different rows per job): one text
-# per conversation, benchmark = conv ids ending in 00
+# per conversation
 docs = (
     df.where(F.col("turn_idx") == 0)
     .where(F.col("text").isNotNull())
     .select(F.col("conv_id").alias("doc_id"), "text")
 )
-bench_set = docs.where(F.col("doc_id").endswith("00"))
-n_bench = bench_set.count()
-rep = decontaminate(docs, benchmark_ngram_hashes(bench_set, n=5), n=5)
-n_cont = rep.where(F.col("contaminated")).count()
-assert n_cont >= n_bench > 0, (n_cont, n_bench)
-print("decontamination: contaminated docs:", n_cont, "of bench", n_bench)
-
-strat = stratified_sample(df, "role", {"user": 0.5, "assistant": 0.05}, "conv_id", seed=3)
-counts = {r["role"]: r["n"] for r in strat.groupBy("role").agg(F.count(F.lit(1)).alias("n")).collect()}
-assert set(counts) <= {"user", "assistant"} and counts.get("user", 0) > counts.get("assistant", 0)
-print("stratified sample counts:", counts)
-
 urls_df = docs.select(
     "doc_id",
     F.concat(F.col("text"), F.lit(" http://blocked.example.com/x")).alias("text"),
@@ -298,88 +255,6 @@ with _tf.TemporaryDirectory() as _sd:
     ).first()[0]
     assert n_out == n_keys <= n_in, (n_in, n_out, n_keys)
     print("stream dedup:", 2 * n_in, "arrivals ->", n_out, "unique emissions")
-
-from ndap_data_validator_spark.operators.decontaminate import decontaminate_fuzzy
-
-fz_bench = docs.limit(0).unionByName(
-    docs.where(F.col("doc_id").endswith("50")).select(
-        "doc_id", F.concat(F.col("text"), F.lit(" eval suffix")).alias("text")
-    )
-)
-fz = decontaminate_fuzzy(docs, fz_bench, threshold=0.5, shingle_n=2)
-n_flagged = fz.where(F.col("contaminated")).count()
-n_bench2 = fz_bench.count()
-assert n_flagged >= n_bench2 > 0, (n_flagged, n_bench2)
-print("fuzzy decontamination:", n_flagged, "flagged of", fz.count(), "docs,", n_bench2, "bench items")
-
-from ndap_data_validator_spark.operators.decontaminate import (
-    benchmark_ngram_hashes as _bnh,
-    bloom_bitset,
-    decontaminate_bloom,
-)
-
-# Bloom decontamination must agree with the exact hash-set check on this
-# corpus (FP rate ~ 0 at this load) while its index stays fixed-size
-bl_bench = docs.where(F.col("doc_id").endswith("50"))
-bl_bh = _bnh(bl_bench, n=8, seed=3)
-bl_bs = bloom_bitset(bl_bh, m_bits=1 << 20, k=3)
-bl = decontaminate_bloom(docs, bl_bs, n=8, m_bits=1 << 20, k=3, seed=3)
-bl_flag = bl.where(F.col("contaminated")).count()
-n_bl_bench = bl_bench.count()
-assert bl_flag >= n_bl_bench > 0, (bl_flag, n_bl_bench)
-n_words = bl_bs.count()
-assert n_words <= (1 << 20) // 32
-print("bloom decontamination:", bl_flag, "flagged,", n_words, "bitset words")
-
-# the inline (array-literal) gate is the STREAMING shape — batch result
-# must be bit-identical to the join path on the same bitset
-from ndap_data_validator_spark.operators.decontaminate import (
-    bloom_words,
-    decontaminate_bloom_stream,
-)
-
-bl_words = bloom_words(bl_bs, m_bits=1 << 20)
-bl_inline = decontaminate_bloom_stream(
-    docs, bl_words, n=8, m_bits=1 << 20, k=3, seed=3
-)
-mism = (
-    bl_inline.withColumnRenamed("contaminated", "c2")
-    .select("doc_id", "c2", "n_hits")
-    .join(bl.select("doc_id", "contaminated", F.col("n_hits").alias("h1")),
-          "doc_id")
-    .where((F.col("c2") != F.col("contaminated"))
-           | (F.col("n_hits") != F.col("h1")))
-    .count()
-)
-assert mism == 0, mism
-print("bloom inline gate: agrees with join path on", bl.count(), "docs")
-
-from ndap_data_validator_spark.operators.dedup import (
-    dedup_incremental_batch,
-    minhash_index,
-)
-
-# incremental (delta-crawl) dedup: batch 2 contains clones of batch 1 —
-# they must match the persisted index and stay OUT of the appended rows
-inc_b1 = docs.where(F.col("doc_id").endswith("1"))
-inc_b2 = docs.where(F.col("doc_id").endswith("2")).unionByName(
-    inc_b1.limit(20).select(
-        F.concat(F.lit("re-"), F.col("doc_id")).alias("doc_id"), "text"
-    )
-)
-inc_idx = minhash_index(inc_b1, num_hashes=16, bands=8)
-inc_rep, inc_new = dedup_incremental_batch(
-    inc_b2, inc_idx, num_hashes=16, bands=8, threshold=0.9
-)
-n_clone = inc_rep.where(
-    F.col("doc_id").startswith("re-") & ~F.col("is_unique")
-).count()
-n_clones_total = inc_b2.where(F.col("doc_id").startswith("re-")).count()
-assert n_clone == n_clones_total > 0, (n_clone, n_clones_total)
-appended = {r[0] for r in inc_new.select("doc_id").distinct().collect()}
-assert not any(d.startswith("re-") for d in appended)
-print(f"incremental dedup: {n_clone}/{n_clones_total} cross-batch clones "
-      f"matched history; {len(appended)} unique docs appended to index")
 
 from ndap_data_validator_spark.operators.convchecks import (
     sequence_checks,
