@@ -351,9 +351,9 @@ def q_uniqueness_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * 'key_census' — composite-key dup census via groupBy count>1 (map-side
       partial agg, cheapest violation count; uniqueness.duplicate_keys);
-    * 'key_census_hashed' — the same census through the two-phase hashed
-      scale path (uniqueness.duplicate_keys_hashed), which must return
-      exactly the exact census's rows;
+    * 'key_census_hashed' — the same census through
+      uniqueness.duplicate_keys_hashed (the exact census under the name of
+      the former hashed path), which must return the exact census's rows;
     * 'dup_rows' — every row participating in a duplicated key, tagged with
       its occurrence number under a stable order (uniqueness.duplicate_rows,
       one shuffle on the key, both windows share the partitioning) — the

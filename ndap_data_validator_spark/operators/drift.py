@@ -590,31 +590,13 @@ def _drift_rows(
     """SQL for the drift report rows of ONE aggregate row carrying the
     :func:`_drift_aggs` histograms: an array of (column, ks, psi, js, w1,
     baseline_total, current_total, drifted) structs, one per column with a
-    non-empty current histogram."""
-    rows = []
-    for j, c in enumerate(_usable_columns(baseline)):
-        fields = _verdict_fields(
-            _drift_fold_exprs(baseline[c], f"__h{j}"), ks_threshold, psi_threshold
-        )
-        rows.append(
-            f"named_struct('column', {sql_str(c)}, "
-            + ", ".join(f"{sql_str(name)}, {e}" for name, e in fields)
-            + ")"
-        )
-    return f"filter(array({', '.join(rows)}), r -> r.current_total > 0)"
-
-
-def _verdict_fields(m: dict, ks_threshold: float, psi_threshold: float) -> list:
-    """The report columns after ``column`` as (name, SQL) pairs, from
-    :func:`_drift_fold_exprs`."""
-    return [
-        *[(k, m[k]) for k in ("ks", "psi", "js", "w1", "baseline_total", "current_total")],
-        (
-            "drifted",
-            f"({m['ks']}) > {sql_double(ks_threshold)} "
-            f"OR ({m['psi']}) > {sql_double(psi_threshold)}",
-        ),
+    non-empty current histogram — one :func:`_drift_fold_exprs` fold per
+    column."""
+    rows = [
+        _drift_fold_exprs(baseline[c], f"__h{j}", c, ks_threshold, psi_threshold)
+        for j, c in enumerate(_usable_columns(baseline))
     ]
+    return f"filter(array({', '.join(rows)}), r -> r.current_total > 0)"
 
 
 @dataclass(frozen=True)
@@ -665,19 +647,23 @@ class DriftRule:
         }
 
 
-def _drift_fold_exprs(base: dict, h: str) -> dict:
-    """KS / PSI / JS / W1 SQL over the histogram ARRAY column named
-    ``h`` (length n_bins+2, element i = bin i's count, bin 0 underflow),
-    the baseline's per-bin fraction / CDF / gap entering as ONE literal
-    array — a pure projection with the identical math (and summation
-    order) as :func:`compare`: a single ``aggregate`` walks the bins
-    carrying the running current CDF and the four sums, so the expression
-    stays the same size for any bin count. Because it is
-    stateless, it can run directly on the output row of a (streaming)
-    aggregation — no second aggregation, which Structured Streaming's
-    append mode would reject. An all-zero histogram yields
-    ``current_total`` 0 (the divisor is guarded: ANSI division by zero
-    raises); callers drop such rows."""
+def _drift_fold_exprs(
+    base: dict, h: str, column: str, ks_threshold: float, psi_threshold: float
+) -> str:
+    """ONE column's drift report row as ONE SQL struct (column, ks, psi,
+    js, w1, baseline_total, current_total, drifted) over the histogram
+    ARRAY column named ``h`` (length n_bins+2, element i = bin i's count,
+    bin 0 underflow), the baseline's per-bin fraction / CDF / gap entering
+    as ONE literal array — a pure projection with the identical math (and
+    summation order) as :func:`compare`: a single ``aggregate`` walks the
+    bins carrying the running current CDF and the four sums, and its
+    finish lambda builds the row, so the fold appears once in the text
+    whatever reads ``ks``, ``psi`` or ``drifted``, and the expression stays
+    the same size for any bin count. Because it is stateless, it can run
+    directly on the output row of a (streaming) aggregation — no second
+    aggregation, which Structured Streaming's append mode would reject. An
+    all-zero histogram yields ``current_total`` 0 (the divisor is guarded:
+    ANSI division by zero raises); callers drop such rows."""
     eps = sql_double(1e-6)
     n_bins = base["n_bins"]
     p = _vectorize(base["counts"], n_bins)
@@ -707,7 +693,7 @@ def _drift_fold_exprs(base: dict, h: str) -> dict:
     cq = "(acc.cq + b.fq)"
     sq = f"greatest(b.fq, {eps})"
     m = "((b.fp + b.fq) / 2.0D)"
-    fold = (
+    return (
         f"aggregate({rows}, "
         "named_struct('cq', 0D, 'ks', 0D, 'psi', 0D, 'js', 0D, 'w1', 0D), "
         "(acc, b) -> named_struct("
@@ -717,13 +703,13 @@ def _drift_fold_exprs(base: dict, h: str) -> dict:
         "'js', acc.js + ("
         f"CASE WHEN b.fp > 0 THEN 0.5D * b.fp * ln(b.fp / {m}) ELSE 0D END + "
         f"CASE WHEN b.fq > 0 THEN 0.5D * b.fq * ln(b.fq / {m}) ELSE 0D END), "
-        f"'w1', acc.w1 + abs(b.cp - {cq}) * b.gap))"
+        f"'w1', acc.w1 + abs(b.cp - {cq}) * b.gap), "
+        f"acc -> named_struct('column', {sql_str(column)}, "
+        "'ks', acc.ks, 'psi', acc.psi, 'js', acc.js, 'w1', acc.w1, "
+        f"'baseline_total', CAST({int(tp)} AS BIGINT), 'current_total', {total}, "
+        f"'drifted', acc.ks > {sql_double(ks_threshold)} "
+        f"OR acc.psi > {sql_double(psi_threshold)}))"
     )
-    return {
-        **{k: f"({fold}).{k}" for k in ("ks", "psi", "js", "w1")},
-        "baseline_total": f"CAST({int(tp)} AS BIGINT)",
-        "current_total": total,
-    }
 
 
 def drift_windowed(
@@ -760,13 +746,9 @@ def drift_windowed(
         .groupBy(F.window(F.col(ts_col), window_duration).alias("w"))
         .agg(F.expr(f"{_hist_agg(baseline[column], column)} AS h"))
     )
-    m = _drift_fold_exprs(baseline[column], "h")
-    return hist.selectExpr(
-        "w.start AS window_start",
-        "w.`end` AS window_end",
-        f"{sql_str(column)} AS `column`",
-        *[
-            f"{e} AS {name}"
-            for name, e in _verdict_fields(m, ks_threshold, psi_threshold)
-        ],
+    fold = _drift_fold_exprs(
+        baseline[column], "h", column, ks_threshold, psi_threshold
     )
+    return hist.selectExpr(
+        "w.start AS window_start", "w.`end` AS window_end", f"{fold} AS __d"
+    ).select("window_start", "window_end", "__d.*")

@@ -1,11 +1,16 @@
 """Composite-key uniqueness check (north_rule: (conv_id, turn_idx)).
 
 The reference's nearest pattern is the latest-per-key dedup window
-(``/root/reference/utils/db.py:493-501``, ROW_NUMBER over token). For a
+(its ``utils/db.py:493-501``, ROW_NUMBER over token). For a
 *violation census* a plain ``groupBy(keys).count() > 1`` is strictly cheaper
 than a window: the aggregate does map-side partial counting before the
 shuffle, whereas a window shuffles every row. Both are provided; the window
 variant also returns the offending rows themselves with a stable ordering.
+
+There is one census, :func:`duplicate_keys`, and it is exact. The
+``duplicate_keys_hashed`` name remains for callers of the former two-phase
+xxhash64 census, which was slower and shuffled more at every size measured
+(65k to 4M turns; figures in its docstring).
 """
 
 from __future__ import annotations
@@ -24,67 +29,32 @@ def duplicate_keys(df: DataFrame, key_columns: list[str]) -> DataFrame:
     )
 
 
-def duplicate_keys_hashed(
-    df: DataFrame, key_columns: list[str], max_exact_hashes: int = 100_000
-) -> DataFrame:
-    """Scale path for duplicate_keys: two-phase with an 8-byte hash key.
+def duplicate_keys_hashed(df: DataFrame, key_columns: list[str]) -> DataFrame:
+    """The exact census under its former scale-path name: returns
+    :func:`duplicate_keys` (one lazy ``groupBy(keys).count() > 1``; no job
+    starts before an action, and NULL key parts stay key values).
 
-    Phase 1 shuffles only ``xxhash64(keys)`` + count — a fraction of the
-    bytes of the raw composite key (strings dominate transcript keys).
-    Phase 2 exact-verifies: rows whose hash is in the (tiny) suspicious set
-    are re-grouped on the REAL key, so hash collisions cannot produce false
-    duplicates — the output is exactly duplicate_keys()'s.
+    The name used to hold a two-phase census: ``xxhash64(keys)`` counts,
+    a collected suspicious-hash set, then an exact re-group of the rows
+    whose hash was suspicious. Its premise was that an 8-byte hash shuffles
+    less than the raw composite key. It did not hold on ``perfbench``
+    transcripts (seed 1, 8 parquet files, ``(conv_id, turn_idx)``,
+    ``local[4]`` on 4 vCPUs; census to a count, median of 5 runs after a
+    warm-up, range in brackets; last column MB shuffled, exact / two-phase):
 
-    NULL handling matches duplicate_keys: xxhash64 folds NULLs into the
-    hash (it hashes the null marker), and phase 2 groups them exactly.
+    ==========  ======================  ======================  ===========
+    turns       exact                   two-phase               shuffle MB
+    ==========  ======================  ======================  ===========
+    65,536      0.32 s (0.25-0.37), 3   0.74 s (0.62-0.87), 6   0.55 / 0.77
+    262,144     0.40 s (0.28-0.86), 3   0.87 s (0.78-1.04), 7   2.19 / 2.99
+    1,048,576   0.67 s (0.64-1.01), 3   1.09 s (1.03-1.56), 7   8.65 / 11.9
+    4,194,304   1.72 s (1.68-1.74), 3   2.29 s (2.16-2.49), 7   34.3 / 47.5
+    ==========  ======================  ======================  ===========
 
-    r06 phase-2 shape (guide §3.2 — pre-filter the big side): the
-    suspicious set is collected when ≤ ``max_exact_hashes`` (bounded
-    driver cost: 8 bytes/hash) and re-entered as a single-slice literal
-    frame under an EXPLICIT broadcast semi join. Without the collect the
-    planner sees an aggregate of unknown size and plans a full-width
-    shuffle + sort of the big side (measured ~3× the cost of the whole
-    check at 4M rows; AQE's broadcast replan fires only after the big
-    side's shuffle map stage is already submitted) — and an ``isin`` over
-    the collected set is no better (thousands of literal children defeat
-    codegen; measured 5.8s vs 1.5s for the broadcast join on the same
-    window). On duplicate-heavy data the collect aborts at the cap and the
-    call returns ``duplicate_keys(df, key_columns)``: one exact groupBy
-    on the real key, instead of an unbounded driver set or a second
-    evaluation of the phase-1 aggregate.
-
-    Phase 1 runs as one job at CALL time in the collected shape; callers
-    holding the returned frame lazy pay that job once.
-    """
-    h = F.xxhash64(*[F.col(c) for c in key_columns])
-    suspicious = (
-        df.select(h.alias("__h"))
-        .groupBy("__h")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .where(F.col("__c") > 1)
-        .select("__h")
-    )
-    rows = suspicious.limit(max_exact_hashes + 1).collect()
-    if len(rows) > max_exact_hashes:
-        return duplicate_keys(df, key_columns)
-    if not rows:
-        # no duplicates anywhere: a constant-false filter keeps the
-        # output schema without scanning anything
-        candidates = df.where(F.lit(False))
-    else:
-        from ndap_data_validator_spark.session import literal_frame
-
-        lit = literal_frame(
-            df.sparkSession, [(r["__h"],) for r in rows], "__h long"
-        )
-        candidates = df.join(
-            F.broadcast(lit), h == F.col("__h"), "left_semi"
-        )
-    return (
-        candidates.groupBy(*key_columns)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )
+    The count after each time is the census's Spark jobs; one of the
+    two-phase census's jobs was a collect inside the call. Both returned
+    the same keys at every size."""
+    return duplicate_keys(df, key_columns)
 
 
 def duplicate_rows(

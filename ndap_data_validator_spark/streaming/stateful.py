@@ -175,12 +175,18 @@ def sequence_check_stream(
     State per conversation is ONE previous-turn snapshot (5 scalars) —
     independent of conversation length — and bounded in key count by an
     event-time timeout that evicts convs idle past ``evict_sec`` once the
-    watermark passes. NULL semantics match the batch operator: a NULL
-    prev/current ts or role makes its comparisons UNKNOWN, which passes.
+    watermark passes. A NULL prev/current ts or role makes its
+    comparisons UNKNOWN, which passes, as in the batch operator.
+
+    NULL keys differ from the batch operator: rows whose ``key_col`` or
+    ``order_col`` is NULL are dropped before the state function, while
+    ``sequence_checks`` keeps a NULL conversation id as its own key and
+    sorts a NULL order value first. So the stream≡batch fold holds only
+    on rows whose key and order value are both set
+    (tests/test_streaming.py pins the difference).
 
     Ordering contract: within each micro-batch a conversation's arrivals
-    are sorted by ``order_col`` before checking (and rows with a NULL
-    order key are dropped — the stream twin needs the key to order by);
+    are sorted by ``order_col`` before checking;
     across batches the check compares against the last PREVIOUSLY SEEN
     turn, so turns that arrive out of order ACROSS micro-batches surface
     as order_gap/ts_regression at the boundary — the honest answer an

@@ -1,5 +1,6 @@
-"""Broadcast-domain rule + two-phase hashed uniqueness: the scale paths must
-be exact equivalents of their reference implementations."""
+"""Broadcast-domain rule + the duplicate-key census: the domain rule must
+equal the referential anti-join, and ``duplicate_keys_hashed`` (the exact
+census under its former scale-path name) must equal ``duplicate_keys``."""
 
 from __future__ import annotations
 
@@ -68,3 +69,21 @@ def test_hashed_duplicate_keys_null_keys(spark):
         for r in duplicate_keys_hashed(df, ["k", "t"]).collect()
     }
     assert got == {("a", 1): 2, (None, 2): 2}
+
+
+def test_hashed_census_starts_no_job_before_an_action(spark):
+    """The census is one lazy aggregate: building it starts no Spark job;
+    the action that reads it does."""
+    df = transcripts(spark, 2_000, 20, seed=3)
+    sc = spark.sparkContext
+    group = "census-laziness"
+    sc.setJobGroup(group, "duplicate_keys_hashed laziness")
+    try:
+        census = duplicate_keys_hashed(df, ["conv_id", "turn_idx"])
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        census.count()
+        after = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert before == 0
+    assert after > 0

@@ -130,6 +130,30 @@ def test_partitioned_report_plan_shape(spark):
     assert "ExistingRDD" not in plan.replace("LogicalRDD", "")
 
 
+def test_one_fold_per_baseline_column(spark):
+    """Each usable baseline column's KS/PSI/JS/W1 fold appears once,
+    whatever reads ks, psi or drifted: in the report rows' SQL (an
+    empty-histogram column adds none) and in drift_windowed's optimized
+    projection (no optimizer rule copies it back per output column)."""
+    import pyspark.sql.functions as F
+
+    from ndap_data_validator_spark.operators.drift import (
+        _drift_rows,
+        drift_windowed,
+    )
+
+    snap = _baseline(spark)
+    snap["empty"] = {"lo": 0.0, "hi": 1.0, "n_bins": 16, "counts": {}}
+    assert _drift_rows(snap, 0.1, 0.2).count("named_struct('cq', 0D") == 2
+
+    df = spark.createDataFrame(_pdf()).withColumn(
+        "ts", F.lit("2026-01-01 00:00:00").cast("timestamp")
+    )
+    win = drift_windowed(df, "ts", "amount", snap)
+    plan = win._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("named_struct(cq") == 1
+
+
 def test_run_validation_drift_integration(spark, tmp_path):
     """DriftRule through the checkpointed pipeline: report written, the
     drifted partition is withheld from publish, metrics_json carries the

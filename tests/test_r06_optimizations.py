@@ -15,11 +15,10 @@ def spark():
     return get_spark(app_name="r06-opt-tests", master="local[4]")
 
 
-def test_duplicate_keys_hashed_isin_and_join_paths_agree(spark):
-    """The r06 bounded-isin phase 2 (below and exactly at the cap) ≡ the
-    over-cap fallback ≡ the exact groupBy census (max_exact_hashes=0 forces
-    the fallback). NULL key parts are key values: a NULL k, a NULL sub and
-    both, each duplicated, come back as duplicate keys on every path."""
+def test_duplicate_keys_hashed_equals_exact_census(spark):
+    """duplicate_keys_hashed ≡ the exact groupBy census on the same rows.
+    NULL key parts are key values: a NULL k, a NULL sub and both, each
+    duplicated, come back as duplicate keys."""
     from ndap_data_validator_spark.operators.uniqueness import (
         duplicate_keys,
         duplicate_keys_hashed,
@@ -37,16 +36,11 @@ def test_duplicate_keys_hashed_isin_and_join_paths_agree(spark):
 
     exact = rows(duplicate_keys(df, ["k", "sub"]))
     assert {(k, sub, 2) for k, sub in nulls} <= set(exact)
-    via_isin = rows(duplicate_keys_hashed(df, ["k", "sub"]))
-    at_cap = rows(
-        duplicate_keys_hashed(df, ["k", "sub"], max_exact_hashes=len(exact))
-    )
-    over_cap = rows(duplicate_keys_hashed(df, ["k", "sub"], max_exact_hashes=0))
-    assert exact == via_isin == at_cap == over_cap
+    assert rows(duplicate_keys_hashed(df, ["k", "sub"])) == exact
 
 
 def test_duplicate_keys_hashed_no_duplicates(spark):
-    """All-unique keys → empty result via the constant-false filter."""
+    """All-unique keys → empty result."""
     from ndap_data_validator_spark.operators.uniqueness import (
         duplicate_keys_hashed,
     )

@@ -288,6 +288,58 @@ def test_sequence_check_stream_equals_batch(spark, tmp_path):
     assert not any(c == "B" for c, _, _ in got)
 
 
+def test_sequence_check_stream_drops_null_keys_batch_keeps_them(
+    spark, tmp_path
+):
+    """The stream twin drops rows with a NULL conv_id or turn_idx; the
+    batch operator keeps a NULL conv_id as its own key and sorts a NULL
+    turn_idx first. On these rows the batch run reports two role repeats
+    and the stream reports nothing."""
+    from ndap_data_validator_spark.operators.convchecks import sequence_checks
+    from ndap_data_validator_spark.streaming.stateful import (
+        sequence_check_stream,
+    )
+
+    import datetime as dt
+
+    def ts(m):
+        return dt.datetime(2026, 1, 1, 0, m)
+
+    rows = [
+        ("D", None, "user", ts(0)),
+        ("D", 0, "user", ts(1)),
+        ("D", 1, "assistant", ts(2)),
+        (None, 0, "user", ts(0)),
+        (None, 1, "user", ts(1)),
+    ]
+    schema = "conv_id string, turn_idx int, role string, ts timestamp"
+    df = spark.createDataFrame(rows, schema)
+    batch = {
+        (r.conv_id, r.turn_idx, r.check)
+        for r in sequence_checks(
+            df, key_col="conv_id", order_col="turn_idx",
+            ts_col="ts", role_col="role", expected_step=1,
+        ).collect()
+    }
+    assert batch == {("D", 0, "role_repeat"), (None, 1, "role_repeat")}
+
+    src = str(tmp_path / "nullsrc")
+    df.coalesce(1).write.parquet(src)
+    q = (
+        sequence_check_stream(
+            spark.readStream.schema(schema).parquet(src), expected_step=1
+        )
+        .writeStream.format("memory")
+        .queryName("seqviol_nullkeys")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "nullckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert spark.sql("SELECT * FROM seqviol_nullkeys").count() == 0
+
+
 @pytest.mark.parametrize("seed", [7, 19])
 def test_sequence_check_stream_fuzz_equals_batch(spark, tmp_path, seed):
     """Seeded fuzz fold: random conversations with random planted defects,

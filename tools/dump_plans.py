@@ -107,9 +107,6 @@ The round-6 optimization pass re-shaped several query plans; the
 per-change rationale and measurements are in `OPTIMIZATION_r06.md`.
 Headline plan diffs that still apply:
 
-* `duplicate_keys_hashed` phase 2: SortMergeJoin LeftSemi (full-width
-  shuffle + sort of the big side) → scan-level **BroadcastHashJoin** on a
-  collected-and-capped literal hash frame.
 * `drift_report`: one shared spread reduction feeds dataset + per-priority
   histograms in a single collect; the per-priority metrics moved driver-
   side (bit-equal to the SQL fold at the output rounding); exact KS lost
@@ -177,13 +174,12 @@ def main() -> None:
             "+ sortWithinPartitions — no global range sort / sampling pass.",
         ),
         (
-            "Hashed uniqueness (two-phase)",
+            "Duplicate-key census (exact)",
             duplicate_keys_hashed(df, ["conv_id", "turn_idx"]),
-            "Phase 1 shuffles 8-byte xxhash64 keys only and collects the "
-            "capped suspicious hash set at call time; it re-enters as a "
-            "literal frame under a BroadcastHashJoin LeftSemi, so the big "
-            "side never shuffles to be matched; phase 2 exact-verifies on "
-            "real keys.",
+            "`duplicate_keys_hashed` is the exact census: one parquet scan "
+            "→ partial HashAggregate on the real (conv_id, turn_idx) key "
+            "→ Exchange → final HashAggregate → Filter dup_count > 1. No "
+            "job runs before an action; NULL key parts group as values.",
         ),
         (
             "Sequence checks (one window, five rules)",

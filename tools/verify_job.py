@@ -41,7 +41,7 @@ print("per-column sample:", {k: (v["nulls"], v["conversion_errors"], v["passed"]
 dups = duplicate_keys(df, ["conv_id", "turn_idx"]).count()
 dups_h = duplicate_keys_hashed(df, ["conv_id", "turn_idx"]).count()
 print("duplicate keys:", dups, "hashed-path:", dups_h)
-assert dups == dups_h, "two-phase hashed uniqueness must equal exact"
+assert dups == dups_h, "duplicate_keys_hashed must equal the exact census"
 
 dups_salted = duplicate_keys(
     salt_repartition(df, "conv_id", num_partitions=8), ["conv_id", "turn_idx"]
