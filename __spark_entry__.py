@@ -3,10 +3,8 @@
 ``queries()`` exposes one entry per validator family from SURVEY.md §2
 (null census, coercion, time formats, column rules, partition summary,
 uniqueness, referential integrity, sequence and CHECK rules, statistics
-and metric expectations, drift, reconciliation, key skew, percentiles)
-plus the text-corpus ops that remain in the package (exact dedup by
-fingerprint, text quality, PII and URL gates); ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for every one of them.
+and metric expectations, drift, reconciliation, key skew, percentiles);
+``oracle_sql()`` gives the DuckDB-equivalent SQL for every one of them.
 
 Parity notes baked into every query pair:
   * aggregates/computed columns aliased identically on both sides;
@@ -30,7 +28,6 @@ from ndap_data_validator_spark.operators.referential import ri_violation_counts
 from ndap_data_validator_spark.operators.stats import column_stats, merge_hll_to_global
 from ndap_data_validator_spark.operators.uniqueness import duplicate_keys
 from ndap_data_validator_spark.operators.validate import ValidationEngine
-from ndap_data_validator_spark.functions import textstats as T
 from ndap_data_validator_spark.functions.coercion import compile_role_coercion
 from ndap_data_validator_spark.functions.timeformat import time_format_label
 from ndap_data_validator_spark.rules.model import ColumnAssignment
@@ -711,36 +708,6 @@ def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-dedup groups over documents: (fingerprint, keeper_id, dup_count)
-    for ALL groups (synthetic docs may have no dups; the grouping itself is
-    the operator under test)."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(F.col("doc_id"), T.fingerprint(F.col("text")).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-quality signal block — one codegen'd projection; carries the
-    regex-pretokenizer token count and the n-gram language guess (same
-    per-doc row shape, one more scan-level column)."""
-    d = _spread(_t(spark, sf_dir, "documents"))
-    c = F.col("text")
-    return d.select(
-        "doc_id",
-        T.token_count_ws(c).alias("n_tokens_ws"),
-        T.token_count_bpe(c).alias("n_tokens_bpe"),
-        F.round(T.alpha_ratio(c), 4).alias("alpha_ratio"),
-        F.round(T.stopword_ratio(c), 4).alias("stopword_ratio"),
-        F.round(T.repetition_ratio(c, n=3), 4).alias("repetition_ratio"),
-        T.fingerprint(c).alias("fingerprint"),
-        T.lang_id(c).alias("lang_guess"),
-    )
-
-
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-family sorts/limits (SURVEY §2.7): top-k with a deterministic
     tie-break so the result SET is stable across engines."""
@@ -1033,104 +1000,6 @@ def q_scalar_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(F.explode(rows).alias("r")).select("r.*")
 
 
-def q_text_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOTH scan-level text gates, long form (consolidated r05 #2 to fund
-    the key_skew slot, cap; was ``pii_scrub`` + ``url_domain_filter``),
-    columns aligned as (gate, doc_id, n_matches, detail):
-
-    * 'pii_email' / 'pii_ipv4' / 'pii_phone' — per-kind match counts over
-      documents with injected spans (planted by doc_id so both engines see
-      identical inputs); 'pii_redact' carries the total match count and the
-      md5 of the redacted text (the REWRITE is what's verified). Java∩RE2
-      patterns, ordered redaction — one projection, zero shuffles.
-    * 'url_keep' — domain-blocklist survivors (URLs planted on every 5th
-      document, two domains blocked): n_matches = n_urls, detail = sorted
-      extracted domains. Extraction and the gate are one scan-level
-      projection+filter, no shuffle."""
-    from ndap_data_validator_spark.functions.pii import pii_count, redact_pii
-    from ndap_data_validator_spark.functions.urls import (
-        domain_blocklist_filter,
-        extract_domains,
-        extract_urls,
-    )
-
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    injected = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.expr(
-                """CASE CAST(doc_id % 4 AS INT)
-                     WHEN 0 THEN ' contact a.b@example.com now'
-                     WHEN 1 THEN ' from 10.1.2.3 logged'
-                     WHEN 2 THEN ' call +1 (415) 555-0199 today'
-                     ELSE '' END"""
-            ),
-        ).alias("text"),
-    )
-    t = F.col("text")
-    counted = injected.select(
-        "doc_id",
-        pii_count(t, "email").alias("n_emails"),
-        pii_count(t, "ipv4").alias("n_ipv4"),
-        pii_count(t, "phone").alias("n_phones"),
-        F.md5(redact_pii(t)).alias("redacted_md5"),
-    )
-    gates = F.array(
-        F.struct(
-            F.lit("pii_email").alias("gate"),
-            F.col("n_emails").alias("n_matches"),
-            F.lit(None).cast("string").alias("detail"),
-        ),
-        F.struct(
-            F.lit("pii_ipv4").alias("gate"),
-            F.col("n_ipv4").alias("n_matches"),
-            F.lit(None).cast("string").alias("detail"),
-        ),
-        F.struct(
-            F.lit("pii_phone").alias("gate"),
-            F.col("n_phones").alias("n_matches"),
-            F.lit(None).cast("string").alias("detail"),
-        ),
-        F.struct(
-            F.lit("pii_redact").alias("gate"),
-            (F.col("n_emails") + F.col("n_ipv4") + F.col("n_phones")).alias(
-                "n_matches"
-            ),
-            F.col("redacted_md5").alias("detail"),
-        ),
-    )
-    pii_rows = counted.select(
-        "doc_id", F.explode(gates).alias("g")
-    ).select("g.gate", "doc_id", "g.n_matches", "g.detail")
-
-    du = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    with_urls = du.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" see http://site-"),
-                (F.col("doc_id") % 13).cast("string"),
-                F.lit(".example.com/page?x=1 ok"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    kept = domain_blocklist_filter(
-        with_urls, ["site-3.example.com", "site-7.example.com"]
-    )
-    url_rows = kept.select(
-        F.lit("url_keep").alias("gate"),
-        "doc_id",
-        F.size(extract_urls(F.col("text"))).alias("n_matches"),
-        F.concat_ws(",", F.array_sort(extract_domains(F.col("text")))).alias(
-            "detail"
-        ),
-    )
-    return pii_rows.unionByName(url_rows)
-
-
 def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew / heavy-hitter report (NEW r05) over the derived transcript
     frame's conversation key — the diagnostic that feeds
@@ -1363,8 +1232,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # At most 50 entries: only the first 50 get a correctness check. Every
     # entry carries a DuckDB oracle in oracle_sql(). Near-duplicates ride
     # one method-tagged entry: bool+datetime → scalar_coercion,
-    # duplicate_rows and duplicate_keys_hashed → uniqueness_violations,
-    # the regex token count and the language guess → text_quality.
+    # duplicate_rows and duplicate_keys_hashed → uniqueness_violations.
     return {
         "null_census": q_null_census,
         "coercion_report": q_coercion_report,
@@ -1380,107 +1248,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ri_orphans": q_ri_orphans,
         "column_stats": q_column_stats,
         "drift_report": q_drift_report,
-        "dedup_exact": q_dedup_exact,
-        "text_quality": q_text_quality,
         "hll_distinct": q_hll_distinct,
         "topk_orders": q_topk_orders,
         "dtype_coercion_report": q_dtype_coercion_report,
         "three_way_join": q_three_way_join,
         "except_diff": q_except_diff,
         "csv_events_rollup": q_csv_events_rollup,
-        "text_gates": q_text_gates,
         "key_skew": q_key_skew,
         "exact_percentiles": q_exact_percentiles,
     }
 
 
 # --------------------------------------------------------------- oracle SQL
-
-def _text_gates_oracle_sql() -> str:
-    """DuckDB replay of q_text_gates: the pii leg unpivoted to one row per
-    (doc_id, gate) plus the url_keep survivor leg, columns aligned as
-    (gate, doc_id, n_matches, detail)."""
-    from ndap_data_validator_spark.functions.pii import (
-        pii_count_sql,
-        redact_pii_sql,
-    )
-
-    url_leg = _url_gate_oracle_sql()
-    return f"""
-      WITH d AS (
-        SELECT doc_id,
-               text || CASE CAST(doc_id % 4 AS INT)
-                 WHEN 0 THEN ' contact a.b@example.com now'
-                 WHEN 1 THEN ' from 10.1.2.3 logged'
-                 WHEN 2 THEN ' call +1 (415) 555-0199 today'
-                 ELSE '' END AS text
-        FROM documents WHERE doc_id < 200),
-      counted AS (
-        SELECT doc_id,
-               CAST({pii_count_sql('text', 'email')} AS INT) AS n_emails,
-               CAST({pii_count_sql('text', 'ipv4')} AS INT) AS n_ipv4,
-               CAST({pii_count_sql('text', 'phone')} AS INT) AS n_phones,
-               md5({redact_pii_sql('text')}) AS redacted_md5
-        FROM d)
-      SELECT 'pii_email' AS gate, doc_id, n_emails AS n_matches,
-             CAST(NULL AS VARCHAR) AS detail FROM counted
-      UNION ALL
-      SELECT 'pii_ipv4', doc_id, n_ipv4, CAST(NULL AS VARCHAR) FROM counted
-      UNION ALL
-      SELECT 'pii_phone', doc_id, n_phones, CAST(NULL AS VARCHAR) FROM counted
-      UNION ALL
-      SELECT 'pii_redact', doc_id, n_emails + n_ipv4 + n_phones,
-             redacted_md5 FROM counted
-      UNION ALL
-      SELECT * FROM (
-        {url_leg}
-      ) url_leg
-    """
-
-
-def _url_gate_oracle_sql() -> str:
-    from ndap_data_validator_spark.functions.urls import URL_PATTERN
-
-    pat = URL_PATTERN.replace("'", "''")
-    # host = authority after the last '@' (userinfo stripped), then the
-    # bracketed [...] IPv6 literal whole or everything before the first ':'
-    # (port stripped), lowercased — extract_domains' contract, ADVICE r04
-    no_user = (
-        "string_split(lower(regexp_replace(u, "
-        "'^https?://([^/?#]+).*$', '\\1')), '@')[-1]"
-    )
-    host = (
-        f"CASE WHEN starts_with({no_user}, '[') "
-        f"THEN regexp_extract({no_user}, '^(\\[[^\\]]*\\])', 1) "
-        f"ELSE string_split({no_user}, ':')[1] END"
-    )
-    dom = (
-        "list_distinct(list_transform(regexp_extract_all(text, '{p}'), "
-        "u -> {h}))"
-    ).format(p=pat, h=host)
-    blocked = ["site-3.example.com", "site-7.example.com"]
-    # label-suffix rule: host = d OR host endswith '.' || d
-    hit = " OR ".join(
-        f"h = '{d}' OR suffix(h, '.{d}')" for d in blocked
-    )
-    return f"""
-      WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 5 = 0
-                    THEN text || ' see http://site-' ||
-                         CAST(doc_id % 13 AS VARCHAR) ||
-                         '.example.com/page?x=1 ok'
-                    ELSE text END AS text
-        FROM documents WHERE doc_id < 500),
-      x AS (SELECT doc_id, text, {dom} AS domains FROM d)
-      SELECT 'url_keep' AS gate, doc_id,
-             CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS n_matches,
-             COALESCE(array_to_string(list_sort(domains), ','), '')
-               AS detail  -- DuckDB: array_to_string([]) is NULL
-      FROM x
-      WHERE len(list_filter(domains, h -> {hit})) = 0
-    """
-
 
 def oracle_sql() -> dict[str, str]:
     ev_cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
@@ -1921,60 +1700,6 @@ def oracle_sql() -> dict[str, str]:
       SELECT * FROM ({drift_part_sql}) p
     """
 
-    fingerprint_sql = r"md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))"
-
-    dedup_exact = f"""
-      SELECT {fingerprint_sql} AS fingerprint,
-             MIN(doc_id) AS keeper_id,
-             CAST(COUNT(*) AS BIGINT) AS dup_count
-      FROM documents GROUP BY 1
-    """
-
-    sw = "['the','a','an','of','and','or','to','in','is','are','was','for','on','with','as','at','by','it','this','that']"
-    _bpe_pat_tq = T.BPE_ISH_TOKEN_RE.replace("'", "''")
-    langs = {
-        "en": ["the", "and", "of", "is", "with", "that"],
-        "de": ["der", "die", "das", "und", "ist", "mit"],
-        "fr": ["le", "la", "les", "et", "est", "avec"],
-        "es": ["el", "la", "los", "es", "con", "que"],
-    }
-    hits = []
-    for lang, ws_ in langs.items():
-        lst = "[" + ",".join(f"'{w}'" for w in ws_) + "]"
-        hits.append(
-            f"len(list_filter(ltoks, x -> list_contains({lst}, x))) AS {lang}"
-        )
-    # lang_guess rides the text_quality projection (same per-doc scan)
-    text_quality = rf"""
-      WITH t AS (SELECT doc_id, text,
-            CASE WHEN trim(text) IS NULL OR trim(text) = '' THEN []::VARCHAR[]
-                 ELSE regexp_split_to_array(trim(text), '\s+') END AS toks
-        FROM documents),
-      t2 AS (SELECT *, list_transform(toks, x -> lower(x)) AS ltoks FROM t),
-      s AS (SELECT *, {', '.join(hits)} FROM t2)
-      SELECT doc_id,
-        CAST(len(toks) AS INT) AS n_tokens_ws,
-        CASE WHEN text IS NULL THEN NULL
-             ELSE CAST(len(regexp_extract_all(text, '{_bpe_pat_tq}')) AS INT)
-             END AS n_tokens_bpe,
-        ROUND(CASE WHEN length(text) > 0
-              THEN length(regexp_replace(text, '[^\p{{L}}]', '', 'g'))::DOUBLE / length(text) END, 4) AS alpha_ratio,
-        ROUND(CASE WHEN len(toks) > 0
-              THEN len(list_filter(ltoks, x -> list_contains({sw}, x)))::DOUBLE / len(toks) END, 4) AS stopword_ratio,
-        ROUND(CASE WHEN len(toks) - 2 <= 0 THEN NULL
-              ELSE 1.0 - len(list_distinct(list_transform(
-                     generate_series(1, len(toks) - 2),
-                     i -> array_to_string(toks[i:i+2], ' '))))::DOUBLE
-                   / (len(toks) - 2) END, 4) AS repetition_ratio,
-        {fingerprint_sql} AS fingerprint,
-        CASE WHEN en > 0 AND en >= de AND en >= fr AND en >= es THEN 'en'
-             WHEN de > 0 AND de >= fr AND de >= es THEN 'de'
-             WHEN fr > 0 AND fr >= es THEN 'fr'
-             WHEN es > 0 THEN 'es'
-             ELSE 'und' END AS lang_guess
-      FROM s
-    """
-
     topk_orders = """
       SELECT o_orderkey, o_custkey, o_totalprice
       FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
@@ -2060,10 +1785,7 @@ def oracle_sql() -> dict[str, str]:
         "ri_orphans": ri_orphans,
         "column_stats": column_stats_sql,
         "drift_report": drift_report,
-        "dedup_exact": dedup_exact,
-        "text_quality": text_quality,
         "hll_distinct": hll_distinct,
-        "text_gates": _text_gates_oracle_sql(),
         "key_skew": f"""
           WITH d AS ({DERIVED_SQL}),
           c AS (SELECT conv_id AS key, COUNT(*) AS n_rows

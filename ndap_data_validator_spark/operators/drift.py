@@ -163,69 +163,6 @@ def compare(
     return results
 
 
-def ks_exact_distributed(
-    baseline_df: DataFrame,
-    current_df: DataFrame,
-    column: str,
-    num_range_partitions: int = 32,
-) -> DataFrame:
-    """Exact two-sample KS over RAW values, fully distributed.
-
-    The step CDFs attain their supremum at a jump point, so evaluating
-    |F_a − F_b| at every DISTINCT pooled value is exact. Plan:
-
-      1. tag + union + ``groupBy(value)`` → (v, a_cnt, b_cnt): ONE shuffle,
-         map-side partial counts; the frame shrinks to |distinct values|.
-      2. ``repartitionByRange(v)`` → per-partition prefix sums via a window
-         PARTITIONED BY the range-partition id (each task sorts only its
-         slice), plus per-partition totals rolled into offsets.
-      3. global CDF = local cumsum + broadcast offset; KS = max |ΔCDF|.
-
-    No stage ever holds more than one range slice of the distinct values;
-    the only single-partition work is the offsets window over
-    ``num_range_partitions`` rows (partition-COUNT-sized, like the summary
-    frame, not data-sized). The range id is a DETERMINISTIC function of the
-    value (``width_bucket`` over the observed min/max), never
-    ``spark_partition_id`` — re-executions and task retries always agree on
-    which slice a value belongs to.
-
-    Returns a 1-row MATERIALIZED DataFrame (ks, n_a, n_b) — eager by design
-    so the per-value-counts cache is always released before returning
-    (ADVICE r02: the old lazy return leaked one persisted frame per call).
-    Contract when a side is empty: ks is NULL (a KS statistic between an
-    empty and a non-empty sample is undefined); n_a/n_b report the sizes so
-    callers can distinguish the cases. Both sides empty → ks = 0.0, n = 0.
-    """
-    a = (
-        baseline_df.where(F.col(column).isNotNull())
-        .select(F.col(column).cast("double").alias("v"))
-        .select("v", F.lit(1).alias("__a"), F.lit(0).alias("__b"))
-    )
-    b = (
-        current_df.where(F.col(column).isNotNull())
-        .select(F.col(column).cast("double").alias("v"))
-        .select("v", F.lit(0).alias("__a"), F.lit(1).alias("__b"))
-    )
-    union = a.unionByName(b)
-    # ONE scan of the raw data: the per-value counts (|distinct values| rows,
-    # far smaller than the input) are persisted and every later step — the
-    # min/max for the range grid, per-slice totals, the CDF window and the
-    # final max — reads the cached reduction, never the source again.
-    spark = union.sparkSession
-    out_schema = "ks double, n_a long, n_b long"
-    base_counts = (
-        union.groupBy("v")
-        .agg(F.sum("__a").alias("a_cnt"), F.sum("__b").alias("b_cnt"))
-        .persist()
-    )
-    try:
-        return _ks_from_counts(
-            spark, base_counts, num_range_partitions, out_schema
-        )
-    finally:
-        base_counts.unpersist()
-
-
 def two_sample_value_counts(
     df: DataFrame, column: str, side_a, group_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -260,32 +197,42 @@ def two_sample_value_counts(
 def ks_exact_from_counts(
     counts: DataFrame, num_range_partitions: int = 32
 ) -> DataFrame:
-    """Exact two-sample KS over a PRECOMPUTED ``(v, a_cnt, b_cnt)``
-    per-value counts frame (see :func:`two_sample_value_counts`) — the
-    share-the-scan path. Callers reusing ``counts`` for other rollups
-    should persist it themselves; this function does not cache."""
-    spark = counts.sparkSession
-    return _ks_from_counts(
-        spark, counts, num_range_partitions, "ks double, n_a long, n_b long"
-    )
+    """Exact two-sample KS over RAW values, fully distributed, from a
+    ``(v, a_cnt, b_cnt)`` per-value counts frame (see
+    :func:`two_sample_value_counts`).
 
+    The step CDFs attain their supremum at a jump point, so evaluating
+    |F_a − F_b| at every DISTINCT pooled value is exact. Plan:
 
-def _ks_from_counts(
-    spark, base_counts: DataFrame, num_range_partitions: int, out_schema: str
-) -> DataFrame:
-    from ndap_data_validator_spark.session import literal_frame
+      1. :func:`two_sample_value_counts`: ONE ``groupBy(value)`` shuffle
+         with map-side partial counts; the frame shrinks to |distinct
+         values|.
+      2. :func:`_ks_agg_plan`: a range id per value → per-slice prefix
+         sums via a window PARTITIONED BY that id (each task sorts only
+         its slice), plus per-slice totals rolled into offsets.
+      3. global CDF = local cumsum + broadcast offset; KS = max |ΔCDF|.
 
-    # ONE action for the whole statistic — the range-grid bounds ride the
-    # plan as a broadcast aggregate (VERDICT r04 #4: the old separate
-    # min/max .first() made every KS call a 2-action round-trip).
-    row = _ks_agg_plan(base_counts, num_range_partitions).first()
-    if row["n_a"] is None:  # both sides empty
-        return literal_frame(spark, [(0.0, 0, 0)], out_schema)
-    # one side empty → division by zero yields NULL: surface it as the
-    # documented explicit contract, not an accident of SQL null semantics
-    ks = row["ks"] if (row["n_a"] > 0 and row["n_b"] > 0) else None
-    return literal_frame(
-        spark, [(ks, int(row["n_a"]), int(row["n_b"]))], out_schema
+    No stage ever holds more than one range slice of the distinct values;
+    the only single-partition work is the offsets window over
+    ``num_range_partitions`` rows (partition-COUNT-sized, not data-sized).
+    The range id is a DETERMINISTIC function of the value (``width_bucket``
+    over the observed min/max), never ``spark_partition_id`` — re-executions
+    and task retries always agree on which slice a value belongs to.
+
+    Returns a lazy 1-row DataFrame (ks, n_a, n_b); reading it is ONE
+    action. Contract when a side is empty: ks is NULL (a KS statistic
+    between an empty and a non-empty sample is undefined); n_a/n_b report
+    the sizes so callers can distinguish the cases. Both sides empty →
+    (0.0, 0, 0). Callers reusing ``counts`` for other rollups should
+    persist it themselves; this function does not cache."""
+    agg = _ks_agg_plan(counts, num_range_partitions)
+    # an empty counts frame aggregates to one all-NULL row
+    return agg.select(
+        F.when(F.col("n_a").isNull(), F.lit(0.0))
+        .otherwise(F.col("ks"))
+        .alias("ks"),
+        F.coalesce(F.col("n_a"), F.lit(0).cast("long")).alias("n_a"),
+        F.coalesce(F.col("n_b"), F.lit(0).cast("long")).alias("n_b"),
     )
 
 
@@ -295,8 +242,10 @@ def _ks_agg_plan(
     """The LAZY distributed KS aggregate over per-value counts (the plan
     tools/dump_plans.py documents). Fully lazy — the [lo, hi] grid is a
     broadcast 1-row aggregate inside the plan, so callers pay ONE action.
-    Both sides empty → one row with NULL n_a/n_b (callers map it to the
-    documented contract)."""
+    One side empty → NULL ks (the CDF of an empty side is undefined; the
+    guarded divisor keeps ANSI division by zero from raising). Both sides
+    empty → one row with NULL n_a/n_b (:func:`ks_exact_from_counts` maps
+    it to the documented contract)."""
     # equal-width range id — even a skewed value distribution only unbalances
     # slice sizes, never correctness (production could swap in approxQuantile
     # boundaries for balance). The lo==hi degenerate range is patched
@@ -349,13 +298,12 @@ def _ks_agg_plan(
             "n_b",
         )
     )
+
+    def frac(c, n):
+        return F.col(c).cast("double") / F.when(F.col(n) > 0, F.col(n))
+
     return cdf.agg(
-        F.max(
-            F.abs(
-                F.col("ca").cast("double") / F.col("n_a")
-                - F.col("cb").cast("double") / F.col("n_b")
-            )
-        ).alias("ks"),
+        F.max(F.abs(frac("ca", "n_a") - frac("cb", "n_b"))).alias("ks"),
         F.first("n_a").alias("n_a"),
         F.first("n_b").alias("n_b"),
     )
@@ -413,7 +361,8 @@ def categorical_drift_from_counts(
       baseline a).
     * ``chi2_cat`` — the two-sample chi-square statistic under the pooled
       expectation (no smoothing: expected counts are positive whenever the
-      category exists at all).
+      category exists and both sides have rows). NULL when a side is
+      empty: the statistic is undefined there.
 
     Everything is Catalyst arithmetic on the category-count-sized frame:
     totals come from one tiny agg, broadcast back as a 1-row frame — no
@@ -428,8 +377,11 @@ def categorical_drift_from_counts(
     pa = (F.col("a_cnt") + s) / (F.col("__A") + F.col("__K") * s)
     pb = (F.col("b_cnt") + s) / (F.col("__B") + F.col("__K") * s)
     tot = F.col("a_cnt") + F.col("b_cnt")
-    ea = tot * F.col("__A") / (F.col("__A") + F.col("__B"))
-    eb = tot * F.col("__B") / (F.col("__A") + F.col("__B"))
+    # a NULL expectation when a side is empty: ANSI division by a zero
+    # expectation would raise
+    both = (F.col("__A") > 0) & (F.col("__B") > 0)
+    ea = F.when(both, tot * F.col("__A") / (F.col("__A") + F.col("__B")))
+    eb = F.when(both, tot * F.col("__B") / (F.col("__A") + F.col("__B")))
     return j.agg(
         F.sum((pb - pa) * F.log(pb / pa)).alias("psi_cat"),
         F.sum(
@@ -683,30 +635,34 @@ def _drift_fold_exprs(
             f"'gap', {sql_double(gaps[i])})"
         )
     h = sql_name(h)
+    # the current total is summed ONCE, in the start value, and rides the
+    # accumulator as ``n``
     total = f"aggregate({h}, 0L, (a, x) -> a + x)"
-    fq = f"element_at({h}, b.i) / CASE WHEN {total} > 0 THEN CAST({total} AS DOUBLE) END"
-    # one row per bin: the baseline literals plus the current fraction fq
+    # one row per bin: the baseline literals plus the current count
     rows = (
         f"transform(array({', '.join(bins)}), b -> named_struct("
-        f"'fp', b.fp, 'sp', b.sp, 'cp', b.cp, 'gap', b.gap, 'fq', {fq}))"
+        f"'fp', b.fp, 'sp', b.sp, 'cp', b.cp, 'gap', b.gap, "
+        f"'q', element_at({h}, b.i)))"
     )
-    cq = "(acc.cq + b.fq)"
-    sq = f"greatest(b.fq, {eps})"
-    m = "((b.fp + b.fq) / 2.0D)"
+    fq = "(b.q / CASE WHEN acc.n > 0 THEN CAST(acc.n AS DOUBLE) END)"
+    cq = f"(acc.cq + {fq})"
+    sq = f"greatest({fq}, {eps})"
+    m = f"((b.fp + {fq}) / 2.0D)"
     return (
         f"aggregate({rows}, "
-        "named_struct('cq', 0D, 'ks', 0D, 'psi', 0D, 'js', 0D, 'w1', 0D), "
-        "(acc, b) -> named_struct("
+        f"named_struct('n', {total}, "
+        "'cq', 0D, 'ks', 0D, 'psi', 0D, 'js', 0D, 'w1', 0D), "
+        "(acc, b) -> named_struct('n', acc.n, "
         f"'cq', {cq}, "
         f"'ks', greatest(acc.ks, abs(b.cp - {cq})), "
         f"'psi', acc.psi + ({sq} - b.sp) * ln({sq} / b.sp), "
         "'js', acc.js + ("
         f"CASE WHEN b.fp > 0 THEN 0.5D * b.fp * ln(b.fp / {m}) ELSE 0D END + "
-        f"CASE WHEN b.fq > 0 THEN 0.5D * b.fq * ln(b.fq / {m}) ELSE 0D END), "
+        f"CASE WHEN {fq} > 0 THEN 0.5D * {fq} * ln({fq} / {m}) ELSE 0D END), "
         f"'w1', acc.w1 + abs(b.cp - {cq}) * b.gap), "
         f"acc -> named_struct('column', {sql_str(column)}, "
         "'ks', acc.ks, 'psi', acc.psi, 'js', acc.js, 'w1', acc.w1, "
-        f"'baseline_total', CAST({int(tp)} AS BIGINT), 'current_total', {total}, "
+        f"'baseline_total', CAST({int(tp)} AS BIGINT), 'current_total', acc.n, "
         f"'drifted', acc.ks > {sql_double(ks_threshold)} "
         f"OR acc.psi > {sql_double(psi_threshold)}))"
     )

@@ -126,7 +126,7 @@ def exact_percentiles_distributed(
     the distributed replacement for single-group ``percentile()``, which
     accumulates every value in one buffer (VERDICT r02 "what's wrong" #3).
 
-    Plan (the CDF machinery of ``drift.ks_exact_distributed``):
+    Plan (the CDF machinery of ``drift.ks_exact_from_counts``):
 
       1. ``groupBy(value)`` → per-value counts: ONE shuffle with map-side
          partial aggregation; the frame shrinks to |distinct values| and is

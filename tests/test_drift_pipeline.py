@@ -134,7 +134,8 @@ def test_one_fold_per_baseline_column(spark):
     """Each usable baseline column's KS/PSI/JS/W1 fold appears once,
     whatever reads ks, psi or drifted: in the report rows' SQL (an
     empty-histogram column adds none) and in drift_windowed's optimized
-    projection (no optimizer rule copies it back per output column)."""
+    projection (no optimizer rule copies it back per output column). Each
+    fold sums its histogram once, in the fold's start value."""
     import pyspark.sql.functions as F
 
     from ndap_data_validator_spark.operators.drift import (
@@ -144,14 +145,18 @@ def test_one_fold_per_baseline_column(spark):
 
     snap = _baseline(spark)
     snap["empty"] = {"lo": 0.0, "hi": 1.0, "n_bins": 16, "counts": {}}
-    assert _drift_rows(snap, 0.1, 0.2).count("named_struct('cq', 0D") == 2
+    sql = _drift_rows(snap, 0.1, 0.2)
+    assert sql.count("'cq', 0D") == 2
+    assert sql.count("aggregate(") == 4  # per column: the fold, its total
+    assert sql.count("named_struct('n', aggregate(") == 2
 
     df = spark.createDataFrame(_pdf()).withColumn(
         "ts", F.lit("2026-01-01 00:00:00").cast("timestamp")
     )
     win = drift_windowed(df, "ts", "amount", snap)
     plan = win._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("named_struct(cq") == 1
+    assert plan.count("aggregate(") == 2
+    assert plan.count("named_struct(n, aggregate(") == 1
 
 
 def test_run_validation_drift_integration(spark, tmp_path):

@@ -21,6 +21,18 @@ def test_stats_quantiles(spark):
     assert srow["p50"] is None
 
 
+def _ks(a, b, column):
+    """Exact KS between two frames on the shared-scan path: the frames
+    tagged by side in one frame → two_sample_value_counts →
+    ks_exact_from_counts."""
+    both = a.select(column, F.lit(True).alias("is_a")).unionByName(
+        b.select(column, F.lit(False).alias("is_a"))
+    )
+    return drift.ks_exact_from_counts(
+        drift.two_sample_value_counts(both, column, F.col("is_a"))
+    ).first()
+
+
 def test_ks_exact_agrees_with_binned_direction(spark):
     base = transcripts(spark, 4_000, 100, seed=41, inject_violations=False)
     same = transcripts(spark, 4_000, 100, seed=42, inject_violations=False)
@@ -28,8 +40,8 @@ def test_ks_exact_agrees_with_binned_direction(spark):
         spark, 4_000, 100, seed=42, inject_violations=False,
         turn_shift=300, shift_fraction=0.3,
     )
-    ks_same = drift.ks_exact_distributed(base, same, "turn_idx").first()["ks"]
-    ks_shift = drift.ks_exact_distributed(base, shifted, "turn_idx").first()["ks"]
+    ks_same = _ks(base, same, "turn_idx")["ks"]
+    ks_shift = _ks(base, shifted, "turn_idx")["ks"]
     assert 0.0 <= ks_same < 0.05
     assert ks_shift > ks_same + 0.05
 
@@ -61,51 +73,58 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_b")
 
 
-def test_ks_exact_distributed_matches_single_task_path(spark):
+def test_ks_exact_from_counts_matches_numpy(spark):
     """The distributed per-value-counts KS must equal a NumPy two-sample KS
     over the collected values on the same inputs."""
     import numpy as np
-    from pyspark.sql import functions as F
-
-    from ndap_data_validator_spark.operators.drift import ks_exact_distributed
 
     df = spark.range(5000).select(
         (F.col("id") % 97).cast("double").alias("v"),
         (F.col("id") % 2).alias("side"),
+    ).withColumn(
+        "v", F.when(F.col("side") == 0, F.col("v") * 1.5 + 3).otherwise(F.col("v"))
     )
-    a = df.where(F.col("side") == 0).withColumn(
-        "v", F.col("v") * 1.5 + 3
-    )
-    b = df.where(F.col("side") == 1)
-    x = np.sort([r["v"] for r in a.collect()])
-    y = np.sort([r["v"] for r in b.collect()])
+    x = np.sort([r["v"] for r in df.where(F.col("side") == 0).collect()])
+    y = np.sort([r["v"] for r in df.where(F.col("side") == 1).collect()])
     grid = np.concatenate([x, y])
     single = float(np.max(np.abs(
         np.searchsorted(x, grid, side="right") / len(x)
         - np.searchsorted(y, grid, side="right") / len(y)
     )))
-    dist = ks_exact_distributed(a, b, "v", num_range_partitions=7).first()
+    counts = drift.two_sample_value_counts(df, "v", F.col("side") == 0)
+    dist = drift.ks_exact_from_counts(counts, num_range_partitions=7).first()
     assert abs(dist["ks"] - single) < 1e-12
     assert dist["n_a"] == 2500 and dist["n_b"] == 2500
 
 
-def test_ks_exact_distributed_edge_cases(spark):
-    from pyspark.sql import functions as F
-
-    from ndap_data_validator_spark.operators.drift import ks_exact_distributed
-
+def test_ks_exact_from_counts_edge_cases(spark):
     empty = spark.range(0).select(F.col("id").cast("double").alias("v"))
     some = spark.range(10).select(F.col("id").cast("double").alias("v"))
-    r = ks_exact_distributed(empty, empty, "v").first()
-    assert r["ks"] == 0.0
+    r = _ks(empty, empty, "v")
+    assert (r["ks"], r["n_a"], r["n_b"]) == (0.0, 0, 0)
+    # one side empty, in both orders: ks undefined, sizes reported
+    r1 = _ks(some, empty, "v")
+    assert (r1["ks"], r1["n_a"], r1["n_b"]) == (None, 10, 0)
+    r1 = _ks(empty, some, "v")
+    assert (r1["ks"], r1["n_a"], r1["n_b"]) == (None, 0, 10)
     # identical samples → KS 0
-    r2 = ks_exact_distributed(some, some, "v").first()
+    r2 = _ks(some, some, "v")
     assert r2["ks"] == 0.0
     # constant column (lo == hi guard)
     const = spark.range(10).select(F.lit(5.0).alias("v"))
     shifted = spark.range(10).select(F.lit(7.0).alias("v"))
-    r3 = ks_exact_distributed(const, shifted, "v").first()
+    r3 = _ks(const, shifted, "v")
     assert r3["ks"] == 1.0
+    # NULL values and NULL side rows belong to neither sample
+    df = spark.createDataFrame(
+        [(1.0, True), (2.0, True), (None, True), (1.0, False), (None, False),
+         (9.0, None)],
+        "v double, is_a boolean",
+    )
+    r4 = drift.ks_exact_from_counts(
+        drift.two_sample_value_counts(df, "v", F.col("is_a"))
+    ).first()
+    assert (r4["ks"], r4["n_a"], r4["n_b"]) == (0.5, 2, 1)
 
 
 def test_approx_percentile_within_tolerance_of_exact(spark):
@@ -199,6 +218,8 @@ def test_categorical_drift_identical_sides_is_zero(spark):
 
 
 def test_categorical_drift_null_category_and_side_excluded(spark):
+    import math
+
     from ndap_data_validator_spark.operators.drift import categorical_drift
 
     rows = [("x", True), ("x", False), (None, True), ("y", None)]
@@ -207,6 +228,17 @@ def test_categorical_drift_null_category_and_side_excluded(spark):
     # only the two 'x' rows survive: one per side, zero drift, one category
     assert got["n_categories"] == 1
     assert abs(got["chi2_cat"]) < 1e-12
+    # the only a-side row has a NULL category: one side empty, so chi2 is
+    # undefined (NULL) while the smoothed PSI stays finite
+    rows = [("x", False), ("x", False), ("y", False), (None, True), ("x", None)]
+    df = spark.createDataFrame(rows, "cat string, is_a boolean")
+    got = categorical_drift(df, "cat", F.col("is_a"), smoothing=0.5).first()
+    psi = sum(
+        (pb - 0.5) * math.log(pb / 0.5) for pb in (2.5 / 4.0, 1.5 / 4.0)
+    )
+    assert got["n_categories"] == 2
+    assert got["chi2_cat"] is None
+    assert abs(got["psi_cat"] - psi) < 1e-12
 
 
 def _np_js_w1(p_counts, q_counts, lo, hi, n_bins):

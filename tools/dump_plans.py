@@ -4,7 +4,9 @@ pushdown, broadcast, no stray exchanges) asserted in prose.
 
 The output is fully generated — every section, including the quarantine
 routing plan and the fixed r06 addendum — so re-running the tool on
-unchanged code reproduces PLANS.md byte for byte.
+unchanged code reproduces PLANS.md byte for byte. The inputs go to a fresh
+temporary directory that is removed at exit; the dumped plans name it
+``<tmpdir>``, so concurrent runs from two checkouts do not share files.
 
 Usage: python tools/dump_plans.py
 """
@@ -13,7 +15,9 @@ from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -21,6 +25,10 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 from ndap_data_validator_spark.session import get_spark
+from ndap_data_validator_spark.operators.drift import (
+    ks_exact_from_counts,
+    two_sample_value_counts,
+)
 from ndap_data_validator_spark.operators.validate import ValidationEngine
 from ndap_data_validator_spark.operators.uniqueness import duplicate_keys_hashed
 from ndap_data_validator_spark.operators.referential import ri_violations
@@ -37,25 +45,6 @@ def fmt(df, max_lines: int = 60) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return "\n".join(buf.getvalue().splitlines()[:max_lines])
-
-
-def _ks_lazy_plan(df):
-    """Rebuild the lazy KS aggregate (per-value counts → _ks_agg_plan) the
-    way ks_exact_distributed does internally, without executing it."""
-    from ndap_data_validator_spark.operators.drift import _ks_agg_plan
-
-    a = df.where(F.col("turn_idx") % 2 == 0).select(
-        F.col("turn_idx").cast("double").alias("v"),
-        F.lit(1).alias("__a"), F.lit(0).alias("__b"),
-    )
-    b = df.where(F.col("turn_idx") % 2 == 1).select(
-        F.col("turn_idx").cast("double").alias("v"),
-        F.lit(0).alias("__a"), F.lit(1).alias("__b"),
-    )
-    counts = a.unionByName(b).groupBy("v").agg(
-        F.sum("__a").alias("a_cnt"), F.sum("__b").alias("b_cnt")
-    )
-    return _ks_agg_plan(counts, 32)
 
 
 def _json_report(spark, df):
@@ -111,8 +100,6 @@ Headline plan diffs that still apply:
   histograms in a single collect; the per-priority metrics moved driver-
   side (bit-equal to the SQL fold at the output rounding); exact KS lost
   one broadcast stage (grand totals ride the offsets window).
-* `_bucket_pairs`: bucket stats via a window over the self-join's own
-  bucket partitioning (two fewer Exchanges per table).
 * Single-row-group inputs (the bench fixture shape) are conditionally
   round-robined under CPU-heavy projections only — `_spread` stays a
   no-op on real multi-file data, and the r06 report documents both the
@@ -121,13 +108,31 @@ Headline plan diffs that still apply:
 """
 
 
+# stands in for the per-run input directory in the dumped plans, so two
+# runs (from any checkout) write the same text
+TMP_PLACEHOLDER = "<tmpdir>"
+
+
 def main() -> None:
+    tmp = tempfile.mkdtemp(prefix="dump_plans_")
+    try:
+        text = dump(tmp).replace(tmp, TMP_PLACEHOLDER)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
+        f.write(text)
+    print("wrote PLANS.md")
+
+
+def dump(tmp: str) -> str:
+    """Every section's plan over inputs written under ``tmp``, as the text
+    of PLANS.md."""
     spark = get_spark(app_name="dump-plans", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # always rewritten: the same job sequence in every run keeps the
-    # expression ids in the dumped plans stable
-    path = "/tmp/plans_transcripts"
+    # the same job sequence in every run keeps the expression ids in the
+    # dumped plans stable
+    path = os.path.join(tmp, "transcripts")
     transcripts(spark, 200_000, 500, seed=42, num_partitions=16).write.mode(
         "overwrite"
     ).parquet(path)
@@ -226,13 +231,15 @@ def main() -> None:
         ),
         (
             "Exact two-sample KS (distributed)",
-            _ks_lazy_plan(df),
+            ks_exact_from_counts(
+                two_sample_value_counts(df, "turn_idx", F.col("turn_idx") % 2 == 0)
+            ),
             "groupBy(value) partial counts → window partitioned by the "
             "deterministic range id (each task sorts one slice) → broadcast "
             "offsets → max |ΔCDF|. The only single-partition window is over "
             "the ≤33 per-slice totals — partition-count-sized, never "
-            "data-sized. (The public ks_exact_distributed materializes this "
-            "plan eagerly so its per-value-counts cache is always released.)",
+            "data-sized. The per-value counts are the shared "
+            "`two_sample_value_counts` reduction the drift report reuses.",
         ),
         (
             "Referential integrity (broadcast anti-join)",
@@ -365,7 +372,7 @@ def main() -> None:
         ),
         (
             "Row-granular quarantine routing (flag_rows: scan-level, zero shuffles)",
-            _quarantine_side(spark, "/tmp/plans_quarantine"),
+            _quarantine_side(spark, os.path.join(tmp, "quarantine")),
             "`ValidationEngine.flag_rows` evaluates every compiled "
             "per-column predicate plus every CheckRule inside ONE "
             "projection over the scan; each publish/quarantine sink is then "
@@ -392,10 +399,8 @@ def main() -> None:
     for title, frame, prose in sections:
         out += [f"## {title}", "", prose, "", "```", fmt(frame), "```", ""]
     out.append(ADDENDUM)
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
     spark.stop()
+    return "\n".join(out)
 
 
 if __name__ == "__main__":
